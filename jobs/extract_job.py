@@ -10,6 +10,11 @@ Cluster usage (north rule: multi-executor, resumable):
         --markers <checkpoint marker table path> \
         --n-buckets 4096
 
+The plan's single exchange hashes the extracted rows on bucket_id, so
+the window+write stage runs on at most --n-buckets tasks (each writing
+one file per bucket it owns), unevenly loaded where bucket ids collide
+in the hash: pick --n-buckets well above the cluster's core count.
+
 For pathological input layouts (non-splittable sources that co-locate
 a giant conversation) add --pre-shuffle [--salt 64]: a pre-UDF salted
 repartition spreads the skew; without --pre-shuffle the plan has a
@@ -20,8 +25,9 @@ Sandbox smoke (local mode):
     spark-submit --master 'local[8]' --py-files dist/s1x.zip \
         jobs/extract_job.py --input ... --output ... --markers ...
 
-Re-running the same command after a failure resumes: buckets with
-'done' markers are skipped via broadcast anti-join; interrupted
+Re-running the same command after a failure resumes: the driver
+collects the input's bucket set and the 'done' markers, and filters
+the input to the pending buckets (bucket_id IN ...); interrupted
 buckets are overwritten idempotently.
 """
 

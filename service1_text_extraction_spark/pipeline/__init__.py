@@ -1,4 +1,4 @@
-"""The Spark extraction job: read -> salt -> extract UDF -> order -> sink."""
+"""The Spark extraction job: read -> extract UDF -> bucket exchange -> order -> sink."""
 
 from .extract import (  # noqa: F401
     RESULT_FIELDS,
@@ -10,6 +10,5 @@ from .extract import (  # noqa: F401
 from .checkpoint import (  # noqa: F401
     MARKER_SCHEMA,
     compute_markers,
-    filter_pending,
     run_with_resume,
 )

@@ -4,9 +4,12 @@ Replaces the reference's six row-at-a-time ``UPDATE``s and its
 lock-based work dedup (``document_text_extraction_service.py:715-846,
 951-995``) with deterministic partition ownership: the unit of
 completion is a stable hash bucket of ``conv_id`` (not a Spark task
-id), so a resume is identical on any cluster size. The resume filter
-is the reference's anti-join pattern
-(``ml_document_processor.py:211-228,304-309``).
+id), so a resume is identical on any cluster size. Resume bookkeeping
+is one scan of the input for its distinct buckets plus a read of the
+small marker table; the pending set (the reference's anti-join,
+``ml_document_processor.py:211-228,304-309``) is computed on the
+driver and applied as a ``bucket_id IN (...)`` filter — no filter at
+all on a fresh run.
 
 Sinks are parquet directories partitioned by ``bucket_id`` — the
 sandbox stand-in for Iceberg append tables; on a real cluster both the
@@ -61,16 +64,6 @@ def compute_markers(extracted: DataFrame, lineage_id: str) -> DataFrame:
     )
 
 
-def filter_pending(bucketed: DataFrame, markers: DataFrame | None) -> DataFrame:
-    """Resume anti-join (J1): drop rows whose bucket already has a
-    'done' marker. The pending-work predicate analogue of the
-    reference's partial index (001_doc_text_extraction_queue.sql:75-78)."""
-    if markers is None:
-        return bucketed
-    done = markers.where(F.col("status") == "done").select("bucket_id").distinct()
-    return bucketed.join(F.broadcast(done), on="bucket_id", how="left_anti")
-
-
 def read_markers(spark: SparkSession, markers_dir: str) -> DataFrame | None:
     # existence probe through the Hadoop FS API (works for any scheme,
     # not just local paths) so a first run doesn't trigger Spark's
@@ -104,28 +97,40 @@ def run_with_resume(
     """Run the job, skipping buckets already marked done.
 
     ``fail_after_buckets`` truncates the run to the first K pending
-    buckets — the test hook that simulates a mid-job crash.
-    Returns run stats (buckets processed / skipped).
+    buckets (lowest ids first) — the test hook that simulates a
+    mid-job crash. Returns run stats: buckets processed, and buckets
+    of the input not processed by this run (skipped).
     """
+    if fail_after_buckets is not None and fail_after_buckets < 0:
+        raise ValueError("fail_after_buckets must be >= 0")
     lineage_id = lineage_id or uuid.uuid4().hex
-    markers = read_markers(spark, markers_dir)
     bucketed = with_bucket(transcripts, n_buckets)
-    pending = filter_pending(bucketed, markers)
-
-    if fail_after_buckets is not None:
-        keep = (
-            pending.select("bucket_id")
+    # one input scan for the bucket set; the pending set and the
+    # crash-hook truncation are then driver-side set arithmetic
+    input_buckets = {
+        r.bucket_id for r in bucketed.select("bucket_id").distinct().collect()
+    }
+    markers = read_markers(spark, markers_dir)
+    done_buckets = (
+        set()
+        if markers is None
+        else {
+            r.bucket_id
+            for r in markers.where(F.col("status") == "done")
+            .select("bucket_id")
             .distinct()
-            .orderBy("bucket_id")
-            .limit(fail_after_buckets)
-        )
-        pending = pending.join(F.broadcast(keep), on="bucket_id", how="left_semi")
+            .collect()
+        }
+    )
+    pending_buckets = sorted(input_buckets - done_buckets)
+    if fail_after_buckets is not None:
+        pending_buckets = pending_buckets[:fail_after_buckets]
+    pending = (
+        bucketed
+        if len(pending_buckets) == len(input_buckets)
+        else bucketed.where(F.col("bucket_id").isin(pending_buckets))
+    )
 
-    # the pending-bucket set is cheap (no UDF); collecting it up front
-    # avoids re-running the extraction for bookkeeping counts
-    pending_buckets = [
-        r.bucket_id for r in pending.select("bucket_id").distinct().collect()
-    ]
     if pending_buckets:
         extracted = run_extraction(
             spark,
@@ -155,11 +160,10 @@ def run_with_resume(
             markers_dir
         )
 
-    total = bucketed.select("bucket_id").distinct().count()
     return {
         "lineage_id": lineage_id,
         "buckets_processed": len(pending_buckets),
-        "buckets_skipped": total - len(pending_buckets),
+        "buckets_skipped": len(input_buckets) - len(pending_buckets),
         "output_dir": os.path.abspath(output_dir),
         "markers_dir": os.path.abspath(markers_dir),
     }

@@ -6,8 +6,9 @@ fan-out -> per-page extract -> quality gate -> sink + status writeback)
 as one declarative DataFrame program:
 
     read -> pending filter -> extract_turn pandas UDF (Arrow batches,
-    on scan partitions) -> window over (conv_id, turn_idx) for stable
-    ordering + doc-level char offsets -> outputs
+    on scan partitions) -> windows over bucket_id (hash exchange on
+    bucket_id) for stable per-conversation turn order + doc-level char
+    offsets -> outputs
 
 Scale design (for a 1000-executor cluster at 10^12 turns, tested on
 local[N]):
@@ -16,15 +17,27 @@ local[N]):
   (``xxhash64`` — NOT Spark task ids), which are simultaneously the
   resume-marker granularity and the output partitioning, so resume is
   identical across cluster sizes.
+- The plan's only exchange is the ordering window's, and it hashes
+  the *extracted* rows on ``bucket_id``. It serves both the window
+  (``bucket_id`` is a function of ``conv_id``, so every conversation
+  stays whole inside one task) and the ``bucket_id``-partitioned
+  sink: each task owns whole buckets, writes one file per bucket, and
+  the window's ``(bucket_id, conv_id, turn_idx)`` sort already
+  satisfies the writer's ordering, so no second sort runs. The cost:
+  the window stage runs on at most ``n_buckets`` tasks, and bucket
+  hash collisions make them uneven — pick ``n_buckets`` well above
+  the cluster's core count. Callers that use neither ``turn_seq`` nor
+  ``doc_char_offset`` (document assembly, metrics, the stream sink)
+  let the optimizer prune the window and its exchange.
 - Skew: the UDF is a pure per-row map, so it runs directly on scan
   partitions (byte-sized splits spread one 10^6-turn conversation's
-  payloads over many tasks automatically); the plan's only exchange is
-  the ordering window, which moves the far smaller extracted output.
-  For pathological layouts (non-splittable sources that co-locate a
-  giant conversation) an opt-in pre-UDF repartition on
-  ``(bucket_id, pmod(turn_idx, salt))`` spreads it over ``salt``
-  shuffle keys. Turn order is restored by the window, so neither mode
-  changes the output (asserted by tests at different partition counts).
+  payloads over many tasks automatically); only the far smaller
+  extracted output crosses the exchange. For pathological layouts
+  (non-splittable sources that co-locate a giant conversation) an
+  opt-in pre-UDF repartition on ``(bucket_id, pmod(turn_idx, salt))``
+  spreads it over ``salt`` shuffle keys. Turn order is restored by the
+  window, so neither mode changes the output (asserted by tests at
+  different partition counts).
 - The UDF is a scalar Arrow-batched pandas UDF returning a struct —
   one Python invocation per ~10k-row batch, no per-row Python at the
   Spark level (per-payload parsing inside the batch is the kernel).
@@ -238,12 +251,14 @@ def run_extraction(
     skips it: the UDF is a pure per-row map, so scan splits (sized by
     ``spark.sql.files.maxPartitionBytes``, AQE-coalesced) already
     spread payload bytes evenly across tasks regardless of conv_id
-    layout — per-conversation skew only matters at the window
-    exchange, which shuffles the much smaller *extracted* output. The
-    default plan therefore has exactly ONE exchange (the window); the
-    salted path remains for pathological input layouts (e.g. a
-    non-splittable source where one input partition holds one giant
-    conversation). Output is identical either way (asserted by
+    layout — per-conversation skew only matters at the exchange after
+    the UDF, which shuffles the much smaller *extracted* output. The
+    default plan therefore has exactly ONE exchange, the ordering
+    window's hash partitioning on ``bucket_id``, which a
+    ``partitionBy("bucket_id")`` sink reuses; the salted path remains for
+    pathological input layouts (e.g. a non-splittable source where one
+    input partition holds one giant conversation). Output is identical
+    either way (asserted by
     tests/test_pipeline.py::test_salting_does_not_change_output).
     """
     if not pre_shuffle and (
@@ -308,14 +323,36 @@ def run_extraction(
 
     # W1: stable turn ordering (reference 1-based page loop,
     # core_pdf_processor.py:191-196) + running char offsets for
-    # document-level span addressing.
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    # document-level span addressing. turn_seq is counted per bucket
+    # (rows of the bucket up to this turn, minus those before the
+    # conversation's first turn), so the window's exchange hashes on
+    # bucket_id alone; bucket_id is a function of conv_id, so every
+    # conversation stays in one task while each task owns whole
+    # buckets for the sink. The later windows reuse that partitioning
+    # and the first window's (bucket_id, conv_id, turn_idx) sort;
+    # _bucket_seq is its own column so that this window, the one with
+    # the full sort order, is planned first and one sort serves all. The
+    # exchange is the window's own, so a caller that drops turn_seq and
+    # doc_char_offset prunes the windows and the exchange with them.
+    in_bucket = Window.partitionBy("bucket_id")
+    w = Window.partitionBy("bucket_id", "conv_id").orderBy("turn_idx")
     w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
-    return extracted.withColumn(
-        "turn_seq", F.row_number().over(w)
-    ).withColumn(
-        "doc_char_offset",
-        F.coalesce(F.sum("chars_out").over(w_prev), F.lit(0)),
+    return (
+        extracted.withColumn(
+            "_bucket_seq",
+            F.row_number().over(in_bucket.orderBy("conv_id", "turn_idx")),
+        )
+        .withColumn(
+            "turn_seq",
+            F.col("_bucket_seq")
+            - F.rank().over(in_bucket.orderBy("conv_id"))
+            + 1,
+        )
+        .withColumn(
+            "doc_char_offset",
+            F.coalesce(F.sum("chars_out").over(w_prev), F.lit(0)),
+        )
+        .drop("_bucket_seq")
     )
 
 

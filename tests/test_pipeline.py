@@ -1,14 +1,18 @@
 """End-to-end Spark pipeline tests: golden equality, salt-invariance,
 document assembly, metrics, and exact resume (FIXTURES.md §2-4)."""
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from service1_text_extraction_spark.pipeline import (
+    MARKER_SCHEMA,
     assemble_documents,
     extraction_metrics,
     run_extraction,
     run_with_resume,
+    with_bucket,
 )
 from service1_text_extraction_spark.pipeline.datagen import generate_transcripts
 
@@ -111,28 +115,63 @@ def test_metrics_rollup(spark, data):
     assert set(m) <= {"html", "pdf", "text", "failed"}
 
 
-def test_exact_resume(spark, data, tmp_path):
-    tdf, _, _, _ = data
+def _data_files_per_bucket(out_dir) -> dict[str, int]:
+    return {
+        d.name: sum(1 for f in d.iterdir() if f.name.endswith(".parquet"))
+        for d in Path(out_dir).iterdir()
+        if d.name.startswith("bucket_id=")
+    }
+
+
+@pytest.fixture
+def uncoalesced(spark):
+    """Keep every shuffle partition as its own write task, as on an
+    input too large for AQE to merge them, so the output file layout
+    shows which key the exchange hashed on."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, prev)
+
+
+def _full_and_resumed(spark, tdf, tmp_path):
+    """An uninterrupted run, and a run crashed after 3 buckets then
+    resumed: (full stats, full output dir, [crash, resume] stats,
+    resumed output dir, resumed markers dir)."""
     out1 = str(tmp_path / "full/out")
     mk1 = str(tmp_path / "full/markers")
     full = run_with_resume(spark, tdf, out1, mk1, n_buckets=8, lineage_id="runA")
-    assert full["buckets_processed"] > 0 and full["buckets_skipped"] == 0
-
-    # simulated crash: only 3 buckets complete
     out2 = str(tmp_path / "part/out")
     mk2 = str(tmp_path / "part/markers")
     part = run_with_resume(
         spark, tdf, out2, mk2, n_buckets=8, lineage_id="runB",
         fail_after_buckets=3,
     )
+    resumed = run_with_resume(spark, tdf, out2, mk2, n_buckets=8, lineage_id="runC")
+    return full, out1, [part, resumed], out2, mk2
+
+
+def test_exact_resume(spark, data, tmp_path):
+    tdf, _, _, _ = data
+    full, out1, (part, resumed), out2, mk2 = _full_and_resumed(
+        spark, tdf, tmp_path
+    )
+    assert full["buckets_processed"] > 0 and full["buckets_skipped"] == 0
+
+    # simulated crash: only 3 buckets complete
     assert part["buckets_processed"] == 3
 
     # resume: must process exactly the remaining buckets, none twice
-    resumed = run_with_resume(spark, tdf, out2, mk2, n_buckets=8, lineage_id="runC")
     assert resumed["buckets_skipped"] == 3
     assert resumed["buckets_processed"] == full["buckets_processed"] - 3
 
-    # final output identical to the uninterrupted run
+    # final output identical to the uninterrupted run, one data file
+    # per bucket directory in both
+    layout = _data_files_per_bucket(out1)
+    assert len(layout) == full["buckets_processed"]
+    assert set(layout.values()) == {1}, layout
+    assert _data_files_per_bucket(out2) == layout
     a = spark.read.parquet(out1)
     b = spark.read.parquet(out2)
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
@@ -145,6 +184,110 @@ def test_exact_resume(spark, data, tmp_path):
     # idempotent: a further run does nothing
     again = run_with_resume(spark, tdf, out2, mk2, n_buckets=8)
     assert again["buckets_processed"] == 0
+
+
+def test_resume_one_file_per_bucket(spark, data, tmp_path, uncoalesced):
+    """With every shuffle partition its own write task (AQE merges them
+    all into one task at this input size), the exchange keyed on
+    bucket_id still gives each bucket to exactly one task: one data
+    file per bucket directory, fresh and after crash + resume."""
+    tdf, _, _, _ = data
+    full, out1, _, out2, _ = _full_and_resumed(spark, tdf, tmp_path)
+    layout = _data_files_per_bucket(out1)
+    assert len(layout) == full["buckets_processed"]
+    assert set(layout.values()) == {1}, layout
+    assert _data_files_per_bucket(out2) == layout
+
+
+@pytest.fixture
+def tiny(spark):
+    """Six two-turn conversations spread over some of 8 buckets."""
+    rows = [
+        (f"c{i}", t, "user", f"<p>turn {t} of conversation {i}</p>", None, None)
+        for i in range(6)
+        for t in (1, 2)
+    ]
+    tdf = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp"
+    )
+    present = {r.bucket_id for r in with_bucket(tdf, 8).select("bucket_id").collect()}
+    assert 0 < len(present) < 8
+    return tdf, sorted(present)
+
+
+def _write_markers(spark, markers_dir, rows):
+    spark.createDataFrame(
+        [(b, "seed", status, 0, 0, 0, 0.0, None) for b, status in rows],
+        MARKER_SCHEMA,
+    ).write.parquet(markers_dir)
+
+
+def _marker_rows(spark, markers_dir):
+    return sorted(
+        (r.bucket_id, r.status, r.lineage_id)
+        for r in spark.read.parquet(markers_dir).collect()
+    )
+
+
+def test_resume_fail_after_zero(spark, tiny, tmp_path):
+    tdf, present = tiny
+    out, mk = str(tmp_path / "out"), str(tmp_path / "mk")
+    stats = run_with_resume(
+        spark, tdf, out, mk, n_buckets=8, lineage_id="r", fail_after_buckets=0
+    )
+    assert stats["buckets_processed"] == 0
+    assert stats["buckets_skipped"] == len(present)
+    assert not Path(mk).exists() and not Path(out).exists()
+    with pytest.raises(ValueError):
+        run_with_resume(spark, tdf, out, mk, n_buckets=8, fail_after_buckets=-1)
+
+
+def test_resume_fail_after_exceeds_pending(spark, tiny, tmp_path):
+    tdf, present = tiny
+    out, mk = str(tmp_path / "out"), str(tmp_path / "mk")
+    _write_markers(spark, mk, [(present[0], "done")])
+    stats = run_with_resume(
+        spark, tdf, out, mk, n_buckets=8, lineage_id="r",
+        fail_after_buckets=len(present) + 5,
+    )
+    assert stats["buckets_processed"] == len(present) - 1
+    assert stats["buckets_skipped"] == 1
+    assert _marker_rows(spark, mk) == sorted(
+        [(present[0], "done", "seed")]
+        + [(b, "done", "r") for b in present[1:]]
+    )
+
+
+def test_resume_ignores_markers_not_done(spark, tiny, tmp_path):
+    tdf, present = tiny
+    out, mk = str(tmp_path / "out"), str(tmp_path / "mk")
+    _write_markers(spark, mk, [(present[0], "failed")])
+    stats = run_with_resume(spark, tdf, out, mk, n_buckets=8, lineage_id="r")
+    assert stats["buckets_processed"] == len(present)
+    assert stats["buckets_skipped"] == 0
+    assert _marker_rows(spark, mk) == sorted(
+        [(present[0], "failed", "seed")] + [(b, "done", "r") for b in present]
+    )
+    assert spark.read.parquet(out).count() == tdf.count()
+
+
+def test_resume_done_marker_without_input(spark, tiny, tmp_path):
+    tdf, present = tiny
+    absent = min(set(range(8)) - set(present))
+    out, mk = str(tmp_path / "out"), str(tmp_path / "mk")
+    _write_markers(spark, mk, [(absent, "done")])
+    stats = run_with_resume(spark, tdf, out, mk, n_buckets=8, lineage_id="r")
+    # a marker for a bucket the input lacks is neither processed nor
+    # counted as skipped: the counts cover the input's buckets only
+    assert stats["buckets_processed"] == len(present)
+    assert stats["buckets_skipped"] == 0
+    assert _marker_rows(spark, mk) == sorted(
+        [(absent, "done", "seed")] + [(b, "done", "r") for b in present]
+    )
+    assert sorted(_data_files_per_bucket(out)) == sorted(
+        f"bucket_id={b}" for b in present
+    )
 
 
 def test_null_and_empty_payloads(spark):

@@ -2,7 +2,7 @@
 
 These tests pin the plan properties that matter at scale: filters
 reach the parquet scan, small dims broadcast, the extraction job has
-exactly its two intended exchanges, and the UDF runs on the Arrow
+exactly its one intended exchange, and the UDF runs on the Arrow
 path. A regression here is a performance bug even if results stay
 correct.
 """
@@ -16,8 +16,26 @@ from service1_text_extraction_spark.functions import (
     relational,
     similarity,
 )
-from service1_text_extraction_spark.pipeline import run_extraction
+from service1_text_extraction_spark.pipeline import (
+    assemble_documents,
+    extraction_metrics,
+    run_extraction,
+    run_with_resume,
+)
+from service1_text_extraction_spark.streaming import stream_extract
 
+
+def _exchange_args(plan: str) -> list[str]:
+    """One entry per shuffle Exchange node in a formatted plan's node
+    details: its ``Arguments:`` line, or ``""`` when the node has none
+    (BroadcastExchange is not counted)."""
+    out = []
+    for block in plan.split("\n\n"):
+        lines = block.strip().splitlines()
+        if lines and re.match(r"\(\d+\) Exchange\b", lines[0]):
+            args = [ln for ln in lines if ln.startswith("Arguments:")]
+            out.append(args[0] if args else "")
+    return out
 
 
 def _n_algo_exchanges(plan: str) -> int:
@@ -27,11 +45,37 @@ def _n_algo_exchanges(plan: str) -> int:
     (an unsplittable input scans as 1-2 tasks, serializing every
     scan-side UDF/projection); at real scale the scan has >= cores
     partitions and the spread is a no-op. The algorithmic zero/one-
-    exchange pins below must hold with or without it, so the spread's
-    REPARTITION_BY_NUM exchange is subtracted."""
-    return len(re.findall(r"\(\d+\) Exchange", plan)) - plan.count(
-        "REPARTITION_BY_NUM"
-    )
+    exchange pins below must hold with or without it, so Exchange
+    nodes whose arguments say REPARTITION_BY_NUM are subtracted."""
+    return sum("REPARTITION_BY_NUM" not in a for a in _exchange_args(plan))
+
+
+def _executed_plans(spark, action) -> list[str]:
+    """Run ``action`` and return the formatted physical plan of every
+    SQL execution it started, read from the session's SQL status store
+    (the plans of writes and collects, which ``explain`` cannot show)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        lst = store.executionsList()
+        return {e.executionId(): e for e in map(lst.apply, range(lst.size()))}
+
+    before = set(executions())
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [
+        e.physicalPlanDescription()
+        for k, e in executions().items()
+        if k not in before
+    ]
+
+
+def _plan_tree(plan: str) -> str:
+    """The operator tree of a formatted plan: the adaptive final (or
+    current) plan when there is one, without the initial plan."""
+    tree = plan.split("\n\n", 1)[0]
+    return re.split(r"== Initial Plan ==", tree)[0]
+
 
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
@@ -70,11 +114,13 @@ def test_extraction_plan_shape(spark):
     plan = _plan(run_extraction(spark, tdf, n_buckets=8))
     assert "ArrowEvalPython" in plan  # vectorized UDF, not BatchEvalPython
     assert "BatchEvalPython" not in plan
-    # exactly ONE exchange: the ordering window. The UDF is a pure
+    # exactly ONE exchange, keyed on bucket_id: it feeds the ordering
+    # window and the bucket-partitioned sink. The UDF is a pure
     # per-row map and runs on scan partitions — shuffling raw payload
     # bytes before it was r2's top non-kernel cost.
-    n_exchanges = len(re.findall(r"Arguments: hashpartitioning", plan))
-    assert n_exchanges == 1, plan
+    exchanges = _exchange_args(plan)
+    assert len(exchanges) == 1, plan
+    assert exchanges[0].startswith("Arguments: hashpartitioning(bucket_id#"), plan
     # the window sorts within partitions only (no global sort)
     assert "rangepartitioning" not in plan.lower()
 
@@ -90,8 +136,96 @@ def test_extraction_plan_shape_pre_shuffle_opt_in(spark):
     plan = _plan(
         run_extraction(spark, tdf, n_buckets=8, salt=4, pre_shuffle=True)
     )
-    n_exchanges = len(re.findall(r"Arguments: hashpartitioning", plan))
-    assert n_exchanges == 2, plan
+    assert len(_exchange_args(plan)) == 2, plan
+
+
+def test_resume_write_plan_shape(spark, tmp_path):
+    """The resumable job's data write: the bucket_id exchange feeds
+    both the window and the partitioned writer, whose ordering the
+    window's sort already satisfies — one Exchange, one Sort, no
+    writer sort. The pending set is a driver-side IN filter, so no
+    run (fresh or resumed) plans a broadcast join."""
+    rows = [
+        (f"c{i}", t, "user", f"<p>turn {t} of conversation {i}</p>",
+         None, None)
+        for i in range(12)
+        for t in (1, 2)
+    ]
+    tdf = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp"
+    )
+
+    def run(name, **kw):
+        out, mk = str(tmp_path / name / "out"), str(tmp_path / name / "mk")
+        return _executed_plans(
+            spark, lambda: run_with_resume(spark, tdf, out, mk, n_buckets=8, **kw)
+        )
+
+    for plans in (
+        run("fresh"), run("resumed", fail_after_buckets=3), run("resumed")
+    ):
+        assert not any("BroadcastHashJoin" in p for p in plans), plans
+        writes = [
+            _plan_tree(p)
+            for p in plans
+            if "ArrowEvalPython" in p and "InsertIntoHadoopFsRelation" in p
+        ]
+        assert len(writes) == 1, plans
+        assert len(re.findall(r"\bExchange \(\d+\)", writes[0])) == 1, writes
+        assert len(re.findall(r"\bSort \(\d+\)", writes[0])) == 1, writes
+        assert "Window" in writes[0], writes
+
+
+def test_extraction_exchange_pruned_with_window(spark):
+    """The bucket_id exchange belongs to the ordering window, so callers
+    that use neither turn_seq nor doc_char_offset prune both: their
+    plans keep only the exchanges of their own operators."""
+    rows = [("c", 1, "u", "<p>x</p>", None, None)]
+    tdf = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp"
+    )
+    ex = run_extraction(spark, tdf, n_buckets=8)
+    for df, keys in (
+        (ex.drop("turn_seq", "doc_char_offset"), []),
+        (assemble_documents(ex), ["conv_id"]),
+        (extraction_metrics(ex), ["method"]),
+    ):
+        plan = _plan(df)
+        assert "Window" not in _plan_tree(plan), plan
+        exchanges = _exchange_args(plan)
+        assert len(exchanges) == len(keys), plan
+        for arg, key in zip(exchanges, keys):
+            assert arg.startswith(f"Arguments: hashpartitioning({key}#"), plan
+
+
+def test_stream_batch_write_plan_shape(spark, tmp_path):
+    """Each micro-batch write of stream_extract drops the ordering
+    columns, so its plan has the salted pre-UDF exchange and nothing
+    after it: no window, no bucket_id exchange."""
+    inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    spark.createDataFrame(
+        [(f"c{i}", t, "user", f"<p>turn {t}</p>", None, None)
+         for i in range(6) for t in (1, 2)],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp",
+    ).write.parquet(inp)
+
+    def run():
+        q = stream_extract(spark, inp, out, ckpt, n_buckets=8, salt=4)
+        q.awaitTermination(120)
+
+    writes = [
+        p
+        for p in _executed_plans(spark, run)
+        if "ArrowEvalPython" in p and "InsertIntoHadoopFsRelation" in p
+    ]
+    assert len(writes) == 1, writes
+    tree = _plan_tree(writes[0])
+    assert "Window" not in tree, writes
+    assert len(re.findall(r"\bExchange \(\d+\)", tree)) == 1, writes
+    assert all("pmod(" in a for a in _exchange_args(writes[0])), writes
 
 
 def test_aggregates_partial_combine(spark, sf_dir):
