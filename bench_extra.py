@@ -71,7 +71,7 @@ def main() -> None:
         ).save()
 
     # mirror of bench.py's registry (kept in sync by
-    # tests/test_bench_extra_keys.py)
+    # tests/test_oracle_parity.py::test_bench_keys_are_query_keys)
     queries = {
         "extract_turns": bench_extract,
     }

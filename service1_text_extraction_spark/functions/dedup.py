@@ -1,8 +1,9 @@
 """Deduplication operators for a training-data pipeline.
 
 Exact (hash groupBy), word-shingle Jaccard, MinHash+LSH banding, and
-SimHash — each expressed with JVM-side built-ins only (md5-based
-hashing keeps results portable to the DuckDB oracle). The reference's
+SimHash — md5-based hashing keeps results portable to the DuckDB
+oracle; the per-document signatures and shingle sketches run as
+Arrow-batched Python kernels. The reference's
 only dedup is a path-set ``list(set(...))``
 (``ml_document_processor.py:155``); these are the scale-path
 generalizations a 100 TB corpus needs.
@@ -10,7 +11,7 @@ generalizations a 100 TB corpus needs.
 Scale notes: shingle/self-join candidate generation is the textbook
 shuffle-heavy step — MinHash banding exists precisely to bound it
 (pairs only form inside tiny band buckets). Exact dedup is one
-hash-aggregate; SimHash is one explode + re-aggregate.
+hash-aggregate; SimHash is one Arrow map with zero exchanges.
 """
 
 from __future__ import annotations
@@ -93,42 +94,6 @@ _PAIRS_EXPR = (
 MAX_BUCKET_DF = 100
 
 
-# How _capped_buckets sizes buckets before collecting them — A/B'd at
-# sf0.1 AND 10x (BENCH/capped_ab_sf0.1.json, capped_ab_sf1.json;
-# VERDICT r4 item 1), identical row counts both ways:
-#   "window" (default, the measured winner): count(*) over (partition
-#       by keys) — ONE exchange; WindowExec sorts the exploded stream
-#       by the bucket key, but the sort is radix/spill-backed and at
-#       both scales costs LESS than materializing the stream to cache.
-#       10x best-of: dedup_minhash 2.1s, ngram_jaccard 11.4s. (r4's
-#       "3x regression" did not reproduce under interleaved best-of —
-#       window dedup_minhash re-benched 1.28s at sf0.1, r3-level.)
-#   "semijoin": persist the exploded stream, hash-agg a bucket-size
-#       table, LEFT SEMI join admitted keys back — zero sorts, but the
-#       persist WRITE of the full exploded stream dominates: 2x slower
-#       on the shingle-heavy family at 10x (minhash 4.4s, jaccard
-#       27.0s). Kept selectable; it wins only when the exploded input
-#       is already tiny (semantic_dedup's (vec_id, list_id)).
-CAP_STRATEGY = "window"
-
-# Every DataFrame the semijoin strategy persists (the plan executes
-# after this module returns, so unpersist can't happen in-function).
-_SEMIJOIN_CACHES: list[DataFrame] = []
-
-
-def release_semijoin_caches(blocking: bool = False) -> int:
-    """Unpersist every exploded stream the semijoin cap strategy has
-    cached so far and return how many were released (ADVICE r5: the
-    registry replaces wait-for-LRU-eviction in long-lived sessions
-    that run many distinct semijoin pipelines). Safe to call at any
-    time — a plan still executing just recomputes its source."""
-    n = 0
-    while _SEMIJOIN_CACHES:
-        _SEMIJOIN_CACHES.pop().unpersist(blocking)
-        n += 1
-    return n
-
-
 def _capped_buckets(
     exploded: DataFrame,
     keys: list[str],
@@ -136,7 +101,6 @@ def _capped_buckets(
     cap: int,
     alias: str = "ids",
     n_min: int = 2,
-    strategy: str | None = None,
 ) -> DataFrame:
     """Bucket ``exploded`` (one row per member) by ``keys`` into sorted
     member arrays, admitting only buckets with ``n_min..cap`` members —
@@ -144,53 +108,19 @@ def _capped_buckets(
     degenerate bucket must never materialize its full id array in one
     aggregation buffer, which at 10^9 docs is an executor OOM).
 
-    Default shape ("window", the measured winner at sf0.1 AND 10x —
-    see CAP_STRATEGY above): a window ``count(*)`` over ``keys`` sizes
-    every bucket in the same single exchange the grouping needs anyway
-    (WindowExec is spill-backed, so a mega-bucket costs disk, not
-    heap), the filter discards over-cap/singleton rows, and only then
-    does collect_list run — its largest possible buffer is ``cap``
-    members. The follow-up groupBy reuses the window's hash
-    partitioning: exactly ONE exchange, ONE upstream computation.
-
-    Alternative shape ("semijoin"): persist the exploded stream
-    (memory-and-disk, computed once), hash-agg bucket sizes with
-    map-side combine, admit ``n_min..cap`` keys, shuffled-hash LEFT
-    SEMI join back, then collect. Zero sorts — but materializing the
-    full exploded stream to cache costs more than the window's sort at
-    every measured scale unless the exploded input is already tiny.
-    The cache entry cannot unpersist inside this function (the caller
-    executes the plan later), so it is registered in
-    ``_SEMIJOIN_CACHES``; long-lived sessions call
-    ``release_semijoin_caches()`` after their actions complete to
-    release the MEMORY_AND_DISK entries deterministically (ADVICE r5)
-    instead of waiting for LRU eviction.
-    Both shapes enforce the cap BEFORE any array materializes and
-    produce identical results (plan- and A/B-pinned)."""
-    if strategy is None:
-        strategy = CAP_STRATEGY
-    if strategy not in ("window", "semijoin"):
-        raise ValueError(f"unknown cap strategy: {strategy!r}")
-    if strategy == "window":
-        w = Window.partitionBy(*keys)
-        return (
-            exploded.withColumn("n_members", F.count("*").over(w))
-            .where(F.col("n_members").between(n_min, cap))
-            .groupBy(*keys)
-            .agg(F.array_sort(F.collect_list(member)).alias(alias))
-        )
-    from pyspark import StorageLevel
-
-    src = exploded.persist(StorageLevel.MEMORY_AND_DISK)
-    _SEMIJOIN_CACHES.append(src)
-    admitted = (
-        src.groupBy(*keys)
-        .agg(F.count("*").alias("n_members"))
-        .where(F.col("n_members").between(n_min, cap))
-        .select(*keys)
-    )
+    A window ``count(*)`` over ``keys`` sizes every bucket in the same
+    single exchange the grouping needs anyway (WindowExec is
+    spill-backed, so a mega-bucket costs disk, not heap), the filter
+    discards over-cap/singleton rows, and only then does collect_list
+    run — its largest possible buffer is ``cap`` members. The
+    follow-up groupBy reuses the window's hash partitioning: exactly
+    ONE exchange, ONE upstream computation. (A persist + LEFT SEMI
+    join shape with zero sorts measured 2x slower on the shingle-heavy
+    family at 10x: BENCH/capped_ab_sf0.1.json, capped_ab_sf1.json.)"""
+    w = Window.partitionBy(*keys)
     return (
-        src.join(admitted.hint("shuffle_hash"), keys, "left_semi")
+        exploded.withColumn("n_members", F.count("*").over(w))
+        .where(F.col("n_members").between(n_min, cap))
         .groupBy(*keys)
         .agg(F.array_sort(F.collect_list(member)).alias(alias))
     )
@@ -246,16 +176,13 @@ def ngram_jaccard_pairs(
 
 _H_MOD = 4294967296  # 2^32
 
-# MinHash strategy: "arrow" (default) computes each document's
-# signature in ONE Arrow-batched map — like SimHash, per-doc MinHash
-# is embarrassingly parallel, and min() is idempotent under
-# duplicates, so neither the (doc_id, shingle) DISTINCT shuffle (which
-# carries every ~3-word shingle string — the heaviest stream in the
-# family) nor the groupBy re-aggregation buys anything at any scale.
-# "sql" keeps the explode+distinct+groupBy form the DuckDB oracle
-# mirrors; both are exact integer math over the same md5 halves, so
-# equality is structural (pinned by test_minhash_paths_agree).
-MINHASH_STRATEGY = "arrow"
+# MinHash computes each document's signature in ONE Arrow-batched
+# map: per-doc MinHash is embarrassingly parallel, and min() is
+# idempotent under duplicates, so neither a (doc_id, shingle) DISTINCT
+# shuffle (which would carry every ~3-word shingle string — the
+# heaviest stream in the family) nor a groupBy re-aggregation buys
+# anything at any scale. The DuckDB oracle computes the same integers
+# with the explode+distinct+groupBy SQL form.
 
 # shingle -> (a, b) 32-bit md5 halves, shared across Arrow batches on
 # each worker: 3-gram shingles repeat across documents (boilerplate,
@@ -285,9 +212,9 @@ def _minhash_ab(shingle: str):
 def _minhash_sig_udf():
     """pandas_udf: text -> array of N_MINHASH signature mins.
 
-    Replicates the SQL shape bit-for-bit: Java-\\s-only tokenization
-    (``_JAVA_WS_RE``), word-3-gram shingles, and the short-document
-    fallback of ``SHINGLES_OF_T``'s ``concat_ws`` over
+    Replicates the oracle's SQL shape bit-for-bit: Java-\\s-only
+    tokenization (``_JAVA_WS_RE``), word-3-gram shingles, and the
+    short-document fallback of ``SHINGLES_OF_T``'s ``concat_ws`` over
     ``try_element_at`` — <3 tokens collapse to ONE shingle joining
     whatever tokens exist ('' for token-less/null docs, which the SQL
     explode also emits, so every document row gets a signature).
@@ -337,36 +264,15 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves of one md5(shingle) — one digest per shingle occurrence
     instead of N_MINHASH (the md5s were the dominant CPU cost of the
     MinHash family at sf0.1). Integer mins stay portable to DuckDB
-    ('0x'-prefixed hex casts). Strategy-routed (MINHASH_STRATEGY):
-    the default Arrow map emits the identical integers with zero
-    exchanges."""
-    if MINHASH_STRATEGY == "arrow":
-        sigged = _docs(spark, sf_dir).select(
-            "doc_id", _minhash_sig_udf()(F.col("text")).alias("hs")
-        )
-        return sigged.select(
-            "doc_id",
-            *[
-                F.col("hs").getItem(i).alias(f"h{i}")
-                for i in range(N_MINHASH)
-            ],
-        )
-    sh = _shingled(spark, sf_dir).select(
-        "doc_id",
-        F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10)
-        .cast("long")
-        .alias("a"),
-        F.conv(F.substring(F.md5("shingle"), 9, 8), 16, 10)
-        .cast("long")
-        .alias("b"),
+    ('0x'-prefixed hex casts). One Arrow map emits the integers with
+    zero exchanges."""
+    sigged = _docs(spark, sf_dir).select(
+        "doc_id", _minhash_sig_udf()(F.col("text")).alias("hs")
     )
-    aggs = [
-        F.min(
-            F.pmod(F.col("a") + i * F.col("b"), F.lit(_H_MOD))
-        ).alias(f"h{i}")
-        for i in range(N_MINHASH)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    return sigged.select(
+        "doc_id",
+        *[F.col("hs").getItem(i).alias(f"h{i}") for i in range(N_MINHASH)],
+    )
 
 
 def _band_structs() -> list:
@@ -420,36 +326,14 @@ N_SIMHASH_BITS = 64
 SIMHASH_BAND_BITS = 16  # 4 bands of 16 -> Hamming<=3 shares >=1 band
 
 
-def _simhash_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc bit-vote sums s0..s63: bit j votes +1/-1 by the high bit
-    of hex nibble j%32 of md5((j//32) || ':' || token)."""
-    toks = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.explode(F.expr(_TOKENS)).alias("tok"))
-        .distinct()
-        .withColumn("h0", F.md5(F.concat(F.lit("0:"), F.col("tok"))))
-        .withColumn("h1", F.md5(F.concat(F.lit("1:"), F.col("tok"))))
-    )
-    aggs = [
-        F.sum(
-            F.when(
-                F.substring(f"h{j // 32}", j % 32 + 1, 1) >= "8", 1
-            ).otherwise(-1)
-        ).alias(f"s{j}")
-        for j in range(N_SIMHASH_BITS)
-    ]
-    return toks.groupBy("doc_id").agg(*aggs)
-
-
-# SimHash strategy: "arrow" (default) computes each document's 4 x
-# 16-bit fingerprint segments in ONE Arrow-batched map — per-doc
-# SimHash is embarrassingly parallel, so the SQL shape's two exchanges
-# (the (doc_id, token) DISTINCT shuffle, which carries the full token
+# SimHash computes each document's 4 x 16-bit fingerprint segments in
+# ONE Arrow-batched map: per-doc SimHash is embarrassingly parallel, so
+# the two exchanges of the SQL form the DuckDB oracle uses (the
+# (doc_id, token) DISTINCT shuffle, which carries the full token
 # stream, then the 64-sum re-aggregation) buy nothing at any scale.
-# "sql" keeps the explode+distinct+groupBy form the DuckDB oracle
-# mirrors; both are exact integer math over the same md5 nibbles, so
-# equality is structural (pinned by test_simhash_paths_agree).
-SIMHASH_STRATEGY = "arrow"
+# Bit j votes +1/-1 by the high bit of hex nibble j%32 of
+# md5((j//32) || ':' || token), summed over the document's distinct
+# tokens — exact integer math, so both engines agree bit for bit.
 
 # Java regex \s is ASCII-only ([ \t\n\x0B\f\r]); Python re's \s is
 # Unicode-wide. The arrow tokenizer must replicate Spark's split(...,
@@ -483,13 +367,13 @@ def _simhash_vote_row(tok: str):
 
 def _simhash_segments_udf():
     """pandas_udf: text -> array of 4 x 16-bit fingerprint segments
-    (NULL for null/token-less text — the SQL shape's explode emits no
+    (NULL for null/token-less text — the oracle's explode emits no
     row for those docs, so callers filter NULLs to match).
 
     Bit j of the fingerprint is 1 iff the ±1 votes over the document's
     DISTINCT tokens sum positive, where token votes come from md5 hex
-    nibbles — integer-exact arithmetic, identical to the SQL form by
-    construction. Segment b packs bits b*16..b*16+15 MSB-first,
+    nibbles — integer-exact arithmetic, identical to the oracle's SQL
+    form by construction. Segment b packs bits b*16..b*16+15 MSB-first,
     matching ``simhash_neardup_pairs``'s ``1 << (15 - k)`` weights."""
     ws = re.compile(_JAVA_WS_RE)
     weights = (1 << np.arange(15, -1, -1, dtype=np.int64))
@@ -522,28 +406,15 @@ def _simhash_segments_udf():
 
 
 def _simhash_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, f0..f3) 16-bit fingerprint segments, strategy-routed."""
+    """(doc_id, f0..f3) 16-bit fingerprint segments."""
     n_bands = N_SIMHASH_BITS // SIMHASH_BAND_BITS
-    if SIMHASH_STRATEGY == "arrow":
-        segged = _docs(spark, sf_dir).select(
-            "doc_id", _simhash_segments_udf()(F.col("text")).alias("fs")
-        ).where(F.col("fs").isNotNull())
-        return segged.select(
-            "doc_id",
-            *[F.col("fs").getItem(b).alias(f"f{b}") for b in range(n_bands)],
-        )
-    sums = _simhash_sums(spark, sf_dir)
-    segs = []
-    for b in range(n_bands):
-        seg = None
-        for k in range(SIMHASH_BAND_BITS):
-            bit = F.when(
-                F.col(f"s{b * SIMHASH_BAND_BITS + k}") > 0,
-                F.lit(1 << (SIMHASH_BAND_BITS - 1 - k)),
-            ).otherwise(F.lit(0))
-            seg = bit if seg is None else seg + bit
-        segs.append(seg.cast("long").alias(f"f{b}"))
-    return sums.select("doc_id", *segs)
+    segged = _docs(spark, sf_dir).select(
+        "doc_id", _simhash_segments_udf()(F.col("text")).alias("fs")
+    ).where(F.col("fs").isNotNull())
+    return segged.select(
+        "doc_id",
+        *[F.col("fs").getItem(b).alias(f"f{b}") for b in range(n_bands)],
+    )
 
 
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -551,8 +422,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     sign vector rendered as a bit string. 64 bits (vs 16 in round 1)
     keeps 16-bit band buckets sparse at scale — a 16-bit fingerprint
     has only 2^4 values per band, which makes banding near-quadratic.
-    The bit string renders from the 16-bit segments (MSB-first), so
-    both strategies produce the identical string."""
+    The bit string renders from the 16-bit segments (MSB-first)."""
     per_doc = _simhash_segments(spark, sf_dir)
     n_bands = N_SIMHASH_BITS // SIMHASH_BAND_BITS
     return per_doc.select(
@@ -1366,19 +1236,15 @@ def hll_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _hll_estimate(_hll_registers(_docs(spark, sf_dir)))
 
 
-# Shingle-sketch strategy: "arrow" (default) computes per-BATCH
-# partial sketch rows — (source, bucket, max rho, occurrence count,
-# min h) — inside one mapInPandas kernel: the tokenizer, shingle set,
-# and md5-prefix hash run in-worker (hot shingles memoized, the
-# _minhash_h_row precedent), and each Arrow batch emits at most
-# |sources| x HLL_BUCKETS rows, so the downstream hash-aggregate
-# merges bounded partials exactly like a map-side combine. "sql"
-# keeps the explode+md5 expression shape the DuckDB oracle mirrors;
-# both produce the identical 60-bit integers and the sketch merges
-# (max / sum / min) are order-free, so equality is structural
-# (pinned by test_shingle_sketch_paths_agree).
-SHINGLE_SKETCH_STRATEGY = "arrow"
-
+# The shingle sketches compute per-BATCH partial sketch rows —
+# (source, bucket, max rho, occurrence count, min h) — inside one
+# mapInPandas kernel: the tokenizer, shingle set, and md5-prefix hash
+# run in-worker (hot shingles memoized, the _minhash_ab precedent),
+# and each Arrow batch emits at most |sources| x HLL_BUCKETS rows, so
+# the downstream hash-aggregate merges bounded partials exactly like a
+# map-side combine. The DuckDB oracle's explode+md5 SQL form yields
+# the identical 60-bit integers, and the sketch merges (max / sum /
+# min) are order-free, so the two engines agree exactly.
 _SHINGLE_H_MEMO: dict = {}
 _SHINGLE_MEMO_CAP = 1_000_000
 
@@ -1399,8 +1265,8 @@ def _shingle_sketch_partials(docs: DataFrame) -> DataFrame:
     over the document shingle stream — the shared parent of the HLL
     registers, the OPH stripe minima (``OPH_STRIPES`` divides
     ``HLL_BUCKETS``, so ``h % stripes == bucket % stripes``), and the
-    absolute-overlap composition. Replicates the SQL derivation
-    bit-for-bit: Java-\\s tokenization, per-doc DISTINCT word-3-gram
+    absolute-overlap composition. Replicates the oracle's SQL
+    derivation bit-for-bit: Java-\\s tokenization, per-doc DISTINCT word-3-gram
     shingles with the short-doc single-shingle fallback (token-less
     and NULL docs contribute the '' shingle — the SQL explode's
     behavior), 60-bit md5-hex-prefix hash, bucket = h mod 1024,
@@ -1455,38 +1321,12 @@ def _shingle_sketch_partials(docs: DataFrame) -> DataFrame:
 
 def _hll_registers(docs: DataFrame) -> DataFrame:
     """(source, bucket, r, n) register rows for a documents
-    DataFrame — the sketch in its mergeable form. Strategy-routed
-    (SHINGLE_SKETCH_STRATEGY): the default Arrow kernel emits
-    per-batch partials that this aggregate merges (max is idempotent,
-    counts sum) into the identical registers."""
-    if SHINGLE_SKETCH_STRATEGY == "arrow":
-        return (
-            _shingle_sketch_partials(docs)
-            .groupBy("source", "bucket")
-            .agg(F.max("r").alias("r"), F.sum("n").alias("n"))
-        )
-    rho = (
-        "CASE WHEN w = 0 THEN 51 ELSE"
-        " cast(51 - length(bin(w)) as int) END"
-    )
+    DataFrame — the sketch in its mergeable form: the Arrow kernel's
+    per-batch partials merge here (max is idempotent, counts sum)."""
     return (
-        docs.select("source", F.expr(_TOKENS).alias("t"))
-        .select("source", F.explode(F.expr(SHINGLES_OF_T)).alias("s"))
-        .select(
-            "source",
-            F.expr(
-                f"cast(conv(substring(md5(s), 1, {HLL_HASH_HEX}),"
-                " 16, 10) as bigint)"
-            ).alias("h"),
-        )
-        .select(
-            "source",
-            F.expr(f"h % {HLL_BUCKETS}").alias("bucket"),
-            F.expr(f"h div {HLL_BUCKETS}").alias("w"),
-        )
-        .withColumn("rho", F.expr(rho))
+        _shingle_sketch_partials(docs)
         .groupBy("source", "bucket")
-        .agg(F.max("rho").alias("r"), F.count("*").alias("n"))
+        .agg(F.max("r").alias("r"), F.sum("n").alias("n"))
     )
 
 
@@ -1676,29 +1516,13 @@ def minhash_source_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup family's shared md5-prefix hash, so the estimate is a
     ratio of identical integers in any engine at any parallelism."""
     m = OPH_STRIPES
-    if SHINGLE_SKETCH_STRATEGY == "arrow":
-        # OPH_STRIPES divides HLL_BUCKETS, so h % m == bucket % m and
-        # the stripe minima fold directly from the shared Arrow
-        # partial-sketch rows (min of per-batch minima == global min)
-        regs = (
-            _shingle_sketch_partials(_docs(spark, sf_dir))
-            .groupBy("source", (F.col("bucket") % m).alias("stripe"))
-            .agg(F.min("mn").alias("mn"))
-        )
-        return _oph_pair_jaccard(regs)
+    # OPH_STRIPES divides HLL_BUCKETS, so h % m == bucket % m and the
+    # stripe minima fold directly from the shared Arrow partial-sketch
+    # rows (min of per-batch minima == global min)
     regs = (
-        _docs(spark, sf_dir)
-        .select("source", F.expr(_TOKENS).alias("t"))
-        .select("source", F.explode(F.expr(SHINGLES_OF_T)).alias("s"))
-        .select(
-            "source",
-            F.expr(
-                f"cast(conv(substring(md5(s), 1, {HLL_HASH_HEX}),"
-                " 16, 10) as bigint)"
-            ).alias("h"),
-        )
-        .groupBy("source", (F.col("h") % m).alias("stripe"))
-        .agg(F.min("h").alias("mn"))
+        _shingle_sketch_partials(_docs(spark, sf_dir))
+        .groupBy("source", (F.col("bucket") % m).alias("stripe"))
+        .agg(F.min("mn").alias("mn"))
     )
     return _oph_pair_jaccard(regs)
 
@@ -1881,41 +1705,7 @@ def source_overlap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the two-pass form by construction, so the estimates are
     bit-equal. A/B at sf1.0: 11.29 -> ~4.5 s."""
     m = OPH_STRIPES
-    if SHINGLE_SKETCH_STRATEGY == "arrow":
-        merged = _shingle_sketch_partials(_docs(spark, sf_dir))
-    else:
-        rho = (
-            "CASE WHEN w = 0 THEN 51 ELSE"
-            " cast(51 - length(bin(w)) as int) END"
-        )
-        merged = (
-            _docs(spark, sf_dir)
-            .select("source", F.expr(_TOKENS).alias("t"))
-            .select(
-                "source", F.explode(F.expr(SHINGLES_OF_T)).alias("s")
-            )
-            .select(
-                "source",
-                F.expr(
-                    f"cast(conv(substring(md5(s), 1, {HLL_HASH_HEX}),"
-                    " 16, 10) as bigint)"
-                ).alias("h"),
-            )
-            .select(
-                "source",
-                F.expr(f"h % {HLL_BUCKETS}").alias("bucket"),
-                F.expr(f"h div {HLL_BUCKETS}").alias("w"),
-                "h",
-            )
-            .withColumn("rho", F.expr(rho))
-            .select(
-                "source",
-                "bucket",
-                F.col("rho").alias("r"),
-                F.lit(1).cast("long").alias("n"),
-                F.col("h").alias("mn"),
-            )
-        )
+    merged = _shingle_sketch_partials(_docs(spark, sf_dir))
     per_bucket = (
         merged.groupBy("source", "bucket")
         .agg(

@@ -45,45 +45,6 @@ def _dot(a: str, b: str) -> Column:
     )
 
 
-# Pair-scoring strategy for the candidate-pair cosine. "sql" (the
-# measured default at the test tables' dim=64) evaluates the
-# interpreted ``aggregate(zip_with(...))`` fold per pair; "arrow"
-# ships both embedding columns through an Arrow batch and runs the
-# numpy fold (dimension-sequential — identical IEEE operation order,
-# bit-equal, pinned by test_pair_dot_paths_agree). Interleaved A/B at
-# sf1.0 (20k vectors, dim 64): arrow LOST on every pair-heavy query
-# (knn_join_multiprobe 3.1 -> 7.4 s, semantic_keepers 2.1 -> 4.9 s) —
-# at 64 dims the per-pair Arrow transfer of two vectors outweighs the
-# ~64 interpreted lambda steps it saves. At production dims (768+)
-# the balance flips (the fold is 12x more work per transferred byte);
-# flip the flag there — the kernel and its bit-equality pin ship
-# ready.
-PAIR_DOT_STRATEGY = "sql"
-
-
-def _dot_pair_udf():
-    @pandas_udf("double")
-    def dotp(ea: pd.Series, eb: pd.Series) -> pd.Series:
-        if len(ea) == 0:
-            return pd.Series([], dtype="float64")
-        A = _stack_emb(ea).astype(np.float64, copy=False)
-        B = _stack_emb(eb).astype(np.float64, copy=False)
-        acc = np.zeros(len(A), dtype=np.float64)
-        for j in range(A.shape[1]):
-            acc += A[:, j] * B[:, j]
-        return pd.Series(acc)
-
-    # pure, but the downstream cos-threshold filters must not be
-    # pushed below the evaluation (guide §4.4)
-    return dotp.asNondeterministic()
-
-
-def _pair_dot(a: str, b: str) -> Column:
-    if PAIR_DOT_STRATEGY == "arrow":
-        return _dot_pair_udf()(F.col(a), F.col(b))
-    return _dot(a, b)
-
-
 def _norm(a: str) -> Column:
     return F.sqrt(
         F.expr(
@@ -176,7 +137,7 @@ def cosine_neardup_pairs(
             "a_id",
             "b_id",
             F.round(
-                _pair_dot("ea", "eb") / (F.col("na") * F.col("nb")), 4
+                _dot("ea", "eb") / (F.col("na") * F.col("nb")), 4
             ).alias("cos"),
         )
         .where(F.col("cos") >= threshold)
@@ -686,7 +647,7 @@ def semantic_dedup(
             "a_id",
             "b_id",
             F.round(
-                _pair_dot("ea", "eb") / (F.col("na") * F.col("nb")), 4
+                _dot("ea", "eb") / (F.col("na") * F.col("nb")), 4
             ).alias("cos"),
         )
         .where(F.col("cos") >= threshold)
@@ -997,7 +958,7 @@ def knn_join_multiprobe(
                 "a_id",
                 "b_id",
                 F.round(
-                    _pair_dot("ea", "eb") / (F.col("na") * F.col("nb")), 4
+                    _dot("ea", "eb") / (F.col("na") * F.col("nb")), 4
                 ).alias("cos"),
             )
             .where(F.col("cos").isNotNull())

@@ -120,23 +120,20 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# doc_fingerprint strategy: "arrow" (default) computes each document's
-# min-over-8-gram md5 in ONE Arrow-batched map — the SQL form
-# materializes a length(text)-element array of 32-char hash strings
-# per row through an interpreted (CodegenFallback) transform, which at
-# sf1.0 costs 18.7 s for a map-only query; the Arrow kernel streams
-# C-backed digests with no array ever built (1.0 s, guide §4.2).
-# "sql" keeps the expression form the DuckDB oracle mirrors; both are
-# the same md5 bytes, and min-by-digest == min-by-hex because hex
-# encoding is a byte-wise monotone map (pinned by
-# test_fingerprint_paths_agree).
-FP_STRATEGY = "arrow"
+# doc_fingerprint computes each document's min-over-8-gram md5 in ONE
+# Arrow-batched map: the SQL form the DuckDB oracle uses materializes
+# a length(text)-element array of 32-char hash strings per row through
+# an interpreted (CodegenFallback) transform, which at sf1.0 costs
+# 18.7 s for a map-only query; the Arrow kernel streams C-backed
+# digests with no array ever built (1.0 s, guide §4.2). Both are the
+# same md5 bytes, and min-by-digest == min-by-hex because hex encoding
+# is a byte-wise monotone map.
 FP_GRAM = 8
 
 
 def _fp_min_md5_udf():
     """pandas_udf: text -> min md5 hex over all char 8-grams,
-    replicating the SQL shape bit-for-bit: substring counts CHARS
+    replicating the oracle's SQL shape bit-for-bit: substring counts CHARS
     (Python slicing matches), docs shorter than ``FP_GRAM + 1`` chars
     collapse to the single gram substring(text, 1, 8) == the whole
     text, and NULL text yields NULL (array_min over all-null)."""
@@ -172,28 +169,15 @@ def _fp_min_md5_udf():
     return fp
 
 
-def doc_fingerprint(
-    spark: SparkSession, sf_dir: str, hash_fn: str = "md5"
-) -> DataFrame:
-    """Rolling-hash document fingerprint: the minimum hash over all
+def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rolling-hash document fingerprint: the minimum md5 over all
     char 8-grams (winnowing-style min-sampling, window = whole doc).
-    md5 is the verified default (DuckDB computes identical digests, so
-    the oracle checks values); at 100 TB pass ``hash_fn='xxhash64'``
-    for an 8-byte bigint fingerprint (bench delta in
-    BENCH/BASELINE.md). Strategy-routed (FP_STRATEGY): the default
-    Arrow map emits the identical hex strings with zero exchanges and
-    no per-row hash array."""
+    DuckDB computes identical digests, so the oracle checks values.
+    One Arrow map emits the hex strings with zero exchanges and no
+    per-row hash array."""
     df = _docs(spark, sf_dir)
-    if FP_STRATEGY == "arrow" and hash_fn == "md5":
-        return df.select(
-            "doc_id", _fp_min_md5_udf()(F.col("text")).alias("fingerprint")
-        )
-    grams = F.expr(
-        "transform(sequence(1, greatest(length(text)-7, 1)), "
-        f"i -> {hash_fn}(substring(text, i, 8)))"
-    )
     return df.select(
-        "doc_id", F.array_min(grams).alias("fingerprint")
+        "doc_id", _fp_min_md5_udf()(F.col("text")).alias("fingerprint")
     )
 
 
@@ -964,6 +948,18 @@ VOCAB_SIZE = 20  # top-V wordforms, chosen BELOW the test corpus's 31
                  # interpolates the constant either way)
 
 
+def _top_vocab(tokens: DataFrame) -> DataFrame:
+    """(w, cnt): the top ``VOCAB_SIZE`` wordforms of a token stream
+    with a ``w`` column, by count, ties broken on the token string so
+    the cut is engine-deterministic."""
+    return (
+        tokens.groupBy("w")
+        .agg(F.count("*").alias("cnt"))
+        .orderBy(F.col("cnt").desc(), F.col("w"))
+        .limit(VOCAB_SIZE)
+    )
+
+
 def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The induced vocabulary: top ``VOCAB_SIZE`` wordforms by corpus
     frequency, ties broken on the token string so the cut is
@@ -972,19 +968,11 @@ def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys at 100 TB — a plain shuffle agg, NOT a global sort: the top-V
     head is taken with a rank window over the aggregated counts, and
     Spark's TakeOrderedAndProject handles the small-V case)."""
-    counts = (
-        _docs(spark, sf_dir)
-        .select(F.explode(F.expr(_TOKENS)).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("cnt"))
+    tokens = _docs(spark, sf_dir).select(
+        F.explode(F.expr(_TOKENS)).alias("w")
     )
-    return (
-        counts.orderBy(F.col("cnt").desc(), F.col("w"))
-        .limit(VOCAB_SIZE)
-        .select(
-            "w",
-            F.col("cnt").cast("long").alias("cnt"),
-        )
+    return _top_vocab(tokens).select(
+        "w", F.col("cnt").cast("long").alias("cnt")
     )
 
 
@@ -1003,13 +991,7 @@ def vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once where the former vocab_top_terms() arm re-scanned and
     # re-tokenized it (identical counts, hence identical top-V cut)
     tok = tok.localCheckpoint(eager=False)
-    vocab = (
-        tok.groupBy("w")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col("w"))
-        .limit(VOCAB_SIZE)
-        .select("w", F.lit(1).alias("in_vocab"))
-    )
+    vocab = _top_vocab(tok).select("w", F.lit(1).alias("in_vocab"))
     return (
         tok.join(F.broadcast(vocab), "w", "left")
         .groupBy("doc_id")

@@ -119,47 +119,31 @@ def _result_tuple(r) -> tuple:
     )
 
 
-@F.pandas_udf(RESULT_FIELDS)
-def extract_turn_udf(payloads: pd.Series) -> pd.DataFrame:
-    """Arrow-batched turn extraction: one struct row per payload.
-
-    Identical payloads inside a batch (re-forwarded attachments,
-    boilerplate turns) are extracted once and fanned out — free on
-    unique corpora, large on duplicate-heavy real transcripts.
-    """
-    memo: dict[str, tuple] = {}
-    rows = []
-    for payload in payloads:
-        key = payload if isinstance(payload, str) else ""
-        cached = memo.get(key)
-        if cached is None:
-            r = extract_turn(payload if isinstance(payload, str) else None)
-            cached = _result_tuple(r)
-            memo[key] = cached
-        rows.append(cached)
-    return pd.DataFrame(rows, columns=_RESULT_COLUMNS)
-
-
-def _custom_extract_udf(
+def _extract_udf(
     pw_map: dict[str, list[str]] | None = None,
     ocr_spec: str | None = None,
 ):
-    """Parameterized UDF variant, used when either opt-in is present.
+    """Arrow-batched turn extraction over ``(conv_id, text)``: one
+    struct row per payload.
 
-    ``pw_map`` (reference password store,
+    Identical payloads inside a batch (re-forwarded attachments,
+    boilerplate turns) are extracted once and fanned out — free on
+    unique corpora, large on duplicate-heavy real transcripts. The memo
+    keys on (payload, the conversation's candidate passwords), so
+    identical payloads under different password sets never cross.
+
+    ``pw_map`` (opt-in, reference password store,
     file_management_service.py:119-212) maps conv_id to candidate
     passwords (≤3 tried per document, after the empty password). The
     map ships to workers inside the UDF closure — the
     broadcast-variable analogue; password stores are KBs even at
-    100 TB corpus scale. Memoization keys on (payload, conv's
-    candidates) so identical payloads under different password sets
-    never cross.
+    100 TB corpus scale.
 
-    ``ocr_spec`` is a ``"package.module:callable"`` OCR-hook spec
-    (reference F5 fallback, core_pdf_processor.py:467-561), resolved
-    and installed once per worker via ``payload.resolve_ocr_hook`` —
-    a string survives serialization to executor Python workers where
-    a driver-side callable would not."""
+    ``ocr_spec`` (opt-in) is a ``"package.module:callable"`` OCR-hook
+    spec (reference F5 fallback, core_pdf_processor.py:467-561),
+    resolved and installed once per worker via
+    ``payload.resolve_ocr_hook`` — a string survives serialization to
+    executor Python workers where a driver-side callable would not."""
     pw_map = pw_map or {}
 
     @F.pandas_udf(RESULT_FIELDS)
@@ -212,6 +196,10 @@ def bucket_expr(conv_id: Column, n_buckets: int) -> Column:
 
 
 def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
+    # checked on the driver: 0 would fail inside a task (pmod by zero)
+    # and a negative count would yield bucket ids outside 0..n-1
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     return df.withColumn("bucket_id", bucket_expr(F.col("conv_id"), n_buckets))
 
 
@@ -292,17 +280,12 @@ def run_extraction(
         else:
             df = df.repartition(F.col("bucket_id"), salt_key)
 
-    if passwords is None and ocr_hook is None:
-        ex_col = extract_turn_udf(F.col("text"))
-    else:
-        pw_map = (
-            {str(k): list(v)[:3] for k, v in passwords.items()}
-            if passwords
-            else None
-        )
-        ex_col = _custom_extract_udf(pw_map, ocr_hook)(
-            F.col("conv_id"), F.col("text")
-        )
+    pw_map = (
+        {str(k): list(v)[:3] for k, v in passwords.items()}
+        if passwords
+        else None
+    )
+    ex_col = _extract_udf(pw_map, ocr_hook)(F.col("conv_id"), F.col("text"))
     extracted = df.withColumn("ex", ex_col).select(
         "conv_id",
         "turn_idx",

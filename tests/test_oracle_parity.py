@@ -138,7 +138,9 @@ def test_driver_cap_discipline():
 def test_bench_keys_are_query_keys():
     """VERDICT r5 item 7: every timed key bench.py emits must be the
     exact queries() key of the function it times, so BENCH_r*.json
-    rows join to CORRECTNESS_r*.json rows without a hand-kept map."""
+    rows join to CORRECTNESS_r*.json rows without a hand-kept map;
+    and bench_registry.FRAMES (bench_extra.py's copy) must hold the
+    same keys."""
     import os
     import re
 
@@ -151,6 +153,11 @@ def test_bench_keys_are_query_keys():
     assert len(bench_keys) >= 40  # the headline suite, not a subset
     unmatched = [k for k in bench_keys if k not in entry_mod.queries()]
     assert not unmatched, unmatched
+    # bench_extra.py times bench_registry.FRAMES plus its own
+    # extraction closure: the two registries must not drift apart
+    import bench_registry
+
+    assert set(bench_keys) - {"extract_turns"} == set(bench_registry.FRAMES)
 
 
 def test_assign_paths_agree(spark, sf_dir):
@@ -342,36 +349,31 @@ def test_probe_paths_agree(spark, sf_dir):
     assert rank1 == primary
 
 
-def test_simhash_paths_agree(spark, sf_dir):
-    """The Arrow per-doc SimHash (default) and the SQL
-    explode+distinct+groupBy shape must produce identical fingerprints
-    and identical near-dup pairs — both are exact integer math over
-    the same md5 nibbles, including Java-\\s-only tokenization and
-    absent-row semantics for token-less documents."""
-    from service1_text_extraction_spark.functions import dedup
-
-    def both(fn):
-        prev = dedup.SIMHASH_STRATEGY
-        try:
-            dedup.SIMHASH_STRATEGY = "arrow"
-            a = sorted(map(tuple, fn().collect()))
-            dedup.SIMHASH_STRATEGY = "sql"
-            b = sorted(map(tuple, fn().collect()))
-        finally:
-            dedup.SIMHASH_STRATEGY = prev
-        return a, b
-
-    fa, fb = both(lambda: dedup.simhash_fingerprints(spark, sf_dir))
-    assert fa == fb and fa
-    pa, pb = both(lambda: dedup.simhash_neardup_pairs(spark, sf_dir))
-    assert pa == pb
+def _tiny_documents(spark, tmp_path, rows):
+    """Write ``rows`` (doc_id, text) as an sf_dir holding only a
+    documents table; return the dir."""
+    path = str(tmp_path / "d")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        f"{path}/documents.parquet"
+    )
+    return path
 
 
-def test_simhash_arrow_tokenizer_edges(spark):
+def _tiny_oracle(path):
+    """DuckDB over the Spark-written documents directory."""
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM"
+        f" '{path}/documents.parquet/*.parquet'"
+    )
+    return con
+
+
+def test_simhash_arrow_tokenizer_edges(spark, tmp_path):
     """Arrow SimHash must replicate Spark's split semantics exactly:
     Java \\s is ASCII-only (a non-breaking space is NOT a separator),
-    and null/whitespace-only docs are ABSENT (as the SQL explode emits
-    no row), not null-fingerprinted."""
+    and null/whitespace-only docs are ABSENT (as the oracle's explode
+    emits no row), not null-fingerprinted."""
     from service1_text_extraction_spark.functions import dedup
 
     rows = [
@@ -381,54 +383,18 @@ def test_simhash_arrow_tokenizer_edges(spark):
         (4, None),
         (5, "x"),
     ]
-    import os
-    import tempfile
-
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "d")
-        df.write.parquet(os.path.join(path, "documents.parquet"))
-        prev = dedup.SIMHASH_STRATEGY
-        try:
-            dedup.SIMHASH_STRATEGY = "arrow"
-            a = {r.doc_id: r.simhash
-                 for r in dedup.simhash_fingerprints(spark, path).collect()}
-            dedup.SIMHASH_STRATEGY = "sql"
-            b = {r.doc_id: r.simhash
-                 for r in dedup.simhash_fingerprints(spark, path).collect()}
-        finally:
-            dedup.SIMHASH_STRATEGY = prev
+    path = _tiny_documents(spark, tmp_path, rows)
+    a = {r.doc_id: r.simhash
+         for r in dedup.simhash_fingerprints(spark, path).collect()}
+    b = dict(_tiny_oracle(path).execute(
+        entry_mod.oracle_sql()["dedup_simhash"]
+    ).fetchall())
     assert a == b
     assert set(a) == {1, 2, 5}  # 3 (ws-only) and 4 (null) absent
     assert all(len(v) == 64 and set(v) <= {"0", "1"} for v in a.values())
 
 
-def test_minhash_paths_agree(spark, sf_dir):
-    """The Arrow per-doc MinHash (default) and the SQL
-    explode+distinct+groupBy shape must produce identical signatures
-    and identical band candidates — both are the same (a + i*b) mod
-    2^32 integer math over the same md5 halves, and min() makes the
-    SQL path's shingle dedup semantically inert."""
-    from service1_text_extraction_spark.functions import dedup
-
-    def both(fn):
-        prev = dedup.MINHASH_STRATEGY
-        try:
-            dedup.MINHASH_STRATEGY = "arrow"
-            a = sorted(map(tuple, fn().collect()))
-            dedup.MINHASH_STRATEGY = "sql"
-            b = sorted(map(tuple, fn().collect()))
-        finally:
-            dedup.MINHASH_STRATEGY = prev
-        return a, b
-
-    sa, sb = both(lambda: dedup.minhash_signatures(spark, sf_dir))
-    assert sa == sb and sa
-    ca, cb = both(lambda: dedup.minhash_band_candidates(spark, sf_dir))
-    assert ca == cb
-
-
-def test_minhash_arrow_shingle_edges(spark):
+def test_minhash_arrow_shingle_edges(spark, tmp_path):
     """Arrow MinHash must replicate SHINGLES_OF_T's short-document
     fallback exactly: <3 tokens collapse to ONE concat_ws shingle —
     '' for null/whitespace-only docs (which therefore DO get a
@@ -446,79 +412,16 @@ def test_minhash_arrow_shingle_edges(spark):
         (6, "nbsp pair stays one token"),
         (7, "line sep also one token"),
     ]
-    import os
-    import tempfile
-
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "d")
-        df.write.parquet(os.path.join(path, "documents.parquet"))
-
-        prev = dedup.MINHASH_STRATEGY
-        try:
-            dedup.MINHASH_STRATEGY = "arrow"
-            a = sorted(
-                map(tuple, dedup.minhash_signatures(spark, path).collect())
-            )
-            dedup.MINHASH_STRATEGY = "sql"
-            b = sorted(
-                map(tuple, dedup.minhash_signatures(spark, path).collect())
-            )
-        finally:
-            dedup.MINHASH_STRATEGY = prev
+    path = _tiny_documents(spark, tmp_path, rows)
+    a = sorted(map(tuple, dedup.minhash_signatures(spark, path).collect()))
+    b = sorted(_tiny_oracle(path).execute(
+        f"WITH {entry_mod._TOKS_CTE}, {entry_mod._SHINGLES_CTE}"
+        f" SELECT doc_id, {entry_mod._MINHASH_AGGS} FROM sh GROUP BY doc_id"
+    ).fetchall())
     assert a == b
     assert [r[0] for r in a] == [1, 2, 3, 4, 5, 6, 7]
     # 4 and 5 share the '' shingle, hence identical signatures
     assert a[3][1:] == a[4][1:]
-
-
-def test_pair_dot_paths_agree(spark, sf_dir):
-    """The Arrow pair-dot fold must be bit-equal to the interpreted
-    JVM ``aggregate(zip_with(...))`` form (sequential per-dimension
-    accumulation — the _fold_dots argument applied to pairs): the
-    semantic-dedup edge set, with its 4dp-rounded cosines, must be
-    identical under both strategies."""
-    from service1_text_extraction_spark.functions import similarity
-
-    prev = similarity.PAIR_DOT_STRATEGY
-    try:
-        similarity.PAIR_DOT_STRATEGY = "arrow"
-        arrow = {
-            (r.a_id, r.b_id): r.cos
-            for r in similarity.semantic_dedup(spark, sf_dir).collect()
-        }
-        similarity.PAIR_DOT_STRATEGY = "sql"
-        sql = {
-            (r.a_id, r.b_id): r.cos
-            for r in similarity.semantic_dedup(spark, sf_dir).collect()
-        }
-    finally:
-        similarity.PAIR_DOT_STRATEGY = prev
-    assert arrow == sql
-
-
-def test_fingerprint_paths_agree(spark, sf_dir):
-    """The Arrow min-md5-8-gram kernel must emit the identical hex
-    fingerprint as the SQL transform/array_min form (min-by-digest ==
-    min-by-hex: hex encoding is byte-wise monotone), including the
-    short-text (single truncated gram) fallback."""
-    from service1_text_extraction_spark.functions import textstats
-
-    prev = textstats.FP_STRATEGY
-    try:
-        textstats.FP_STRATEGY = "arrow"
-        arrow = {
-            r.doc_id: r.fingerprint
-            for r in textstats.doc_fingerprint(spark, sf_dir).collect()
-        }
-        textstats.FP_STRATEGY = "sql"
-        sql = {
-            r.doc_id: r.fingerprint
-            for r in textstats.doc_fingerprint(spark, sf_dir).collect()
-        }
-    finally:
-        textstats.FP_STRATEGY = prev
-    assert arrow == sql
 
 
 def test_verified_pairs_affix_trim_matches_plain_lev(spark, sf_dir):
@@ -532,39 +435,3 @@ def test_verified_pairs_affix_trim_matches_plain_lev(spark, sf_dir):
     a = {(r.a_id, r.b_id): (r.lev, r.dist_frac) for r in plain.collect()}
     b = {(r.a_id, r.b_id): (r.lev, r.dist_frac) for r in banded.collect()}
     assert a == b
-
-
-def test_shingle_sketch_paths_agree(spark, sf_dir):
-    """The Arrow shingle-sketch kernel must reproduce the SQL
-    explode+md5 derivation exactly: identical HLL estimates and OPH
-    stripe-Jaccard rows under both strategies (the sketch merges are
-    order-free integer max/sum/min, so equality is structural)."""
-    from service1_text_extraction_spark.functions import dedup
-
-    prev = dedup.SHINGLE_SKETCH_STRATEGY
-    out = {}
-    try:
-        for strat in ("arrow", "sql"):
-            dedup.SHINGLE_SKETCH_STRATEGY = strat
-            hll = sorted(
-                map(
-                    tuple,
-                    dedup.hll_distinct_shingles(spark, sf_dir).collect(),
-                )
-            )
-            oph = sorted(
-                map(
-                    tuple,
-                    dedup.minhash_source_jaccard(spark, sf_dir).collect(),
-                )
-            )
-            ovl = sorted(
-                map(
-                    tuple,
-                    dedup.source_overlap_stats(spark, sf_dir).collect(),
-                )
-            )
-            out[strat] = (hll, oph, ovl)
-    finally:
-        dedup.SHINGLE_SKETCH_STRATEGY = prev
-    assert out["arrow"] == out["sql"]

@@ -1,6 +1,7 @@
 """End-to-end Spark pipeline tests: golden equality, salt-invariance,
 document assembly, metrics, and exact resume (FIXTURES.md §2-4)."""
 
+import runpy
 from pathlib import Path
 
 import pytest
@@ -288,6 +289,27 @@ def test_resume_done_marker_without_input(spark, tiny, tmp_path):
     assert sorted(_data_files_per_bucket(out)) == sorted(
         f"bucket_id={b}" for b in present
     )
+
+
+@pytest.mark.parametrize("n_buckets", [0, -4])
+def test_n_buckets_validated(spark, tiny, tmp_path, monkeypatch, n_buckets):
+    """A bucket count below 1 is refused on the driver: 0 used to fail
+    inside a task (pmod by zero) and -4 to yield bucket ids {-2..2}."""
+    tdf, _ = tiny
+    with pytest.raises(ValueError, match="n_buckets"):
+        with_bucket(tdf, n_buckets)
+    out, mk = str(tmp_path / "out"), str(tmp_path / "mk")
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_with_resume(spark, tdf, out, mk, n_buckets=n_buckets)
+    assert not Path(mk).exists() and not Path(out).exists()
+    job = Path(__file__).resolve().parents[1] / "jobs" / "extract_job.py"
+    monkeypatch.setattr(
+        "sys.argv",
+        [str(job), "--input", "i", "--output", out, "--markers", mk,
+         "--n-buckets", str(n_buckets)],
+    )
+    with pytest.raises(SystemExit, match="--n-buckets must be > 0"):
+        runpy.run_path(str(job), run_name="__main__")
 
 
 def test_null_and_empty_payloads(spark):

@@ -262,20 +262,18 @@ def test_shingles_tokenize_once(spark, sf_dir):
     """The SQL shingle path must materialize the token array before the
     per-element transform — inlining the tokenizer into the lambda
     re-tokenizes the document per shingle (measured O(n^2): 9.6 s for a
-    260k-row explode at sf0.1; ~1 s materialized). Pinned on the SQL
-    strategy (the oracle mirror and the shape `_shingled`'s Jaccard
-    consumers still use); the default Arrow path tokenizes in-worker,
-    once per doc by construction, and must show NO plan-side split."""
-    prev = dedup.MINHASH_STRATEGY
-    try:
-        dedup.MINHASH_STRATEGY = "sql"
-        plan = _plan(dedup.minhash_band_candidates(spark, sf_dir))
-        assert plan.count("split(") == 1, plan
-        dedup.MINHASH_STRATEGY = "arrow"
-        plan = _plan(dedup.minhash_band_candidates(spark, sf_dir))
-        assert plan.count("split(") == 0, plan
-    finally:
-        dedup.MINHASH_STRATEGY = prev
+    260k-row explode at sf0.1; ~1 s materialized). Pinned on
+    ngram_jaccard_pairs, the consumer of ``_shingled``: its plan reads
+    the documents in three branches (buckets and both size sides), and
+    each branch must hold exactly one split. The MinHash Arrow kernel
+    tokenizes in-worker, once per doc by construction, and must show
+    NO plan-side split."""
+    plan = _plan(dedup.ngram_jaccard_pairs(spark, sf_dir))
+    split_nodes = [b for b in plan.split("\n\n") if "split(" in b]
+    assert len(split_nodes) == _plan_tree(plan).count("Scan parquet"), plan
+    assert all(b.count("split(") == 1 for b in split_nodes), plan
+    plan = _plan(dedup.minhash_band_candidates(spark, sf_dir))
+    assert plan.count("split(") == 0, plan
 
 
 def test_textstats_tokenize_once(spark, sf_dir):
@@ -424,43 +422,6 @@ def test_capped_buckets_cap_precedes_collect(spark):
     # functional: mega-bucket and singleton are gone, survivor intact
     out = {r.shingle: r.ids for r in capped.collect()}
     assert out == {"ok": [1, 2]}
-
-
-def test_capped_buckets_semijoin_strategy(spark):
-    """The selectable "semijoin" cap shape (BENCH/capped_ab_*.json)
-    must keep the same safety property — the n_members size gate runs
-    BELOW collect_list, via a LEFT SEMI join against the hash-agg'd
-    bucket sizes — and agree bit-for-bit with the window default."""
-    rows = [("mega", i) for i in range(500)] + [
-        ("ok", 1), ("ok", 2), ("single", 9),
-    ]
-    df = spark.createDataFrame(rows, "shingle string, doc_id int")
-    capped = dedup._capped_buckets(
-        df, ["shingle"], "doc_id", cap=100, strategy="semijoin"
-    )
-    plan = _plan(capped)
-    assert "LeftSemi" in plan, plan
-    # the size filter sits on the semi-join's build side, so it is
-    # evaluated before any collect_list buffer can form
-    m_filter = re.search(r"\((\d+)\) Filter", plan)
-    m_coll = [
-        int(m.group(1))
-        for m in re.finditer(r"\((\d+)\) (?:Object|Sort)?(?:Hash)?Aggregate", plan)
-        if "collect_list" in plan.split(f"({m.group(1)}) ")[1].split("\n\n")[0]
-    ]
-    assert m_filter and m_coll and int(m_filter.group(1)) < min(m_coll), plan
-    out = {r.shingle: r.ids for r in capped.collect()}
-    assert out == {"ok": [1, 2]}
-
-    # ADVICE r5: the strategy's MEMORY_AND_DISK entry is registered
-    # and releasable — after the action completes, one call frees it
-    assert len(dedup._SEMIJOIN_CACHES) >= 1
-    cached = dedup._SEMIJOIN_CACHES[-1]
-    assert cached.storageLevel.useMemory  # actually persisted
-    released = dedup.release_semijoin_caches(blocking=True)
-    assert released >= 1
-    assert dedup._SEMIJOIN_CACHES == []
-    assert not cached.storageLevel.useMemory  # unpersisted for real
 
 
 def test_capped_buckets_in_neardup_pipelines(spark, sf_dir):
