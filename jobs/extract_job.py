@@ -54,6 +54,8 @@ def main() -> None:
     args = p.parse_args()
     if args.salt is not None and not args.pre_shuffle:
         raise SystemExit("--salt requires --pre-shuffle")
+    if args.salt is not None and args.salt <= 0:
+        raise SystemExit("--salt must be > 0")
     if args.n_buckets <= 0:
         raise SystemExit("--n-buckets must be > 0")
 

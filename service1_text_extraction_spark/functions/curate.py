@@ -130,18 +130,16 @@ def sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SAMPLE_QUOTA = 20  # exact per-source keep count (production passes
-                   # its own source -> quota map the same shape)
+SAMPLE_QUOTA = 20  # exact per-source keep count
 SAMPLE_SHARDS = 8  # phase-1 salt fan-out (production: ~cluster cores)
 
 
 def sample_exact_quota(
-    spark: SparkSession, sf_dir: str, quota: int = SAMPLE_QUOTA,
-    shards: int = SAMPLE_SHARDS,
+    spark: SparkSession, sf_dir: str, shards: int = SAMPLE_SHARDS,
 ) -> DataFrame:
     """Exact-count stratified sampling: keep exactly
-    ``min(quota, n_source)`` documents per source, chosen by a salted
-    deterministic md5 order — the exact-budget companion to the
+    ``min(SAMPLE_QUOTA, n_source)`` documents per source, chosen by a
+    salted deterministic md5 order — the exact-budget companion to the
     rate-based ``sample_by_source`` (corpus assemblies that promise
     "N documents/tokens from source X" need exact counts, not
     expected rates). Rerun-stable at any cluster size: only
@@ -154,14 +152,14 @@ def sample_exact_quota(
     through ONE task): phase 1 salts each source into ``shards``
     shards by an independent slice of the same md5 (hex chars 17-20 —
     bits disjoint from the 16-char order prefix) and takes the
-    per-(source, shard) top ``quota`` — a mega-source now sorts as
-    ``shards`` parallel spill-backed partitions. Phase 2 re-ranks
-    ONLY the survivors (at most quota x shards rows per source, a
-    few KB) with the per-source window the one-phase form ran over
+    per-(source, shard) top ``SAMPLE_QUOTA`` — a mega-source now sorts
+    as ``shards`` parallel spill-backed partitions. Phase 2 re-ranks
+    ONLY the survivors (at most SAMPLE_QUOTA x shards rows per source,
+    a few KB) with the per-source window the one-phase form ran over
     the whole corpus. The output is PROVABLY identical to one-phase:
-    any global top-``quota`` element is preceded by fewer than
-    ``quota`` source rows, hence by fewer than ``quota`` rows of its
-    own shard, so it survives phase 1; phase 2 then reproduces the
+    any global top-Q element (Q = ``SAMPLE_QUOTA``) is preceded by
+    fewer than Q source rows, hence by fewer than Q rows of its own
+    shard, so it survives phase 1; phase 2 then reproduces the
     global order exactly — which is why the DuckDB oracle can stay
     the verbatim one-phase window (it replays the same selection),
     and why ``shards=1`` is pinned bit-equal to ``shards=8`` in
@@ -187,12 +185,12 @@ def sample_exact_quota(
         base = (
             base.withColumn("shard", shard)
             .withColumn("shard_rank", F.row_number().over(w1))
-            .where(F.col("shard_rank") <= quota)
+            .where(F.col("shard_rank") <= SAMPLE_QUOTA)
         )
     w2 = Window.partitionBy("source").orderBy("hk", "doc_id")
     return (
         base.withColumn("sample_rank", F.row_number().over(w2))
-        .where(F.col("sample_rank") <= quota)
+        .where(F.col("sample_rank") <= SAMPLE_QUOTA)
         .select(
             "doc_id", "source",
             F.col("sample_rank").cast("int").alias("sample_rank"),
@@ -304,17 +302,15 @@ def split_leak_safe(
 WSAMPLE_K = 50  # sample size
 
 
-def weighted_sample(
-    spark: SparkSession, sf_dir: str, k: int = WSAMPLE_K
-) -> DataFrame:
+def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement (the
     exponential-clock form of Efraimidis-Spirakis A-ES): each doc
     draws u from its own md5 (u = (h+1)/2^60, never 0), gets key =
-    -ln(u)/w with w = n_chars, and the sample is the k SMALLEST keys
-    — inclusion probability proportional to weight, reproducible
-    across engines/runs/cluster sizes because u is content-derived,
-    not a PRNG (``df.sample``'s seed changes meaning with the
-    partition layout; this never does).
+    -ln(u)/w with w = n_chars, and the sample is the ``WSAMPLE_K``
+    SMALLEST keys — inclusion probability proportional to weight,
+    reproducible across engines/runs/cluster sizes because u is
+    content-derived, not a PRNG (``df.sample``'s seed changes meaning
+    with the partition layout; this never does).
 
     Scale shape: a pure projection + ``orderBy().limit(k)`` — Spark
     plans TakeOrderedAndProject: per-partition top-k heaps then ONE
@@ -326,7 +322,7 @@ def weighted_sample(
     return (
         wsample_keyed(_docs_w(spark, sf_dir))
         .orderBy(F.col("k_").asc(), F.col("doc_id").asc())
-        .limit(k)
+        .limit(WSAMPLE_K)
         .select("doc_id", "source", "n_chars")
     )
 

@@ -704,21 +704,13 @@ def minhash_connected_components(
 GRAM_LEN = 64  # duplicate-passage gram width (chars)
 GRAM_STRIDE = 16  # stride between gram starts
 
-# Gram hash function. md5 is the verified baseline: DuckDB computes the
-# identical digest, so the oracle checks hash VALUES, not just counts.
-# At 100 TB swap to 'xxhash64' — an 8-byte bigint per gram instead of a
-# 32-char hex string quarters the shuffle payload (measured delta in
-# BENCH/BASELINE.md); semantics are identical because the hash is only
-# an equality key.
-GRAM_HASH_FN = "md5"
 
-
-def _passage_grams(
-    spark: SparkSession, sf_dir: str, hash_fn: str
-) -> DataFrame:
+def _passage_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strided ``GRAM_LEN``-char gram hashes per document — (doc_id,
-    n_chars, off, h), one row per gram start. ``n_chars`` rides along
-    as one long per row for consumers that need coverage math
+    n_chars, off, h), one row per gram start. ``h`` is the md5 hex
+    digest: DuckDB computes the identical digest, so the oracle checks
+    hash VALUES, not just counts. ``n_chars`` rides along as one long
+    per row for consumers that need coverage math
     (``dup_passage_fraction``); Catalyst prunes it everywhere it is
     unused, so ``duplicate_passages``'s plan is unchanged."""
     return _docs(spark, sf_dir).select(
@@ -728,7 +720,7 @@ def _passage_grams(
             F.expr(
                 f"transform(sequence(0, greatest(cast(floor((length(text) -"
                 f" {GRAM_LEN}) / {GRAM_STRIDE}) as int), 0)), i -> struct("
-                f"i * {GRAM_STRIDE} as off, {hash_fn}(substring(text,"
+                f"i * {GRAM_STRIDE} as off, md5(substring(text,"
                 f" i * {GRAM_STRIDE} + 1, {GRAM_LEN})) as h))"
             )
         ).alias("g"),
@@ -753,9 +745,7 @@ def _multi_doc_grams(grams: DataFrame) -> DataFrame:
     )
 
 
-def duplicate_passages(
-    spark: SparkSession, sf_dir: str, hash_fn: str = GRAM_HASH_FN
-) -> DataFrame:
+def duplicate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document duplicated-passage detection — the removal target
     of exact-substring corpus dedup (Lee et al.'s "Deduplicating
     Training Data Makes Language Models Better" family, re-expressed
@@ -770,7 +760,7 @@ def duplicate_passages(
     list, not 10^12 pairs (MAX_BUCKET_DF caps pathological grams the
     same way the shingle paths do).
     """
-    grams = _passage_grams(spark, sf_dir, hash_fn)
+    grams = _passage_grams(spark, sf_dir)
     return (
         grams.join(_multi_doc_grams(grams), "h")
         .select(
@@ -782,9 +772,7 @@ def duplicate_passages(
     )
 
 
-def dup_passage_fraction(
-    spark: SparkSession, sf_dir: str, hash_fn: str = GRAM_HASH_FN
-) -> DataFrame:
+def dup_passage_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document duplicated-text fraction — the removal METRIC of
     exact-substring dedup (Lee et al. 2022 report corpora by "fraction
     of tokens in a duplicate substring"; RefinedWeb/FineWeb gate docs
@@ -810,7 +798,7 @@ def dup_passage_fraction(
     docs share the md5('') gram, and 0-covered / 0-length divides to
     NULL in Spark but NaN in DuckDB — the guard pins both engines to
     "empty doc -> absent", matching its 0-duplicated-chars meaning)."""
-    grams = _passage_grams(spark, sf_dir, hash_fn)
+    grams = _passage_grams(spark, sf_dir)
     dup = grams.where(F.col("n_chars") > 0).join(
         _multi_doc_grams(grams), "h"
     )
@@ -1080,7 +1068,6 @@ def _trim_affix_udf():
 def minhash_verified_pairs(
     spark: SparkSession, sf_dir: str,
     max_dist_frac: float = VERIFY_MAX_DIST_FRAC,
-    banded: bool = False,
 ) -> DataFrame:
     """Candidate-then-VERIFY near-dup: the LSH band candidates
     (recall-oriented, approximate) verified by exact Levenshtein
@@ -1096,17 +1083,10 @@ def minhash_verified_pairs(
     exchange. The verify budget is |candidates| * O(len_a * len_b);
     MAX_BUCKET_DF is the knob that bounds it.
 
-    ``banded=True`` switches the DP to Spark 3.5+'s thresholded
-    levenshtein with the admitted boundary (plus slack) as the
-    per-pair band: a pair that cannot pass early-abandons with -1
-    instead of filling the full O(n*m) matrix. Results are
-    bit-identical (proven at 10x: 221,104 rows both ways; the slack
-    over-covers the 4dp round-boundary and any slack survivor fails
-    the exact filter). The band pays off only when most candidates
-    FAIL verification; on the near-dup-dense 10x replica corpus
-    ~99% of candidates pass, so banding measured no faster (339 s vs
-    281 s best-of — within this VM's drift) and the plain form stays
-    the default. BENCH/sf_scaling.json flags this query super-linear
+    Spark's thresholded levenshtein, with the admitted boundary as the
+    per-pair band, measured no faster on the 10x replica corpus (339 s
+    vs 281 s best-of), where ~99% of candidates pass verification.
+    BENCH/sf_scaling.json flags this query super-linear
     at 10x because its work is Theta(candidates) and the replica
     corpus carries 826x more near-dup candidates by construction —
     a duplication-density property, not an algorithmic blowup;
@@ -1127,8 +1107,8 @@ def minhash_verified_pairs(
     # candidates are near-identical, so stripping the shared prefix/
     # suffix shrinks the O(n*m) matrix to the edit region while
     # leaving the distance value untouched (_trim_affix_udf). The
-    # full lengths are captured FIRST — the band threshold and the
-    # dist_frac denominator read original lengths, exactly as before.
+    # full lengths are captured FIRST — the dist_frac denominator
+    # reads original lengths, exactly as before.
     # A/B at sf1.0: 9.2 -> ~2.5 s, identical rows.
     paired = (
         cand.join(a, "a_id")
@@ -1149,19 +1129,7 @@ def minhash_verified_pairs(
             F.col("c.cb").alias("cb"),
         )
     )
-    if banded:
-        # band = boundary + 1e-4*len + 2: the 4dp HALF_UP round
-        # admits lev/maxlen up to frac + 0.00005, so the slack term
-        # dominates the round-boundary at EVERY length; slack
-        # survivors fail the exact filter below. Lengths are the
-        # ORIGINAL texts' (the cores only shrink the DP, never the
-        # admission rule).
-        lev = F.expr(
-            f"levenshtein(ca, cb, cast(({max_dist_frac} + 1e-4) *"
-            " greatest(la, lb, 1) + 2 as int))"
-        )
-    else:
-        lev = F.levenshtein("ca", "cb")
+    lev = F.levenshtein("ca", "cb")
     frac = F.round(
         lev / F.greatest(F.col("la"), F.col("lb"), F.lit(1)),
         4,
@@ -1581,14 +1549,14 @@ def cluster_keepers_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep themselves.
 
     The signature pipeline (the family's dominant stage) evaluates
-    ONCE (VERDICT r6 item 1): the banded table is localCheckpointed
+    ONCE (VERDICT r6 item 1): the band-exploded table is checkpointed
     and BOTH the degree edges and the CC labels derive from it —
     previously the candidate generator and the CC closure each rebuilt
     signatures from the corpus, paying the Arrow UDF twice. A/B at
     sf1.0: 12.56 -> ~7.4 s; plan-pinned to one signature stage by
     test_keeper_single_signature_pass."""
-    banded = _band_exploded(spark, sf_dir).localCheckpoint(eager=False)
-    edges = minhash_band_candidates(spark, sf_dir, exploded=banded)
+    exploded = _band_exploded(spark, sf_dir).localCheckpoint(eager=False)
+    edges = minhash_band_candidates(spark, sf_dir, exploded=exploded)
     touches = edges.select(F.col("a_id").alias("doc_id")).unionAll(
         edges.select(F.col("b_id").alias("doc_id"))
     )
@@ -1596,7 +1564,7 @@ def cluster_keepers_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("degree")
     )
     cc = minhash_connected_components(
-        spark, sf_dir, edges=_cc_bucket_edges(banded)
+        spark, sf_dir, edges=_cc_bucket_edges(exploded)
     )
     labeled = cc.join(degrees, "doc_id", "left").select(
         "doc_id",
@@ -1644,7 +1612,7 @@ def pagerank_candidates(
     with the rank table plus one hash-aggregate by destination; no
     pairwise materialization beyond the already-capped candidate
     edges, no window, no collect. At 10^12 docs the edge list is the
-    LSH-banded candidate set — linear in the corpus by the bucket
+    LSH band candidate set — linear in the corpus by the bucket
     cap."""
     edges = minhash_band_candidates(spark, sf_dir)
     ed = edges.select(

@@ -528,7 +528,6 @@ def ivf_ann_topk(
     query_vec_id: int = 0,
     k: int = 10,
     n_probe: int = 2,
-    quant_k: int | str = "auto",
 ) -> DataFrame:
     """IVF ANN on the k-means coarse quantizer (kmeans_assign's
     centroids - round 1 used the test data's label column as a
@@ -538,10 +537,10 @@ def ivf_ann_topk(
     centroids, and candidates reduce to a literal ``list_id IN (...)``
     filter - partition-prunable when the table is laid out by list -
     followed by exact cosine. No window, no centroid shuffle, no
-    pairwise join. ``quant_k='auto'`` (default) grows the coarse
-    quantizer with the corpus (``_auto_k``); a production deployment
-    scales ``n_probe`` with it to hold the probed fraction."""
-    cents = _kmeans_centroids(spark, sf_dir, quant_k)
+    pairwise join. The coarse quantizer grows with the corpus
+    (``k='auto'``, ``_auto_k``); a production deployment scales
+    ``n_probe`` with it to hold the probed fraction."""
+    cents = _kmeans_centroids(spark, sf_dir, "auto")
     e = _emb(spark, sf_dir)
     q_row = e.where(F.col("vec_id") == query_vec_id).first()
     if q_row is None:  # unknown query id -> empty result, not a crash
@@ -596,7 +595,6 @@ SEM_THRESHOLD = 0.30
 
 def semantic_dedup(
     spark: SparkSession, sf_dir: str, threshold: float = SEM_THRESHOLD,
-    k: int | str = "auto",
 ) -> DataFrame:
     """SemDeDup-family semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): k-means-cluster the embedding space, then
@@ -608,7 +606,7 @@ def semantic_dedup(
 
     Scale shape: the cluster id is the blocking key, so no global
     pairwise join ever forms; within-cluster pairs expand
-    bucket-locally capped at SEM_MAX_CLUSTER. Since r6 the default
+    bucket-locally capped at SEM_MAX_CLUSTER. Since r6 the
     quantizer is ``k='auto'`` — k doubles along the deterministic
     grid as the corpus grows (``_auto_k``), holding average cluster
     size at ~AUTO_TARGET_CLUSTER so the cap stops binding at 10x+
@@ -619,7 +617,7 @@ def semantic_dedup(
     index uses."""
     from .dedup import _bucket_pairs, _capped_buckets
 
-    assign = kmeans_assign(spark, sf_dir, k=k)  # (vec_id, list_id)
+    assign = kmeans_assign(spark, sf_dir, k="auto")  # (vec_id, list_id)
     e = _emb(spark, sf_dir).select(
         "vec_id", "embedding", _norm("embedding").alias("nrm")
     ).localCheckpoint(eager=False)  # consumed by both pair-join sides
@@ -750,7 +748,6 @@ def semantic_keepers(
     sf_dir: str,
     threshold: float = SEM_THRESHOLD,
     max_iters: int = 20,
-    quant_k: int | str = "auto",
 ) -> DataFrame:
     """SemDeDup removal policy over ``semantic_dedup``'s duplicate
     edges: connected components by iterative min-label propagation
@@ -770,7 +767,7 @@ def semantic_keepers(
     ``localCheckpoint`` cuts the growing loop lineage exactly as in
     the MinHash closure."""
     edges = (
-        semantic_dedup(spark, sf_dir, threshold, k=quant_k)
+        semantic_dedup(spark, sf_dir, threshold)
         .select("a_id", "b_id")
         .localCheckpoint()
     )
@@ -885,7 +882,6 @@ def knn_join_multiprobe(
     sf_dir: str,
     k: int = KNN_K,
     probes: int = KNN_PROBES,
-    quant_k: int | str = "auto",
 ) -> DataFrame:
     """Multi-probe upgrade of ``knn_join`` (VERDICT r4 item 3): every
     vector is INDEXED in its primary k-means list, but QUERIES its
@@ -920,7 +916,7 @@ def knn_join_multiprobe(
 
     from .dedup import _bucket_pairs, _capped_buckets
 
-    cents = _kmeans_centroids(spark, sf_dir, quant_k)
+    cents = _kmeans_centroids(spark, sf_dir, "auto")
     e = _emb(spark, sf_dir).select(
         "vec_id", "embedding", _norm("embedding").alias("nrm")
     ).localCheckpoint(eager=False)  # consumed by both pair-join sides
@@ -992,8 +988,7 @@ def knn_join_multiprobe(
 
 
 def knn_join(
-    spark: SparkSession, sf_dir: str, k: int = KNN_K,
-    quant_k: int | str = "auto",
+    spark: SparkSession, sf_dir: str, k: int = KNN_K
 ) -> DataFrame:
     """Cluster-blocked k-nearest-neighbor JOIN: the top-k cosine
     neighbors for EVERY vector (the general form of the single-query
@@ -1018,7 +1013,7 @@ def knn_join(
     NULL; pinned by test_knn_join_zero_norm_parity, ADVICE r4)."""
     from pyspark.sql import Window
 
-    und = semantic_dedup(spark, sf_dir, threshold=-1.0, k=quant_k)
+    und = semantic_dedup(spark, sf_dir, threshold=-1.0)
     edges = und.unionByName(
         und.select(
             F.col("b_id").alias("a_id"),

@@ -866,9 +866,7 @@ def _dsir_bucket(col) -> F.Column:
     )
 
 
-def dsir_weights(
-    spark: SparkSession, sf_dir: str, persist: bool = False
-) -> DataFrame:
+def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document DSIR importance weight against the English subset
     as the target domain: weight(d) = sum over tokens w of
     ln p_target(bucket(w)) - ln p_raw(bucket(w)), with add-one
@@ -882,25 +880,15 @@ def dsir_weights(
     rows at any corpus size) then hash-aggregates per doc. The corpus
     text itself never shuffles; only (doc_id, bucket) pairs do.
 
-    The tokenize+bucket stream feeds both passes; ``persist=True``
-    caches it so the corpus is SCANNED once instead of twice (the
-    VERDICT r4 item-5 knob — plan-pinned in tests/test_plans.py,
-    value-parity pinned in the same test). Default off: at driver/test
-    scale a second columnar scan is cheaper than a cache write."""
+    The tokenize+bucket stream feeds both passes; one per-invocation
+    ``localCheckpoint`` of it (narrow integer rows — the md5 bucketing
+    runs once) replaces a second tokenize+hash scan of the corpus."""
     tok = (
         _docs(spark, sf_dir)
         .select("doc_id", "lang", F.explode(F.expr(_TOKENS)).alias("w"))
         .select("doc_id", "lang", _dsir_bucket(F.col("w")).alias("b"))
+        .localCheckpoint(eager=False)
     )
-    if persist:
-        tok = tok.persist()
-    else:
-        # the bucketed token stream feeds both the feature-count pass
-        # and the scoring pass; one per-invocation checkpoint (narrow
-        # integer rows — the md5 bucketing ran once) replaces the
-        # second tokenize+hash scan. The persist knob remains the
-        # cross-query form the plan test pins.
-        tok = tok.localCheckpoint(eager=False)
     # ONE aggregation builds both distributions (raw count + target
     # count per bucket) — the corpus is scanned exactly twice total,
     # never once per distribution (plan-pinned: two split() branches)
@@ -1018,11 +1006,7 @@ def vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def bigram_logprob(
-    spark: SparkSession,
-    sf_dir: str,
-    persist: bool = False,
-) -> DataFrame:
+def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean CONDITIONAL negative log-likelihood under the
     corpus bigram model with add-one smoothing — one n-gram order up
     from ``unigram_logprob``, toward the CCNet-style n-gram-LM quality
@@ -1040,26 +1024,16 @@ def bigram_logprob(
     counts c1 reduce FROM the bigram table (tiny second agg, never a
     corpus re-scan); V and the totals ride a broadcast one-row
     aggregate (lazy, empty-safe — the unigram_logprob r5 form); the
-    scoring join is a plain shuffle join on (w1, w2). ``persist=True``
-    caches the TOKENIZED frame — the shared parent of the bigram
-    stream, the scoring join's re-derivation, AND the vocabulary
-    aggregate — so the corpus parquet is scanned and tokenized once
-    (review r5: caching only the bigram stream would leave the
-    vocabulary scan paying a second full read)."""
+    scoring join is a plain shuffle join on (w1, w2)."""
+    # the tokenized frame is the shared parent of the bigram stream
+    # (twice: count build + scoring join) and the vocabulary
+    # aggregate — four corpus tokenizations without help. One
+    # per-invocation localCheckpoint tokenizes ONCE; unlike persist()
+    # it cannot leak results into a later run (each call builds a
+    # fresh RDD).
     toks = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_TOKENS).alias("t")
-    )
-    if persist:
-        toks = toks.persist()
-    else:
-        # the tokenized frame is the shared parent of the bigram
-        # stream (twice: count build + scoring join) and the
-        # vocabulary aggregate — four corpus tokenizations without
-        # help. One per-invocation localCheckpoint tokenizes ONCE;
-        # unlike persist() it cannot leak results into a later run
-        # (each call builds a fresh RDD). This is the documented
-        # 100 TB answer (the persist knob) made the default.
-        toks = toks.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     # CASE guard: sequence(1, size-1) is DESCENDING for size < 2 (the
     # phantom-pseudo-line trap) — a short doc must yield NO bigrams
     big = toks.select(
@@ -1073,12 +1047,13 @@ def bigram_logprob(
             )
         ).alias("g"),
     ).select("doc_id", F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
-    c2 = big.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    if not persist:
-        # c2 feeds both the context reduction c1 and the scoring
-        # projection — checkpoint the (bigram-type-sized) table so the
-        # aggregation runs once per invocation
-        c2 = c2.localCheckpoint(eager=False)
+    # c2 feeds both the context reduction c1 and the scoring
+    # projection — checkpoint the (bigram-type-sized) table so the
+    # aggregation runs once per invocation
+    c2 = (
+        big.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
+        .localCheckpoint(eager=False)
+    )
     # context totals c1 via a window over c2 itself (guide §2.4): the
     # per-w1 sum computes in the exchange the former aggregate+join
     # paid twice — exact integer sum, identical value
@@ -1111,11 +1086,7 @@ def bigram_logprob(
 TRIGRAM_LAMBDAS = (0.7, 0.2, 0.1)  # interpolation: trigram/bigram/unigram
 
 
-def trigram_logprob(
-    spark: SparkSession,
-    sf_dir: str,
-    persist: bool = False,
-) -> DataFrame:
+def trigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean negative log-likelihood under the corpus
     JELINEK-MERCER-INTERPOLATED trigram model — the top rung of the
     CCNet-style n-gram quality ladder (unigram -> bigram -> trigram):
@@ -1141,20 +1112,14 @@ def trigram_logprob(
     per trigram TYPE (4 type-table joins) and only then joins back
     to the per-document stream. All joins are inner and total: every
     document trigram exists in c123, its (w1,w2) in c12, its
-    (w2,w3)/(w2) in the bigram tables, its w3 in the unigram table.
-    ``persist=True`` caches the TOKENIZED frame — the shared parent
-    of all three gram streams (plan-pinned like bigram's)."""
+    (w2,w3)/(w2) in the bigram tables, its w3 in the unigram table."""
     l3, l2, l1 = TRIGRAM_LAMBDAS
+    # shared parent of the trigram stream (x2), bigram stream, and
+    # unigram aggregate — one per-invocation materialization replaces
+    # five corpus tokenizations (see bigram_logprob)
     toks = _docs(spark, sf_dir).select(
         "doc_id", F.expr(_TOKENS).alias("t")
-    )
-    if persist:
-        toks = toks.persist()
-    else:
-        # shared parent of the trigram stream (x2), bigram stream, and
-        # unigram aggregate — one per-invocation materialization
-        # replaces five corpus tokenizations (see bigram_logprob)
-        toks = toks.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     # CASE guard: sequence(2, size-1) is DESCENDING for size < 3
     tri = toks.select(
         "doc_id",
@@ -1177,14 +1142,17 @@ def trigram_logprob(
             )
         ).alias("g"),
     ).select("g.b1", "g.b2")
-    c3t = tri.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c123"))
-    c2t = big.groupBy("b1", "b2").agg(F.count("*").alias("c23"))
-    if not persist:
-        # each count table feeds its context reduction AND the scoring
-        # join — checkpoint both (gram-type-sized) so each aggregation
-        # runs once per invocation
-        c3t = c3t.localCheckpoint(eager=False)
-        c2t = c2t.localCheckpoint(eager=False)
+    # each count table feeds its context reduction AND the scoring
+    # join — checkpoint both (gram-type-sized) so each aggregation runs
+    # once per invocation
+    c3t = (
+        tri.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c123"))
+        .localCheckpoint(eager=False)
+    )
+    c2t = (
+        big.groupBy("b1", "b2").agg(F.count("*").alias("c23"))
+        .localCheckpoint(eager=False)
+    )
     # context totals via windows over the SAME tables (guide §2.4):
     # c12 is the per-(w1,w2) sum of c123 and c2 the per-b1 sum of c23
     # — exact integer sums, previously built as separate aggregates
@@ -1239,11 +1207,7 @@ def trigram_logprob(
     )
 
 
-def ccnet_ppl_buckets(
-    spark: SparkSession,
-    sf_dir: str,
-    persist: bool = False,
-) -> DataFrame:
+def ccnet_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style perplexity terciles (Wenzek et al., "CCNet:
     Extracting High Quality Monolingual Datasets from Web Crawl
     Data"): score every document with the corpus trigram LM
@@ -1261,23 +1225,14 @@ def ccnet_ppl_buckets(
     that tiny table, and thresholds t_k = min{v : 3*cum(v) >= k*n}.
     Buckets then assign by broadcast comparison. Ties share a value
     and therefore a bucket, so boundary buckets can exceed n/3 by
-    construction (exactly how any exact value-quantile behaves).
-
-    ``persist=True`` caches the SCORED table (doc-count-sized rows,
-    never corpus text) — the shared parent of the histogram pass and
-    the final projection; without it the whole trigram-LM pipeline
-    runs twice."""
+    construction (exactly how any exact value-quantile behaves)."""
     from pyspark.sql import Window
 
-    base = trigram_logprob(spark, sf_dir, persist=persist)
-    if persist:
-        base = base.persist()
-    else:
-        # base feeds the histogram pass AND the final projection —
-        # without help the whole trigram-LM pipeline runs twice; one
-        # per-invocation checkpoint of the doc-sized scored table
-        # halves the query (guide §5 caching rule)
-        base = base.localCheckpoint(eager=False)
+    # base feeds the histogram pass AND the final projection — without
+    # help the whole trigram-LM pipeline runs twice; one per-invocation
+    # checkpoint of the doc-sized scored table halves the query (guide
+    # §5 caching rule)
+    base = trigram_logprob(spark, sf_dir).localCheckpoint(eager=False)
     hist = base.groupBy("mean_nll").agg(F.count("*").alias("n"))
     w_cum = (
         Window.orderBy("mean_nll")
@@ -1317,12 +1272,7 @@ def ccnet_ppl_buckets(
     )
 
 
-def unigram_logprob(
-    spark: SparkSession,
-    sf_dir: str,
-    counts: DataFrame | None = None,
-    persist: bool = False,
-) -> DataFrame:
+def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean token negative log-likelihood under the
     corpus unigram distribution with add-one smoothing:
     nll(d) = -(1/|d|) * sum_w ln((c(w) + 1) / (T + V)).
@@ -1339,26 +1289,19 @@ def unigram_logprob(
     never an unpartitioned window over the vocabulary-sized table
     (which would serialize it through one task).
 
-    The counts aggregation feeds both the totals and the scoring
-    join; without help it therefore computes twice. A 100 TB run
-    passes ``persist=True`` (cache the counts table — one execution,
-    plan-pinned in tests/test_plans.py) or supplies a precomputed
-    ``counts`` DataFrame (``(w, c)`` — the two-input form, mirroring
-    ``decontaminate``'s benchmark param: a production LM's count
-    table is built once and reused across scoring runs)."""
+    The counts table feeds both the totals and the scoring join, and
+    nothing shares it, so the counts COMPUTE TWICE: two scans and two
+    aggregations of the corpus tokens per query. Sharing that
+    intermediate (and releasing it after the action) is ROADMAP item 4
+    ("One helper for shared intermediates")."""
     tok = _docs(spark, sf_dir).select(
         "doc_id", F.explode(F.expr(_TOKENS)).alias("w")
     )
-    if counts is None:
-        counts = tok.groupBy("w").agg(F.count("*").alias("c"))
-        # default path deliberately stays lazy (construction must not
-        # run a job — the ADVICE-r4 pin): counts computes twice, and
-        # the persist=True knob / precomputed-counts param remain the
-        # scale answers. The heavier multi-consumer pipelines (bigram,
-        # trigram, ccnet, dsir, bm25, cms) checkpoint instead — their
-        # shared parents are consumed 3-5x, not 2x.
-    if persist:
-        counts = counts.persist()
+    # deliberately lazy: construction must not run a job (the ADVICE-r4
+    # pin). The heavier multi-consumer pipelines (bigram, trigram,
+    # ccnet, dsir, bm25, cms) checkpoint instead — their shared parents
+    # are consumed 3-5x, not 2x.
+    counts = tok.groupBy("w").agg(F.count("*").alias("c"))
     tot = counts.agg(
         F.sum("c").cast("double").alias("t_tot"),
         F.count("*").cast("double").alias("v"),

@@ -34,7 +34,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .extract import DEFAULT_N_BUCKETS, run_extraction, with_bucket
+from .extract import (
+    DEFAULT_N_BUCKETS,
+    _check_salt,
+    run_extraction,
+    with_bucket,
+)
 
 MARKER_SCHEMA = StructType(
     [
@@ -103,6 +108,7 @@ def run_with_resume(
     """
     if fail_after_buckets is not None and fail_after_buckets < 0:
         raise ValueError("fail_after_buckets must be >= 0")
+    _check_salt(salt)
     lineage_id = lineage_id or uuid.uuid4().hex
     bucketed = with_bucket(transcripts, n_buckets)
     # one input scan for the bucket set; the pending set and the

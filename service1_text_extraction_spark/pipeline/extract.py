@@ -203,6 +203,12 @@ def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
     return df.withColumn("bucket_id", bucket_expr(F.col("conv_id"), n_buckets))
 
 
+def _check_salt(salt: int | None) -> None:
+    # checked on the driver: 0 would fail inside a task (pmod by zero)
+    if salt is not None and salt < 1:
+        raise ValueError(f"salt must be >= 1, got {salt}")
+
+
 def run_extraction(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -249,6 +255,7 @@ def run_extraction(
     either way (asserted by
     tests/test_pipeline.py::test_salting_does_not_change_output).
     """
+    _check_salt(salt)
     if not pre_shuffle and (
         salt is not None or shuffle_partitions is not None
     ):

@@ -20,7 +20,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..pipeline.extract import DEFAULT_N_BUCKETS, DEFAULT_SALT, run_extraction
+from ..pipeline.extract import DEFAULT_N_BUCKETS, run_extraction
 
 TRANSCRIPTS_SCHEMA = StructType(
     [
@@ -34,52 +34,36 @@ TRANSCRIPTS_SCHEMA = StructType(
 )
 
 
-def stream_extract(
+def _batch_sink(
     spark: SparkSession,
+    schema: StructType,
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    *,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    salt: int = DEFAULT_SALT,
-    available_now: bool = True,
+    max_files_per_trigger: int,
+    per_batch,
 ):
-    """Incremental extraction over a growing parquet directory.
-
-    New files are discovered per micro-batch; each batch runs the
-    batch pipeline. Source progress lives in the streaming checkpoint,
-    so restarts never re-extract a processed file, and the sink is
-    idempotent: each micro-batch dynamically overwrites its own
-    ``batch_id=`` partition, so a batch retried after a crash between
-    the write and the checkpoint commit replaces its partial output
-    instead of duplicating rows — exactly-once end to end.
-    """
+    """Start the one idempotent sink every ``stream_*`` maintainer
+    shares: read the parquet files of ``input_dir`` as a stream, run
+    ``per_batch(batch_df) -> DataFrame`` on each micro-batch, and
+    dynamically overwrite that micro-batch's own ``batch_id=``
+    partition of ``output_dir`` with the result. Source progress lives
+    in ``checkpoint_dir``, so a restart never re-reads a processed
+    file, and ``foreachBatch`` is at-least-once, so a batch replayed
+    after a crash between the write and the checkpoint commit replaces
+    its partition instead of duplicating rows — exactly-once end to
+    end. The trigger is ``availableNow``: drain what is there, stop."""
     from pyspark.sql import functions as F
 
     stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
 
     def process(batch_df, batch_id: int) -> None:
-        # pre_shuffle stays ON in the stream: a micro-batch is a
-        # handful of files (maxFilesPerTrigger=16), so scan splits are
-        # few and one giant conversation CAN pin a task — exactly the
-        # pathological layout the salted spread exists for. (The batch
-        # job defaults to no pre-shuffle because a full corpus scan
-        # has plentiful byte-splits.)
-        out = run_extraction(
-            batch_df.sparkSession, batch_df, n_buckets=n_buckets, salt=salt,
-            pre_shuffle=True,
-        )
-        # turn_seq / doc_char_offset are per-conversation *global*
-        # ordering columns; a file stream may split one conversation
-        # across triggers, so emitting them per micro-batch would
-        # produce restarting sequences. They are a batch-job /
-        # downstream-compaction concept — dropped from the stream sink.
         (
-            out.drop("turn_seq", "doc_char_offset")
+            per_batch(batch_df)
             .withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -87,13 +71,49 @@ def stream_extract(
             .parquet(output_dir)
         )
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def stream_extract(
+    spark: SparkSession,
+    input_dir: str,
+    output_dir: str,
+    checkpoint_dir: str,
+    *,
+    n_buckets: int = DEFAULT_N_BUCKETS,
+):
+    """Incremental extraction over a growing parquet directory: each
+    micro-batch runs the batch pipeline through the shared idempotent
+    ``_batch_sink`` (at most 16 files per micro-batch).
+    """
+
+    def per_batch(batch_df):
+        # pre_shuffle stays ON in the stream: a micro-batch is a
+        # handful of files (maxFilesPerTrigger=16), so scan splits are
+        # few and one giant conversation CAN pin a task — exactly the
+        # pathological layout the salted spread exists for. (The batch
+        # job defaults to no pre-shuffle because a full corpus scan
+        # has plentiful byte-splits.)
+        out = run_extraction(
+            batch_df.sparkSession, batch_df, n_buckets=n_buckets,
+            pre_shuffle=True,
+        )
+        # turn_seq / doc_char_offset are per-conversation *global*
+        # ordering columns; a file stream may split one conversation
+        # across triggers, so emitting them per micro-batch would
+        # produce restarting sequences. They are a batch-job /
+        # downstream-compaction concept — dropped from the stream sink.
+        return out.drop("turn_seq", "doc_char_offset")
+
+    return _batch_sink(
+        spark, TRANSCRIPTS_SCHEMA, input_dir, output_dir, checkpoint_dir,
+        16, per_batch,
+    )
 
 
 def stream_turn_metrics(
@@ -315,7 +335,6 @@ def stream_admit(
     checkpoint_dir: str,
     *,
     max_files_per_trigger: int = 16,
-    available_now: bool = True,
 ):
     """Streaming corpus admission: the STATELESS admission gates —
     Gopher quality + C4 page rules (one let-bound predicate,
@@ -327,40 +346,22 @@ def stream_admit(
     gate gives identical verdicts in stream and batch because nothing
     depends on batch boundaries.
 
-    Exactly-once like stream_extract: source progress in the
-    streaming checkpoint; each micro-batch dynamically overwrites its
-    own ``batch_id=`` partition."""
+    Exactly-once like stream_extract (``_batch_sink``)."""
     from pyspark.sql import functions as F
 
     from ..functions import curate, textstats
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def process(batch_df, batch_id: int) -> None:
-        admitted = batch_df.where(
+    def per_batch(batch_df):
+        return batch_df.where(
             F.expr(curate.admit_pred_sql()) & curate.mix_keep_expr()
         ).select(
             "doc_id", textstats.split_label_expr().alias("split")
         )
-        (
-            admitted.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(output_dir)
-        )
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    return _batch_sink(
+        spark, DOCUMENTS_SCHEMA, input_dir, output_dir, checkpoint_dir,
+        max_files_per_trigger, per_batch,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_hll(
@@ -370,7 +371,6 @@ def stream_hll(
     checkpoint_dir: str,
     *,
     max_files_per_trigger: int = 16,
-    available_now: bool = True,
 ):
     """Streaming maintenance of the distinct-shingle HLL sketch
     (``dedup.hll_distinct_shingles``) over a growing documents
@@ -388,33 +388,12 @@ def stream_hll(
     and applies the shared estimator; stream-then-merge equals the
     one-shot batch operator bit-for-bit
     (test_stream_hll_matches_batch)."""
-    from pyspark.sql import functions as F
-
     from ..functions import dedup
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    return _batch_sink(
+        spark, DOCUMENTS_SCHEMA, input_dir, registers_dir, checkpoint_dir,
+        max_files_per_trigger, dedup._hll_registers,
     )
-
-    def process(batch_df, batch_id: int) -> None:
-        (
-            dedup._hll_registers(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(registers_dir)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def hll_from_stream(spark: SparkSession, registers_dir: str):
@@ -585,7 +564,6 @@ def stream_hopping(
     checkpoint_dir: str,
     *,
     max_files_per_trigger: int = 16,
-    available_now: bool = True,
 ):
     """Streaming maintenance of the hopping-window aggregate
     (``relational.hopping_window_stats``) over a growing events
@@ -600,33 +578,12 @@ def stream_hopping(
     ``hopping_from_stream`` folds the deltas; stream-then-merge equals
     the one-shot batch operator exactly
     (test_stream_hopping_matches_batch)."""
-    from pyspark.sql import functions as F
-
     from ..functions import relational
 
-    stream = (
-        spark.readStream.schema(EVENTS_NTZ_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    return _batch_sink(
+        spark, EVENTS_NTZ_SCHEMA, input_dir, partials_dir, checkpoint_dir,
+        max_files_per_trigger, relational.hopping_partials,
     )
-
-    def process(batch_df, batch_id: int) -> None:
-        (
-            relational.hopping_partials(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(partials_dir)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def hopping_from_stream(spark: SparkSession, partials_dir: str):
@@ -651,61 +608,48 @@ def stream_wsample(
     partials_dir: str,
     checkpoint_dir: str,
     *,
-    k: int = 50,
     max_files_per_trigger: int = 16,
-    available_now: bool = True,
 ):
     """Streaming maintenance of the A-ES weighted reservoir
     (``curate.weighted_sample``) over a growing documents directory:
-    each micro-batch keeps ITS OWN k smallest keys (through the
-    shared ``curate.wsample_keyed`` projection) under an exactly-once
-    ``batch_id`` partition. Top-k is MERGEABLE — the k smallest of a
-    union equal the k smallest of the per-batch k-smallest sets — so
-    batch boundaries cannot change the final reservoir, each delta is
-    at most k rows, and ``wsample_from_stream`` re-ranks the bounded
-    union. Stream-then-merge equals the one-shot batch sampler
-    exactly (test_stream_wsample_matches_batch)."""
+    each micro-batch keeps ITS OWN k = ``curate.WSAMPLE_K`` smallest
+    keys (through the shared ``curate.wsample_keyed`` projection)
+    under an exactly-once ``batch_id`` partition. Top-k is MERGEABLE
+    — the k smallest of a union equal the k smallest of the per-batch
+    k-smallest sets — so batch boundaries cannot change the final
+    reservoir, each delta is at most k rows, and
+    ``wsample_from_stream`` re-ranks the bounded union.
+    Stream-then-merge equals the one-shot batch sampler exactly
+    (test_stream_wsample_matches_batch)."""
     from pyspark.sql import functions as F
 
     from ..functions import curate
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def process(batch_df, batch_id: int) -> None:
-        (
+    def per_batch(batch_df):
+        return (
             curate.wsample_keyed(batch_df)
             .orderBy(F.col("k_").asc(), F.col("doc_id").asc())
-            .limit(k)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(partials_dir)
+            .limit(curate.WSAMPLE_K)
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    return _batch_sink(
+        spark, DOCUMENTS_SCHEMA, input_dir, partials_dir, checkpoint_dir,
+        max_files_per_trigger, per_batch,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def wsample_from_stream(spark: SparkSession, partials_dir: str, k: int = 50):
+def wsample_from_stream(spark: SparkSession, partials_dir: str):
     """Merge the streamed per-batch reservoirs: re-rank the bounded
-    (n_batches x k)-row union — identical output to the batch sampler
-    over the full corpus."""
+    (n_batches x ``curate.WSAMPLE_K``)-row union — identical output to
+    the batch sampler over the full corpus."""
     from pyspark.sql import functions as F
+
+    from ..functions import curate
 
     return (
         spark.read.parquet(partials_dir)
         .orderBy(F.col("k_").asc(), F.col("doc_id").asc())
-        .limit(k)
+        .limit(curate.WSAMPLE_K)
         .select("doc_id", "source", "n_chars")
     )
 
@@ -717,7 +661,6 @@ def stream_hdr(
     checkpoint_dir: str,
     *,
     max_files_per_trigger: int = 16,
-    available_now: bool = True,
 ):
     """Streaming maintenance of the HDR quantile sketch
     (``relational.hdr_value_quantiles``): per micro-batch, the shared
@@ -727,33 +670,12 @@ def stream_hdr(
     so ``hdr_from_stream``'s fold equals the one-shot batch sketch
     exactly and the estimator itself lives in one place
     (``_hdr_estimate``)."""
-    from pyspark.sql import functions as F
-
     from ..functions import relational
 
-    stream = (
-        spark.readStream.schema(EVENTS_NTZ_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    return _batch_sink(
+        spark, EVENTS_NTZ_SCHEMA, input_dir, counts_dir, checkpoint_dir,
+        max_files_per_trigger, relational._hdr_counts,
     )
-
-    def process(batch_df, batch_id: int) -> None:
-        (
-            relational._hdr_counts(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(counts_dir)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def hdr_from_stream(spark: SparkSession, counts_dir: str):
@@ -778,7 +700,6 @@ def stream_cms(
     checkpoint_dir: str,
     *,
     max_files_per_trigger: int = 16,
-    available_now: bool = True,
 ):
     """Streaming maintenance of the Count-Min sketch
     (``textstats.cms_heavy_hitters``'s counter table): per micro-batch
@@ -792,32 +713,15 @@ def stream_cms(
 
     from ..functions import textstats
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-    def process(batch_df, batch_id: int) -> None:
-        tok = batch_df.select(
-            F.explode(F.expr(textstats._TOKENS)).alias("w")
-        )
-        (
-            textstats._cms_sketch(tok)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sketch_dir)
+    def per_batch(batch_df):
+        return textstats._cms_sketch(
+            batch_df.select(F.explode(F.expr(textstats._TOKENS)).alias("w"))
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    return _batch_sink(
+        spark, DOCUMENTS_SCHEMA, input_dir, sketch_dir, checkpoint_dir,
+        max_files_per_trigger, per_batch,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def cms_from_stream(spark: SparkSession, sketch_dir: str):

@@ -165,8 +165,7 @@ def test_ist_format_session_tz_free(spark, tmp_path):
 
 def test_bigram_logprob_short_docs_and_persist(spark, tmp_path):
     """A doc with < 2 tokens has no bigrams and must be ABSENT in both
-    engines (the descending-sequence trap); persist=True is a pure
-    execution knob."""
+    engines (the descending-sequence trap)."""
     rows = EDGE_DOCS + [(9, "solo", "en", "src9", 4)]
     sf = _mini_docs(spark, tmp_path, rows)
     from service1_text_extraction_spark.functions import textstats
@@ -177,21 +176,15 @@ def test_bigram_logprob_short_docs_and_persist(spark, tmp_path):
     }
     assert set(got) == {2, 3}  # empty/ws/one-token docs absent
     assert got[2][0] == 7 and got[3][0] == 11
-    pers = {
-        r.doc_id: (r.n_bigrams, r.mean_nll)
-        for r in textstats.bigram_logprob(spark, sf, persist=True).collect()
-    }
-    assert pers == got
-    spark.catalog.clearCache()
     _assert_parity(spark, sf, "bigram_logprob")
 
 
 def test_trigram_logprob_short_docs_and_persist(spark, tmp_path):
     """Docs with < 3 tokens have no trigrams and must be ABSENT in
     both engines (empty, whitespace, one- and two-token docs — the
-    descending sequence(2, size-1) trap); persist=True is a pure
-    execution knob; interpolation weights sum to 1 so mean_nll is a
-    proper NLL (> 0 for any non-degenerate corpus)."""
+    descending sequence(2, size-1) trap); interpolation weights sum to
+    1 so mean_nll is a proper NLL (> 0 for any non-degenerate
+    corpus)."""
     rows = EDGE_DOCS + [
         (9, "solo", "en", "src9", 4),
         (10, "just two", "en", "src10", 8),
@@ -207,12 +200,6 @@ def test_trigram_logprob_short_docs_and_persist(spark, tmp_path):
     assert set(got) == {2, 3}  # <3-token docs absent
     assert got[2][0] == 6 and got[3][0] == 10  # n_tokens - 2
     assert all(nll > 0 for _, nll in got.values())
-    pers = {
-        r.doc_id: (r.n_trigrams, r.mean_nll)
-        for r in textstats.trigram_logprob(spark, sf, persist=True).collect()
-    }
-    assert pers == got
-    spark.catalog.clearCache()
     _assert_parity(spark, sf, "trigram_logprob")
 
 
@@ -391,44 +378,6 @@ def test_unigram_logprob_empty_corpus_and_laziness(spark, tmp_path):
     assert textstats.unigram_logprob(spark, sf).collect() == []
 
 
-def test_persist_and_precomputed_paths_agree(spark, tmp_path):
-    """The persist=True and precomputed-counts paths of the
-    twice-scanned pipelines are pure execution-shape knobs — results
-    must be bit-identical to the default path (non-vacuously)."""
-    sf = _mini_docs(spark, tmp_path, EDGE_DOCS)
-    from pyspark.sql import functions as F
-
-    from service1_text_extraction_spark.functions import textstats
-
-    base = sorted(
-        map(tuple, textstats.unigram_logprob(spark, sf).collect())
-    )
-    pers = sorted(
-        map(
-            tuple,
-            textstats.unigram_logprob(spark, sf, persist=True).collect(),
-        )
-    )
-    tok = spark.read.parquet(f"{sf}/documents.parquet").select(
-        F.explode(F.expr(textstats._TOKENS)).alias("w")
-    )
-    pre = tok.groupBy("w").agg(F.count("*").alias("c"))
-    supplied = sorted(
-        map(
-            tuple,
-            textstats.unigram_logprob(spark, sf, counts=pre).collect(),
-        )
-    )
-    assert base == pers == supplied and base
-
-    d_base = sorted(map(tuple, textstats.dsir_weights(spark, sf).collect()))
-    d_pers = sorted(
-        map(tuple, textstats.dsir_weights(spark, sf, persist=True).collect())
-    )
-    assert d_base == d_pers and d_base
-    spark.catalog.clearCache()
-
-
 def _mini_emb(spark, tmp_path, rows):
     """Write an embeddings.parquet shaped like the driver testdata."""
     df = spark.createDataFrame(
@@ -556,10 +505,19 @@ def test_auto_k_grid_and_driver_equivalence(spark, sf_dir):
 def test_verified_pairs_non_ascii_and_empty(spark, tmp_path):
     """Pins the authoritative Spark semantics the oracle cannot mirror
     beyond ASCII: levenshtein is CHARACTER-based ('ééé' vs 'xyz' is 3
-    edits, not 6 bytes), and a pair of identical short/empty-ish texts
-    keeps dist_frac 0 instead of NULL-dropping on a zero denominator."""
+    edits, not 6 bytes), a pair of identical short/empty-ish texts
+    keeps dist_frac 0 instead of NULL-dropping on a zero denominator,
+    and the affix trim of a non-ASCII near-dup pair (shared prefix and
+    suffix, one astral character) keeps the full-text distance."""
+    from pyspark.sql import functions as F
+
     from service1_text_extraction_spark.functions import dedup
 
+    head = "🎉 naïve café crème brûlée über straße señor année cœur"
+    tail = ("résumé façade jalapeño piñata smörgåsbord fiancée déjà vu"
+            " naïveté")
+    near_a = f"{head} wörld {tail}"
+    near_b = f"{head} wòrld {tail}"  # one edit inside one token
     rows = [
         # identical tiny texts -> exact dup candidates, lev 0
         (0, "x y z", "en", "src0", 5),
@@ -567,6 +525,8 @@ def test_verified_pairs_non_ascii_and_empty(spark, tmp_path):
         # non-ASCII near-dup pair (same tokens -> same signature)
         (2, "héllo wörld héllo wörld", "en", "src2", 23),
         (3, "héllo wörld héllo wörld", "en", "src3", 23),
+        (4, near_a, "en", "src4", len(near_a)),
+        (5, near_b, "en", "src5", len(near_b)),
     ]
     sf = _mini_docs(spark, tmp_path, rows)
     got = {
@@ -575,18 +535,16 @@ def test_verified_pairs_non_ascii_and_empty(spark, tmp_path):
     }
     assert got.get((0, 1)) == (0, 0.0), got   # no NULL drop
     assert got.get((2, 3)) == (0, 0.0), got   # char-based, identical
-    # the banded (thresholded-DP) path is a pure execution knob:
-    # identical pairs and distances
-    banded = {
-        (r.a_id, r.b_id): (r.lev, r.dist_frac)
-        for r in dedup.minhash_verified_pairs(
-            spark, sf, banded=True
-        ).collect()
+    cands = {
+        (r.a_id, r.b_id)
+        for r in dedup.minhash_band_candidates(spark, sf).collect()
     }
-    assert banded == got
+    assert (4, 5) in cands, cands
+    full = spark.range(1).select(
+        F.levenshtein(F.lit(near_a), F.lit(near_b)).alias("d")
+    ).collect()[0].d
+    assert got[(4, 5)][0] == full > 0, (got, full)
     # char-based distance on genuinely different non-ASCII strings
-    from pyspark.sql import functions as F
-
     row = spark.range(1).select(
         F.levenshtein(F.lit("ééé"), F.lit("xyz")).alias("d")
     ).collect()[0]
@@ -633,15 +591,6 @@ def test_ccnet_ppl_buckets_terciles_and_ties(spark, tmp_path):
     order = [b for b in ("head", "middle", "tail") if b in by_bucket]
     for lo, hi in zip(order, order[1:]):
         assert max(by_bucket[lo]) <= min(by_bucket[hi]), by_bucket
-    # persist knob is a pure execution hint
-    pers = {
-        r.doc_id: (r.mean_nll, r.ppl_bucket)
-        for r in textstats.ccnet_ppl_buckets(
-            spark, sf, persist=True
-        ).collect()
-    }
-    assert pers == got
-    spark.catalog.clearCache()
     _assert_parity(spark, sf, "ccnet_ppl_buckets")
 
 

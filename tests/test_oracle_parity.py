@@ -427,11 +427,32 @@ def test_minhash_arrow_shingle_edges(spark, tmp_path):
 def test_verified_pairs_affix_trim_matches_plain_lev(spark, sf_dir):
     """The common-affix-stripped Levenshtein must reproduce the plain
     full-text DP bit-for-bit (distance is invariant under common
-    prefix/suffix removal), banded and unbanded."""
+    prefix/suffix removal): over the same LSH candidate pairs, an
+    untrimmed ``levenshtein`` of the full texts with the same
+    dist_frac rounding and filter yields the same rows."""
+    from pyspark.sql import functions as F
+
     from service1_text_extraction_spark.functions import dedup
 
-    plain = dedup.minhash_verified_pairs(spark, sf_dir)
-    banded = dedup.minhash_verified_pairs(spark, sf_dir, banded=True)
-    a = {(r.a_id, r.b_id): (r.lev, r.dist_frac) for r in plain.collect()}
-    b = {(r.a_id, r.b_id): (r.lev, r.dist_frac) for r in banded.collect()}
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    ta = d.select(F.col("doc_id").alias("a_id"), F.col("text").alias("ta"))
+    tb = d.select(F.col("doc_id").alias("b_id"), F.col("text").alias("tb"))
+    lev = F.levenshtein("ta", "tb")
+    frac = F.round(
+        lev / F.greatest(F.length("ta"), F.length("tb"), F.lit(1)), 4
+    )
+    full = (
+        dedup.minhash_band_candidates(spark, sf_dir)
+        .join(ta, "a_id")
+        .join(tb, "b_id")
+        .select("a_id", "b_id", lev.alias("lev"), frac.alias("dist_frac"))
+        .where(
+            (F.col("lev") >= 0)
+            & (F.col("dist_frac") <= dedup.VERIFY_MAX_DIST_FRAC)
+        )
+    )
+    trimmed = dedup.minhash_verified_pairs(spark, sf_dir)
+    a = {(r.a_id, r.b_id): (r.lev, r.dist_frac) for r in trimmed.collect()}
+    b = {(r.a_id, r.b_id): (r.lev, r.dist_frac) for r in full.collect()}
     assert a == b
+    assert any(lev > 0 for lev, _ in a.values()), a  # trim did real work

@@ -312,6 +312,27 @@ def test_n_buckets_validated(spark, tiny, tmp_path, monkeypatch, n_buckets):
         runpy.run_path(str(job), run_name="__main__")
 
 
+@pytest.mark.parametrize("salt", [0, -3])
+def test_salt_validated(spark, tiny, tmp_path, monkeypatch, salt):
+    """A salt below 1 is refused on the driver: 0 used to fail inside
+    a task (pmod by zero, REMAINDER_BY_ZERO)."""
+    tdf, _ = tiny
+    with pytest.raises(ValueError, match="salt"):
+        run_extraction(spark, tdf, n_buckets=4, salt=salt, pre_shuffle=True)
+    out, mk = str(tmp_path / "out"), str(tmp_path / "mk")
+    with pytest.raises(ValueError, match="salt"):
+        run_with_resume(spark, tdf, out, mk, salt=salt, pre_shuffle=True)
+    assert not Path(mk).exists() and not Path(out).exists()
+    job = Path(__file__).resolve().parents[1] / "jobs" / "extract_job.py"
+    monkeypatch.setattr(
+        "sys.argv",
+        [str(job), "--input", "i", "--output", out, "--markers", mk,
+         "--pre-shuffle", "--salt", str(salt)],
+    )
+    with pytest.raises(SystemExit, match="--salt must be > 0"):
+        runpy.run_path(str(job), run_name="__main__")
+
+
 def test_null_and_empty_payloads(spark):
     rows = [
         ("c1", 1, "user", None, None, None),

@@ -213,7 +213,7 @@ def test_stream_batch_write_plan_shape(spark, tmp_path):
     ).write.parquet(inp)
 
     def run():
-        q = stream_extract(spark, inp, out, ckpt, n_buckets=8, salt=4)
+        q = stream_extract(spark, inp, out, ckpt, n_buckets=8)
         q.awaitTermination(120)
 
     writes = [
@@ -436,26 +436,6 @@ def test_capped_buckets_in_neardup_pipelines(spark, sf_dir):
         similarity.semantic_dedup,
     ):
         assert _window_below_collect(_plan(q(spark, sf_dir))), q.__name__
-
-
-def test_twice_scanned_pipelines_persist_knob(spark, sf_dir):
-    """VERDICT r4 item 5: unigram_logprob and dsir_weights re-derive
-    an intermediate across their two passes; persist=True must route
-    the second pass through the cache (InMemoryTableScan in the plan)
-    so the corpus aggregation executes once at scale."""
-    from service1_text_extraction_spark.functions import textstats
-
-    for q in (
-        textstats.unigram_logprob,
-        textstats.dsir_weights,
-        textstats.bigram_logprob,
-        textstats.trigram_logprob,
-    ):
-        plan = _plan(q(spark, sf_dir, persist=True))
-        assert (
-            "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
-        ), (q.__name__, plan)
-    spark.catalog.clearCache()
 
 
 def test_large_k_assignment_broadcasts_centroids(spark):

@@ -21,14 +21,14 @@ def test_stream_matches_batch_and_is_incremental(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     spark.createDataFrame(t1).write.mode("append").parquet(inp)
-    q = stream_extract(spark, inp, out, ckpt, n_buckets=8, salt=4)
+    q = stream_extract(spark, inp, out, ckpt, n_buckets=8)
     q.awaitTermination(120)
     n1 = spark.read.parquet(out).count()
     assert n1 == len(t1)
 
     # drop more files -> only the new ones are processed on restart
     spark.createDataFrame(t2).write.mode("append").parquet(inp)
-    q = stream_extract(spark, inp, out, ckpt, n_buckets=8, salt=4)
+    q = stream_extract(spark, inp, out, ckpt, n_buckets=8)
     q.awaitTermination(120)
     stream_out = spark.read.parquet(out)
     assert stream_out.count() == len(t1) + len(t2)
@@ -56,7 +56,7 @@ def test_sink_idempotent_under_replay(spark, tmp_path):
     spark.createDataFrame(t).write.mode("append").parquet(inp)
     for i in range(2):  # 2nd run replays batch 0 (fresh checkpoint)
         q = stream_extract(spark, inp, out, str(tmp_path / f"ckpt_r{i}"),
-                           n_buckets=8, salt=4)
+                           n_buckets=8)
         q.awaitTermination(120)
     assert spark.read.parquet(out).count() == len(t)
 
@@ -544,7 +544,8 @@ def test_stream_hdr_matches_batch(spark, tmp_path, sf_dir):
 def test_stream_cms_matches_batch(spark, tmp_path, sf_dir):
     """CMS linearity across real micro-batches: the cell-wise sum of
     the streamed deltas must equal the one-shot whole-corpus sketch
-    cell for cell."""
+    cell for cell, also after every batch is replayed into the same
+    sketch dir (a duplicated delta would double its counts)."""
     from pyspark.sql import functions as F
 
     from service1_text_extraction_spark.functions import textstats
@@ -560,13 +561,17 @@ def test_stream_cms_matches_batch(spark, tmp_path, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs.repartition(8).write.mode("overwrite").parquet(src)
 
-    q = stream_cms(spark, src, parts, ck, max_files_per_trigger=2)
-    q.awaitTermination(120)
-    got = {
-        (r.r, r.col): r.cnt for r in cms_from_stream(spark, parts).collect()
-    }
     tok = docs.select(F.explode(F.expr(textstats._TOKENS)).alias("w"))
     want = {
         (r.r, r.col): r.cnt for r in textstats._cms_sketch(tok).collect()
     }
-    assert got == want and len(want) > 0
+    assert len(want) > 0
+    # the second run has a fresh checkpoint, so it replays every batch
+    for run_ck in (ck, ck + "_replay"):
+        q = stream_cms(spark, src, parts, run_ck, max_files_per_trigger=2)
+        q.awaitTermination(120)
+        got = {
+            (r.r, r.col): r.cnt
+            for r in cms_from_stream(spark, parts).collect()
+        }
+        assert got == want, run_ck
