@@ -21,13 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import dedup, textstats
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .spread import spread_input
-
-    return spread_input(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), key="doc_id"
-    )
+from .spread import read_spread
 
 
 MIN_QUALITY = 0.5
@@ -38,7 +32,7 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep exact-dedup keepers whose quality clears MIN_QUALITY and
     whose language is identified."""
     base = (
-        _docs(spark, sf_dir)
+        read_spread(spark, sf_dir, "documents")
         .select(
             "doc_id", "text", F.expr(textstats._TOKENS).alias("t")
         )
@@ -112,7 +106,7 @@ def sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter (no shuffle of the corpus) followed by one 20-row
     hash-aggregate with map-side combine — the 100 TB form writes the
     kept rows and this rollup in the same pass."""
-    d = _docs(spark, sf_dir).select(
+    d = read_spread(spark, sf_dir, "documents").select(
         "doc_id", "source"
     )
     # a source whose suffix fails to parse gets NULL rate; its rows
@@ -169,7 +163,7 @@ def sample_exact_quota(
 
     h = F.md5(F.concat(F.lit("quota:"), F.col("doc_id").cast("string")))
     base = (
-        _docs(spark, sf_dir)
+        read_spread(spark, sf_dir, "documents")
         .select(
             "doc_id", "source", F.substring(h, 1, 16).alias("hk")
         )
@@ -237,7 +231,7 @@ def admit_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tokenizer re-runs once per signal reference (measured: 14
     ``split()`` copies in the pushed-down plan; plan-pinned to 1)."""
     admitted = (
-        _docs(spark, sf_dir)
+        read_spread(spark, sf_dir, "documents")
         # r7: evaluate the let-bound predicate in a PROJECTION above
         # the input-spread exchange (projections are not pushed below
         # it; a WHERE is) and filter behind a checkpoint barrier —
@@ -320,7 +314,7 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity only matters within ~1 ulp ties (measure-zero under a
     60-bit hash); zero-weight docs are excluded (x/0 rule)."""
     return (
-        wsample_keyed(_docs_w(spark, sf_dir))
+        wsample_keyed(read_spread(spark, sf_dir, "documents"))
         .orderBy(F.col("k_").asc(), F.col("doc_id").asc())
         .limit(WSAMPLE_K)
         .select("doc_id", "source", "n_chars")
@@ -346,10 +340,6 @@ def wsample_keyed(docs: DataFrame) -> DataFrame:
     )
 
 
-def _docs_w(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir)
-
-
 def corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-to-snapshot corpus diff — the incremental-crawl
     primitive: given OLD and NEW corpus snapshots, emit exactly the
@@ -365,7 +355,7 @@ def corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_dedup); at rest the snapshots would live in the repo's
     doc_id-bucketed tables (functions/bucketed.py), making even that
     exchange disappear."""
-    docs = _docs_w(spark, sf_dir)
+    docs = read_spread(spark, sf_dir, "documents")
     # NULL text coalesces to '' so a present-but-textless doc hashes to
     # a value (status from presence, never misread as added/removed)
     text = F.coalesce(F.col("text"), F.lit(""))

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .spread import read_spread
+
 N_MINHASH = 8
 BAND_SIZE = 4  # 2 bands of 4 -> candidates need one identical half-signature
 
@@ -44,13 +46,30 @@ SHINGLES_OF_T = (
     "try_element_at(t, i+2))))"
 )
 
+# The Python kernels' twin of _TOKENS / SHINGLES_OF_T. Java regex \s is
+# ASCII-only ([ \t\n\x0B\f\r]); Python re's \s is Unicode-wide, so
+# the class is spelled out to split exactly like Spark's split(...,
+# '\\s+').
+_JAVA_WS_RE = re.compile("[ \\t\\n\\x0b\\f\\r]+")
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .spread import spread_input
 
-    return spread_input(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), key="doc_id"
-    )
+def _py_tokens(t) -> list:
+    """``_TOKENS`` in Python: lowercased, Java-whitespace-split,
+    empties dropped; no tokens for a null document."""
+    if not isinstance(t, str):
+        return []
+    return [x for x in _JAVA_WS_RE.split(t.lower()) if x]
+
+
+def _py_shingles(t) -> set:
+    """``SHINGLES_OF_T`` in Python: the distinct word 3-gram shingles;
+    <3 tokens collapse to ONE shingle joining whatever tokens exist
+    ('' for token-less and null docs, which the SQL explode also
+    emits)."""
+    toks = _py_tokens(t)
+    if len(toks) < 3:
+        return {" ".join(toks)}
+    return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
 
 
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -73,7 +92,7 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _docs(spark, sf_dir)
+        read_spread(spark, sf_dir, "documents")
         .select("doc_id", F.expr(_TOKENS).alias("t"))
         .select("doc_id", F.explode(F.expr(SHINGLES_OF_T)).alias("shingle"))
         .distinct()
@@ -212,19 +231,15 @@ def _minhash_ab(shingle: str):
 def _minhash_sig_udf():
     """pandas_udf: text -> array of N_MINHASH signature mins.
 
-    Replicates the oracle's SQL shape bit-for-bit: Java-\\s-only
-    tokenization (``_JAVA_WS_RE``), word-3-gram shingles, and the
-    short-document fallback of ``SHINGLES_OF_T``'s ``concat_ws`` over
-    ``try_element_at`` — <3 tokens collapse to ONE shingle joining
-    whatever tokens exist ('' for token-less/null docs, which the SQL
-    explode also emits, so every document row gets a signature).
+    Replicates the oracle's SQL shape bit-for-bit over
+    ``_py_shingles`` (every document row, null or token-less ones
+    included, gets at least one shingle and so a signature).
 
     The per-shingle hash rows and per-doc mins are computed for the
     WHOLE batch in two vectorized numpy ops ((A + i*B) mod 2^32 over
     the flattened shingle stream, then ``np.minimum.reduceat`` at the
     per-doc offsets) — identical integers to the former per-shingle
     ``np.stack``/``np.min`` loop, ~5x less Python overhead."""
-    ws = re.compile(_JAVA_WS_RE)
 
     @pandas_udf("array<bigint>")
     def sig(text: pd.Series) -> pd.Series:
@@ -232,19 +247,7 @@ def _minhash_sig_udf():
         flat_ab: list = []
         offs = [0]
         for t in text:
-            toks = (
-                [x for x in ws.split(t.lower()) if x]
-                if t is not None
-                else []
-            )
-            if len(toks) >= 3:
-                shingles = {
-                    " ".join(toks[i:i + 3])
-                    for i in range(len(toks) - 2)
-                }
-            else:
-                shingles = {" ".join(toks)}
-            flat_ab.extend(ab_of(s) for s in shingles)
+            flat_ab.extend(ab_of(s) for s in _py_shingles(t))
             offs.append(len(flat_ab))
         if not flat_ab:
             return pd.Series([], dtype=object)
@@ -266,7 +269,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash family at sf0.1). Integer mins stay portable to DuckDB
     ('0x'-prefixed hex casts). One Arrow map emits the integers with
     zero exchanges."""
-    sigged = _docs(spark, sf_dir).select(
+    sigged = read_spread(spark, sf_dir, "documents").select(
         "doc_id", _minhash_sig_udf()(F.col("text")).alias("hs")
     )
     return sigged.select(
@@ -335,11 +338,6 @@ SIMHASH_BAND_BITS = 16  # 4 bands of 16 -> Hamming<=3 shares >=1 band
 # md5((j//32) || ':' || token), summed over the document's distinct
 # tokens — exact integer math, so both engines agree bit for bit.
 
-# Java regex \s is ASCII-only ([ \t\n\x0B\f\r]); Python re's \s is
-# Unicode-wide. The arrow tokenizer must replicate Spark's split(...,
-# '\\s+') exactly, so the class is spelled out.
-_JAVA_WS_RE = "[ \\t\\n\\x0b\\f\\r]+"
-
 # token -> per-bit ±1 vote row (np.int8[64]), shared across Arrow
 # batches on each worker: natural-language vocabulary repeats heavily
 # (Zipf), so most tokens hash once per worker, not once per document.
@@ -375,17 +373,13 @@ def _simhash_segments_udf():
     nibbles — integer-exact arithmetic, identical to the oracle's SQL
     form by construction. Segment b packs bits b*16..b*16+15 MSB-first,
     matching ``simhash_neardup_pairs``'s ``1 << (15 - k)`` weights."""
-    ws = re.compile(_JAVA_WS_RE)
     weights = (1 << np.arange(15, -1, -1, dtype=np.int64))
 
     @pandas_udf("array<bigint>")
     def segs(text: pd.Series) -> pd.Series:
         out = []
         for t in text:
-            if t is None:
-                out.append(None)
-                continue
-            toks = {x for x in ws.split(t.lower()) if x}
+            toks = set(_py_tokens(t))
             if not toks:
                 out.append(None)
                 continue
@@ -408,7 +402,7 @@ def _simhash_segments_udf():
 def _simhash_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, f0..f3) 16-bit fingerprint segments."""
     n_bands = N_SIMHASH_BITS // SIMHASH_BAND_BITS
-    segged = _docs(spark, sf_dir).select(
+    segged = read_spread(spark, sf_dir, "documents").select(
         "doc_id", _simhash_segments_udf()(F.col("text")).alias("fs")
     ).where(F.col("fs").isNotNull())
     return segged.select(
@@ -537,14 +531,16 @@ def simhash_neardup_pairs(
 # 100 TB corpus whose dup graph exceeds the threshold takes the
 # distributed loop automatically.
 DRIVER_CC_MAX_EDGES = 100_000
+CC_MAX_ITERS = 20  # pointer jumping needs O(log diameter) rounds
 
 
-def _driver_cc(rows) -> dict:
-    """Union-find (path halving) over collected (a, b) edge tuples;
-    returns node -> component root (an arbitrary member — callers
-    derive their own labels, e.g. min over the label-bearing node
-    class, since bipartite graphs mix node types)."""
+def _driver_min_labels(rows) -> dict:
+    """Union-find (path halving) over collected ``(node, grp)``
+    membership rows: node -> the min node of its component. Each
+    group's members union with its first member; the union keeps the
+    smaller root, so every root is its component's min."""
     parent: dict = {}
+    first: dict = {}
 
     def find(x):
         while parent[x] != x:
@@ -552,31 +548,98 @@ def _driver_cc(rows) -> dict:
             x = parent[x]
         return x
 
-    for a, b in rows:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
+    for node, grp in rows:
+        parent.setdefault(node, node)
+        ra, rb = find(node), find(first.setdefault(grp, node))
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
             parent[ra] = rb
     return {node: find(node) for node in parent}
 
 
-def _driver_cc_min_labels(rows, label_nodes) -> dict:
-    """node -> min(label-bearing node of its component), for every
-    node in ``label_nodes``."""
-    roots = _driver_cc(rows)
-    comp_min: dict = {}
-    for node in label_nodes:
-        root = roots[node]
-        cur = comp_min.get(root)
-        if cur is None or node < cur:
-            comp_min[root] = node
-    return {node: comp_min[roots[node]] for node in label_nodes}
+def _cc_labels(
+    edges: DataFrame, label: str,
+    driver_max_edges: int = DRIVER_CC_MAX_EDGES,
+) -> DataFrame:
+    """Connected components over membership rows ``edges(node, grp)``
+    (two columns, in that order): nodes sharing a group are connected.
+    Returns ``(node, label)`` longs, one row per node, labeled with
+    the min node of its component.
+
+    At most ``driver_max_edges`` rows (ONE action decides the branch
+    and delivers the rows, via Arrow rather than a row-pickled
+    ``take()`` — guide §6) run as driver union-find; tests pass 0 to
+    force the distributed loop as the reference.
+
+    Otherwise: min-label propagation node -> group -> node (the
+    alternating-aggregation form of the large-star / small-star CC
+    algorithm) with pointer jumping ``label <- label(label)``. Each
+    round is two hash-aggregates and three joins over the linear
+    membership list — no pairwise materialization, so a 10^6-node
+    mega-component costs O(edges) per round. Labels are node ids and
+    monotonically non-increasing, so the jump stays inside the
+    component and halves its depth: O(log diameter) rounds, which
+    ``CC_MAX_ITERS`` covers for any real graph (review r4; the DuckDB
+    oracles' recursive closures have no cap to diverge from). The
+    convergence check is read off the proposal (no proposal below a
+    node's label) and rides in the round's one ``localCheckpoint``,
+    which also cuts the growing lineage."""
+    node, grp = edges.columns
+    head = edges.limit(driver_max_edges + 1).toPandas()
+    if len(head) <= driver_max_edges:
+        labels = _driver_min_labels(
+            zip(head[node].tolist(), head[grp].tolist())
+        )
+        out = pd.DataFrame(
+            {node: list(labels), label: list(labels.values())}
+        )
+        return edges.sparkSession.createDataFrame(
+            out, f"{node} long, {label} long"
+        )
+
+    labels = edges.select(node).distinct().select(
+        node, F.col(node).cast("long").alias(label)
+    )
+    for _ in range(CC_MAX_ITERS):
+        member = edges.join(labels, node)
+        gmin = member.groupBy(grp).agg(F.min(label).alias("gmin"))
+        # every node is in its own groups, so the proposal never
+        # exceeds its label: the proposal IS the stepped label
+        prop = (
+            member.join(gmin, grp)
+            .groupBy(node)
+            .agg(F.min("gmin").alias("nl"), F.min(label).alias("ol"))
+        )
+        jump = prop.select(
+            F.col(node).alias("j_id"), F.col("nl").alias("j_label")
+        )
+        stepped = (
+            prop.join(jump, prop.nl == F.col("j_id"), "left")
+            .select(
+                node,
+                F.coalesce("j_label", "nl").alias(label),
+                (F.col("nl") < F.col("ol")).alias("moved"),
+            )
+            .localCheckpoint()
+        )
+        labels = stepped.drop("moved")
+        if stepped.where("moved").isEmpty():
+            break
+    else:
+        # silent partial labels would diverge from the exact closure
+        # (and its oracle); a graph deeper than CC_MAX_ITERS is a
+        # pathology the caller must see, not a wrong answer
+        raise RuntimeError(
+            f"connected components did not converge in"
+            f" {CC_MAX_ITERS} iterations"
+        )
+    return labels
 
 
 def _cc_bucket_edges(exploded: DataFrame) -> DataFrame:
     """(doc_id, band_idx, band_val) -> the (doc_id, bucket-string)
-    bipartite edge list the CC closure propagates over."""
+    membership rows the CC closure propagates over."""
     return exploded.select(
         "doc_id",
         F.concat(
@@ -588,29 +651,14 @@ def _cc_bucket_edges(exploded: DataFrame) -> DataFrame:
 
 
 def minhash_connected_components(
-    spark: SparkSession, sf_dir: str, max_iters: int = 20,
-    driver_max_edges: int = DRIVER_CC_MAX_EDGES,
-    edges: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, edges: DataFrame | None = None,
 ) -> DataFrame:
     """Full transitive closure over MinHash band buckets — the fixpoint
-    upgrade of ``minhash_clusters``' single propagation step.
-
-    Iterative min-label propagation doc -> bucket -> doc until no label
-    changes (the alternating-aggregation form of the large-star /
-    small-star CC algorithm): each round is two hash-aggregates and a
-    join over the linear (doc, bucket) edge list — no pairwise
-    materialization ever, so a 10^6-doc duplicate mega-cluster costs
-    O(edges) per round instead of 10^12 pairs. Rounds needed = cluster
-    diameter in the bucket graph (tiny for dup clusters); the
-    convergence check is one bounded count per round and
-    ``localCheckpoint`` cuts the growing lineage.
-
-    Small dup graphs (at most ``driver_max_edges`` (doc, bucket)
-    edges — one bounded count on the already-checkpointed edge list)
-    short-circuit to driver union-find over the bipartite graph,
-    labeling each doc with its component's min doc id — identical
-    output (pinned by test_cc_driver_and_distributed_agree), none of
-    the per-round scheduling overhead; see DRIVER_CC_MAX_EDGES.
+    upgrade of ``minhash_clusters``' single propagation step: every
+    doc is labeled ``cluster_rep`` = the min doc id of its component
+    in the (doc, bucket) graph, by ``_cc_labels``. Small dup graphs
+    (the common case) close on the driver; large ones iterate in
+    O(edges) per round with no pairwise materialization.
 
     ``edges`` (optional) supplies a precomputed ``(doc_id, bucket)``
     table (the ``_band_exploded`` form rendered to bucket strings) so
@@ -620,85 +668,7 @@ def minhash_connected_components(
         edges = _cc_bucket_edges(
             _band_exploded(spark, sf_dir)
         ).localCheckpoint(eager=False)
-
-    if driver_max_edges > 0:
-        # ONE action decides the branch and delivers the rows — via
-        # Arrow (toPandas) rather than row-pickled take(): the edge
-        # list is bounded by the threshold, and Arrow moves it an
-        # order of magnitude cheaper (guide §6 driver-transfer rule)
-        head = edges.limit(driver_max_edges + 1).toPandas()
-        if len(head) <= driver_max_edges:
-            rows = [
-                (("d", d), ("b", b))
-                for d, b in zip(
-                    head["doc_id"].tolist(), head["bucket"].tolist()
-                )
-            ]
-            doc_nodes = {a for a, _ in rows}
-            labels = _driver_cc_min_labels(rows, doc_nodes)
-            out = pd.DataFrame(
-                {
-                    "doc_id": [int(n[1]) for n in labels],
-                    "cluster_rep": [int(v[1]) for v in labels.values()],
-                }
-            )
-            return spark.createDataFrame(
-                out, "doc_id long, cluster_rep long"
-            )
-
-    labels = edges.select("doc_id").distinct().withColumn(
-        "label", F.col("doc_id")
-    )
-    for _ in range(max_iters):
-        bmin = (
-            edges.join(labels, "doc_id")
-            .groupBy("bucket")
-            .agg(F.min("label").alias("bmin"))
-        )
-        proposed = (
-            edges.join(bmin, "bucket")
-            .groupBy("doc_id")
-            .agg(F.min("bmin").alias("nl"))
-        )
-        stepped = labels.join(proposed, "doc_id", "left").select(
-            "doc_id",
-            F.least(F.col("label"), F.coalesce("nl", "label")).alias(
-                "label"
-            ),
-        )
-        # pointer jumping (label <- label(label)): labels are doc ids
-        # and monotonically non-increasing, so the jump stays in the
-        # component and halves its depth — O(log diameter) rounds, so
-        # the iteration cap covers any real bucket graph (review r4)
-        jump = stepped.selectExpr("doc_id AS j_id", "label AS j_label")
-        new_labels = (
-            stepped.join(jump, stepped.label == F.col("j_id"), "left")
-            .select(
-                "doc_id",
-                F.coalesce("j_label", "label").alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # silent partial labels would diverge from the exact closure
-        # (and its oracle); a bucket graph deeper than max_iters is a
-        # pathology the caller must see, not a wrong answer
-        raise RuntimeError(
-            f"minhash_connected_components did not converge in"
-            f" {max_iters} iterations"
-        )
-    return labels.select(
-        "doc_id", F.col("label").cast("long").alias("cluster_rep")
-    )
+    return _cc_labels(edges, "cluster_rep")
 
 
 GRAM_LEN = 64  # duplicate-passage gram width (chars)
@@ -713,7 +683,7 @@ def _passage_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row for consumers that need coverage math
     (``dup_passage_fraction``); Catalyst prunes it everywhere it is
     unused, so ``duplicate_passages``'s plan is unchanged."""
-    return _docs(spark, sf_dir).select(
+    return read_spread(spark, sf_dir, "documents").select(
         "doc_id",
         F.length("text").alias("n_chars"),
         F.explode(
@@ -858,7 +828,7 @@ def c4_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" {LINE_TOKENS}))"
     )
     toks = (
-        _docs(spark, sf_dir)
+        read_spread(spark, sf_dir, "documents")
         .where(F.col("text").rlike(r"\S"))
         .select("doc_id", F.expr(_T).alias("t"))
         # shared parent of the span-hash stream (BOTH sides of the
@@ -945,7 +915,7 @@ def decontaminate(
     the text itself never shuffles. The token array is materialized
     before the gram transform (the lambda-inlining trap,
     tests/test_plans.py)."""
-    docs = _docs(spark, sf_dir)
+    docs = read_spread(spark, sf_dir, "documents")
     if benchmark is None:
         benchmark = docs.where(F.col("doc_id") < BENCH_DOC_MAX).select("text")
     gram_expr = _grams_of_t(gram_len)
@@ -987,7 +957,7 @@ def contamination_fraction(
     gram explode LEFT-joined against them, one per-doc count/count
     aggregate; the text never shuffles and zero-hit docs cost no
     extra pass (the left join keeps their gram rows)."""
-    docs = _docs(spark, sf_dir)
+    docs = read_spread(spark, sf_dir, "documents")
     if benchmark is None:
         benchmark = docs.where(F.col("doc_id") < BENCH_DOC_MAX).select("text")
     gram_expr = _grams_of_t(gram_len)
@@ -1100,7 +1070,7 @@ def minhash_verified_pairs(
     The denominator is floored at 1 so a pair of empty/identical
     texts keeps dist_frac 0 instead of NULL-dropping."""
     cand = minhash_band_candidates(spark, sf_dir)
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = read_spread(spark, sf_dir, "documents").select("doc_id", "text")
     a = d.select(F.col("doc_id").alias("a_id"), F.col("text").alias("ta"))
     b = d.select(F.col("doc_id").alias("b_id"), F.col("text").alias("tb"))
     # the DP runs on the common-affix-stripped CORES (r7): LSH
@@ -1201,7 +1171,8 @@ def hll_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``_hll_estimate`` so the streaming path
     (``streaming.stream.stream_hll``) maintains the identical sketch
     incrementally and the estimator exists in exactly one place."""
-    return _hll_estimate(_hll_registers(_docs(spark, sf_dir)))
+    docs = read_spread(spark, sf_dir, "documents")
+    return _hll_estimate(_hll_registers(docs))
 
 
 # The shingle sketches compute per-BATCH partial sketch rows —
@@ -1239,25 +1210,12 @@ def _shingle_sketch_partials(docs: DataFrame) -> DataFrame:
     and NULL docs contribute the '' shingle — the SQL explode's
     behavior), 60-bit md5-hex-prefix hash, bucket = h mod 1024,
     rho = 51 - bitlength(h div 1024)."""
-    ws = re.compile(_JAVA_WS_RE)
 
     def gen(batches):
         for pdf in batches:
             agg: dict = {}
             for src, t in zip(pdf["source"], pdf["text"]):
-                toks = (
-                    [x for x in ws.split(t.lower()) if x]
-                    if isinstance(t, str)
-                    else []
-                )
-                if len(toks) >= 3:
-                    shingles = {
-                        " ".join(toks[i:i + 3])
-                        for i in range(len(toks) - 2)
-                    }
-                else:
-                    shingles = {" ".join(toks)}
-                for s in shingles:
+                for s in _py_shingles(t):
                     h = _shingle_h(s)
                     b = h % HLL_BUCKETS
                     w = h // HLL_BUCKETS
@@ -1376,7 +1334,7 @@ def bloom_decontaminate(
     no Exchange of any kind (plan-pinned). Per gram: one md5, two conv
     halves, k bit tests against the folded array. At 100 TB this is
     the decontamination pass that costs exactly one corpus scan."""
-    docs = _docs(spark, sf_dir)
+    docs = read_spread(spark, sf_dir, "documents")
     if benchmark is None:
         benchmark = docs.where(F.col("doc_id") < BENCH_DOC_MAX).select("text")
     gram_expr = _grams_of_t(gram_len)
@@ -1488,7 +1446,7 @@ def minhash_source_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stripe minima fold directly from the shared Arrow partial-sketch
     # rows (min of per-batch minima == global min)
     regs = (
-        _shingle_sketch_partials(_docs(spark, sf_dir))
+        _shingle_sketch_partials(read_spread(spark, sf_dir, "documents"))
         .groupBy("source", (F.col("bucket") % m).alias("stripe"))
         .agg(F.min("mn").alias("mn"))
     )
@@ -1625,7 +1583,7 @@ def pagerank_candidates(
     # it once (the CC loop's rule) or the whole signature->banding
     # lineage recomputes per round
     e = ed.join(dg, "src").localCheckpoint()
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = read_spread(spark, sf_dir, "documents").select("doc_id")
     ranks = docs.select("doc_id", F.lit(PR_INIT).cast("long").alias("r"))
     for _ in range(iters):
         contrib = (
@@ -1673,7 +1631,7 @@ def source_overlap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the two-pass form by construction, so the estimates are
     bit-equal. A/B at sf1.0: 11.29 -> ~4.5 s."""
     m = OPH_STRIPES
-    merged = _shingle_sketch_partials(_docs(spark, sf_dir))
+    merged = _shingle_sketch_partials(read_spread(spark, sf_dir, "documents"))
     per_bucket = (
         merged.groupBy("source", "bucket")
         .agg(

@@ -83,11 +83,9 @@ def json_sanitize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K10 full form (json_utils.py:28-184): recover JSON from salted
     dirty payloads and extract ``k`` — checked against the clean
     DuckDB-side extraction of the unsalted props."""
-    from .spread import spread_input
+    from .spread import read_spread
 
-    ev = spread_input(
-        spark.read.parquet(f"{sf_dir}/events.parquet"), key="event_id"
-    )
+    ev = read_spread(spark, sf_dir, "events")
     out = ev.select(
         "event_id", _recover_k(dirty_payload()).alias("r")
     )

@@ -36,6 +36,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernels import png, wav, y4m
+from .spread import read_spread
 
 N_FEATURES = 16
 
@@ -51,18 +52,10 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .spread import spread_input
-
-    return spread_input(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), key="doc_id"
-    )
-
 def binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata over an opaque binary payload (documents.text
     bytes stand in for image bytes): declarative, oracle-checkable."""
-    docs = _docs(spark, sf_dir)
+    docs = read_spread(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.octet_length("text").cast("long").alias("n_bytes"),
@@ -150,7 +143,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded to 6dp) so the result is a sortable/hashable relation; the
     raw ``array<float>`` shape stays internal to ``decode_features``.
     """
-    docs = _docs(spark, sf_dir).select(
+    docs = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
     return decode_features(docs).select(
@@ -248,7 +241,7 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     # payloads here are cast *text* — the stub-shaped DuckDB oracle is
     # the contract, so the ASCII Y4M sniff must never fire (sniff_real
     # stays on only for true-video callers like y4m_frames' input).
-    docs = _docs(spark, sf_dir).select(
+    docs = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
     return frame_sample(docs, sniff_real=False)
@@ -306,7 +299,7 @@ def png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 columns=["doc_id", "width", "height", "pixel_md5", "n_pixels"],
             )
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = read_spread(spark, sf_dir, "documents").select("doc_id")
     return docs.mapInPandas(run, PNG_SCHEMA)
 
 
@@ -370,7 +363,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = read_spread(spark, sf_dir, "documents").select("doc_id")
     return docs.mapInPandas(run, RESIZE_SCHEMA)
 
 
@@ -431,7 +424,7 @@ def wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = read_spread(spark, sf_dir, "documents").select("doc_id")
     return docs.mapInPandas(run, WAV_SCHEMA)
 
 
@@ -469,5 +462,5 @@ def y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                 columns=["doc_id", "frame_idx", "frame_md5", "n_bytes"],
             )
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = read_spread(spark, sf_dir, "documents").select("doc_id")
     return docs.mapInPandas(run, FRAME_SCHEMA)

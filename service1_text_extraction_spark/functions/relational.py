@@ -963,12 +963,9 @@ def hopping_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact; the small-range linear-counting branch (active
     here: tens of users per window) is ln() behind a 4dp round."""
     from .dedup import HLL_BUCKETS, HLL_HASH_HEX, _hll_estimate
+    from .spread import read_spread
 
-    from .spread import spread_input
-
-    ev = spread_input(
-        spark.read.parquet(f"{sf_dir}/events.parquet"), key="event_id"
-    ).where(F.col("ts").isNotNull())
+    ev = read_spread(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     win = F.window("ts", HOP_WINDOW, HOP_SLIDE)
     rho = (
         "CASE WHEN w = 0 THEN 51 ELSE"

@@ -25,17 +25,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .spread import read_spread
+
 N_PLANES = 16
 EMB_DIM = 64  # fixed test-table dimensionality (TESTDATA.md)
 LSH_RADIUS = 4  # multi-probe Hamming radius
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .spread import spread_input
-
-    return spread_input(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), key="vec_id"
-    )
 
 
 def _dot(a: str, b: str) -> Column:
@@ -58,7 +52,7 @@ def cosine_topk(
     spark: SparkSession, sf_dir: str, query_vec_id: int = 0, k: int = 10
 ) -> DataFrame:
     """Brute-force cosine top-k against one query vector (broadcast)."""
-    e = _emb(spark, sf_dir)
+    e = read_spread(spark, sf_dir, "embeddings")
     # the query's norm is a scalar: compute it once on the broadcast
     # side instead of re-deriving it for every candidate row
     q = e.where(F.col("vec_id") == query_vec_id).select(
@@ -102,7 +96,7 @@ def cosine_neardup_pairs(
     from .dedup import MAX_BUCKET_DF, _bucket_pairs, _capped_buckets
 
     width = N_PLANES // NEARDUP_BANDS
-    e = _emb(spark, sf_dir).select(
+    e = read_spread(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", _norm("embedding").alias("nrm")
     ).localCheckpoint(eager=False)  # consumed by both pair-join sides
     eb = e.withColumn("bucket", _bucket_col())
@@ -177,7 +171,9 @@ def _bucket_col() -> Column:
 
 
 def _bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _emb(spark, sf_dir).withColumn("bucket", _bucket_col())
+    return read_spread(spark, sf_dir, "embeddings").withColumn(
+        "bucket", _bucket_col()
+    )
 
 
 def lsh_ann_topk(
@@ -226,7 +222,7 @@ def embedding_meanpool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 mean-pool (training_page_embedder.py:119-124 analogue):
     per-label centroid, emitted as (label, pos, avg_val) rows so the
     result stays a flat relational shape."""
-    e = _emb(spark, sf_dir)
+    e = read_spread(spark, sf_dir, "embeddings")
     return (
         e.select("label", F.posexplode("embedding").alias("pos", "val"))
         .withColumn("pos", F.col("pos") + 1)
@@ -269,7 +265,7 @@ def _resolve_k(spark: SparkSession, sf_dir: str, k) -> int:
     if k == "auto":
         n = _N_EMB_MEMO.get(sf_dir)
         if n is None:
-            n = _emb(spark, sf_dir).count()
+            n = read_spread(spark, sf_dir, "embeddings").count()
             _N_EMB_MEMO[sf_dir] = n
         return _auto_k(n)
     return int(k)
@@ -295,9 +291,8 @@ def kmeans_assign(
     pure per-row projection — zero shuffle; the update is one
     hash-aggregate."""
     centroids = _kmeans_centroids(spark, sf_dir, k, iters)
-    return _assigned(
-        spark, _emb(spark, sf_dir).select("vec_id", "embedding"), centroids
-    ).select("vec_id", "list_id")
+    e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _assigned(spark, e, centroids).select("vec_id", "list_id")
 
 
 # Above this k, centroid-literal expression trees stop scaling: a 10^4
@@ -493,7 +488,7 @@ def _kmeans_centroids(
     cached = _KMEANS_MEMO.get(memo_key)
     if cached is not None:
         return cached
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     init = e.orderBy("vec_id").limit(k).orderBy("vec_id").collect()
     # init stays unrounded: float32 -> double is exact in any engine,
     # while Python/Spark/DuckDB rounding modes differ at exact halves
@@ -541,7 +536,7 @@ def ivf_ann_topk(
     (``k='auto'``, ``_auto_k``); a production deployment scales
     ``n_probe`` with it to hold the probed fraction."""
     cents = _kmeans_centroids(spark, sf_dir, "auto")
-    e = _emb(spark, sf_dir)
+    e = read_spread(spark, sf_dir, "embeddings")
     q_row = e.where(F.col("vec_id") == query_vec_id).first()
     if q_row is None:  # unknown query id -> empty result, not a crash
         return e.select(
@@ -618,7 +613,7 @@ def semantic_dedup(
     from .dedup import _bucket_pairs, _capped_buckets
 
     assign = kmeans_assign(spark, sf_dir, k="auto")  # (vec_id, list_id)
-    e = _emb(spark, sf_dir).select(
+    e = read_spread(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", _norm("embedding").alias("nrm")
     ).localCheckpoint(eager=False)  # consumed by both pair-join sides
     buckets = _capped_buckets(
@@ -652,128 +647,40 @@ def semantic_dedup(
     )
 
 
-def _cc_min_labels(
-    edges: DataFrame, max_iters: int = 20,
-    driver_max_edges: int | None = None,
-) -> DataFrame:
-    """Connected components over an undirected pair list
-    ``edges(a_id, b_id)`` by min-label propagation with pointer
-    jumping: each round proposes the min neighbor label, then jumps
-    ``label <- label(label)``. Labels are node ids and monotonically
-    non-increasing, so the jump stays inside the component and halves
-    its depth — O(log diameter) rounds, so ``max_iters = 20`` covers
-    any component a real corpus can produce (the DuckDB oracles'
-    recursive closures have no iteration cap to diverge from —
-    review r4; convergence unit-tested on a 60-node path graph).
-    Returns ``(vec_id, label)`` for every node that occurs in an
-    edge.
-
-    When the edge list is at most ``driver_max_edges`` (one bounded
-    count — default dedup.DRIVER_CC_MAX_EDGES), the closure runs as
-    driver union-find instead: identical labels, none of the
-    per-round job overhead. Pass 0 to force the distributed loop."""
-    from .dedup import DRIVER_CC_MAX_EDGES, _driver_cc_min_labels
-
-    if driver_max_edges is None:
-        driver_max_edges = DRIVER_CC_MAX_EDGES
-    if driver_max_edges > 0:
-        # ONE action both decides the branch and delivers the rows
-        # (review r5): an oversized graph returns threshold+1 rows and
-        # falls through to the distributed loop
-        # Arrow transfer, not row-pickled take() — guide §6
-        head = edges.limit(driver_max_edges + 1).toPandas()
-        if len(head) <= driver_max_edges:
-            rows = list(
-                zip(head["a_id"].tolist(), head["b_id"].tolist())
-            )
-            nodes = {a for a, _ in rows} | {b for _, b in rows}
-            labels = _driver_cc_min_labels(rows, nodes)
-            spark = edges.sparkSession
-            out = pd.DataFrame(
-                {
-                    "vec_id": [int(n) for n in labels],
-                    "label": [int(v) for v in labels.values()],
-                }
-            )
-            return spark.createDataFrame(out, "vec_id long, label long")
-    adj = edges.selectExpr("a_id AS src", "b_id AS dst").union(
-        edges.selectExpr("b_id AS src", "a_id AS dst")
-    )
-    labels = (
-        adj.select(F.col("src").alias("vec_id"))
-        .distinct()
-        .select("vec_id", F.col("vec_id").cast("long").alias("label"))
-    )
-    for _ in range(max_iters):
-        prop = (
-            adj.join(labels.withColumnRenamed("vec_id", "src"), "src")
-            .groupBy("dst")
-            .agg(F.min("label").alias("nl"))
-            .withColumnRenamed("dst", "vec_id")
-        ).localCheckpoint()
-        # convergence read off the proposal itself — no new-vs-old join
-        changed = (
-            labels.join(prop, "vec_id")
-            .where(F.col("nl") < F.col("label"))
-            .count()
-        )
-        if changed == 0:
-            break
-        stepped = labels.join(prop, "vec_id", "left").select(
-            "vec_id",
-            F.least(
-                F.col("label"), F.coalesce("nl", "label")
-            ).alias("label"),
-        )
-        jump = stepped.selectExpr("vec_id AS j_id", "label AS j_label")
-        labels = (
-            stepped.join(
-                jump, stepped.label == F.col("j_id"), "left"
-            )
-            .select(
-                "vec_id",
-                F.coalesce("j_label", "label").alias("label"),
-            )
-            .localCheckpoint()
-        )
-    else:
-        raise RuntimeError(
-            f"label propagation did not converge in {max_iters} iterations"
-        )
-    return labels
-
-
 def semantic_keepers(
     spark: SparkSession,
     sf_dir: str,
     threshold: float = SEM_THRESHOLD,
-    max_iters: int = 20,
 ) -> DataFrame:
     """SemDeDup removal policy over ``semantic_dedup``'s duplicate
-    edges: connected components by iterative min-label propagation
-    (the same alternating-aggregation CC as
-    dedup.minhash_connected_components, here over the symmetrized pair
-    list), keeping the lowest vec_id of each component. Emits every
-    vector with its component keeper and a keep flag — the training
-    set is ``keep = 1``.
+    edges: connected components by ``dedup._cc_labels`` (the closure
+    dedup.minhash_connected_components uses, each pair a group named
+    by its lower id), keeping the lowest vec_id of each component.
+    Emits every vector with its component keeper and a keep flag — the
+    training set is ``keep = 1``.
 
     Scale shape: the edge list is already bucket-capped upstream (no
-    pair explosion); propagation runs over ONLY the vectors that occur
+    pair explosion); the closure runs over ONLY the vectors that occur
     in a duplicate edge (vectors with no edge are trivially their own
-    keeper and join back at the end), so each round is one join + two
-    hash-aggregates over the dup subgraph — a duplicate mega-component
-    costs O(edges x diameter), never O(pairs), and a 10^12-vector
-    corpus with 1% duplicates iterates over 1% of its rows.
-    ``localCheckpoint`` cuts the growing loop lineage exactly as in
-    the MinHash closure."""
-    edges = (
+    keeper and join back at the end) — a duplicate mega-component
+    costs O(edges) per round, never O(pairs), and a 10^12-vector
+    corpus with 1% duplicates iterates over 1% of its rows."""
+    from .dedup import _cc_labels
+
+    pairs = (
         semantic_dedup(spark, sf_dir, threshold)
         .select("a_id", "b_id")
         .localCheckpoint()
     )
-    labels = _cc_min_labels(edges, max_iters)
+    # each pair is a group named by its lower id a_id
+    members = pairs.select(
+        F.col("a_id").alias("vec_id"), F.col("a_id").alias("grp")
+    ).unionAll(
+        pairs.select(F.col("b_id").alias("vec_id"), F.col("a_id").alias("grp"))
+    )
+    labels = _cc_labels(members, "label")
     return (
-        _emb(spark, sf_dir)
+        read_spread(spark, sf_dir, "embeddings")
         .select("vec_id")
         .join(labels, "vec_id", "left")
         .select(
@@ -917,7 +824,7 @@ def knn_join_multiprobe(
     from .dedup import _bucket_pairs, _capped_buckets
 
     cents = _kmeans_centroids(spark, sf_dir, "auto")
-    e = _emb(spark, sf_dir).select(
+    e = read_spread(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", _norm("embedding").alias("nrm")
     ).localCheckpoint(eager=False)  # consumed by both pair-join sides
     ev = e.select("vec_id", "embedding")
@@ -1072,7 +979,7 @@ def rrf_fusion(
     bm = bm25_topk(spark, sf_dir).select(
         "qid", "doc_id", F.col("rank").alias("rb")
     )
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q = e.where(F.col("vec_id") < nq).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qe"),

@@ -9,38 +9,42 @@ serially on one core (measured at sf1.0: the MinHash signature UDF is
 guide prescribes for an unsplittable input is to repartition right
 after the read.
 
-``spread_input`` does that ADAPTIVELY: only when the planned scan has
-fewer partitions than the session's parallelism. On a real corpus
-(many files / many row groups, >= cores scan tasks) the condition is
-false and the plan is untouched — the spread never fires at 100 TB; it
-exists precisely for inputs whose layout undercuts the cluster. The
-exchange it adds is round-robin over the scan's raw columns (the
-repartition sits directly on the read, before any projection, so
-column pruning still reaches the scan and pushed filters stay pushed —
-Catalyst moves both through a Repartition node).
+``read_spread``, the one reader of the driver tables, does that
+ADAPTIVELY: only when the planned scan has fewer partitions than the
+session's parallelism. On a real corpus (many files / many row groups,
+>= cores scan tasks) the condition is false and the plan is untouched —
+the spread never fires at 100 TB; it exists precisely for inputs whose
+layout undercuts the cluster. The exchange it adds hashes the scan's
+raw rows on the table's unique id (the repartition sits directly on
+the read, before any projection, so column pruning still reaches the
+scan and pushed filters stay pushed — Catalyst moves both through a
+Repartition node).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# each driver table's unique id: the key ``read_spread`` hashes on
+_TABLE_KEYS = {
+    "documents": "doc_id", "embeddings": "vec_id", "events": "event_id"
+}
 
-def spread_input(df: DataFrame, key: str | None = None) -> DataFrame:
-    """Spread a freshly read DataFrame across the session's cores iff
-    its planned scan has fewer partitions (an unsplittable /
-    few-row-group input); identity otherwise.
 
-    ``key`` (a unique id column) selects HASH partitioning on that
-    key: deterministic under task retries like any hash exchange, and
-    — unlike keyless ``repartition(n)`` — free of the
-    sortBeforeRepartition local sort, which on a text-heavy table
-    costs more than the shuffle itself (guide §2.5: derive synthetic
-    spread keys deterministically; a unique id hashes uniformly)."""
-    spark = df.sparkSession
+def read_spread(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Read ``{sf_dir}/{table}.parquet`` and spread it across the
+    session's cores iff its planned scan has fewer partitions (an
+    unsplittable / few-row-group input); the bare read otherwise.
+
+    The spread HASH-partitions on the table's unique id: deterministic
+    under task retries like any hash exchange, and — unlike keyless
+    ``repartition(n)`` — free of the sortBeforeRepartition local sort,
+    which on a text-heavy table costs more than the shuffle itself
+    (guide §2.5: derive synthetic spread keys deterministically; a
+    unique id hashes uniformly)."""
+    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     n = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
-        if key is not None:
-            return df.repartition(n, F.col(key))
-        return df.repartition(n)
+        return df.repartition(n, F.col(_TABLE_KEYS[table]))
     return df

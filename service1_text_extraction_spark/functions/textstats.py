@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from ..kernels import textnorm as _tn
+from .spread import read_spread
 
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "for", "with"],
@@ -23,14 +24,6 @@ STOPWORDS = {
 _TOKENS = "filter(split(lower(text), '\\\\s+'), x -> x != '')"
 # BPE-ish tokenization: letter runs, digit runs, single punctuation
 BPE_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .spread import spread_input
-
-    return spread_input(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), key="doc_id"
-    )
 
 
 def _stop_count(lang: str) -> F.Column:
@@ -64,7 +57,7 @@ def with_lang_pred(df: DataFrame, keep_scores: bool = False) -> DataFrame:
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-vote language ID (n-gram-heuristic family). Ties and
     zero-evidence rows resolve to 'und' / first-wins deterministically."""
-    df = _docs(spark, sf_dir).select(
+    df = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_TOKENS).alias("t")
     )
     return with_lang_pred(df).select("doc_id", "lang_pred")
@@ -96,7 +89,7 @@ def quality_expr(stop_en: F.Column | None = None) -> F.Column:
 
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length / punctuation / stopword quality heuristics -> [0, 1]."""
-    df = _docs(spark, sf_dir).select(
+    df = read_spread(spark, sf_dir, "documents").select(
         "doc_id", "text", F.expr(_TOKENS).alias("t")
     )
     return df.select(
@@ -111,7 +104,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace tokens + BPE-ish regex tokens per document."""
-    return _docs(spark, sf_dir).select(
+    return read_spread(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(f"size({_TOKENS})").cast("long").alias("ws_tokens"),
         F.size(F.regexp_extract_all("text", F.lit(BPE_PATTERN), F.lit(0)))
@@ -175,7 +168,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB computes identical digests, so the oracle checks values.
     One Arrow map emits the hex strings with zero exchanges and no
     per-row hash array."""
-    df = _docs(spark, sf_dir)
+    df = read_spread(spark, sf_dir, "documents")
     return df.select(
         "doc_id", _fp_min_md5_udf()(F.col("text")).alias("fingerprint")
     )
@@ -207,7 +200,7 @@ def clean_unicode_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaned = F.translate(cleaned, TRANS_FROM, TRANS_TO)
     cleaned = F.regexp_replace(cleaned, CTRL_CLASS, " ")
     cleaned = F.regexp_replace(cleaned, HIGH_CLASS, " ")
-    return _docs(spark, sf_dir).select(
+    return read_spread(spark, sf_dir, "documents").select(
         "doc_id", cleaned.alias("cleaned")
     )
 
@@ -215,7 +208,7 @@ def clean_unicode_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 def normalize_ws_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2 normalize_whitespace (text_utils.py:142-147) as SQL."""
     s = F.concat(F.lit("  a\t"), F.col("text"), F.lit("\n\nz  "))
-    return _docs(spark, sf_dir).select(
+    return read_spread(spark, sf_dir, "documents").select(
         "doc_id",
         F.trim(F.regexp_replace(s, r"\s+", " ")).alias("normalized"),
     )
@@ -237,7 +230,7 @@ def chunk_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    return _docs(spark, sf_dir).select(
+    return read_spread(spark, sf_dir, "documents").select(
         "doc_id", n_chunks("text").alias("n_chunks")
     )
 
@@ -255,7 +248,7 @@ def train_test_split(
     have (re-running the job can never migrate a document across the
     split). The %100 of a 16-bit value carries a ~0.05% bucket-size
     bias, irrelevant for splitting."""
-    return _docs(spark, sf_dir).select(
+    return read_spread(spark, sf_dir, "documents").select(
         "doc_id",
         split_bucket_expr().alias("bucket"),
         split_label_expr(test_pct).alias("split"),
@@ -294,7 +287,7 @@ def tfidf_top_terms(
     results are deterministic and oracle-checkable."""
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = read_spread(spark, sf_dir, "documents")
     n_docs = docs.count()  # one scalar action (corpus size)
     toks = docs.select(
         "doc_id", F.explode(F.expr(_TOKENS)).alias("tok")
@@ -345,7 +338,7 @@ def pack_sequences(
     only doc_id arithmetic and token counts feed the assignment."""
     from pyspark.sql import Window
 
-    n = _docs(spark, sf_dir).select(
+    n = read_spread(spark, sf_dir, "documents").select(
         "doc_id",
         (F.col("doc_id") % N_PACK_SHARDS).cast("int").alias("shard"),
         F.expr(f"size({_TOKENS})").cast("long").alias("n_tok"),
@@ -422,7 +415,7 @@ def gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-aggregates over exploded lines/bigrams plus one max-filter
     join, all keyed by doc_id — no pairwise anything; the token array
     is materialized once per branch (the lambda-inlining trap)."""
-    toks = _docs(spark, sf_dir).select(
+    toks = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").alias("n_chars"), F.expr(_TOKENS).alias("t")
     )
     lines = toks.select(
@@ -607,7 +600,7 @@ def gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined pass flag — the standard pretraining admission gate.
     One scan; the token array and pseudo-line array each materialize
     once per row in their own projections; zero shuffles."""
-    toks = _docs(spark, sf_dir).select(
+    toks = read_spread(spark, sf_dir, "documents").select(
         "doc_id", "text", F.expr(_TOKENS).alias("t")
     ).withColumn("L", F.expr(_gopher_lines_sql()))
     sig = toks.select(
@@ -727,7 +720,7 @@ def c4_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Filter and recomputes it per row (measured: 6 tokenizer
     copies)."""
     toks = (
-        _docs(spark, sf_dir)
+        read_spread(spark, sf_dir, "documents")
         .where(F.col("text").rlike(r"\S"))
         .select(
             "doc_id",
@@ -824,7 +817,9 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # actually sees, so the counts always agree with the redacted
     # output (a phone digit-run inside an email local part is part of
     # the <EMAIL> redaction, not a phantom n_phones hit)
-    base = _docs(spark, sf_dir).select("doc_id", aug.alias("aug"))
+    base = read_spread(spark, sf_dir, "documents").select(
+        "doc_id", aug.alias("aug")
+    )
     r1 = base.withColumn(
         "r1", F.regexp_replace("aug", PII_EMAIL, "<EMAIL>")
     )
@@ -884,7 +879,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``localCheckpoint`` of it (narrow integer rows — the md5 bucketing
     runs once) replaces a second tokenize+hash scan of the corpus."""
     tok = (
-        _docs(spark, sf_dir)
+        read_spread(spark, sf_dir, "documents")
         .select("doc_id", "lang", F.explode(F.expr(_TOKENS)).alias("w"))
         .select("doc_id", "lang", _dsir_bucket(F.col("w")).alias("b"))
         .localCheckpoint(eager=False)
@@ -956,7 +951,7 @@ def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys at 100 TB — a plain shuffle agg, NOT a global sort: the top-V
     head is taken with a rank window over the aggregated counts, and
     Spark's TakeOrderedAndProject handles the small-V case)."""
-    tokens = _docs(spark, sf_dir).select(
+    tokens = read_spread(spark, sf_dir, "documents").select(
         F.explode(F.expr(_TOKENS)).alias("w")
     )
     return _top_vocab(tokens).select(
@@ -971,7 +966,7 @@ def vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership test is a broadcast LEFT join (never a shuffle of the
     corpus tokens' payload); the per-doc rollup is one hash-aggregate
     with partial combine."""
-    tok = _docs(spark, sf_dir).select(
+    tok = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.expr(_TOKENS)).alias("w")
     )
     # the vocabulary derives from the SAME token stream the membership
@@ -1031,7 +1026,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-invocation localCheckpoint tokenizes ONCE; unlike persist()
     # it cannot leak results into a later run (each call builds a
     # fresh RDD).
-    toks = _docs(spark, sf_dir).select(
+    toks = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_TOKENS).alias("t")
     ).localCheckpoint(eager=False)
     # CASE guard: sequence(1, size-1) is DESCENDING for size < 2 (the
@@ -1117,7 +1112,7 @@ def trigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared parent of the trigram stream (x2), bigram stream, and
     # unigram aggregate — one per-invocation materialization replaces
     # five corpus tokenizations (see bigram_logprob)
-    toks = _docs(spark, sf_dir).select(
+    toks = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_TOKENS).alias("t")
     ).localCheckpoint(eager=False)
     # CASE guard: sequence(2, size-1) is DESCENDING for size < 3
@@ -1294,7 +1289,7 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations of the corpus tokens per query. Sharing that
     intermediate (and releasing it after the action) is ROADMAP item 4
     ("One helper for shared intermediates")."""
-    tok = _docs(spark, sf_dir).select(
+    tok = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.expr(_TOKENS)).alias("w")
     )
     # deliberately lazy: construction must not run a job (the ADVICE-r4
@@ -1373,7 +1368,9 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query set would be an external dictionary instead; the sketch
     itself never grows. Overestimate-only + monotone-merge properties
     are pinned in tests/test_curation_edge.py."""
-    tok = _docs(spark, sf_dir).select(F.explode(F.expr(_TOKENS)).alias("w"))
+    tok = read_spread(spark, sf_dir, "documents").select(
+        F.explode(F.expr(_TOKENS)).alias("w")
+    )
     # Aggregate to DISTINCT tokens before any hashing (guide §2.3
     # "aggregate before you shuffle"): the previous shape evaluated
     # the Kirsch-Mitzenmacher cell transform — with the md5 halves
@@ -1451,7 +1448,7 @@ def bm25_topk(
     from pyspark.sql import Window
 
     nq = BM25_N_QUERIES
-    base = _docs(spark, sf_dir).select(
+    base = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_TOKENS).alias("t")
         # shared parent of the corpus-stats aggregate, the candidate
         # postings, and the query-term table: one scan+tokenize per
@@ -1567,7 +1564,7 @@ def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return (
-        _docs(spark, sf_dir)
+        read_spread(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull() & (F.col("text") != ""))
         .select("doc_id", ent("text").alias("s"))
         .select("doc_id", "s.*")

@@ -34,7 +34,8 @@ MIN_PDF_TEXT_LENGTH = 250
 
 # F5 OCR fallback hook (reference core_pdf_processor.py:467-495 runs
 # tesseract over page images when the structured extraction fails the
-# gate). Signature: (pdf_bytes) -> extracted text.
+# gate). Signature: (pdf_bytes, passwords=None) -> extracted text; the
+# candidate passwords let a hook open encrypted documents.
 _OCR_HOOK = None
 
 
@@ -189,14 +190,7 @@ def _extract_turn_inner(
             )
         if _OCR_HOOK is not None:
             try:
-                # hooks that understand encrypted documents take the
-                # candidate passwords as a keyword (the in-tree
-                # glyph_ocr does); legacy (pdf_bytes)-only hooks keep
-                # working via the TypeError fallback
-                try:
-                    raw_ocr = _OCR_HOOK(raw, passwords=passwords)
-                except TypeError:
-                    raw_ocr = _OCR_HOOK(raw)
+                raw_ocr = _OCR_HOOK(raw, passwords=passwords)
                 ocr_text = textnorm.clean_unicode(raw_ocr).strip()
             except Exception:  # noqa: BLE001 - hook errors -> failure row
                 ocr_text = ""

@@ -49,7 +49,7 @@ import tempfile
 from . import png as _png
 from .ocr import iter_gray_images
 from .pdf import PdfDocument
-from .textnorm import is_garbage_text
+from .textnorm import is_garbage
 
 OCR_LANG = "eng"
 OCR_ZOOM = 2                      # 2x raster zoom (reference Matrix(2, 2))
@@ -222,7 +222,7 @@ def ocr_image(
     png_bytes = _png.encode_png(w * OCR_ZOOM, h * OCR_ZOOM, z)
     try:
         text = run(png_bytes, OCR_CONFIG_PRIMARY).strip()
-        if len(text) < OCR_MIN_TEXT_LEN or is_garbage_text(text):
+        if len(text) < OCR_MIN_TEXT_LEN or is_garbage(text):
             text = run(png_bytes, OCR_CONFIG_RETRY).strip()
     except (subprocess.SubprocessError, OSError):
         # CalledProcessError / TimeoutExpired / a vanished binary:

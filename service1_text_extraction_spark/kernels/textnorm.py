@@ -11,19 +11,17 @@ Reimplements, bit-exactly, the reference semantics of:
 - ``_is_garbage_text``           (``backend/services/document_processing/utils/
                                    core_pdf_processor.py:584-648``)
 
-The implementations here are original, written for vectorized execution
-(translation tables + compiled regexes + NumPy codepoint masks) rather
-than the reference's per-character Python loops; only the *semantics*
-(replacement order, thresholds, character classes) are reproduced.
+The implementations here are original, written for C-speed execution
+(translation tables + compiled regexes + per-character class caches)
+rather than the reference's per-character Python loops; only the
+*semantics* (replacement order, thresholds, character classes) are
+reproduced.
 """
 
 from __future__ import annotations
 
 import re
 from collections import Counter
-
-import numpy as np
-import pandas as pd
 
 # --------------------------------------------------------------------------
 # clean_unicode
@@ -74,8 +72,8 @@ def clean_unicode(text: str) -> str:
     touches >= 256 (all asserted below at import) — so for a pure-ASCII
     string (the overwhelmingly common case on real corpora) the whole
     pipeline reduces to the control-char sweep. ``str.isascii`` is a
-    C-speed flag check; bit-equality with the full path is pinned by
-    the scalar<->numpy property test."""
+    C-speed flag check; both paths are pinned by the reference-oracle
+    and idempotence tests."""
     if text.isascii():
         return _CTRL_TO_SPACE_RE.sub(" ", text)
     for old, new in _MULTI_REPLACEMENTS:
@@ -89,15 +87,6 @@ def clean_unicode(text: str) -> str:
 # import loudly if a future edit to the tables breaks them
 assert all(not o.isascii() for o, _ in _MULTI_REPLACEMENTS)
 assert all(k >= 128 for k in _CHAR_TABLE)
-
-
-def clean_unicode_series(s: pd.Series) -> pd.Series:
-    """Vectorized ``clean_unicode`` over a pandas string Series."""
-    for old, new in _MULTI_REPLACEMENTS:
-        s = s.str.replace(old, new, regex=False)
-    s = s.str.translate(_CHAR_TABLE)
-    s = s.str.replace(_CTRL_TO_SPACE_RE, " ", regex=True)
-    return s.str.replace(_HIGH_TO_SPACE_RE, " ", regex=True)
 
 
 # --------------------------------------------------------------------------
@@ -116,10 +105,6 @@ def normalize_whitespace(text: str) -> str:
     if _WS_NONTRIVIAL_RE.search(text) is None:
         return text.strip()
     return _WS_RUN_RE.sub(" ", text).strip()
-
-
-def normalize_whitespace_series(s: pd.Series) -> pd.Series:
-    return s.str.replace(_WS_RUN_RE, " ", regex=True).str.strip()
 
 
 _PAGE_LINE_RE = re.compile(r"^Page \d+$", re.IGNORECASE)
@@ -261,9 +246,8 @@ def _char_bits(c: str) -> int:
 def is_garbage_text(text: str) -> bool:
     """Scalar reference-exact gate. True -> reject extraction.
 
-    Identical rule set and rule ORDER as the original four-pass form
-    (and the NumPy twin, property-tested bit-equal); the per-class
-    counts all come from one Counter pass."""
+    Identical rule set and rule ORDER as the original four-pass form;
+    the per-class counts all come from one Counter pass."""
     if not text.strip():
         return True
     n = len(text)
@@ -307,112 +291,6 @@ def is_garbage_text(text: str) -> bool:
 
     return False
 
-
-# ---- vectorized variant: per-codepoint class tables over the BMP ---------
-
-_BMP = 0x10000
-
-
-def _build_tables() -> dict[str, np.ndarray]:
-    chars = [chr(i) for i in range(_BMP)]
-    alnum = np.fromiter((c.isalnum() for c in chars), dtype=bool, count=_BMP)
-    space = np.fromiter((c.isspace() for c in chars), dtype=bool, count=_BMP)
-    printable = np.fromiter((c.isprintable() for c in chars), dtype=bool, count=_BMP)
-    punct = np.zeros(_BMP, dtype=bool)
-    for c in GARBAGE_PUNCT_KEEP:
-        punct[ord(c)] = True
-    ctrl_seq = np.zeros(_BMP, dtype=bool)  # the _CTRL_SEQ_RE class
-    for i in list(range(0x00, 0x09)) + [0x0B, 0x0C] + list(range(0x0E, 0x20)):
-        ctrl_seq[i] = True
-    for i in range(0x7F, 0xA0):
-        ctrl_seq[i] = True
-    return {
-        "alnum": alnum,
-        "space": space,
-        "printable": printable,
-        "punct": punct,
-        "ctrl_seq": ctrl_seq,
-    }
-
-
-_T = _build_tables()
-
-
-def _codepoints(text: str) -> np.ndarray:
-    return np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
-
-
-def is_garbage_text_np(text: str) -> bool:
-    """NumPy single-pass version of :func:`is_garbage_text`.
-
-    Astral codepoints (>= U+10000) are rare in extraction payloads;
-    their class bits fall back to per-char Python only for those chars.
-    """
-    stripped = text.strip()
-    if not stripped:
-        return True
-    cp = _codepoints(text)
-    n = cp.size
-
-    high = cp >= _BMP
-    idx = np.where(high, 32, cp)  # placeholder index; fixed up below
-    alnum = _T["alnum"][idx]
-    space = _T["space"][idx]
-    printable = _T["printable"][idx]
-    punct = _T["punct"][idx]
-    if high.any():
-        for j in np.nonzero(high)[0]:
-            c = chr(int(cp[j]))
-            alnum[j] = c.isalnum()
-            space[j] = False
-            printable[j] = c.isprintable()
-            punct[j] = False
-
-    is_tnr = (cp == 9) | (cp == 10) | (cp == 13)
-    ctrl = (cp < 32) & ~is_tnr
-    if int(ctrl.sum()) > n * 0.3:
-        return True
-
-    seq_class = _T["ctrl_seq"][idx] & ~high
-    # number of runs of consecutive True
-    if seq_class.any():
-        starts = int(seq_class[0]) + int((seq_class[1:] & ~seq_class[:-1]).sum())
-        if starts > 3:
-            return True
-
-    special = ~alnum & ~space & ~punct
-    if int(special.sum()) / n > 0.5:
-        return True
-
-    # len(set) is O(n) C-speed vs np.unique's O(n log n) sort
-    if len(set(text)) < 5:
-        return True
-
-    # word lengths: runs of non-whitespace per str.split() semantics
-    nonspace = ~space
-    if nonspace.any():
-        padded = np.concatenate(([False], nonspace, [False]))
-        run_starts = np.nonzero(padded[1:] & ~padded[:-1])[0]
-        run_ends = np.nonzero(~padded[1:] & padded[:-1])[0]
-        lengths = run_ends - run_starts
-        if lengths.size and int((lengths < 2).sum()) / lengths.size > 0.7:
-            return True
-
-    non_printable = ctrl | (cp > 126)
-    if int(non_printable.sum()) > n * 0.2:
-        return True
-
-    if int((printable & ~is_tnr).sum()) / n < 0.3:
-        return True
-
-    return False
-
-
-# the gate implementations are property-tested bit-equal
-# (tests/test_property.py); the scalar loop wins below ~1 KiB where
-# NumPy's array-setup overhead dominates (measured crossover ~1000
-# chars on the bench corpus; extracted turns are p50 ~420 chars)
-_GATE_NP_MIN_CHARS = 1024
 
 # ---- ASCII fast form of the gate (review r6) -----------------------------
 # The seven rules are OR'd pure predicates of the text, so their
@@ -467,25 +345,12 @@ def _is_garbage_ascii(text: str) -> bool:
 
 
 def is_garbage(text: str) -> bool:
-    """Dispatched gate: ASCII bytes-translate form for ALL ASCII texts
-    (C-speed translate deletes beat both the scalar Counter form ~6x
-    and the NumPy form ~3.6x at any measured length — the r6 crossover
-    was measured against the scalar form only), scalar for short
-    non-ASCII, NumPy above the crossover for non-ASCII. Semantics
-    identical all three ways (property-tested)."""
+    """The gate: the ASCII bytes-translate form for ASCII text (C-speed
+    translate deletes beat the scalar Counter form ~6x), the scalar
+    reference form for everything else. Semantics identical both ways
+    (property-tested)."""
     if text.isascii():
         if not text.strip():
             return True
         return _is_garbage_ascii(text)
-    if len(text) < _GATE_NP_MIN_CHARS:
-        return is_garbage_text(text)
-    return is_garbage_text_np(text)
-
-
-def garbage_mask(texts: pd.Series) -> np.ndarray:
-    """Vectorized gate over a Series -> bool ndarray (True = garbage)."""
-    return np.fromiter(
-        (is_garbage(t) if isinstance(t, str) else True for t in texts),
-        dtype=bool,
-        count=len(texts),
-    )
+    return is_garbage_text(text)

@@ -92,17 +92,7 @@ DEFAULT_N_BUCKETS = 64
 DEFAULT_SALT = 16
 
 
-_RESULT_COLUMNS = [
-    "text",
-    "method",
-    "error",
-    "spans",
-    "bytes_in",
-    "chars_out",
-    "boilerplate_ratio",
-    "layout_text",
-    "password_used",
-]
+_RESULT_COLUMNS = RESULT_FIELDS.fieldNames()
 
 
 def _result_tuple(r) -> tuple:
@@ -300,15 +290,7 @@ def run_extraction(
         "tool",
         "ts",
         "bucket_id",
-        F.col("ex.text").alias("text"),
-        F.col("ex.method").alias("method"),
-        F.col("ex.error").alias("error"),
-        F.col("ex.spans").alias("spans"),
-        F.col("ex.bytes_in").alias("bytes_in"),
-        F.col("ex.chars_out").alias("chars_out"),
-        F.col("ex.boilerplate_ratio").alias("boilerplate_ratio"),
-        F.col("ex.layout_text").alias("layout_text"),
-        F.col("ex.password_used").alias("password_used"),
+        "ex.*",
     )
 
     # W1: stable turn ordering (reference 1-based page loop,
@@ -363,8 +345,11 @@ def assemble_documents(
     ``(conv_id, (turn_idx-1) // N)`` and emits unstripped segments
     whose in-order concatenation, stripped, equals the full document
     (asserted by tests); downstream sinks then never hold more than
-    one segment in memory.
+    one segment in memory. ``segment_turns`` below 1 raises
+    ``ValueError`` before any job runs.
     """
+    if segment_turns is not None and segment_turns < 1:
+        raise ValueError(f"segment_turns must be >= 1, got {segment_turns}")
     turns = F.array_sort(
         F.collect_list(F.struct("turn_idx", "text", "method"))
     )

@@ -811,10 +811,11 @@ def test_cms_overestimates_never_under(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from service1_text_extraction_spark.functions import textstats
+    from service1_text_extraction_spark.functions.spread import read_spread
 
     hh = textstats.cms_heavy_hitters(spark, sf_dir)
     exact = (
-        textstats._docs(spark, sf_dir)
+        read_spread(spark, sf_dir, "documents")
         .select(F.explode(F.expr(textstats._TOKENS)).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("true_cnt"))
@@ -895,8 +896,9 @@ def test_cms_sketch_merges_by_addition(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from service1_text_extraction_spark.functions import textstats
+    from service1_text_extraction_spark.functions.spread import read_spread
 
-    docs = textstats._docs(spark, sf_dir)
+    docs = read_spread(spark, sf_dir, "documents")
     tok_of = lambda d: d.select(
         F.explode(F.expr(textstats._TOKENS)).alias("w")
     )

@@ -62,7 +62,7 @@ def test_gate_fail_routes_through_ocr_hook():
 def test_ocr_garbage_output_still_fails_gate():
     """An OCR that returns junk must not bypass the re-gate."""
     data = pdfgen.build_scanned_pdf(LINES)
-    payload.set_ocr_hook(lambda raw: "#$%" * 200)
+    payload.set_ocr_hook(lambda raw, passwords=None: "#$%" * 200)
     r = payload.extract_turn(base64.b64encode(data).decode("ascii"))
     assert r.method == "failed"
 

@@ -166,8 +166,9 @@ def test_assign_paths_agree(spark, sf_dir):
     the oracle covers the literal path; this pins the large-k path to
     it."""
     from service1_text_extraction_spark.functions import similarity
+    from service1_text_extraction_spark.functions.spread import read_spread
 
-    e = similarity._emb(spark, sf_dir).select("vec_id", "embedding")
+    e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = similarity._kmeans_centroids(spark, sf_dir)
     lit = similarity._assigned(spark, e, cents, use_join=False)
     join = similarity._assigned(spark, e, cents, use_join=True)
@@ -198,23 +199,31 @@ def test_decontaminate_two_table_form(spark, sf_dir, tmp_path):
     assert set(hits13) <= set(hits) or hits13 == {}
 
 
+def _members(pairs):
+    """(a_id, b_id) pairs -> _cc_labels membership rows, each pair a
+    group named by its a_id (semantic_keepers' encoding)."""
+    return pairs.selectExpr("a_id AS vec_id", "a_id AS grp").unionAll(
+        pairs.selectExpr("b_id AS vec_id", "a_id AS grp")
+    )
+
+
+def _cc(members, **kw):
+    from service1_text_extraction_spark.functions import dedup
+
+    labels = dedup._cc_labels(members, "label", **kw)
+    return sorted(map(tuple, labels.collect()))
+
+
 def test_cc_propagation_converges_on_deep_chain(spark):
     """Review r4: min-label propagation alone needs diameter rounds;
-    with pointer jumping a 60-node path (diameter 59 > max_iters=20)
+    with pointer jumping a 60-node path (diameter 59 > CC_MAX_ITERS=20)
     must still converge to the single component min."""
-    from service1_text_extraction_spark.functions import similarity
-
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(59)], "a_id long, b_id long"
     )
     # driver_max_edges=0 forces the DISTRIBUTED loop — the r5 driver
     # union-find shortcut would otherwise absorb this small graph
-    labels = {
-        r.vec_id: r.label
-        for r in similarity._cc_min_labels(
-            edges, max_iters=20, driver_max_edges=0
-        ).collect()
-    }
+    labels = dict(_cc(_members(edges), driver_max_edges=0))
     assert len(labels) == 60 and set(labels.values()) == {0}
     # two components + an isolated pair keep distinct minima
     edges2 = spark.createDataFrame(
@@ -223,23 +232,16 @@ def test_cc_propagation_converges_on_deep_chain(spark):
         + [(500, 501)],
         "a_id long, b_id long",
     )
-    labels2 = {
-        r.vec_id: r.label
-        for r in similarity._cc_min_labels(
-            edges2, driver_max_edges=0
-        ).collect()
-    }
+    labels2 = dict(_cc(_members(edges2), driver_max_edges=0))
     assert set(labels2.values()) == {0, 100, 500}
 
 
 def test_cc_driver_and_distributed_agree(spark, sf_dir):
     """The r5 driver union-find shortcut is a pure execution knob:
     labels must be identical to the distributed fixpoint on a
-    multi-component graph AND on the real minhash bucket graph."""
-    from service1_text_extraction_spark.functions import (
-        dedup,
-        similarity,
-    )
+    multi-component graph AND on the real minhash bucket and
+    semantic-dedup graphs."""
+    from service1_text_extraction_spark.functions import dedup, similarity
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(25)]
@@ -247,27 +249,20 @@ def test_cc_driver_and_distributed_agree(spark, sf_dir):
         + [(77, 99), (99, 55)],
         "a_id long, b_id long",
     )
-    drv = sorted(
-        map(tuple, similarity._cc_min_labels(edges).collect())
-    )
-    dst = sorted(
-        map(
-            tuple,
-            similarity._cc_min_labels(
-                edges, driver_max_edges=0
-            ).collect(),
-        )
-    )
-    assert drv == dst and drv
+    sem = similarity.semantic_dedup(spark, sf_dir).select("a_id", "b_id")
+    for members in (_members(edges), _members(sem)):
+        drv = _cc(members)
+        assert drv == _cc(members, driver_max_edges=0) and drv
 
+    buckets = dedup._cc_bucket_edges(dedup._band_exploded(spark, sf_dir))
     mh_drv = sorted(
         map(tuple, dedup.minhash_connected_components(spark, sf_dir).collect())
     )
     mh_dst = sorted(
         map(
             tuple,
-            dedup.minhash_connected_components(
-                spark, sf_dir, driver_max_edges=0
+            dedup._cc_labels(
+                buckets, "cluster_rep", driver_max_edges=0
             ).collect(),
         )
     )
@@ -278,10 +273,10 @@ def _mock_centroids(spark, sf_dir, k):
     """k > join/arrow thresholds: fake centroids shaped like real ones
     (6-dp-rounded doubles), so the large-k paths engage on the small
     test corpus."""
-    from service1_text_extraction_spark.functions import similarity
+    from service1_text_extraction_spark.functions.spread import read_spread
 
     rows = (
-        similarity._emb(spark, sf_dir)
+        read_spread(spark, sf_dir, "embeddings")
         .orderBy("vec_id")
         .limit(k)
         .collect()
@@ -295,8 +290,9 @@ def test_assign_arrow_large_k(spark, sf_dir):
     projection and the broadcast-join struct-max (the fold performs
     the identical IEEE op sequence per element — _fold_dots)."""
     from service1_text_extraction_spark.functions import similarity
+    from service1_text_extraction_spark.functions.spread import read_spread
 
-    e = similarity._emb(spark, sf_dir).select("vec_id", "embedding")
+    e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = _mock_centroids(spark, sf_dir, similarity.ASSIGN_BROADCAST_K + 6)
     arrow = {
         r.vec_id: r.list_id
@@ -323,8 +319,9 @@ def test_probe_paths_agree(spark, sf_dir):
     at large k, and probe_rank 1 must reproduce the
     primary assignment."""
     from service1_text_extraction_spark.functions import similarity
+    from service1_text_extraction_spark.functions.spread import read_spread
 
-    e = similarity._emb(spark, sf_dir).select("vec_id", "embedding")
+    e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = _mock_centroids(spark, sf_dir, similarity.ASSIGN_BROADCAST_K + 6)
     probes = 3
 

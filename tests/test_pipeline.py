@@ -348,6 +348,17 @@ def test_null_and_empty_payloads(spark):
     assert all(r.method == "failed" and r.text == "" for r in out)
 
 
+@pytest.mark.parametrize("segment_turns", [0, -2])
+def test_segment_turns_validated(spark, tiny, segment_turns):
+    """A segment size below 1 is refused on the driver: 0 used to fail
+    inside a task (DIVIDE_BY_ZERO) and -2 to number the segments
+    backwards, reversing the document."""
+    tdf, _ = tiny
+    out = run_extraction(spark, tdf, n_buckets=4)
+    with pytest.raises(ValueError, match="segment_turns"):
+        assemble_documents(out, segment_turns=segment_turns)
+
+
 def test_segmented_assembly_splices_to_full(spark, data):
     tdf, _, _, _ = data
     out = run_extraction(spark, tdf, n_buckets=8)
@@ -404,19 +415,22 @@ def test_ocr_hook_contract():
     assert r.method == "failed" and "no OCR fallback" in (r.error or "")
 
     fake_text = "ocr recovered sentence. " * 20  # > 250 chars, clean
-    payload.set_ocr_hook(lambda raw: fake_text)
+    payload.set_ocr_hook(lambda raw, passwords=None: fake_text)
     try:
         r2 = payload.extract_turn(b64)
         assert r2.method == "ocr"
         assert r2.text == fake_text.strip()
         assert r2.chars_out == len(fake_text.strip())
-        payload.set_ocr_hook(lambda raw: 1 / 0)  # hook crash -> failed row
+        # hook crash -> failed row
+        payload.set_ocr_hook(lambda raw, passwords=None: 1 / 0)
         r3 = payload.extract_turn(b64)
         assert r3.method == "failed"
     finally:
         payload.set_ocr_hook(None)
     # good PDFs never consult the hook
-    payload.set_ocr_hook(lambda raw: (_ for _ in ()).throw(AssertionError))
+    payload.set_ocr_hook(
+        lambda raw, passwords=None: (_ for _ in ()).throw(AssertionError)
+    )
     try:
         long_pdf = pdfgen.build_pdf([pdfgen.simple_page(
             [(72, 700, [f"A full sentence number {i} here." for i in range(12)])]
@@ -425,6 +439,33 @@ def test_ocr_hook_contract():
         assert r4.method == "pdf"
     finally:
         payload.set_ocr_hook(None)
+
+
+def test_ocr_hook_type_error_is_a_hook_failure():
+    """A hook's own TypeError is a hook failure like any other: the
+    hook runs once, with the passwords, and the row is ``failed``."""
+    import base64
+
+    from service1_text_extraction_spark.kernels import payload, pdfgen
+
+    short_pdf = pdfgen.build_pdf(
+        [pdfgen.simple_page([(72, 700, ["too short"])])]
+    )
+    calls = []
+
+    def hook(raw, passwords=None):
+        calls.append(passwords)
+        raise TypeError("hook bug")
+
+    payload.set_ocr_hook(hook)
+    try:
+        r = payload.extract_turn(
+            base64.b64encode(short_pdf).decode("ascii"), passwords=["pw"]
+        )
+    finally:
+        payload.set_ocr_hook(None)
+    assert calls == [["pw"]]
+    assert r.method == "failed"
 
 
 def test_multimodal_binary_dispatch_through_arrow(spark):

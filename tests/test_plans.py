@@ -612,8 +612,9 @@ def test_large_k_assign_and_probe_are_maponly_arrow(spark, sf_dir):
     Exchange — the join fallback's n x k expansion (exchange into a
     groupBy/window) is exactly what the arrow path exists to avoid."""
     from service1_text_extraction_spark.functions import similarity
+    from service1_text_extraction_spark.functions.spread import read_spread
 
-    e = similarity._emb(spark, sf_dir).select("vec_id", "embedding")
+    e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     rows = e.orderBy("vec_id").limit(
         similarity.ASSIGN_BROADCAST_K + 6
     ).collect()

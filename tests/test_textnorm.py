@@ -11,7 +11,6 @@ Reference anchors:
 
 import random
 
-import pandas as pd
 import pytest  # noqa: F401 - parametrize in property tests
 
 from service1_text_extraction_spark.kernels import textnorm as tn
@@ -75,16 +74,11 @@ def test_clean_unicode_matches_oracle():
         cases.append("".join(rng.choice(pool) for _ in range(rng.randrange(0, 80))))
     for t in cases:
         assert tn.clean_unicode(t) == _clean_unicode_oracle(t), repr(t)
-    # vectorized == scalar
-    s = pd.Series(cases, dtype="object")
-    assert list(tn.clean_unicode_series(s)) == [tn.clean_unicode(t) for t in cases]
 
 
 def test_normalize_whitespace():
     assert tn.normalize_whitespace("  a\t\tb\n\nc  ") == "a b c"
     assert tn.normalize_whitespace(" x ") == "x"  # \s matches NBSP
-    s = pd.Series(["  a  b ", "c\nd"])
-    assert list(tn.normalize_whitespace_series(s)) == ["a b", "c d"]
 
 
 def test_remove_page_headers_footers():
@@ -172,7 +166,7 @@ def test_garbage_nonprintable_20pct():
     assert tn.is_garbage_text(bad2)
 
 
-def test_garbage_scalar_vs_numpy_property():
+def test_garbage_dispatch_vs_scalar_property():
     rng = random.Random(7)
     pool = [chr(i) for i in range(0, 300)] + list("€😀漢 \t\n\r.,!?;:()[]{}\"'")
     cases = [
@@ -180,6 +174,4 @@ def test_garbage_scalar_vs_numpy_property():
         for _ in range(500)
     ] + ADVERSARIAL
     for t in cases:
-        assert tn.is_garbage_text(t) == tn.is_garbage_text_np(t), repr(t)
-    s = pd.Series(cases, dtype="object")
-    assert list(tn.garbage_mask(s)) == [tn.is_garbage_text(t) for t in cases]
+        assert tn.is_garbage(t) == tn.is_garbage_text(t), repr(t)
