@@ -25,10 +25,17 @@ Sandbox smoke (local mode):
     spark-submit --master 'local[8]' --py-files dist/s1x.zip \
         jobs/extract_job.py --input ... --output ... --markers ...
 
-Re-running the same command after a failure resumes: the driver
-collects the input's bucket set and the 'done' markers, and filters
-the input to the pending buckets (bucket_id IN ...); interrupted
-buckets are overwritten idempotently.
+The per-bucket 'done' markers are collected while the data is
+written, in the same pass, and appended to the marker table as one
+file after the write commits. Re-running the same command after a
+failure resumes: the driver reads the 'done' markers, collects the
+input's bucket set, and filters the input to the pending buckets
+(bucket_id IN ...); buckets written but not yet marked are overwritten
+idempotently. A first run, with no 'done' marker, takes the whole
+input without that scan.
+
+The job prints its run stats as one JSON line: buckets processed and
+skipped, and the turns, input bytes and output chars it wrote.
 """
 
 from __future__ import annotations

@@ -9,6 +9,5 @@ from .extract import (  # noqa: F401
 )
 from .checkpoint import (  # noqa: F401
     MARKER_SCHEMA,
-    compute_markers,
     run_with_resume,
 )

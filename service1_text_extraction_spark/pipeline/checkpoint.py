@@ -4,12 +4,20 @@ Replaces the reference's six row-at-a-time ``UPDATE``s and its
 lock-based work dedup (``document_text_extraction_service.py:715-846,
 951-995``) with deterministic partition ownership: the unit of
 completion is a stable hash bucket of ``conv_id`` (not a Spark task
-id), so a resume is identical on any cluster size. Resume bookkeeping
-is one scan of the input for its distinct buckets plus a read of the
-small marker table; the pending set (the reference's anti-join,
-``ml_document_processor.py:211-228,304-309``) is computed on the
-driver and applied as a ``bucket_id IN (...)`` filter — no filter at
-all on a fresh run.
+id), so a resume is identical on any cluster size.
+
+The markers come from the data write's own pass. A per-bucket window
+puts the bucket's marker struct on each of its rows, an
+``Observation`` collects the set of those structs while the write
+runs, and the driver appends them to the marker table as one file
+once the write has committed.
+
+Before the write the driver reads the small marker table. With no
+'done' marker (a fresh run) every bucket is pending, and the data
+write is the only scan of the input. A resume also collects the
+input's distinct buckets, computes the pending set (the reference's
+anti-join, ``ml_document_processor.py:211-228,304-309``) on the driver
+and applies it as a ``bucket_id IN (...)`` filter.
 
 Sinks are parquet directories partitioned by ``bucket_id`` — the
 sandbox stand-in for Iceberg append tables; on a real cluster both the
@@ -22,7 +30,8 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -55,18 +64,67 @@ MARKER_SCHEMA = StructType(
 )
 
 
-def compute_markers(extracted: DataFrame, lineage_id: str) -> DataFrame:
-    """One 'done' marker row per completed bucket, with lineage and the
-    north-star metrics (bytes-in, chars-out, boilerplate-ratio)."""
-    return extracted.groupBy("bucket_id").agg(
+# the struct _observe_markers collects per bucket, with the nullability
+# Spark derives for it: the count is never null, and the marker file
+# stores it (like lineage_id, status and completed_at) without null flags
+_BUCKET_MARKER = StructType(
+    [
+        StructField("bucket_id", IntegerType()),
+        StructField("n_turns", LongType(), nullable=False),
+        StructField("bytes_in", LongType()),
+        StructField("chars_out", LongType()),
+        StructField("boilerplate_ratio", DoubleType()),
+    ]
+)
+
+
+def _observe_markers(extracted: DataFrame) -> tuple[DataFrame, Observation]:
+    """``extracted`` and an Observation that, after the write of that
+    frame, holds one marker struct per bucket written.
+
+    A window over the whole bucket gives every row of a bucket the same
+    struct, so ``collect_set`` keeps one element per bucket, and a
+    retried task re-adds an equal element rather than counting twice.
+    The window needs only the ``bucket_id`` partitioning and order that
+    ``run_extraction``'s windows already have: no extra exchange or
+    sort."""
+    bucket = Window.partitionBy("bucket_id").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    marker = F.struct(
+        F.col("bucket_id"),
+        F.count(F.lit(1)).over(bucket).alias("n_turns"),
+        F.sum("bytes_in").over(bucket).alias("bytes_in"),
+        F.sum("chars_out").over(bucket).alias("chars_out"),
+        F.avg("boilerplate_ratio").over(bucket).alias("boilerplate_ratio"),
+    )
+    obs = Observation()
+    observed = (
+        extracted.withColumn("_marker", marker)
+        .observe(obs, F.collect_set("_marker").alias("markers"))
+        .drop("_marker")
+    )
+    return observed, obs
+
+
+def _append_markers(
+    spark: SparkSession, markers_dir: str, markers: list, lineage_id: str
+) -> None:
+    """Append one 'done' row per observed bucket marker, as one file.
+
+    The rows go in as an Arrow table, which Spark plans as a local
+    relation; a list of Rows would be scanned through a Python worker."""
+    table = pa.Table.from_pylist([m.asDict() for m in markers])
+    spark.createDataFrame(table, _BUCKET_MARKER).select(
+        "bucket_id",
         F.lit(lineage_id).alias("lineage_id"),
         F.lit("done").alias("status"),
-        F.count("*").alias("n_turns"),
-        F.sum("bytes_in").alias("bytes_in"),
-        F.sum("chars_out").alias("chars_out"),
-        F.avg("boilerplate_ratio").alias("boilerplate_ratio"),
+        "n_turns",
+        "bytes_in",
+        "chars_out",
+        "boilerplate_ratio",
         F.current_timestamp().alias("completed_at"),
-    )
+    ).coalesce(1).write.mode("append").parquet(markers_dir)
 
 
 def read_markers(spark: SparkSession, markers_dir: str) -> DataFrame | None:
@@ -103,19 +161,15 @@ def run_with_resume(
 
     ``fail_after_buckets`` truncates the run to the first K pending
     buckets (lowest ids first) — the test hook that simulates a
-    mid-job crash. Returns run stats: buckets processed, and buckets
-    of the input not processed by this run (skipped).
+    mid-job crash. Returns run stats: buckets processed, buckets of the
+    input not processed by this run (skipped), and the turns, input
+    bytes and output chars this run wrote.
     """
     if fail_after_buckets is not None and fail_after_buckets < 0:
         raise ValueError("fail_after_buckets must be >= 0")
     _check_salt(salt)
     lineage_id = lineage_id or uuid.uuid4().hex
     bucketed = with_bucket(transcripts, n_buckets)
-    # one input scan for the bucket set; the pending set and the
-    # crash-hook truncation are then driver-side set arithmetic
-    input_buckets = {
-        r.bucket_id for r in bucketed.select("bucket_id").distinct().collect()
-    }
     markers = read_markers(spark, markers_dir)
     done_buckets = (
         set()
@@ -128,22 +182,35 @@ def run_with_resume(
             .collect()
         }
     )
-    pending_buckets = sorted(input_buckets - done_buckets)
-    if fail_after_buckets is not None:
-        pending_buckets = pending_buckets[:fail_after_buckets]
-    pending = (
-        bucketed
-        if len(pending_buckets) == len(input_buckets)
-        else bucketed.where(F.col("bucket_id").isin(pending_buckets))
-    )
+    # a fresh run extracts every bucket of the input and needs no scan
+    # to name them; a resume scans the input once for its bucket set,
+    # and the pending set and the crash-hook truncation are then
+    # driver-side set arithmetic
+    pending = bucketed
+    skipped = 0
+    if done_buckets or fail_after_buckets is not None:
+        input_buckets = {
+            r.bucket_id for r in bucketed.select("bucket_id").distinct().collect()
+        }
+        pending_buckets = sorted(input_buckets - done_buckets)
+        if fail_after_buckets is not None:
+            pending_buckets = pending_buckets[:fail_after_buckets]
+        skipped = len(input_buckets) - len(pending_buckets)
+        if not pending_buckets:
+            pending = None
+        elif skipped:
+            pending = bucketed.where(F.col("bucket_id").isin(pending_buckets))
 
-    if pending_buckets:
-        extracted = run_extraction(
-            spark,
-            pending.drop("bucket_id"),
-            n_buckets=n_buckets,
-            salt=salt,
-            pre_shuffle=pre_shuffle,
+    written = []
+    if pending is not None:
+        extracted, obs = _observe_markers(
+            run_extraction(
+                spark,
+                pending.drop("bucket_id"),
+                n_buckets=n_buckets,
+                salt=salt,
+                pre_shuffle=pre_shuffle,
+            )
         )
         # dynamic partition overwrite: a crash between the data write and
         # the marker write leaves the bucket unmarked; the rerun then
@@ -156,20 +223,19 @@ def run_with_resume(
             .partitionBy("bucket_id")
             .parquet(output_dir)
         )
-        # markers are derived from the *committed* output, and written
-        # only after the data write succeeded (crash between the two
-        # writes re-extracts those buckets idempotently)
-        done = spark.read.parquet(output_dir).where(
-            F.col("bucket_id").isin(pending_buckets)
-        )
-        compute_markers(done, lineage_id).write.mode("append").parquet(
-            markers_dir
-        )
+        # the observation is delivered once the write, commit included,
+        # has returned: markers are appended only for committed buckets
+        written = obs.get["markers"]
+        if written:
+            _append_markers(spark, markers_dir, written, lineage_id)
 
     return {
         "lineage_id": lineage_id,
-        "buckets_processed": len(pending_buckets),
-        "buckets_skipped": len(input_buckets) - len(pending_buckets),
+        "buckets_processed": len(written),
+        "buckets_skipped": skipped,
+        "turns_processed": sum(m.n_turns for m in written),
+        "bytes_in": sum(m.bytes_in for m in written),
+        "chars_out": sum(m.chars_out for m in written),
         "output_dir": os.path.abspath(output_dir),
         "markers_dir": os.path.abspath(markers_dir),
     }

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from service1_text_extraction_spark.pipeline import (
     MARKER_SCHEMA,
     assemble_documents,
+    checkpoint,
     extraction_metrics,
     run_extraction,
     run_with_resume,
@@ -138,8 +139,8 @@ def uncoalesced(spark):
 
 def _full_and_resumed(spark, tdf, tmp_path):
     """An uninterrupted run, and a run crashed after 3 buckets then
-    resumed: (full stats, full output dir, [crash, resume] stats,
-    resumed output dir, resumed markers dir)."""
+    resumed: (full stats, full output dir, full markers dir,
+    [crash, resume] stats, resumed output dir, resumed markers dir)."""
     out1 = str(tmp_path / "full/out")
     mk1 = str(tmp_path / "full/markers")
     full = run_with_resume(spark, tdf, out1, mk1, n_buckets=8, lineage_id="runA")
@@ -150,12 +151,12 @@ def _full_and_resumed(spark, tdf, tmp_path):
         fail_after_buckets=3,
     )
     resumed = run_with_resume(spark, tdf, out2, mk2, n_buckets=8, lineage_id="runC")
-    return full, out1, [part, resumed], out2, mk2
+    return full, out1, mk1, [part, resumed], out2, mk2
 
 
 def test_exact_resume(spark, data, tmp_path):
     tdf, _, _, _ = data
-    full, out1, (part, resumed), out2, mk2 = _full_and_resumed(
+    full, out1, _, (part, resumed), out2, mk2 = _full_and_resumed(
         spark, tdf, tmp_path
     )
     assert full["buckets_processed"] > 0 and full["buckets_skipped"] == 0
@@ -193,11 +194,93 @@ def test_resume_one_file_per_bucket(spark, data, tmp_path, uncoalesced):
     bucket_id still gives each bucket to exactly one task: one data
     file per bucket directory, fresh and after crash + resume."""
     tdf, _, _, _ = data
-    full, out1, _, out2, _ = _full_and_resumed(spark, tdf, tmp_path)
+    full, out1, _, _, out2, _ = _full_and_resumed(spark, tdf, tmp_path)
     layout = _data_files_per_bucket(out1)
     assert len(layout) == full["buckets_processed"]
     assert set(layout.values()) == {1}, layout
     assert _data_files_per_bucket(out2) == layout
+
+
+def test_markers_match_written_output(spark, data, tmp_path):
+    """The markers come from the data write's own pass, yet equal a
+    groupBy over the written output, fresh and after crash + resume.
+    Each run appends one marker file, and the run totals equal the
+    output's."""
+    tdf, _, _, _ = data
+    full, out1, mk1, runs, out2, mk2 = _full_and_resumed(spark, tdf, tmp_path)
+    for out, mk, stats in ((out1, mk1, [full]), (out2, mk2, runs)):
+        written = spark.read.parquet(out)
+        want = {
+            r.bucket_id: r
+            for r in written.groupBy("bucket_id")
+            .agg(
+                F.count("*").alias("n_turns"),
+                F.sum("bytes_in").alias("bytes_in"),
+                F.sum("chars_out").alias("chars_out"),
+                F.avg("boilerplate_ratio").alias("boilerplate_ratio"),
+            )
+            .collect()
+        }
+        markers = spark.read.parquet(mk).collect()
+        assert sorted(m.bucket_id for m in markers) == sorted(want)
+        for m in markers:
+            w = want[m.bucket_id]
+            assert (m.n_turns, m.bytes_in, m.chars_out) == (
+                w.n_turns, w.bytes_in, w.chars_out,
+            ), m
+            assert abs(m.boilerplate_ratio - w.boilerplate_ratio) <= 1e-12, m
+        files = [f for f in Path(mk).iterdir() if f.name.endswith(".parquet")]
+        assert len(files) == len(stats), files
+
+        totals = written.agg(
+            F.count("*").alias("turns"),
+            F.sum("bytes_in").alias("bytes_in"),
+            F.sum("chars_out").alias("chars_out"),
+        ).first()
+        assert sum(s["turns_processed"] for s in stats) == totals.turns
+        assert sum(s["bytes_in"] for s in stats) == totals.bytes_in
+        assert sum(s["chars_out"] for s in stats) == totals.chars_out
+
+
+def test_crash_between_data_and_marker_write(spark, data, tmp_path, monkeypatch):
+    """A crash after the data write committed but before its markers
+    were appended leaves those buckets unmarked: the rerun extracts
+    them again and overwrites their partitions, and the output equals
+    an uninterrupted run's."""
+    tdf, _, _, _ = data
+    out1, mk1 = str(tmp_path / "full/out"), str(tmp_path / "full/markers")
+    full = run_with_resume(spark, tdf, out1, mk1, n_buckets=8)
+
+    append = checkpoint._append_markers
+
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(checkpoint, "_append_markers", append)
+        raise RuntimeError("crash between the writes")
+
+    monkeypatch.setattr(checkpoint, "_append_markers", crash_once)
+    out2, mk2 = str(tmp_path / "crash/out"), str(tmp_path / "crash/markers")
+    with pytest.raises(RuntimeError, match="crash between the writes"):
+        run_with_resume(spark, tdf, out2, mk2, n_buckets=8, fail_after_buckets=3)
+    committed = {
+        d.name: {f.name for f in d.iterdir()}
+        for d in Path(out2).iterdir()
+        if d.name.startswith("bucket_id=")
+    }
+    assert len(committed) == 3 and not Path(mk2).exists()
+
+    rerun = run_with_resume(spark, tdf, out2, mk2, n_buckets=8)
+    assert rerun["buckets_processed"] == full["buckets_processed"]
+    assert rerun["buckets_skipped"] == 0
+    for d, files in committed.items():
+        assert not files & {f.name for f in (Path(out2) / d).iterdir()}, d
+    layout = _data_files_per_bucket(out1)
+    assert set(layout.values()) == {1}, layout
+    assert _data_files_per_bucket(out2) == layout
+    a = spark.read.parquet(out1)
+    b = spark.read.parquet(out2)
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+    markers = spark.read.parquet(mk2)
+    assert markers.where(F.col("status") == "done").count() == 8
 
 
 @pytest.fixture
@@ -258,6 +341,17 @@ def test_resume_fail_after_exceeds_pending(spark, tiny, tmp_path):
         [(present[0], "done", "seed")]
         + [(b, "done", "r") for b in present[1:]]
     )
+
+
+def test_fresh_run_on_empty_input(spark, tiny, tmp_path):
+    tdf, _ = tiny
+    empty = str(tmp_path / "empty")
+    tdf.limit(0).write.parquet(empty)
+    out, mk = str(tmp_path / "out"), str(tmp_path / "mk")
+    stats = run_with_resume(spark, spark.read.parquet(empty), out, mk, n_buckets=8)
+    assert stats["buckets_processed"] == 0 and stats["buckets_skipped"] == 0
+    assert stats["turns_processed"] == 0
+    assert not Path(mk).exists()
 
 
 def test_resume_ignores_markers_not_done(spark, tiny, tmp_path):

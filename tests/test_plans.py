@@ -144,7 +144,9 @@ def test_resume_write_plan_shape(spark, tmp_path):
     both the window and the partitioned writer, whose ordering the
     window's sort already satisfies — one Exchange, one Sort, no
     writer sort. The pending set is a driver-side IN filter, so no
-    run (fresh or resumed) plans a broadcast join."""
+    run (fresh or resumed) plans a broadcast join. A fresh run names
+    no buckets up front: the data write and the marker write are its
+    only executions, and neither aggregates the input."""
     rows = [
         (f"c{i}", t, "user", f"<p>turn {t} of conversation {i}</p>",
          None, None)
@@ -162,9 +164,12 @@ def test_resume_write_plan_shape(spark, tmp_path):
             spark, lambda: run_with_resume(spark, tdf, out, mk, n_buckets=8, **kw)
         )
 
-    for plans in (
-        run("fresh"), run("resumed", fail_after_buckets=3), run("resumed")
-    ):
+    fresh = run("fresh")
+    assert len(fresh) == 2, fresh
+    for tree in map(_plan_tree, fresh):
+        assert "InsertIntoHadoopFsRelation" in tree, tree
+        assert "HashAggregate" not in tree, tree
+    for plans in (fresh, run("resumed", fail_after_buckets=3), run("resumed")):
         assert not any("BroadcastHashJoin" in p for p in plans), plans
         writes = [
             _plan_tree(p)
