@@ -66,16 +66,14 @@ TEXT_DENSITY_MIN = 12.0
 MAX_SOUP_WORDS = 4
 MIN_SOUP_TAGS = 2
 
-_COMMENT_RE = re.compile(r"<!--.*?-->", re.DOTALL)
 _RAWTEXT_RE = re.compile(
     r"<(script|style|textarea)\b[^>]*>.*?</\1\s*>",
     re.IGNORECASE | re.DOTALL,
 )
-_CDATA_RE = re.compile(r"<!\[CDATA\[.*?\]\]>", re.DOTALL)
 # cheap presence probes: one combined scan decides whether ANY of the
 # four preprocess substitutions can fire (most fragments carry none)
 _PRE_HINT_RE = re.compile(r"<!|<(?:script|style|textarea)\b", re.IGNORECASE)
-_RAWTEXT_HINT_RE = re.compile(r"<(?:script|style|textarea)\b", re.IGNORECASE)
+_RAWTEXT_HINT_RE = re.compile(r"<(script|style|textarea)\b", re.IGNORECASE)
 # attributes consume as runs of quote-free chars with quoted-string
 # islands — linear, and faster than the per-char alternation form
 _TAG_RE = re.compile(
@@ -83,6 +81,76 @@ _TAG_RE = re.compile(
     r"([^>'\"]*(?:(?:\"[^\"]*\"|'[^']*')[^>'\"]*)*)>"
 )
 _DOCTYPE_RE = re.compile(r"<![^>]*>")
+
+# The preprocess scans below are linear in the payload. A lazy
+# ``open.*?close`` regex rescans the rest of the payload from every
+# opener that has no closer, and a ``<...>`` pattern does the same from
+# every '<' with no '>' after it; these scans pair openers with closers
+# by search and stop at the last '>'.
+
+
+def _strip_blocks(src: str, opener: str, closer: str) -> str:
+    """Replace each ``opener ... closer`` block (first closer after the
+    opener) with a space, as ``re.sub(opener + ".*?" + closer, " ")``
+    with DOTALL does."""
+    parts: list[str] = []
+    keep = 0
+    i = src.find(opener)
+    while i != -1:
+        j = src.find(closer, i + len(opener))
+        if j == -1:
+            break  # no closer after this opener, so none after later ones
+        parts.append(src[keep:i])
+        parts.append(" ")
+        keep = j + len(closer)
+        i = src.find(opener, keep)
+    if not parts:
+        return src
+    parts.append(src[keep:])
+    return "".join(parts)
+
+
+def _strip_rawtext(src: str) -> str:
+    """``_RAWTEXT_RE.sub(" ", src)``, linear: the full pattern is tried
+    at most once per tag name that has no closer left. Its back-
+    reference ignores case, so once ``<script`` finds no closer after
+    its '>', no later opener of that name in any case finds one."""
+    end = src.rfind(">") + 1  # an opener ends at a '>'
+    parts: list[str] = []
+    keep = i = 0
+    unclosed: set[str] = set()  # lower-case names with no closer left
+    while True:
+        m = _RAWTEXT_HINT_RE.search(src, i, end)
+        if m is None:
+            break
+        name = m.group(1).lower()
+        if name not in unclosed:
+            full = _RAWTEXT_RE.match(src, m.start())
+            if full is not None:
+                parts.append(src[keep : m.start()])
+                parts.append(" ")
+                keep = i = full.end()
+                continue
+            unclosed.add(name)
+        i = m.start() + 1
+    if not parts:
+        return src
+    parts.append(src[keep:])
+    return "".join(parts)
+
+
+def _tags(src: str):
+    """``_TAG_RE.finditer(src)``, stopped at the last '>' (where every
+    tag ends), so a '<' with no '>' after it is not scanned to the end
+    of the payload from each such '<'."""
+    return _TAG_RE.finditer(src, 0, src.rfind(">") + 1)
+
+
+def _strip_doctypes(src: str) -> str:
+    """``_DOCTYPE_RE.sub(" ", src)``; no match can pass the last '>'."""
+    end = src.rfind(">") + 1
+    return _DOCTYPE_RE.sub(" ", src[:end]) + src[end:]
+
 
 # one-lookup tag dispatch; drop wins over block for tags in both sets
 _DROP, _ANCHOR, _BLOCK = 1, 2, 3
@@ -135,13 +203,13 @@ def extract_html(payload: str) -> HtmlResult:
     src = payload
     if _PRE_HINT_RE.search(src) is not None:
         if "<!--" in src:
-            src = _COMMENT_RE.sub(" ", src)
+            src = _strip_blocks(src, "<!--", "-->")
         if _RAWTEXT_HINT_RE.search(src) is not None:
-            src = _RAWTEXT_RE.sub(" ", src)
+            src = _strip_rawtext(src)
         if "<![CDATA[" in src:
-            src = _CDATA_RE.sub(" ", src)  # before DOCTYPE
+            src = _strip_blocks(src, "<![CDATA[", "]]>")  # before DOCTYPE
         if "<!" in src:
-            src = _DOCTYPE_RE.sub(" ", src)
+            src = _strip_doctypes(src)
 
     # per-block state in locals: (kind, pieces, link_chars,
     # stripped_chars, n_inline_tags) tuples land in `blocks`
@@ -158,7 +226,7 @@ def extract_html(payload: str) -> HtmlResult:
     action_get = _TAG_ACTION.get
 
     pos = 0
-    for m in _TAG_RE.finditer(src):
+    for m in _tags(src):
         start, end = m.span()
         if start > pos:
             text = src[pos:start]

@@ -78,6 +78,7 @@ _B64_WS_DEL = dict.fromkeys(
     i for i in range(128) if _B64_CLEAN_RE.fullmatch(chr(i))
 )
 _HTML_HINT_RE = re.compile(r"<[a-zA-Z][^>]*>|</[a-zA-Z][^>]*>|<!DOCTYPE", re.IGNORECASE)
+_DOCTYPE_HINT_RE = re.compile(r"<!DOCTYPE", re.IGNORECASE)
 
 
 @dataclass
@@ -103,7 +104,13 @@ def sniff_payload(payload: str) -> str:
     stripped = payload.lstrip()
     if stripped.startswith(_B64_PDF_PREFIX):
         return "pdf"
-    if _HTML_HINT_RE.search(payload):
+    # a tag needs a '>' after it: past the last one only "<!DOCTYPE"
+    # can match, and bounding the tag search there keeps it linear (a
+    # '<x' with no '>' after it would scan to the end from every '<')
+    end = payload.rfind(">") + 1
+    if _HTML_HINT_RE.search(payload, 0, end) or _DOCTYPE_HINT_RE.search(
+        payload, end
+    ):
         return "html"
     return "text"
 

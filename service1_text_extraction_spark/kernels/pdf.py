@@ -6,9 +6,11 @@ left-to-right with single-space insertion —
 ``core_pdf_processor.py:418-465, 709-781``). This module rebuilds the
 whole path with no third-party parser:
 
-1. object scan: every ``N G obj ... endobj`` is parsed with a small
-   recursive-descent reader (dicts, arrays, names, numbers, literal and
-   hex strings, refs); streams decode ``/FlateDecode`` via zlib.
+1. object load: a linear byte scan finds every ``N G obj`` body and
+   the cross-reference chain is applied on top (see
+   :class:`PdfDocument`). Values (dicts, arrays, names, numbers,
+   literal and hex strings, refs) are read by one token pattern and an
+   explicit container stack; streams decode through the filter chain.
 2. page tree walk: trailer ``/Root`` -> ``/Pages`` -> ``/Kids`` in
    order (fallback: any ``/Type /Catalog`` object).
 3. content-stream interpreter: ``BT/ET Tf Td TD TL Tm T* Tj TJ ' "``;
@@ -41,12 +43,11 @@ password* (the common "owner-locked" case) are decrypted transparently
 real password surfaces the reference's ``password_required`` failure
 (``core_pdf_processor.py:167-181``). Object resolution: the
 cross-reference chain (classic tables AND xref streams, following
-/Prev and hybrid /XRefStm) is consulted first and is authoritative
-when it parses — it decides free-list, spurious-duplicate, and
-in-ObjStm cases; beneath it, a full byte scan with later-revision-wins
-keeps truncated or xref-broken files best-effort parseable (the
-failure mode PyMuPDF's repair path covers in the reference,
-core_pdf_processor.py:273-354).
+/Prev and hybrid /XRefStm) is authoritative when it parses — it
+decides free-list, spurious-duplicate, and in-ObjStm cases — while
+the byte scan with later-revision-wins beneath it keeps truncated or
+xref-broken files best-effort parseable (the failure mode PyMuPDF's
+repair path covers in the reference, core_pdf_processor.py:273-354).
 """
 
 from __future__ import annotations
@@ -79,18 +80,10 @@ _LIGATURES = str.maketrans(
 )
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 
 
 class PdfError(ValueError):
     pass
-
-
-# hoisted object-reader patterns; matched positionally (pattern.match(buf,
-# pos)) so no per-token buffer slices are copied
-_NAME_RE = re.compile(rb"/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)")
-_NUM_RE = re.compile(rb"[+-]?(?:\d+\.\d*|\.\d+|\d+)")
-_REF_TAIL_RE = re.compile(rb"\s+(\d+)\s+R(?![a-zA-Z])")
 
 
 @dataclass(frozen=True)
@@ -118,104 +111,105 @@ def _skip_ws(data: bytes, pos: int) -> int:
     return pos
 
 
+# One token of an object value, after any run of whitespace.
+# Alternatives are ordered so a ref is tried before a plain number
+# ("5 0 R" vs "5") and "<<" before a hex string. The last alternative
+# matches any other byte, or the end of the data, so that every
+# position yields a match: a token stream has no gaps, and a malformed
+# value is caught as group 14 rather than skipped.
+_VALUE_TOKEN_RE = re.compile(
+    rb"[\x00\t\n\x0c\r ]*+"
+    rb"(?:(/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # 1 name
+    rb"|(([+-]?\d+)\s+(\d+)\s+R(?![a-zA-Z]))"  # 2 ref (3 num, 4 gen)
+    rb"|([+-]?(?:\d+\.\d*|\.\d+|\d+))"  # 5 number
+    rb"|(<<)"  # 6 dict open
+    rb"|(>>)"  # 7 dict close
+    rb"|(\[)"  # 8 array open
+    rb"|(\])"  # 9 array close
+    rb"|(\()"  # 10 literal string
+    rb"|<([^>]*)>"  # 11 hex string
+    rb"|(true|false|null)"  # 12 keyword, matched as a prefix
+    rb"|(%[^\n\r]*)"  # 13 comment
+    rb"|([\s\S]|\Z))"  # 14 not a value
+)
+_KEYWORDS = {b"true": True, b"false": False, b"null": None}
+
+
+def _hex_bytes(hx: bytes) -> bytes:
+    if not hx.isalnum():
+        hx = re.sub(rb"\s", b"", hx)
+    if len(hx) % 2:
+        hx += b"0"
+    return bytes.fromhex(hx.decode("ascii"))
+
+
 def _parse_value(data: bytes, pos: int):
-    # dispatch on the first byte — values are overwhelmingly numbers/
-    # refs and names, so the common paths must not pay startswith
-    # probes for dict/bool/null openers (hot path: ~60 values per
-    # fixture object, profiled at ~30% of extract_pdf)
-    n = len(data)
-    # inlined _skip_ws (one call per value otherwise)
-    while pos < n:
-        c = data[pos]
-        if c in _WS:
-            pos += 1
-        elif c == 0x25:  # '%' comment
-            while pos < n and data[pos] not in (0x0A, 0x0D):
-                pos += 1
-        else:
-            break
-    if pos >= n:
-        raise PdfError("unexpected end of data")
-    c = data[pos]
+    """Parse one value at ``pos``; returns ``(value, end)``.
 
-    if c == 0x3C:  # '<<' dict or '<' hex string
-        if pos + 1 < len(data) and data[pos + 1] == 0x3C:
-            return _parse_dict(data, pos)
-        end = data.index(b">", pos + 1)
-        hx = data[pos + 1 : end]
-        if not hx.isalnum():
-            hx = re.sub(rb"\s", b"", hx)
-        if len(hx) % 2:
-            hx += b"0"
-        return bytes.fromhex(hx.decode("ascii")), end + 1
-    if c == 0x28:  # '(' literal string
-        return _parse_literal_string(data, pos)
-    if c == 0x2F:  # '/' name
-        m = _NAME_RE.match(data, pos)
-        return "/" + m.group(1).decode("latin-1"), m.end()
-    if c == 0x5B:  # '['
-        items = []
-        pos += 1
-        while True:
-            pos = _skip_ws(data, pos)
-            if data[pos] == 0x5D:
-                return items, pos + 1
-            v, pos = _parse_value(data, pos)
-            items.append(v)
-    if c == 0x74 and data.startswith(b"true", pos):
-        return True, pos + 4
-    if c == 0x66 and data.startswith(b"false", pos):
-        return False, pos + 5
-    if c == 0x6E and data.startswith(b"null", pos):
-        return None, pos + 4
-    # number or reference
-    m = _NUM_RE.match(data, pos)
-    if not m:
-        raise PdfError(f"cannot parse value at {pos}: {data[pos:pos+20]!r}")
-    tok = m.group(0)
-    npos = m.end()
-    if b"." not in tok:
-        rm = _REF_TAIL_RE.match(data, npos)
-        if rm:
-            return Ref(int(tok), int(rm.group(1))), rm.end()
-        return int(tok), npos
-    return float(tok), npos
-
-
-def _parse_dict(data: bytes, pos: int):
-    pos += 2
-    out: dict[str, object] = {}
-    n = len(data)
+    One compiled token alternation drives an explicit container stack:
+    ``top`` is the item list of the innermost open container (None at
+    the top level) and ``in_dict`` tells a dict's ``key value ...``
+    list from an array. Tokens come from one ``finditer``, restarted
+    only after a literal string, whose end the string reader finds.
+    Malformed input raises PdfError or ValueError."""
+    stack: list[tuple] = []
+    top = None
+    in_dict = False
     while True:
-        # inlined _skip_ws (loop-head hot path)
-        while pos < n:
-            c = data[pos]
-            if c in _WS:
-                pos += 1
-            elif c == 0x25:  # '%' comment
-                while pos < n and data[pos] not in (0x0A, 0x0D):
-                    pos += 1
+        for m in _VALUE_TOKEN_RE.finditer(data, pos):
+            kind = m.lastindex
+            if kind == 1:
+                v = m.group(1).decode("latin-1")
+            elif kind == 5:
+                t = m.group(5)
+                v = float(t) if b"." in t else int(t)
+            elif kind == 2:
+                v = Ref(int(m.group(3)), int(m.group(4)))
+            elif kind == 6 or kind == 8:
+                stack.append((top, in_dict))
+                top = []
+                in_dict = kind == 6
+                continue
+            elif kind == 7:
+                # pair the flat ``key value ...`` list; a later
+                # duplicate key wins, and a key may be any scalar
+                # (lenient for generators that emit bare numbers or
+                # strings) but never a container
+                if not in_dict or len(top) % 2:
+                    raise PdfError(f"unexpected '>>' at {m.start(7)}")
+                it = iter(top)
+                try:
+                    v = dict(zip(it, it))
+                except TypeError:  # a dict or list in key position
+                    raise PdfError(
+                        f"non-name key before {m.end()}"
+                    ) from None
+                top, in_dict = stack.pop()
+            elif kind == 9:
+                if top is None or in_dict:
+                    raise PdfError(f"unexpected ']' at {m.start(9)}")
+                v = top
+                top, in_dict = stack.pop()
+            elif kind == 11:
+                v = _hex_bytes(m.group(11))
+            elif kind == 12:
+                v = _KEYWORDS[m.group(12)]
+            elif kind == 10:
+                v, pos = _parse_literal_string(data, m.start(10))
+                if top is None:
+                    return v, pos
+                top.append(v)
+                break  # tokens resume after the string
+            elif kind == 13:
+                continue
             else:
-                break
-        # cheap int probe before startswith; end-of-data raises the
-        # same IndexError the former data[pos] key dispatch did
-        c = data[pos]
-        if c == 0x3E and data.startswith(b">>", pos):
-            return out, pos + 2
-        # keys are names by spec — skip the generic dispatch
-        if c == 0x2F:
-            m = _NAME_RE.match(data, pos)
-            key = "/" + m.group(1).decode("latin-1")
-            pos = m.end()
-        else:
-            # lenient fallback for malformed keys (some generators emit
-            # bare numbers/strings) — but a container here (e.g. the
-            # hostile '<<<<') is unhashable and must fail CLEAN
-            key, pos = _parse_value(data, pos)
-            if isinstance(key, (dict, list)):
-                raise PdfError(f"non-name dictionary key at {pos}")
-        val, pos = _parse_value(data, pos)
-        out[key] = val
+                at = m.start(14)
+                raise PdfError(
+                    f"cannot parse value at {at}: {data[at:at+20]!r}"
+                )
+            if top is None:
+                return v, m.end()
+            top.append(v)
 
 
 _ESCAPES = {
@@ -281,17 +275,57 @@ def _parse_literal_string(data: bytes, pos: int):
     raise PdfError("unterminated literal string")
 
 
-_OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
+# an object header at a known offset (xref entry), after whitespace
+# and comments; never used to search
+_OBJ_AT_RE = re.compile(
+    rb"(?:[\x00\t\n\x0c\r ]+|%[^\n\r]*)*+(\d+)\s+(\d+)\s+obj\b"
+)
+# "N G" read backwards from an ``obj`` keyword: whitespace, generation,
+# whitespace, number, each run maximal (the byte-reversed form of
+# ``(\d+)\s+(\d+)\s+`` ending at the keyword)
+_HEADER_BACK_RE = re.compile(rb"(\s*)(\d*)(\s*)(\d*)")
+_HEADER_LOOKBACK = 64  # bytes; doubled while the runs fill the window
+_WORD_BYTES = frozenset(
+    b"0123456789_ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
+)
+
+
+def _header_before(data: bytes, k: int) -> tuple[int, bytes] | None:
+    r"""The ``N G`` header ending at the ``obj`` keyword at ``k``:
+    ``(start, number digits)`` or None. Matches exactly what
+    ``(\d+)\s+(\d+)\s+obj`` finds leftmost, but looks back from the
+    keyword through a bounded window instead of trying the pattern at
+    every byte: the window only grows while the digit and blank runs
+    fill it, so each byte is read a bounded number of times."""
+    w = _HEADER_LOOKBACK
+    while True:
+        lo = max(0, k - w)
+        back = data[lo:k][::-1]
+        m = _HEADER_BACK_RE.match(back)
+        if not m.group(1):
+            return None
+        if m.end() == len(back) and lo > 0:
+            w *= 2  # a run may continue past the window
+            continue
+        ws2, gen, ws1, num = m.groups()
+        if not (ws2 and gen and ws1 and num):
+            return None
+        return k - m.end(), num[::-1]
+
+
+_STREAM_KEYWORD_RE = re.compile(
+    rb"(?:[\x00\t\n\x0c\r ]+|%[^\n\r]*)*+stream"
+)
 
 
 def _read_obj_body(data: bytes, pos: int) -> tuple[object, bytes | None]:
     """Parse one object body at ``pos`` (just past ``N G obj``);
     returns (value, raw_stream_bytes_or_None)."""
     val, pos = _parse_value(data, pos)
-    pos = _skip_ws(data, pos)
     raw = None
-    if isinstance(val, dict) and data.startswith(b"stream", pos):
-        pos += len(b"stream")
+    m = _STREAM_KEYWORD_RE.match(data, pos) if isinstance(val, dict) else None
+    if m is not None:
+        pos = m.end()
         if data.startswith(b"\r\n", pos):
             pos += 2
         elif data.startswith(b"\n", pos) or data.startswith(b"\r", pos):
@@ -309,11 +343,20 @@ def _read_obj_body(data: bytes, pos: int) -> tuple[object, bytes | None]:
             elif raw.endswith((b"\n", b"\r")):
                 raw = raw[:-1]
     return val, raw
+
+
 _ROOT_RE = re.compile(rb"/Root\s+(\d+)\s+(\d+)\s+R")
+_STARTXREF_RE = re.compile(rb"startxref\s+(\d+)")
 
 
 class PdfDocument:
-    """Parsed object store + page walk."""
+    """Parsed object store + page walk.
+
+    Objects load in two steps: a byte scan (:meth:`_scan_objects`)
+    parses every ``N G obj`` body in the file, then the cross-reference
+    chain (:meth:`_xref_chain`) is applied on top of it. An xref entry
+    whose offset lands on the scan's winning header reuses that parse;
+    only a body the chain moves elsewhere is parsed again."""
 
     def __init__(self, data: bytes, passwords: list[str] | None = None):
         # the spec allows junk before the header within the first 1024
@@ -326,6 +369,7 @@ class PdfDocument:
         # loop (file_management_service.py:119-212,
         # core_pdf_processor.py:282-283)
         self._passwords = [p for p in (passwords or []) if p][:3]
+        self._trailers: dict[int, object] = {}  # keyword end -> value
         self.password_used: str | None = None
         self.objects: dict[int, object] = {}
         self.streams: dict[int, bytes] = {}
@@ -336,7 +380,7 @@ class PdfDocument:
         self._aes = False
         self._encrypt_num: int | None = None
         self._scan_objects()
-        self._apply_xref()
+        self._apply_xref_entries(self._xref_chain())
         self._setup_encryption()
         self._expand_object_streams()
 
@@ -355,6 +399,16 @@ class PdfDocument:
         if pwd:
             self.password_used = pwd.decode("utf-8", "replace")
 
+    def _trailer_at(self, pos: int):
+        """The value after a ``trailer`` keyword, parsed once: the xref
+        walk and the encryption lookup both read it. Parse errors
+        propagate (and are not cached)."""
+        v = self._trailers.get(pos)
+        if v is None:
+            v, _ = _parse_value(self.data, pos)
+            self._trailers[pos] = v
+        return v
+
     def _setup_encryption(self) -> None:
         """Standard security handler, empty-user-password path.
 
@@ -368,7 +422,7 @@ class PdfDocument:
         id0 = b""
         for m in re.finditer(rb"trailer", self.data):
             try:
-                d, _ = _parse_value(self.data, m.end())
+                d = self._trailer_at(m.end())
             except (PdfError, IndexError, ValueError):
                 continue
             if not isinstance(d, dict):
@@ -541,18 +595,33 @@ class PdfDocument:
             self._encrypt_num = enc_ref.num
 
     def _scan_objects(self) -> None:
-        """Byte-scan every ``N G obj`` body. Incremental updates
-        (Acrobat "save" appends a new body + xref for changed objects)
-        put the live revision *later in the file*, so last occurrence
-        wins — the xref-free analogue of the reference's
-        PyMuPDF-resolved object table (core_pdf_processor.py:273-354).
-        ``_obj_pos`` records each winner's byte offset so object-stream
-        expansion can apply the same later-revision-wins rule."""
+        """Byte-scan every ``N G obj`` body. The scan steps from one
+        literal ``obj`` keyword to the next and reads the header back
+        from it (:func:`_header_before`), so its cost is linear in the
+        file. Incremental updates (Acrobat "save" appends a new body +
+        xref for changed objects) put the live revision *later in the
+        file*, so last occurrence wins — the xref-free analogue of the
+        reference's PyMuPDF-resolved object table
+        (core_pdf_processor.py:273-354). ``_obj_pos`` records each
+        winner's byte offset so object-stream expansion can apply the
+        same later-revision-wins rule."""
         data = self.data
-        for m in _OBJ_RE.finditer(data):
-            num = int(m.group(1))
+        n = len(data)
+        k = data.find(b"obj")
+        while k != -1:
+            end = k + 3
+            nxt = data.find(b"obj", end)
+            if end < n and data[end] in _WORD_BYTES:
+                k = nxt
+                continue
+            header = _header_before(data, k)
+            k = nxt
+            if header is None:
+                continue
+            start, digits = header
             try:
-                val, raw = _read_obj_body(data, m.end())
+                num = int(digits)  # ValueError past 4300 digits
+                val, raw = _read_obj_body(data, end)
             except (PdfError, IndexError, ValueError):
                 continue
             if raw is not None:
@@ -562,30 +631,38 @@ class PdfDocument:
                 # plain one: drop the superseded bytes
                 del self.streams[num]
             self.objects[num] = val
-            self._obj_pos[num] = m.start()
+            self._obj_pos[num] = start
 
     # -- cross-reference chain (PDF 32000-1 §7.5.4 tables / §7.5.8
     # streams). The chain, when it parses, is authoritative: it
     # decides free-list reuse and hybrid-reference cases the byte
     # scan's later-occurrence heuristic cannot. Every step is
-    # best-effort — any failure leaves the scan's result standing, so
-    # truncated/corrupt files degrade exactly as before.
+    # best-effort — any failure leaves the scan's result
+    # standing, so truncated/corrupt files degrade exactly as before.
 
     _XREF_ENTRY_RE = re.compile(rb"\s*(\d{10})\s+(\d{5})\s+([nf])")
     # EOL may be \r\n, \n, or bare \r (spec-legal, old Mac writers)
     _XREF_SUB_RE = re.compile(rb"(\d+)[^\S\r\n]+(\d+)[^\S\r\n]*(\r\n|\r|\n)")
 
-    def _apply_xref(self) -> None:
+    def _xref_chain(self) -> dict:
+        """Walk ``startxref`` and its /Prev links. Returns the entries,
+        newest revision first: num -> ("o", offset) |
+        ("s", objstm_num, idx) | ("f",). A parse error or a bad link
+        ends the walk with the entries read so far."""
         data = self.data
-        last = None
-        for last in re.finditer(rb"startxref\s+(\d+)", data):
-            pass
-        if last is None:
-            return
-        # num -> ("o", offset) | ("s", objstm_num, idx) | ("f",)
-        # newest revision first: first entry seen for a num wins
+        at = data.rfind(b"startxref")
+        while at != -1:
+            last = _STARTXREF_RE.match(data, at)
+            if last is not None:
+                break
+            at = data.rfind(b"startxref", 0, at)
+        else:
+            return {}
         entries: dict[int, tuple] = {}
-        pos = int(last.group(1))
+        try:
+            pos = int(last.group(1))
+        except ValueError:  # past 4300 digits
+            return entries
         seen: set[int] = set()
         for _ in range(64):  # /Prev chain bound (loop guard)
             if pos in seen or not 0 <= pos < len(data):
@@ -603,7 +680,7 @@ class PdfDocument:
             if not isinstance(nxt, int):
                 break
             pos = nxt
-        self._apply_xref_entries(entries)
+        return entries
 
     def _parse_xref_table(self, p: int, entries: dict) -> int | None:
         """Classic table: subsections of ``start count`` + 20-byte
@@ -617,21 +694,22 @@ class PdfDocument:
                 break
             start, count = int(m.group(1)), int(m.group(2))
             p = m.end()
-            for i in range(count):
-                e = self._XREF_ENTRY_RE.match(data, p)
+            row = self._XREF_ENTRY_RE.scanner(data, p).match
+            for num in range(start, start + count):
+                e = row()
                 if e is None:
                     raise PdfError("malformed xref entry")
+                if num not in local:
+                    local[num] = (
+                        ("f",) if e.group(3) == b"f"
+                        else ("o", int(e.group(1)))
+                    )
+            if count > 0:
                 p = e.end()
-                num = start + i
-                if num in local:
-                    continue
-                local[num] = (
-                    ("f",) if e.group(3) == b"f" else ("o", int(e.group(1)))
-                )
         p = _skip_ws(data, p)
         if not data.startswith(b"trailer", p):
             raise PdfError("xref table without trailer")
-        trailer, _ = _parse_value(data, p + len(b"trailer"))
+        trailer = self._trailer_at(p + len(b"trailer"))
         if not isinstance(trailer, dict):
             raise PdfError("malformed trailer")
         # hybrid-reference file: the /XRefStm lists the objects the
@@ -654,7 +732,7 @@ class PdfDocument:
         """Xref *stream*: /W-packed binary rows (type 0=free,
         1=offset, 2=in-objstm). Returns /Prev or None."""
         data = self.data
-        m = _OBJ_RE.match(data, p)
+        m = _OBJ_AT_RE.match(data, p)
         if m is None:
             raise PdfError("no xref stream at startxref offset")
         val, raw = _read_obj_body(data, m.end())
@@ -725,7 +803,11 @@ class PdfDocument:
         return prev if isinstance(prev, int) else None
 
     def _apply_xref_entries(self, entries: dict) -> None:
+        """Load the chain's verdicts over the scanned object table. An
+        offset that does not land on its own parseable object leaves
+        the scan's object standing."""
         data = self.data
+        objects = self.objects
         for num, ent in entries.items():
             if num == 0:  # free-list head
                 continue
@@ -734,22 +816,24 @@ class PdfDocument:
                     # the newest revision freed this object; remember
                     # the verdict so ObjStm expansion cannot resurrect
                     # an old embedded copy
-                    self.objects.pop(num, None)
+                    objects.pop(num, None)
                     self.streams.pop(num, None)
                     self._obj_pos.pop(num, None)
                     self._xref_resolved.add(num)
                 elif ent[0] == "o":
-                    off = _skip_ws(data, ent[1])
+                    m = _OBJ_AT_RE.match(data, ent[1])
+                    if m is None:
+                        raise PdfError("stale xref offset")
+                    off = m.start(1)
                     if off == self._obj_pos.get(num):
                         # chain agrees with the scan winner: the body
                         # is already parsed — don't parse it twice
                         self._xref_resolved.add(num)
                         continue
-                    m = _OBJ_RE.match(data, off)
-                    if m is None or int(m.group(1)) != num:
-                        continue  # stale/corrupt offset: scan stands
+                    if int(m.group(1)) != num:
+                        raise PdfError("stale xref offset")
                     val, raw = _read_obj_body(data, m.end())
-                    self.objects[num] = val
+                    objects[num] = val
                     self._obj_pos[num] = off
                     if raw is not None:
                         self.streams[num] = raw
@@ -760,7 +844,7 @@ class PdfDocument:
                     self._xref_in_objstm[num] = ent[1]
                     self._xref_resolved.add(num)
             except (PdfError, IndexError, ValueError):
-                continue
+                continue  # stale/corrupt offset: scan stands
 
     def _expand_object_streams(self) -> None:
         """PDF 1.5+ object streams: modern writers keep most dict
@@ -896,12 +980,14 @@ class PdfDocument:
 
     def _catalog(self) -> dict:
         m = None
-        for mm in _ROOT_RE.finditer(self.data):
-            m = mm  # last trailer wins (incremental updates)
-        if m:
-            cat = self.objects.get(int(m.group(1)))
-            if isinstance(cat, dict):
-                return cat
+        for m in _ROOT_RE.finditer(self.data):
+            pass  # last trailer wins (incremental updates)
+        try:
+            cat = self.objects.get(int(m.group(1))) if m else None
+        except ValueError:  # past 4300 digits: no usable /Root
+            cat = None
+        if isinstance(cat, dict):
+            return cat
         for v in self.objects.values():
             if isinstance(v, dict) and v.get("/Type") == "/Catalog":
                 return v
@@ -1078,8 +1164,8 @@ class Run(NamedTuple):
     text: str
 
 
-_BFCHAR_RE = re.compile(rb"beginbfchar(.*?)endbfchar", re.DOTALL)
-_BFRANGE_RE = re.compile(rb"beginbfrange(.*?)endbfrange", re.DOTALL)
+# widest incrementing bfrange expanded: a full 2-byte code space
+_MAX_BFRANGE = 0x10000
 
 
 def _utf16_of(raw: bytes) -> str:
@@ -1089,13 +1175,30 @@ def _utf16_of(raw: bytes) -> str:
         return raw.decode("utf-16-be", errors="replace")
 
 
+def _cmap_blocks(data: bytes, kind: bytes):
+    """Bodies of the ``begin<kind> ... end<kind>`` blocks, first closer
+    after each opener. Pairing by ``bytes.find`` keeps this linear when
+    openers have no closer (a lazy ``.*?`` regex rescans to the end of
+    the stream from every one of them)."""
+    opener, closer = b"begin" + kind, b"end" + kind
+    i = data.find(opener)
+    while i != -1:
+        body_start = i + len(opener)
+        j = data.find(closer, body_start)
+        if j == -1:
+            return
+        yield data[body_start:j]
+        i = data.find(opener, j + len(closer))
+
+
 def parse_tounicode(data: bytes) -> dict[int, str]:
     """ToUnicode CMap (PDF 32000-1 §9.10.3): code -> unicode string from
     ``bfchar`` pairs and ``bfrange`` runs (both the incrementing-dst and
-    per-code array forms)."""
+    per-code array forms). An incrementing range wider than
+    ``_MAX_BFRANGE`` codes is skipped rather than expanded."""
     out: dict[int, str] = {}
-    for m in _BFCHAR_RE.finditer(data):
-        body, pos = m.group(1), 0
+    for body in _cmap_blocks(data, b"bfchar"):
+        pos = 0
         while True:
             try:
                 src, pos = _parse_value(body, pos)
@@ -1104,8 +1207,8 @@ def parse_tounicode(data: bytes) -> dict[int, str]:
                 break
             if isinstance(src, bytes) and isinstance(dst, bytes):
                 out[int.from_bytes(src, "big")] = _utf16_of(dst)
-    for m in _BFRANGE_RE.finditer(data):
-        body, pos = m.group(1), 0
+    for body in _cmap_blocks(data, b"bfrange"):
+        pos = 0
         while True:
             try:
                 lo, pos = _parse_value(body, pos)
@@ -1121,6 +1224,8 @@ def parse_tounicode(data: bytes) -> dict[int, str]:
                     if isinstance(d, bytes) and lo_i + k <= hi_i:
                         out[lo_i + k] = _utf16_of(d)
             elif isinstance(dst, bytes):  # incrementing destination
+                if hi_i - lo_i + 1 > _MAX_BFRANGE:
+                    continue
                 base = int.from_bytes(dst, "big")
                 for k in range(hi_i - lo_i + 1):
                     v = base + k
@@ -1249,26 +1354,36 @@ class FormXObject:
     matrix: tuple
 
 
+# One content-stream token per match. Bytes no token starts with
+# (blanks, stray ')' '>' '{' '}', '%', binary) are consumed in front of
+# it, and a '<' '+' '-' '.' that starts no token is consumed alone and
+# ignored: every match succeeds where it is tried, so the stream is
+# read once, with no failed attempt per skipped byte. A string followed
+# by a ``Tj`` operator (the bulk of any text stream) is one match.
 _CS_TOKEN_RE = re.compile(
     rb"""
-    \((?P<lit>[^()\\]*)\)          # complete simple literal string
-                                   # (no escapes/nesting: the dominant
-                                   # show-op case; matches exactly the
-                                   # strings _parse_literal_string's
-                                   # fast path returns verbatim)
-  | (?P<str>\()                    # literal string start (general)
-  | <(?P<hex>[0-9A-Fa-f\s]*)>     # hex string
-  | /(?P<name>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)
-  | (?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+))
-  | (?P<arr>[\[\]])
-  | (?P<op>[A-Za-z'"*]{1,3})
+    [^(<\[\]/+\-.0-9A-Za-z'"*]*+
+    (?:
+        ([A-Za-z'"*]{1,3})                  # 1 operator
+      | \(([^()\\]*)\)                      # 2 literal string without
+                                            #   escapes or nesting,
+        (?:[^(<\[\]/+\-.0-9A-Za-z'"*]*+     #   3 shown by Tj
+           (Tj)(?![A-Za-z'"*]))?
+      | ([+-]?(?:\d+\.\d*|\.\d+|\d+))       # 4 number
+      | /([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)  # 5 name
+      | (\()                                # 6 literal string (general)
+      | <([0-9A-Fa-f\s]*)>                  # 7 hex string,
+        (?:[^(<\[\]/+\-.0-9A-Za-z'"*]*+     #   8 shown by Tj
+           (Tj)(?![A-Za-z'"*]))?
+      | (\[)                                # 9
+      | (\])                                # 10
+      | [\s\S]                              # starts no token
+    )
     """,
     re.VERBOSE,
 )
-
-
 def _decode_pdf_text(raw: bytes) -> str:
-    if raw[:2] == b"\xfe\xff":
+    if raw.startswith(b"\xfe\xff"):
         s = raw[2:].decode("utf-16-be", errors="replace")
     else:
         s = raw.decode("latin-1")
@@ -1298,6 +1413,31 @@ def _mat_mul(m: tuple, n: tuple) -> tuple:
 
 _INLINE_IMG_END_RE = re.compile(rb"\sEI(?=\s|$)")
 
+# operator dispatch codes; operators not listed only drop their operands
+(
+    _OP_TJ_SHOW, _OP_TSTAR, _OP_TD, _OP_TM, _OP_TF, _OP_TD_LEADING,
+    _OP_TL, _OP_CM, _OP_Q_PUSH, _OP_Q_POP, _OP_DO, _OP_BI, _OP_QUOTE,
+    _OP_TJ_ARRAY, _OP_BT,
+) = range(15)
+_CS_OPS = {
+    b"Tj": _OP_TJ_SHOW, b"T*": _OP_TSTAR, b"Td": _OP_TD, b"Tm": _OP_TM,
+    b"Tf": _OP_TF, b"TD": _OP_TD_LEADING, b"TL": _OP_TL, b"cm": _OP_CM,
+    b"q": _OP_Q_PUSH, b"Q": _OP_Q_POP, b"Do": _OP_DO, b"BI": _OP_BI,
+    b"'": _OP_QUOTE, b'"': _OP_QUOTE, b"TJ": _OP_TJ_ARRAY, b"BT": _OP_BT,
+}
+
+
+def _num(v) -> float:
+    """Numeric operand as a float; any other operand reads as 0."""
+    return float(v) if isinstance(v, (int, float)) else 0.0
+
+
+def _nums(vs: list) -> tuple:
+    """:func:`_num` over a run of operands."""
+    return tuple(
+        [float(v) if isinstance(v, (int, float)) else 0.0 for v in vs]
+    )
+
 
 def interpret_content(
     content: bytes,
@@ -1310,153 +1450,186 @@ def interpret_content(
     resource names (``/F1``) to decoders; ``Tf`` switches the current
     one (composite fonts decode 2-byte CIDs, see :class:`Font`).
 
+    One pass: each :data:`_CS_TOKEN_RE` match is one token (blanks are
+    consumed inside the pattern), operands go on a stack, and an
+    operator is looked up in :data:`_CS_OPS` and run against it; an
+    unlisted operator just drops its operands.
+
     Geometry: the full CTM is tracked through ``cm`` concatenation and
     the ``q``/``Q`` state stack, and the text matrix through
     ``Tm/Td/TD/T*`` composition, so content positioned via ``cm``
     translation (a very common wild-PDF pattern) lands at its real
-    device coordinates. Inline images (``BI ... ID <binary> EI``) are
-    skipped wholesale so their bytes never reach the tokenizer."""
+    device coordinates. The text matrix lives in six locals and the
+    translation-only operators update them in place; their arithmetic
+    is term for term that of :func:`_mat_mul`, so infinities and NaNs
+    propagate exactly as through the full product. Inline images
+    (``BI ... ID <binary> EI``) are skipped wholesale so their bytes
+    never reach the tokenizer."""
     fonts = fonts or {}
     forms = forms or {}
     runs: list[Run] = []
     stack: list[object] = []
+    push = stack.append
     size = 12.0
     leading = 0.0
-    cur_font = _DEFAULT_FONT
+    decode = _DEFAULT_FONT.decode
     ctm = base_ctm
+    c0, c1, c2, c3, c4, c5 = ctm
     gs_stack: list[tuple] = []
-    tm = _IDENTITY  # text line matrix
-
-    def show(raw: bytes) -> None:
-        text = cur_font.decode(raw)
-        if text:
-            x = tm[4] * ctm[0] + tm[5] * ctm[2] + ctm[4]
-            y = tm[4] * ctm[1] + tm[5] * ctm[3] + ctm[5]
-            runs.append(Run(x, y, size, text))
-
-    def _f(i: int) -> float:
-        v = stack[i]
-        return float(v) if isinstance(v, (int, float)) else 0.0
-
-    pos = 0
+    ta, tb, tc, td, te, tf = _IDENTITY  # text line matrix
+    tokens = _CS_TOKEN_RE.finditer
+    op_code = _CS_OPS.get
     n = len(content)
-    while pos < n:
-        m = _CS_TOKEN_RE.search(content, pos)
-        if not m:
-            break
-        pos = m.end()
-        kind = m.lastgroup
-        # dispatch ordered by token frequency: strings and numbers are
-        # the operand bulk of any text content stream
-        if kind == "lit":
-            stack.append(m.group("lit"))
-            continue
-        if kind == "num":
-            t = m.group("num")
-            stack.append(float(t) if b"." in t else int(t))
-            continue
-        if kind == "name":
-            stack.append("/" + m.group("name").decode("latin-1"))
-            continue
-        if kind == "str":
-            raw, pos = _parse_literal_string(content, m.start())
-            stack.append(raw)
-            continue
-        if kind == "hex":
-            hx = m.group("hex")
-            if not hx.isalnum():
-                hx = re.sub(rb"\s", b"", hx)
-            if len(hx) % 2:
-                hx += b"0"
-            stack.append(bytes.fromhex(hx.decode("ascii")))
-            continue
-        if kind == "arr":
-            stack.append(m.group("arr").decode("ascii"))
-            continue
-
-        # op tokens compare as bytes (no per-token decode); the chain is
-        # ordered by corpus frequency — show/newline ops run once per
-        # text line, the state ops once or twice per page
-        op = m.group("op")
-
-        if op == b"Tj" and stack:
-            if isinstance(stack[-1], bytes):
-                show(stack[-1])
-        elif op == b"T*":
-            tm = _mat_mul((1.0, 0.0, 0.0, 1.0, 0.0, -leading), tm)
-        elif op == b"Td" and len(stack) >= 2:
-            tm = _mat_mul((1.0, 0.0, 0.0, 1.0, _f(-2), _f(-1)), tm)
-        elif op == b"Tm" and len(stack) >= 6:
-            tm = (_f(-6), _f(-5), _f(-4), _f(-3), _f(-2), _f(-1))
-        elif op == b"Tf" and len(stack) >= 1:
-            size = _f(-1)
-            if len(stack) >= 2 and isinstance(stack[-2], str):
-                cur_font = fonts.get(stack[-2], _DEFAULT_FONT)
-        elif op == b"TD" and len(stack) >= 2:
-            leading = -_f(-1)
-            tm = _mat_mul((1.0, 0.0, 0.0, 1.0, _f(-2), _f(-1)), tm)
-        elif op == b"TL" and stack:
-            leading = _f(-1)
-        elif op == b"cm" and len(stack) >= 6:
-            ctm = _mat_mul(
-                (_f(-6), _f(-5), _f(-4), _f(-3), _f(-2), _f(-1)), ctm
-            )
-        elif op == b"q":
-            gs_stack.append(ctm)
-        elif op == b"Q":
-            if gs_stack:
-                ctm = gs_stack.pop()
-        elif op == b"Do" and stack and isinstance(stack[-1], str):
-            f = forms.get(stack[-1])
-            if f is not None and depth < 8:
-                runs.extend(
-                    interpret_content(
-                        f.content,
-                        f.fonts or fonts,
-                        f.forms or forms,
-                        _mat_mul(f.matrix, ctm),
-                        depth + 1,
+    pos = 0
+    while True:
+        # tokens run from ``pos`` until a general literal string or an
+        # inline image moves ``pos`` past bytes the pattern must not see
+        for m in tokens(content, pos):
+            kind = m.lastindex
+            # by frequency: numbers, then strings shown by Tj, then
+            # operators; other operands are rarer
+            if kind == 4:
+                t = m.group(4)
+                push(float(t) if b"." in t else int(t))
+                continue
+            text = None  # set by a string-show
+            if kind == 3 or kind == 8:  # a string and its Tj
+                text = decode(
+                    m.group(2) if kind == 3 else _hex_bytes(m.group(7))
+                )
+            elif kind != 1:
+                if kind == 2:
+                    push(m.group(2))
+                elif kind == 5:
+                    push("/" + m.group(5).decode("latin-1"))
+                elif kind == 6:
+                    raw, pos = _parse_literal_string(content, m.start(6))
+                    push(raw)
+                    break
+                elif kind == 7:
+                    push(_hex_bytes(m.group(7)))
+                elif kind == 9:
+                    push("[")
+                elif kind == 10:
+                    push("]")
+                continue
+            else:
+                op = op_code(m.group(1))
+                if op is None:
+                    pass
+                elif op == _OP_TJ_SHOW:
+                    if stack and stack[-1].__class__ is bytes:
+                        text = decode(stack[-1])
+                elif op == _OP_TSTAR or (op == _OP_QUOTE and stack):
+                    ty = -leading
+                    ta, tb, tc, td, te, tf = (
+                        ta + 0.0 * tc,
+                        tb + 0.0 * td,
+                        0.0 * ta + tc,
+                        0.0 * tb + td,
+                        0.0 * ta + ty * tc + te,
+                        0.0 * tb + ty * td + tf,
+                    )
+                    if op == _OP_QUOTE and stack[-1].__class__ is bytes:
+                        text = decode(stack[-1])
+                elif op == _OP_TM:
+                    if len(stack) >= 6:
+                        ta, tb, tc, td, te, tf = _nums(stack[-6:])
+                elif op == _OP_TD or op == _OP_TD_LEADING:
+                    if len(stack) >= 2:
+                        if op == _OP_TD_LEADING:
+                            leading = -_num(stack[-1])
+                        tx = _num(stack[-2])
+                        ty = _num(stack[-1])
+                        ta, tb, tc, td, te, tf = (
+                            ta + 0.0 * tc,
+                            tb + 0.0 * td,
+                            0.0 * ta + tc,
+                            0.0 * tb + td,
+                            tx * ta + ty * tc + te,
+                            tx * tb + ty * td + tf,
+                        )
+                elif op == _OP_TF:
+                    if stack:
+                        size = _num(stack[-1])
+                        if len(stack) >= 2 and isinstance(stack[-2], str):
+                            font = fonts.get(stack[-2], _DEFAULT_FONT)
+                            decode = font.decode
+                elif op == _OP_TL:
+                    if stack:
+                        leading = _num(stack[-1])
+                elif op == _OP_BT:
+                    ta, tb, tc, td, te, tf = _IDENTITY
+                elif op == _OP_TJ_ARRAY:
+                    # operands are the tokens between the '[' ... ']'
+                    # markers
+                    items: list[object] = []
+                    while stack:
+                        it = stack.pop()
+                        if it == "[":
+                            break
+                        if it != "]":
+                            items.append(it)
+                    items.reverse()
+                    parts: list[str] = []
+                    for it in items:
+                        if isinstance(it, bytes):
+                            parts.append(decode(it))
+                        elif (
+                            isinstance(it, (int, float))
+                            and it <= -SPACE_ADJ
+                        ):
+                            parts.append(" ")
+                    text = "".join(parts)
+                elif op == _OP_CM:
+                    if len(stack) >= 6:
+                        ctm = _mat_mul(_nums(stack[-6:]), ctm)
+                        c0, c1, c2, c3, c4, c5 = ctm
+                elif op == _OP_Q_PUSH:
+                    gs_stack.append(ctm)
+                elif op == _OP_Q_POP:
+                    if gs_stack:
+                        ctm = gs_stack.pop()
+                        c0, c1, c2, c3, c4, c5 = ctm
+                elif op == _OP_DO:
+                    if stack and isinstance(stack[-1], str):
+                        f = forms.get(stack[-1])
+                        if f is not None and depth < 8:
+                            runs.extend(
+                                interpret_content(
+                                    f.content,
+                                    f.fonts or fonts,
+                                    f.forms or forms,
+                                    _mat_mul(f.matrix, ctm),
+                                    depth + 1,
+                                )
+                            )
+                elif op == _OP_BI:
+                    # inline image: jump past `ID <binary> EI` so image
+                    # bytes never hit the tokenizer
+                    id_pos = content.find(b"ID", m.end())
+                    if id_pos != -1:
+                        m_ei = _INLINE_IMG_END_RE.search(content, id_pos + 2)
+                        pos = m_ei.end() if m_ei else n
+                    else:
+                        pos = n
+                    stack.clear()
+                    break
+            if text:
+                runs.append(
+                    Run(
+                        te * c0 + tf * c2 + c4,
+                        te * c1 + tf * c3 + c5,
+                        size,
+                        text,
                     )
                 )
-        elif op == b"BI":
-            # inline image: jump past `ID <binary> EI` so image bytes
-            # never hit the tokenizer
-            id_pos = content.find(b"ID", pos)
-            if id_pos != -1:
-                m_ei = _INLINE_IMG_END_RE.search(content, id_pos + 2)
-                pos = m_ei.end() if m_ei else n
-            else:
-                pos = n
-        elif op in (b"'", b'"') and stack:
-            tm = _mat_mul((1.0, 0.0, 0.0, 1.0, 0.0, -leading), tm)
-            if isinstance(stack[-1], bytes):
-                show(stack[-1])
-        elif op == b"TJ":
-            # operands are the tokens between the '[' ... ']' markers
-            items: list[object] = []
-            while stack:
-                it = stack.pop()
-                if it == "[":
-                    break
-                if it != "]":
-                    items.append(it)
-            items.reverse()
-            parts: list[str] = []
-            for it in items:
-                if isinstance(it, bytes):
-                    parts.append(cur_font.decode(it))
-                elif isinstance(it, (int, float)) and it <= -SPACE_ADJ:
-                    parts.append(" ")
-            text = "".join(parts)
-            if text:
-                x = tm[4] * ctm[0] + tm[5] * ctm[2] + ctm[4]
-                y = tm[4] * ctm[1] + tm[5] * ctm[3] + ctm[5]
-                runs.append(Run(x, y, size, text))
-        elif op == b"BT":
-            tm = _IDENTITY
-        # operands precede their operator; once handled they are consumed
-        stack.clear()
-    return runs
+            # operands precede their operator; once handled they are
+            # consumed
+            if stack:
+                stack.clear()
+        else:
+            return runs
 
 
 # --------------------------------------------------------------------------

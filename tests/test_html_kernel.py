@@ -1,5 +1,13 @@
 """HTML boilerplate-strip kernel tests (north-star DOM heuristics)."""
 
+import re
+import time
+
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+
+from service1_text_extraction_spark.kernels import html, payload
 from service1_text_extraction_spark.kernels.html import extract_html
 
 
@@ -89,3 +97,106 @@ def test_textarea_and_cdata_stripped():
     assert "raw editor" not in r.text
     assert "cdata payload" not in r.text
     assert "]]" not in r.text
+
+
+# ---- linear markup scans ------------------------------------------------
+#
+# The sniff and preprocess scans used lazy ``open.*?close`` regexes and
+# unbounded ``<...>`` searches, which rescan the rest of the payload from
+# every unclosed opener. Those regexes live on here only as the oracle.
+
+_OLD_HTML_HINT_RE = re.compile(
+    r"<[a-zA-Z][^>]*>|</[a-zA-Z][^>]*>|<!DOCTYPE", re.IGNORECASE
+)
+_OLD_COMMENT_RE = re.compile(r"<!--.*?-->", re.DOTALL)
+_OLD_CDATA_RE = re.compile(r"<!\[CDATA\[.*?\]\]>", re.DOTALL)
+_OLD_BLOCK_RE = {"<!--": _OLD_COMMENT_RE, "<![CDATA[": _OLD_CDATA_RE}
+
+
+def _old_sniff(p: str) -> str:
+    if p.lstrip().startswith("JVBER"):
+        return "pdf"
+    return "html" if _OLD_HTML_HINT_RE.search(p) else "text"
+
+
+def _old_extract_html(p: str):
+    """extract_html with every scan put back to its plain-regex form."""
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(
+            html, "_strip_blocks",
+            lambda src, opener, closer: _OLD_BLOCK_RE[opener].sub(" ", src),
+        )
+        m.setattr(
+            html, "_strip_rawtext", lambda src: html._RAWTEXT_RE.sub(" ", src)
+        )
+        m.setattr(
+            html, "_strip_doctypes", lambda src: html._DOCTYPE_RE.sub(" ", src)
+        )
+        m.setattr(html, "_tags", lambda src: html._TAG_RE.finditer(src))
+        return html.extract_html(p)
+
+
+_MARKUP = st.lists(
+    st.one_of(
+        st.sampled_from([
+            "<", ">", "/", "!", "-", "[", "]", "'", '"', "=", " ", "\n",
+            "<!--", "-->", "<!-->", "<!", "<![CDATA[", "]]>",
+            "<!DOCTYPE html>", "<script ", "<style ",
+            "<!doctype", "<script>", "</script>", "<SCRIPT type=x>",
+            "</Script >", "<style>", "</style>", "<textarea>",
+            "</textarea>", "<p>", "</p>", "<div>", "<a href='/x'>",
+            '<a title="q>', "</a>", "<nav>", "</nav>", "<br/>", "x<",
+            "<a", "&amp;", "Some words of text here.", "ſcript",
+        ]),
+        st.text(alphabet="<>/!-ab sp'\"", max_size=6),
+    ),
+    max_size=40,
+).map("".join)
+
+
+@given(_MARKUP)
+@example("<p>a<!-->b-->c</p>")  # a closer overlapping its opener
+@example("<script <style>x</style>y")  # an opener inside an unclosed one
+@example("<style>a<p>b</p>")  # an opener with no closer
+@example("<Style>a<STYLE>b</style>c")  # closers match in any case
+@example("<p>x</p><!DOCTYPE html")  # a declaration past the last '>'
+@settings(max_examples=400, deadline=None)
+def test_linear_scans_match_regex_oracle(p):
+    assert payload.sniff_payload(p) == _old_sniff(p)
+    new, old = html.extract_html(p), _old_extract_html(p)
+    assert (new.text, new.spans, new.boilerplate_ratio) == (
+        old.text, old.spans, old.boilerplate_ratio
+    )
+
+
+_MB = 1_000_000
+# each of the 64 case spellings of an unclosed <script>
+_MIXED_CASE_OPENERS = "".join(
+    "<" + "".join(
+        c.upper() if k >> j & 1 else c for j, c in enumerate("script")
+    ) + ">"
+    for k in range(64)
+)
+
+
+@pytest.mark.parametrize(
+    "shape",
+    [
+        "<a" * (_MB // 2),  # tag hint with no '>'
+        "<p>" + "x<" * (_MB // 2),  # bare '<'
+        "<p>" + "<!--" * (_MB // 4),  # unterminated comments
+        "<p>" + "<![CDATA[" * (_MB // 9),  # unterminated CDATA
+        "<p>" + "<script>" * (_MB // 8),  # unclosed raw-text elements
+        "<script" * (_MB // 7),  # raw-text openers with no '>'
+        "<script " * (_MB // 8) + ">",  # openers sharing one far '>'
+        "<p>" + _MIXED_CASE_OPENERS * (_MB // len(_MIXED_CASE_OPENERS)),
+        "<!" * (_MB // 2),  # declarations with no '>'
+    ],
+    ids=["hint", "bare-lt", "comment", "cdata", "script", "script-open",
+         "script-far-gt", "script-mixed-case", "decl"],
+)
+def test_hostile_markup_is_linear(shape):
+    t0 = time.perf_counter()
+    payload.sniff_payload(shape)
+    html.extract_html(shape)
+    assert time.perf_counter() - t0 < 1.0

@@ -3,6 +3,8 @@ recovered through ToUnicode CMaps — what Word/LaTeX/Chrome-produced
 PDFs use (reference gets this free from fitz,
 core_pdf_processor.py:373-386)."""
 
+import time
+
 from service1_text_extraction_spark.kernels import pdf, pdfgen
 
 
@@ -71,6 +73,40 @@ def test_parse_tounicode_bfchar_pairs():
     )
     mapping = pdf.parse_tounicode(cmap)
     assert mapping == {0x10: "X", 0x11: "YZ"}
+
+
+def _timed(fn, *args):
+    t0 = time.perf_counter()
+    out = fn(*args)
+    return out, time.perf_counter() - t0
+
+
+def test_parse_tounicode_unterminated_blocks_linear():
+    """8,000 ``beginbfchar`` openers and no closer (192 KB; a few
+    hundred bytes deflated): openers pair with closers by search, not by
+    a lazy regex that rescans the rest of the stream from each one."""
+    mapping, dt = _timed(
+        pdf.parse_tounicode, b"beginbfchar <01> <0041>\n" * 8000
+    )
+    assert mapping == {}
+    assert dt < 0.2
+
+
+def test_parse_tounicode_skips_huge_incrementing_range():
+    """A 3-byte incrementing bfrange would expand to 2**20 entries; any
+    incrementing range wider than a 2-byte code space is skipped, and
+    the ranges around it still map."""
+    cmap = (
+        b"3 beginbfrange\n<0001> <0002> <0041>\n"
+        b"<000000> <0FFFFF> <0041>\n<0005> <0005> <0058>\nendbfrange"
+    )
+    mapping, dt = _timed(pdf.parse_tounicode, cmap)
+    assert mapping == {1: "A", 2: "B", 5: "X"}
+    assert dt < 0.2
+    wide = b"1 beginbfrange\n<00000000> <FFFFFFFF> <0041>\nendbfrange"
+    mapping, dt = _timed(pdf.parse_tounicode, wide)
+    assert mapping == {}
+    assert dt < 0.2
 
 
 def _pdf_with_font(font_body: bytes, content: bytes) -> bytes:

@@ -8,9 +8,12 @@ expansion and hyphenation repair (north-star), Flate streams, and
 multi-page walks.
 """
 
+import base64
+import time
+
 import pytest
 
-from service1_text_extraction_spark.kernels import pdf, pdfgen
+from service1_text_extraction_spark.kernels import payload, pdf, pdfgen
 
 
 def _one_page(content: bytes, compress: bool = False) -> pdf.PageText:
@@ -366,3 +369,49 @@ def test_resolve_reference_cycle_guarded():
     doc.objects[91] = pdf.Ref(90, 0)
     with pytest.raises(pdf.PdfError, match="cycle"):
         doc.resolve(pdf.Ref(90, 0))
+
+
+# A run of digits after the header. The object scan used to search
+# ``(\d+)\s+(\d+)\s+obj`` at every byte, which backtracks through the
+# whole run from each digit: 40,000 digits took ~25 s. It now steps
+# between literal ``obj`` keywords.
+_DIGIT_RUN = b"%PDF-1.4\n" + b"7" * 40_000
+
+
+def test_digit_run_fails_fast():
+    t0 = time.perf_counter()
+    with pytest.raises(pdf.PdfError):
+        pdf.extract_pdf(_DIGIT_RUN)
+    assert time.perf_counter() - t0 < 0.2
+
+
+def test_digit_run_payload_fails_fast():
+    turn = base64.b64encode(_DIGIT_RUN).decode("ascii")  # a 54 KB turn
+    t0 = time.perf_counter()
+    r = payload.extract_turn(turn)
+    assert time.perf_counter() - t0 < 0.2
+    assert r.method == "failed"
+    assert r.error.startswith("pdf parse failed")
+
+
+def test_oversized_object_number_fails_clean():
+    """A 40,000-digit object number is past Python's int-parsing limit:
+    the scan skips that header instead of leaking ValueError."""
+    t0 = time.perf_counter()
+    with pytest.raises(pdf.PdfError):
+        pdf.extract_pdf(_DIGIT_RUN + b" 0 obj << >> endobj")
+    assert time.perf_counter() - t0 < 0.2
+
+
+def test_scan_reads_headers_with_long_runs():
+    """The scan reads ``N G`` back from each ``obj`` keyword through a
+    bounded window that must grow for long digit and blank runs: a
+    100-digit object number and 100 blanks before ``obj`` still name
+    object 5 (this file has no xref, so only the scan finds it)."""
+    data = pdfgen.build_pdf_objstm(
+        [pdfgen.simple_page([(72, 700, ["long header runs"])])]
+    )
+    assert b"\n5 0 obj" in data
+    header = b"\n" + b"0" * 99 + b"5 0" + b" " * 100 + b"obj"
+    data = data.replace(b"\n5 0 obj", header)
+    assert pdf.extract_pdf(data).pages[0].text == "long header runs"

@@ -8,6 +8,8 @@ must degrade to exactly the old scan behavior."""
 import struct
 import zlib
 
+import pytest
+
 from service1_text_extraction_spark.kernels import pdf, pdfgen
 
 _ORIG = "Original xref-governed body text."
@@ -311,3 +313,70 @@ def test_modern_layout_xref_stream_only():
     data = bytes(buf)
     assert b"\nxref\n" not in data  # genuinely xref-stream-only
     assert pdf.extract_pdf(data).pages[0].text == "Modern-layout body."
+
+
+# ---- xref rows that disagree with the byte scan -------------------------
+#
+# The byte scan loads every body and the chain is applied on top of it.
+# A row the chain leaves out, or an offset that lands on another
+# object's header, leaves the scan's object standing.
+
+
+def _omit_xref_row(data: bytes, num: int) -> bytes:
+    """Rewrite a one-subsection table ``0 N`` so it does not list
+    object ``num``: subsections ``0 num`` and ``num+1 N-num-1``."""
+    import re
+
+    m = re.search(rb"xref\n0 (\d+)\n", data)
+    count = int(m.group(1))
+    rows = data[m.end() : m.end() + 20 * count]
+    table = f"xref\n0 {num}\n".encode() + rows[: 20 * num]
+    if num + 1 < count:
+        table += f"{num + 1} {count - num - 1}\n".encode()
+        table += rows[20 * (num + 1) :]
+    out = data[: m.start()] + table + data[m.end() + 20 * count :]
+    # the table only shrank, and startxref points at its start
+    return out
+
+
+@pytest.mark.parametrize("num", [5, 1], ids=["content", "catalog"])
+def test_xref_omitting_referenced_object_reads_scan_text(num):
+    """The table leaves out a live object the document needs (the page
+    content stream, or the catalog): the scan's body is used."""
+    data = _omit_xref_row(_base(), num)
+    assert pdf.extract_pdf(data).pages[0].text == _ORIG
+
+
+def test_offset_to_wrong_object_keeps_scan_body():
+    """Rows for objects 1 and 2 swapped: each offset lands on the other
+    object's header, so neither row replaces the scanned body."""
+    import re
+
+    base = _base()
+    rows = re.findall(rb"(\d{10}) 00000 n", base)
+    bad = base.replace(rows[0] + b" 00000 n", b"X" * 10 + b" 00000 n", 1)
+    bad = bad.replace(rows[1] + b" 00000 n", rows[0] + b" 00000 n", 1)
+    bad = bad.replace(b"X" * 10 + b" 00000 n", rows[1] + b" 00000 n", 1)
+    assert bad != base and len(bad) == len(base)
+    assert pdf.PdfDocument(bad).objects == pdf.PdfDocument(base).objects
+    assert pdf.extract_pdf(bad).pages[0].text == _ORIG
+
+
+def test_unreferenced_object_at_stale_offset_stays_loaded():
+    """Object 6, which nothing references, is listed at object 1's
+    offset: the scanned body of 6 stays in the object table (the table
+    OCR walks for images)."""
+    import re
+
+    base = _base()
+    m = re.search(rb"xref\n0 6\n", base)
+    body = base[: m.start()] + b"6 0 obj\n(orphan)\nendobj\n"
+    row1 = base[m.end() + 20 : m.end() + 40]
+    table = b"xref\n0 7\n" + base[m.end() : m.end() + 120] + row1
+    trailer = base[m.end() + 120 :].replace(b"/Size 6", b"/Size 7")
+    trailer = re.sub(
+        rb"startxref\n\d+", f"startxref\n{len(body)}".encode(), trailer
+    )
+    doc = pdf.PdfDocument(body + table + trailer)
+    assert doc.objects[6] == b"orphan"
+    assert pdf.extract_pdf(body + table + trailer).pages[0].text == _ORIG
