@@ -395,7 +395,7 @@ def _simhash_segments_udf():
     # pure function, but the downstream ``fs IS NOT NULL`` filter must
     # not be pushed below it (guide §4.4) — that drags the
     # ArrowEvalPython node under the input-spread exchange onto the
-    # unsplit single-task scan (see _assign_arrow_udf)
+    # unsplit single-task scan (see similarity._assigned)
     return segs.asNondeterministic()
 
 

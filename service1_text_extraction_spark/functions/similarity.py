@@ -5,13 +5,13 @@ ANN (deterministic md5-seeded hyperplanes) is the scale path — at
 10^12 rows the cross product is impossible, but hyperplane buckets
 cut candidates by ~2^n_planes while staying pure DataFrame ops.
 Pairwise dot products run JVM-side via ``zip_with``/``aggregate``
-with one deliberate exception: the dense n x k centroid scoring at
-large auto-k runs as an Arrow-batched numpy fold (``_fold_dots``) —
+with one deliberate exception: scoring vectors against the k-means
+centroids (assignment, multi-probe, the IVF query's probe lists) is
+an Arrow-batched numpy fold (``_fold_dots``) at every k —
 ``zip_with``/``aggregate`` are interpreted (CodegenFallback) per row,
-so expanding every vector to k>64 scored rows pays interpreted
-expression eval AND an exchange, while the numpy fold is vectorized
-over rows yet bit-equal to the JVM fold by construction (sequential
-per-dimension accumulation — see ``_fold_dots``).
+so k centroid dots per vector cost k x dim interpreted lambda steps,
+while the numpy fold is vectorized over rows yet bit-equal to the JVM
+fold by construction (sequential per-dimension accumulation).
 """
 
 from __future__ import annotations
@@ -245,7 +245,9 @@ CENTROID_DP = 6  # fixed-point quantization of centroids per update
 # resolved k — and therefore every downstream oracle — stable under
 # small corpus-size drift, and reproduces k=10 exactly for the
 # 500-vector driver tables, so the unrolled k=10 SQL oracles replay
-# the auto path verbatim at every driver-checked scale.
+# the auto path verbatim at every driver-checked scale (larger
+# corpora are checked against the same SQL unrolled at the resolved
+# k, tests/test_oracle_parity.py::test_vector_family_at_resolved_k).
 AUTO_TARGET_CLUSTER = 50
 AUTO_K_MAX = 65536  # driver holds k x dim doubles; beyond this a real
                     # deployment trains a hierarchical/balanced quantizer
@@ -287,30 +289,12 @@ def kmeans_assign(
     result is bit-identical regardless of partitioning/aggregation
     order (and reproducible in the DuckDB oracle). Each iteration
     collects only k x dim doubles to the driver (bounded by k, never by
-    data) and re-broadcasts them as literal arrays, so assignment is a
-    pure per-row projection — zero shuffle; the update is one
+    data) and ships them inside one Arrow map (``_assigned``), so
+    assignment is a per-row map — zero shuffle; the update is one
     hash-aggregate."""
     centroids = _kmeans_centroids(spark, sf_dir, k, iters)
     e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return _assigned(spark, e, centroids).select("vec_id", "list_id")
-
-
-# Above this k, centroid-literal expression trees stop scaling: a 10^4
-# x 768 literal plan is megabytes of expression tree and Catalyst
-# analysis blows up long before data does (VERDICT r3). The arrow path
-# scores the k x dim centroid matrix in one numpy fold per Arrow
-# batch; the join path (broadcast centroids as DATA) is kept as the
-# UDF-free fallback and stays bit-equality-pinned against both.
-ASSIGN_BROADCAST_K = 64
-# Above this k, the Arrow fold beats the centroid-literal projection:
-# the literal path's aggregate(zip_with(...)) chain is interpreted
-# (CodegenFallback), so its per-row cost is k x dim interpreted lambda
-# steps, while the fold is one vectorized numpy pass per batch.
-# Interleaved A/B at k=40/dim=64 (sf0.1, BENCH/BASELINE.md):
-# semantic_keepers 11.2 -> 2.5 s, ivf 9.1 -> 1.3 s, multiprobe
-# 11.6 -> 3.4 s. k <= 16 keeps the literal projection — the
-# K_LISTS=10 oracle regime stays UDF-free and plan-identical.
-ASSIGN_ARROW_K = 16
+    return _assigned(e, centroids).select("vec_id", "list_id")
 
 
 def _fold_dots(emb: np.ndarray, cents: np.ndarray) -> np.ndarray:
@@ -323,7 +307,7 @@ def _fold_dots(emb: np.ndarray, cents: np.ndarray) -> np.ndarray:
     centroids performs the identical operation sequence on every
     element (float32 -> double is exact; ``acc += X[:,j,None] *
     W[None,:,j]`` is one mul + one add per element), so every dot is
-    bit-identical to the literal/join paths — no BLAS matmul, whose
+    bit-identical to the JVM fold — no BLAS matmul, whose
     blocked/pairwise summation would differ in the last ulp and could
     flip argmax on near-ties."""
     acc = np.zeros((emb.shape[0], cents.shape[0]), dtype=np.float64)
@@ -340,10 +324,14 @@ def _stack_emb(emb: pd.Series) -> np.ndarray:
     return np.stack([np.asarray(v) for v in emb])
 
 
-def _assign_arrow_udf(centroids: list[list[float]]):
-    """pandas_udf: embedding -> primary list_id (argmax dot, ties ->
-    lowest list id — ``np.argmax`` returns the FIRST max index, which
-    is exactly the house tie rule)."""
+def _assigned(e: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    """``e`` (vec_id, embedding, ...) -> same columns + ``list_id``, the
+    argmax-dot centroid with ties to the lowest list id (``np.argmax``
+    returns the FIRST max index, which is exactly the house tie rule).
+
+    One Arrow map scores each batch against the k x dim centroid
+    matrix with ``_fold_dots``: a per-row map, zero shuffle, and a
+    plan whose size does not grow with k."""
     cents = np.asarray(centroids, dtype=np.float64)
 
     @pandas_udf("int")
@@ -359,114 +347,9 @@ def _assign_arrow_udf(centroids: list[list[float]]):
     # the input-spread exchange and drags the ArrowEvalPython node
     # onto the unsplit scan — serializing the k x dim fold on one
     # core (measured: 4.9 s -> 0.9 s at sf1.0 with the marker)
-    return assign.asNondeterministic()
-
-
-def _probe_arrow_udf(centroids: list[list[float]], probes: int):
-    """pandas_udf: embedding -> the ``probes`` nearest list_ids in
-    probe order. Ordering is dot desc then list_id asc: ``-d`` is an
-    exact IEEE sign flip and the STABLE argsort keeps ties in
-    ascending-index order — identical to the JVM struct sort."""
-    cents = np.asarray(centroids, dtype=np.float64)
-
-    @pandas_udf("array<int>")
-    def probe(emb: pd.Series) -> pd.Series:
-        if len(emb) == 0:
-            return pd.Series([], dtype="object")
-        d = _fold_dots(_stack_emb(emb), cents)
-        idx = np.argsort(-d, axis=1, kind="stable")[:, :probes]
-        return pd.Series(list(idx.astype("int32")))
-
-    return probe
-
-
-def _assigned(
-    spark: SparkSession,
-    e: DataFrame,
-    centroids: list[list[float]],
-    use_join: bool | None = None,
-) -> DataFrame:
-    """``e`` (vec_id, embedding, ...) -> same columns + ``list_id``.
-
-    Small k (the default/oracle regime): centroid-literal
-    greatest-struct projection — zero shuffle, zero join. Large k
-    (default): Arrow-batched numpy fold over the k x dim centroid
-    matrix — still a pure per-row map (zero shuffle, no exchange) and
-    bit-equal to the JVM fold by construction (``_fold_dots``).
-    ``use_join=True`` selects the UDF-free fallback: broadcast the
-    centroid table as data, expand each vector to k scored rows
-    JVM-side, per-vector struct-max (partial agg collapses the k rows
-    map-side; one exchange of one row per vector). All three paths
-    compute the identical quantized dot with the identical tie-break
-    (highest dot, then lowest list id), so results are bit-equal
-    (pinned by tests/test_oracle_parity.py::test_assign_paths_agree
-    and test_assign_arrow_large_k)."""
-    if use_join is None:
-        if len(centroids) > ASSIGN_ARROW_K:
-            return e.withColumn(
-                "list_id", _assign_arrow_udf(centroids)(F.col("embedding"))
-            )
-        use_join = False
-    if not use_join:
-        return e.withColumn(
-            "list_id", _assign_col(centroids).cast("int")
-        )
-    cdf = spark.createDataFrame(
-        [(li, [float(x) for x in c]) for li, c in enumerate(centroids)],
-        "list_id int, centroid array<double>",
+    return e.withColumn(
+        "list_id", assign.asNondeterministic()(F.col("embedding"))
     )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("embedding"), F.col("centroid"),
-            lambda x, w: x.cast("double") * w,
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    others = [c for c in e.columns if c != "vec_id"]
-    scored = e.join(F.broadcast(cdf)).select(
-        *e.columns,
-        F.struct(
-            dot.alias("d"),
-            (-F.col("list_id")).alias("neg"),
-            F.col("list_id").alias("list_id"),
-        ).alias("s"),
-    )
-    return (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max("s").alias("m"),
-            *[F.first(c).alias(c) for c in others],
-        )
-        .select(
-            "vec_id", *others, F.col("m.list_id").cast("int").alias("list_id")
-        )
-    )
-
-
-def _assign_col(cents: list[list[float]]) -> Column:
-    """argmax over k centroid dots via greatest-struct (pure per-row
-    projection, zero shuffle); ties -> lowest list id. Small-k path of
-    ``_assigned`` — see ASSIGN_ARROW_K for the large-k switch."""
-    structs = []
-    for li, c in enumerate(cents):
-        arr = F.array(*[F.lit(x) for x in c])
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("embedding"), arr,
-                lambda x, w: x.cast("double") * w,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        structs.append(
-            F.struct(
-                dot.alias("d"),
-                F.lit(-li).alias("neg"),
-                F.lit(li).alias("list_id"),
-            )
-        )
-    return F.greatest(*structs)["list_id"]
 
 
 _KMEANS_MEMO: dict[tuple, list[list[float]]] = {}
@@ -494,7 +377,7 @@ def _kmeans_centroids(
     # while Python/Spark/DuckDB rounding modes differ at exact halves
     centroids = [[float(x) for x in r.embedding] for r in init]
     for _ in range(iters):
-        assigned = _assigned(spark, e, centroids)
+        assigned = _assigned(e, centroids)
         upd = (
             assigned.select(
                 "list_id", F.posexplode("embedding").alias("pos", "v")
@@ -526,10 +409,10 @@ def ivf_ann_topk(
 ) -> DataFrame:
     """IVF ANN on the k-means coarse quantizer (kmeans_assign's
     centroids - round 1 used the test data's label column as a
-    stand-in): every vector's list assignment is a per-row expression
-    over centroid literals (zero shuffle), the query's ``n_probe``
-    nearest lists are computed driver-side from the same k x dim
-    centroids, and candidates reduce to a literal ``list_id IN (...)``
+    stand-in): every vector's list assignment is one Arrow map over
+    the k x dim centroids (``_assigned``, zero shuffle), the query's
+    ``n_probe`` nearest lists are ranked driver-side by the same fold
+    and tie rule, and candidates reduce to a literal ``list_id IN (...)``
     filter - partition-prunable when the table is laid out by list -
     followed by exact cosine. No window, no centroid shuffle, no
     pairwise join. The coarse quantizer grows with the corpus
@@ -543,14 +426,9 @@ def ivf_ann_topk(
             "vec_id", F.lit(0.0).alias("cos")
         ).where(F.lit(False))
     q_emb = [float(x) for x in q_row.embedding]
-    # query's n_probe nearest lists, same dot + tie rule as assignment
-    dots = [
-        (sum(a * b for a, b in zip(q_emb, c)), li)
-        for li, c in enumerate(cents)
-    ]
-    probe_lists = [
-        li for _, li in sorted(dots, key=lambda t: (-t[0], t[1]))[:n_probe]
-    ]
+    # query's n_probe nearest lists, same dot + tie rule as _probe_lists
+    d = _fold_dots(np.asarray([q_emb]), np.asarray(cents, dtype=np.float64))
+    probe_lists = np.argsort(-d[0], kind="stable")[:n_probe].tolist()
     # the query vector is already on the driver: score against literals
     # (no second table scan, no broadcast join) and fold its constant
     # norm in once instead of recomputing it per candidate row
@@ -566,10 +444,7 @@ def ivf_ann_topk(
         lambda acc, v: acc + v,
     )
     cands = (
-        # _assigned auto-switches to the broadcast-join path at large
-        # k — the same Catalyst-blowup guard as kmeans_assign
-        # (review r4); at the oracle k the literal projection is kept
-        _assigned(spark, e.select("vec_id", "embedding"), cents)
+        _assigned(e.select("vec_id", "embedding"), cents)
         .where(
             F.col("list_id").isin(probe_lists)
             & (F.col("vec_id") != query_vec_id)
@@ -607,7 +482,8 @@ def semantic_dedup(
     size at ~AUTO_TARGET_CLUSTER so the cap stops binding at 10x+
     scale (exactly the SemDeDup recipe; the r5 VERDICT's fixed-k=10
     silent-cap finding). At driver scales auto resolves to k=10, so
-    the unrolled k=10 SQL oracle replays the auto path verbatim.
+    the unrolled k=10 SQL oracle replays the auto path verbatim; at
+    other k the same SQL unrolls at the resolved k.
     The quantizer is the same engine-deterministic k-means the IVF
     index uses."""
     from .dedup import _bucket_pairs, _capped_buckets
@@ -700,11 +576,7 @@ KNN_PROBES = 2  # multi-probe default: lists searched per query vector
 
 
 def _probe_lists(
-    spark: SparkSession,
-    e: DataFrame,
-    centroids: list[list[float]],
-    probes: int,
-    use_join: bool | None = None,
+    e: DataFrame, centroids: list[list[float]], probes: int
 ) -> DataFrame:
     """``e`` (vec_id, embedding) -> (vec_id, probe_rank, list_id):
     each vector's ``probes`` nearest centroids under the house dot +
@@ -712,75 +584,27 @@ def _probe_lists(
     ``_assigned``, so probe_rank 1 reproduces the primary assignment
     bit-for-bit).
 
-    Small k: a pure per-row projection — k scored structs, array_sort
-    (nd = -dot ascending == dot descending, then list_id), slice P,
-    explode. Zero shuffle, zero join. Large k (> ASSIGN_ARROW_K,
-    default): the Arrow fold ranks all k centroids per batch and
-    returns the top-P array — still a per-row map + posexplode, zero
-    exchange, bit-equal by construction (``_probe_arrow_udf``).
-    ``use_join=True`` keeps the UDF-free fallback: broadcast the
-    centroid TABLE and take row_number <= P over the per-vector
-    scored rows — that path pays a full n x k exchange into the
-    window, which is exactly why arrow is the default
-    (test_probe_paths_agree pins all three bit-equal)."""
-    if use_join is None and len(centroids) > ASSIGN_ARROW_K:
-        probed = _probe_arrow_udf(centroids, probes)(F.col("embedding"))
-        return e.select(
-            "vec_id", F.posexplode(probed).alias("pos", "list_id")
-        ).select(
-            "vec_id",
-            (F.col("pos") + 1).cast("int").alias("probe_rank"),
-            F.col("list_id").cast("int").alias("list_id"),
-        )
-    if use_join:
-        from pyspark.sql import Window
+    One Arrow map ranks all k centroids per batch with ``_fold_dots``
+    and returns the top-P array, then posexplode: zero shuffle, zero
+    join. ``-d`` is an exact IEEE sign flip and the STABLE argsort
+    keeps ties in ascending-index order."""
+    cents = np.asarray(centroids, dtype=np.float64)
 
-        cdf = spark.createDataFrame(
-            [
-                (li, [float(x) for x in c])
-                for li, c in enumerate(centroids)
-            ],
-            "list_id int, centroid array<double>",
-        )
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("embedding"), F.col("centroid"),
-                lambda x, w: x.cast("double") * w,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("d").desc(), F.col("list_id")
-        )
-        return (
-            e.join(F.broadcast(cdf))
-            .select("vec_id", "list_id", dot.alias("d"))
-            .withColumn("probe_rank", F.row_number().over(w))
-            .where(F.col("probe_rank") <= probes)
-            .select("vec_id", "probe_rank", "list_id")
-        )
-    structs = []
-    for li, c in enumerate(centroids):
-        arr = F.array(*[F.lit(float(x)) for x in c])
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("embedding"), arr,
-                lambda x, w: x.cast("double") * w,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        structs.append(
-            F.struct((-dot).alias("nd"), F.lit(li).alias("list_id"))
-        )
-    probed = F.slice(F.array_sort(F.array(*structs)), 1, probes)
+    @pandas_udf("array<int>")
+    def probe(emb: pd.Series) -> pd.Series:
+        if len(emb) == 0:
+            return pd.Series([], dtype="object")
+        d = _fold_dots(_stack_emb(emb), cents)
+        idx = np.argsort(-d, axis=1, kind="stable")[:, :probes]
+        return pd.Series(list(idx.astype("int32")))
+
+    probed = probe(F.col("embedding"))
     return e.select(
-        "vec_id", F.posexplode(probed).alias("pos", "p")
+        "vec_id", F.posexplode(probed).alias("pos", "list_id")
     ).select(
         "vec_id",
         (F.col("pos") + 1).cast("int").alias("probe_rank"),
-        F.col("p.list_id").cast("int").alias("list_id"),
+        F.col("list_id").cast("int").alias("list_id"),
     )
 
 
@@ -802,8 +626,8 @@ def knn_join_multiprobe(
     Scale shape: index buckets are the capped primary-assignment
     arrays (cap BEFORE collect, same machinery as semantic_dedup but
     n_min=1 — a singleton bucket still serves OTHER vectors probing
-    it); the probe table is `probes` rows per vector from a pure
-    per-row projection (zero shuffle at driver k); candidates form
+    it); the probe table is `probes` rows per vector from one
+    per-row Arrow map (``_probe_lists``, zero shuffle); candidates form
     only by probe-list join — never a global pairwise join — and each
     (a, b) pair arises exactly once because b lives in exactly one
     primary bucket (no distinct needed). Per-query cost is
@@ -830,7 +654,7 @@ def knn_join_multiprobe(
     ev = e.select("vec_id", "embedding")
     # the probe table feeds the primary buckets AND the foreign
     # probes — checkpoint so the Arrow ranking UDF runs once
-    probe = _probe_lists(spark, ev, cents, probes).localCheckpoint(
+    probe = _probe_lists(ev, cents, probes).localCheckpoint(
         eager=False
     )
     primary = probe.where(F.col("probe_rank") == 1).select(

@@ -897,7 +897,7 @@ class PdfDocument:
                     # drop any superseded top-level stream bytes, same
                     # as the plain-dict-replaces-stream case in the scan
                     self.streams.pop(objnum, None)
-            except (PdfError, IndexError, ValueError, zlib.error):
+            except (PdfError, IndexError, ValueError):
                 continue
 
     def resolve(self, v):
@@ -936,7 +936,7 @@ class PdfDocument:
                 raise PdfError(f"stream decrypt failed: {e}") from e
         try:
             return self._run_filters(raw, filters, parms_list)
-        except pdffilters.FilterError as e:
+        except (pdffilters.FilterError, zlib.error) as e:
             raise PdfError(f"stream decode failed: {e}") from e
 
     def _run_filters(self, raw: bytes, filters: list, parms_list: list) -> bytes:
@@ -1071,7 +1071,7 @@ class PdfDocument:
             d = self.resolve(ref)
             try:
                 content = self.stream_data(ref)
-            except (PdfError, zlib.error):
+            except PdfError:
                 continue
             mtx = self.resolve(d.get("/Matrix"))
             matrix = (
@@ -1110,7 +1110,7 @@ class PdfDocument:
             if isinstance(tu, Ref):
                 try:
                     tounicode = parse_tounicode(self.stream_data(tu))
-                except (PdfError, ValueError, IndexError, zlib.error):
+                except (PdfError, ValueError, IndexError):
                     tounicode = None
             base, diffs = self._simple_encoding(fd)
             out[name] = Font(
@@ -1774,7 +1774,11 @@ def extract_pdf(data: bytes, passwords: list[str] | None = None) -> PdfResult:
         content = doc.page_content(page)
         fonts = doc.page_fonts(page)
         forms = doc.load_forms(page)
-        runs = interpret_content(content, fonts, forms)
+        try:
+            runs = interpret_content(content, fonts, forms)
+        except (ValueError, OverflowError) as e:
+            # an operand past int()'s digit limit or float's range
+            raise PdfError(f"content stream: {e}") from e
         runs = _apply_rotation(runs, doc, page)
         pages.append(assemble_page(runs))
     return PdfResult(pages, password_used=doc.password_used)

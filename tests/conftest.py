@@ -10,6 +10,12 @@ if REPO not in sys.path:
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: long-running test (still part of the full run)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

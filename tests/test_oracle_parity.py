@@ -4,6 +4,7 @@ the same comparison the round driver performs (row count + sorted
 values under sorted column names)."""
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -36,14 +37,18 @@ def _normalize(rows, cols):
     return sorted(out), [cols[i] for i in order]
 
 
-@pytest.fixture(scope="module")
-def ddb(sf_dir):
+def _duck(sf_dir):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
     return con
+
+
+@pytest.fixture(scope="module")
+def ddb(sf_dir):
+    return _duck(sf_dir)
 
 
 QUERY_KEYS = sorted(entry_mod.oracle_sql().keys())
@@ -55,12 +60,16 @@ def test_every_oracle_has_a_query():
 
 @pytest.mark.parametrize("key", QUERY_KEYS)
 def test_parity(spark, sf_dir, ddb, key):
-    q = entry_mod.queries()[key]
-    sdf = q(spark, sf_dir)
+    sdf = entry_mod.queries()[key](spark, sf_dir)
+    _assert_parity(key, sdf, ddb.execute(entry_mod.oracle_sql()[key]))
+
+
+def _assert_parity(key, sdf, res):
+    """Spark DataFrame ``sdf`` vs the executed DuckDB query ``res``:
+    same row count, then the same sorted normalized rows under sorted
+    column names."""
     spark_rows = [tuple(r) for r in sdf.collect()]
     spark_cols = sdf.columns
-
-    res = ddb.execute(entry_mod.oracle_sql()[key])
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()
 
@@ -74,6 +83,122 @@ def test_parity(spark, sf_dir, ddb, key):
         (a, b) for a, b in zip(s_norm, d_norm) if a != b
     ]
     assert not mism, f"{key}: {len(mism)} mismatching rows, first: {mism[:3]}"
+
+
+# the vector operators that run the k-means quantizer at k="auto"
+AUTO_K_KEYS = (
+    "ann_ivf_topk",
+    "knn_join",
+    "knn_join_multiprobe",
+    "semantic_dedup",
+    "semantic_keepers",
+)
+
+
+def _oracle_at_k(key, k):
+    """``oracle_sql()[key]`` with its k-means CTEs unrolled at ``k``
+    instead of K_LISTS; the rest of the SQL text is unchanged. The
+    final-centroid name and the assignment query depend only on the
+    iteration count, so the CTE list is the one part that moves."""
+    ctes, final, assign = entry_mod._kmeans_parts(k)
+    assert (final, assign) == (entry_mod._KM_FINAL, entry_mod._KM_ASSIGN)
+    sql = entry_mod.oracle_sql()[key]
+    assert entry_mod._KM_CTES in sql, key
+    return sql.replace(entry_mod._KM_CTES, ctes)
+
+
+def _check_vector_family(spark, sf_dir, con, k):
+    """kmeans_assign at ``k`` and every auto-k operator against their
+    oracles rebuilt at ``k``; the operators must resolve auto to it."""
+    from service1_text_extraction_spark.functions import similarity
+
+    assert similarity._resolve_k(spark, sf_dir, "auto") == k
+    _assert_parity(
+        "kmeans_assign",
+        similarity.kmeans_assign(spark, sf_dir, k=k),
+        con.execute(_oracle_at_k("kmeans_assign", k)),
+    )
+    for key in AUTO_K_KEYS:
+        _assert_parity(
+            key,
+            entry_mod.queries()[key](spark, sf_dir),
+            con.execute(_oracle_at_k(key, k)),
+        )
+
+
+@pytest.mark.parametrize("k", [10, 40, 70])
+def test_kmeans_assign_at_k(spark, sf_dir, ddb, k):
+    """The quantizer matches its unrolled SQL at the oracle k and at
+    k the auto grid reaches on larger corpora."""
+    from service1_text_extraction_spark.functions import similarity
+
+    _assert_parity(
+        "kmeans_assign",
+        similarity.kmeans_assign(spark, sf_dir, k=k),
+        ddb.execute(_oracle_at_k("kmeans_assign", k)),
+    )
+
+
+def test_probe_rank_one_is_the_assignment(spark, sf_dir):
+    """knn_join_multiprobe indexes each vector under its probe rank 1,
+    its oracle under the primary assignment: the two must agree."""
+    from service1_text_extraction_spark.functions import similarity
+    from service1_text_extraction_spark.functions.spread import read_spread
+
+    e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cents = similarity._kmeans_centroids(spark, sf_dir, 40)
+    primary = {
+        r.vec_id: r.list_id
+        for r in similarity._assigned(e, cents).collect()
+    }
+    rank1 = {
+        r.vec_id: r.list_id
+        for r in similarity._probe_lists(e, cents, 3).collect()
+        if r.probe_rank == 1
+    }
+    assert rank1 == primary and primary
+
+
+def test_fold_dots_is_the_in_order_sum():
+    """``_fold_dots`` (assignment, probes and the IVF query's lists)
+    must equal the in-order double sum of products that the JVM
+    ``aggregate(zip_with)`` fold computes, bit for bit."""
+    import numpy as np
+
+    from service1_text_extraction_spark.functions import similarity
+
+    rng = np.random.default_rng(11)
+    emb = rng.standard_normal((7, 64)).astype(np.float32)
+    cents = np.round(rng.standard_normal((13, 64)), 6)
+    got = similarity._fold_dots(emb, cents)
+    for i, x in enumerate(emb.tolist()):
+        for j, c in enumerate(cents.tolist()):
+            acc = 0.0
+            for a, b in zip(x, c):
+                acc += a * b
+            assert got[i, j] == acc, (i, j)
+
+
+def test_vector_family_at_resolved_k(spark, sf_dir, ddb, monkeypatch):
+    """With a smaller target cluster size, auto resolves to k=40 on
+    the 500-vector table — the k that sf0.1 runs — and every auto-k
+    operator must match its oracle unrolled at that k."""
+    from service1_text_extraction_spark.functions import similarity
+
+    monkeypatch.setattr(similarity, "AUTO_TARGET_CLUSTER", 20)
+    monkeypatch.setattr(similarity, "_KMEANS_MEMO", {})
+    _check_vector_family(spark, sf_dir, ddb, 40)
+
+
+@pytest.mark.slow
+def test_vector_family_sf01(spark, sf_dir):
+    """The same check on the 2,000-vector sf0.1 tables (a sibling of
+    the test tables' directory), where auto resolves to k=40
+    unpatched."""
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    if not os.path.isdir(sf01):
+        pytest.skip(f"no sf0.1 test data at {sf01}")
+    _check_vector_family(spark, sf01, _duck(sf01), 40)
 
 
 def test_rows_only_queries_run(spark, sf_dir):
@@ -158,23 +283,6 @@ def test_bench_keys_are_query_keys():
     import bench_registry
 
     assert set(bench_keys) - {"extract_turns"} == set(bench_registry.FRAMES)
-
-
-def test_assign_paths_agree(spark, sf_dir):
-    """The literal-projection and broadcast-join centroid assignment
-    paths must be bit-equal (same quantized dots, same tie-break) —
-    the oracle covers the literal path; this pins the large-k path to
-    it."""
-    from service1_text_extraction_spark.functions import similarity
-    from service1_text_extraction_spark.functions.spread import read_spread
-
-    e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = similarity._kmeans_centroids(spark, sf_dir)
-    lit = similarity._assigned(spark, e, cents, use_join=False)
-    join = similarity._assigned(spark, e, cents, use_join=True)
-    a = {r.vec_id: r.list_id for r in lit.collect()}
-    b = {r.vec_id: r.list_id for r in join.collect()}
-    assert a == b
 
 
 def test_decontaminate_two_table_form(spark, sf_dir, tmp_path):
@@ -267,83 +375,6 @@ def test_cc_driver_and_distributed_agree(spark, sf_dir):
         )
     )
     assert mh_drv == mh_dst and mh_drv
-
-
-def _mock_centroids(spark, sf_dir, k):
-    """k > join/arrow thresholds: fake centroids shaped like real ones
-    (6-dp-rounded doubles), so the large-k paths engage on the small
-    test corpus."""
-    from service1_text_extraction_spark.functions.spread import read_spread
-
-    rows = (
-        read_spread(spark, sf_dir, "embeddings")
-        .orderBy("vec_id")
-        .limit(k)
-        .collect()
-    )
-    return [[round(float(x), 6) for x in r.embedding] for r in rows]
-
-
-def test_assign_arrow_large_k(spark, sf_dir):
-    """At k > ASSIGN_ARROW_K the default assignment path is the
-    Arrow numpy fold; it must be bit-equal to BOTH the centroid-literal
-    projection and the broadcast-join struct-max (the fold performs
-    the identical IEEE op sequence per element — _fold_dots)."""
-    from service1_text_extraction_spark.functions import similarity
-    from service1_text_extraction_spark.functions.spread import read_spread
-
-    e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = _mock_centroids(spark, sf_dir, similarity.ASSIGN_BROADCAST_K + 6)
-    arrow = {
-        r.vec_id: r.list_id
-        for r in similarity._assigned(spark, e, cents).collect()
-    }
-    lit = {
-        r.vec_id: r.list_id
-        for r in similarity._assigned(
-            spark, e, cents, use_join=False
-        ).collect()
-    }
-    join = {
-        r.vec_id: r.list_id
-        for r in similarity._assigned(
-            spark, e, cents, use_join=True
-        ).collect()
-    }
-    assert arrow == lit == join and arrow
-
-
-def test_probe_paths_agree(spark, sf_dir):
-    """_probe_lists' three strategies (literal structs, broadcast-join
-    window, Arrow top-P) must produce the identical ranked probe table
-    at large k, and probe_rank 1 must reproduce the
-    primary assignment."""
-    from service1_text_extraction_spark.functions import similarity
-    from service1_text_extraction_spark.functions.spread import read_spread
-
-    e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = _mock_centroids(spark, sf_dir, similarity.ASSIGN_BROADCAST_K + 6)
-    probes = 3
-
-    def key(df):
-        return sorted(
-            (r.vec_id, r.probe_rank, r.list_id) for r in df.collect()
-        )
-
-    arrow = key(similarity._probe_lists(spark, e, cents, probes))
-    small = key(
-        similarity._probe_lists(spark, e, cents, probes, use_join=False)
-    )
-    join = key(
-        similarity._probe_lists(spark, e, cents, probes, use_join=True)
-    )
-    assert arrow == small == join and arrow
-    primary = {
-        r.vec_id: r.list_id
-        for r in similarity._assigned(spark, e, cents).collect()
-    }
-    rank1 = {v: li for (v, pr, li) in arrow if pr == 1}
-    assert rank1 == primary
 
 
 def _tiny_documents(spark, tmp_path, rows):

@@ -415,3 +415,35 @@ def test_scan_reads_headers_with_long_runs():
     header = b"\n" + b"0" * 99 + b"5 0" + b" " * 100 + b"obj"
     data = data.replace(b"\n5 0 obj", header)
     assert pdf.extract_pdf(data).pages[0].text == "long header runs"
+
+
+def test_corrupt_flate_stream_fails_clean():
+    """Corrupt Flate bytes in a content stream are a parse failure of
+    that document, not a kernel error."""
+    data = pdfgen.build_pdf(
+        [pdfgen.simple_page([(72, 700, ["flate text"])])], compress=True
+    )
+    at = data.index(b"stream\n") + len(b"stream\n")
+    data = data[:at] + bytes(8) + data[at + 8:]
+    with pytest.raises(pdf.PdfError, match="stream decode failed"):
+        pdf.extract_pdf(data)
+    r = payload.extract_turn(base64.b64encode(data).decode("ascii"))
+    assert r.method == "failed"
+    assert r.error.startswith("pdf parse failed: stream decode failed")
+
+
+@pytest.mark.parametrize(
+    "digits",
+    [
+        5_000,  # past int()'s 4,300-digit string limit: ValueError
+        400,  # parses as int, past float's range: OverflowError
+    ],
+)
+def test_oversized_numeric_operand_fails_clean(digits):
+    content = b"BT 1 0 0 1 " + b"9" * digits + b" 700 Tm (x) Tj ET"
+    data = pdfgen.build_pdf([content])
+    with pytest.raises(pdf.PdfError, match="content stream"):
+        pdf.extract_pdf(data)
+    r = payload.extract_turn(base64.b64encode(data).decode("ascii"))
+    assert r.method == "failed"
+    assert r.error.startswith("pdf parse failed: content stream")

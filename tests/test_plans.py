@@ -257,8 +257,8 @@ def test_lsh_bucket_is_per_row(spark, sf_dir):
 
 
 def test_ivf_assignment_is_sort_free(spark, sf_dir):
-    """Nearest-list assignment must be a partial-aggregating struct-max,
-    not a row_number window (which forces a per-vector sort)."""
+    """Nearest-list assignment must be a per-row argmax, not a
+    row_number window (which forces a per-vector sort)."""
     plan = _plan(similarity.ivf_ann_topk(spark, sf_dir))
     assert "Window" not in plan, plan
 
@@ -292,8 +292,8 @@ def test_textstats_tokenize_once(spark, sf_dir):
 
 
 def test_kmeans_assignment_is_pure_projection(spark, sf_dir):
-    """The final k-means assignment must be a per-row expression over
-    centroid literals: no Exchange in the plan at all."""
+    """The final k-means assignment must be a per-row map over the
+    centroids: no Exchange in the plan at all."""
     from service1_text_extraction_spark.functions import similarity
 
     plan = _plan(similarity.kmeans_assign(spark, sf_dir))
@@ -443,14 +443,12 @@ def test_capped_buckets_in_neardup_pipelines(spark, sf_dir):
         assert _window_below_collect(_plan(q(spark, sf_dir))), q.__name__
 
 
-def test_large_k_assignment_broadcasts_centroids(spark):
-    """At k > ASSIGN_ARROW_K the default assignment is the Arrow
-    fold (map-only, bounded plan); the UDF-free fallback
-    (use_join=True) must broadcast the centroid TABLE
-    (BroadcastNestedLoopJoin + one partial-aggregated exchange).
-    Neither may inline a k x dim literal expression tree. Exercises
-    an array<double> embedding column — the arrow fold must not
-    round-trip doubles through float32."""
+def test_large_k_assignment_scores_double_embeddings(spark):
+    """The assignment is one Arrow fold whose plan does not grow with
+    k: 100 centroids inline no k x dim literal expression tree. It
+    exercises an array<double> embedding column — the fold must not
+    round-trip doubles through float32 — and must return the argmax
+    dot."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -459,23 +457,14 @@ def test_large_k_assignment_broadcasts_centroids(spark):
         "vec_id long, embedding array<double>",
     )
     cents = [[float(x) for x in rng.standard_normal(8)] for _ in range(100)]
-    df = similarity._assigned(spark, e, cents)  # auto-selects arrow path
+    df = similarity._assigned(e, cents)
     plan = _plan(df)
     assert "ArrowEvalPython" in plan, plan
-    join_df = similarity._assigned(spark, e, cents, use_join=True)
-    join_plan = _plan(join_df)
-    assert (
-        "BroadcastNestedLoopJoin" in join_plan
-        or "BroadcastHashJoin" in join_plan
-    )
-    # bounded expression trees: no 100-way greatest() literal chain
-    for p in (plan, join_plan):
-        assert "greatest" not in p
-        assert len(p) < 100_000, len(p)
-    # argmax semantics hold and both paths agree bit-for-bit
+    # bounded expression tree: no 100-way greatest() literal chain
+    assert "greatest" not in plan
+    assert len(plan) < 100_000, len(plan)
     arr = np.array(cents)
     rows = {r.vec_id: r.list_id for r in df.collect()}
-    assert rows == {r.vec_id: r.list_id for r in join_df.collect()}
     for r in e.collect():
         dots = arr @ np.array(r.embedding)
         assert rows[r.vec_id] == int(np.argmax(dots)), r.vec_id
@@ -612,24 +601,22 @@ def test_sample_exact_quota_two_phase_plan(spark, sf_dir):
 
 
 def test_large_k_assign_and_probe_are_maponly_arrow(spark, sf_dir):
-    """At k > ASSIGN_ARROW_K the default assign/probe paths must be
-    Arrow-vectorized per-row maps: ArrowEvalPython in the plan and NO
-    Exchange — the join fallback's n x k expansion (exchange into a
-    groupBy/window) is exactly what the arrow path exists to avoid."""
+    """At a k the auto grid reaches on larger corpora (40, trained on
+    the test table) assign and probe are Arrow-vectorized per-row
+    maps: ArrowEvalPython in the plan and NO Exchange — scoring never
+    expands a vector into k rows."""
     from service1_text_extraction_spark.functions import similarity
     from service1_text_extraction_spark.functions.spread import read_spread
 
     e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    rows = e.orderBy("vec_id").limit(
-        similarity.ASSIGN_BROADCAST_K + 6
-    ).collect()
-    cents = [[round(float(x), 6) for x in r.embedding] for r in rows]
+    cents = similarity._kmeans_centroids(spark, sf_dir, 40)
+    assert len(cents) == 40
 
-    assign_plan = _plan(similarity._assigned(spark, e, cents))
+    assign_plan = _plan(similarity._assigned(e, cents))
     assert "ArrowEvalPython" in assign_plan, assign_plan
     assert _n_algo_exchanges(assign_plan) == 0, assign_plan
 
-    probe_plan = _plan(similarity._probe_lists(spark, e, cents, 3))
+    probe_plan = _plan(similarity._probe_lists(e, cents, 3))
     assert "ArrowEvalPython" in probe_plan, probe_plan
     assert _n_algo_exchanges(probe_plan) == 0, probe_plan
 
