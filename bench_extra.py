@@ -75,9 +75,9 @@ def main() -> None:
     queries = {
         "extract_turns": bench_extract,
     }
-    import bench_registry
+    from bench_registry import FRAMES
 
-    queries.update(bench_registry.build(spark, SF_DIR, q))
+    queries.update({name: q(fn) for name, fn in FRAMES.items()})
 
     names = list(queries) if run_all else args
     unknown = [n for n in names if n not in queries]
@@ -91,7 +91,7 @@ def main() -> None:
             if name == "extract_turns":
                 df = run_extraction(spark, transcripts, n_buckets=64)
             else:
-                df = bench_registry.frame(spark, SF_DIR, name)
+                df = FRAMES[name](spark, SF_DIR)
             with open(os.path.join(plan_dir, f"{name}.txt"), "w") as fh:
                 with redirect_stdout(fh):
                     df.explain("formatted")

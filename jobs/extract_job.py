@@ -15,10 +15,12 @@ the window+write stage runs on at most --n-buckets tasks (each writing
 one file per bucket it owns), unevenly loaded where bucket ids collide
 in the hash: pick --n-buckets well above the cluster's core count.
 
-For pathological input layouts (non-splittable sources that co-locate
-a giant conversation) add --pre-shuffle [--salt 64]: a pre-UDF salted
-repartition spreads the skew; without --pre-shuffle the plan has a
-single exchange and --salt is rejected.
+An input that scans narrower than the cluster's parallelism (a
+non-splittable source, one row group holding a giant conversation) is
+hash-repartitioned on (conv_id, turn_idx) before the extraction UDF;
+a wide input is not, and its plan has the single exchange.
+--shuffle-partitions sets spark.sql.shuffle.partitions, the session's
+default partition count for the window exchange.
 
 Sandbox smoke (local mode):
 
@@ -50,19 +52,9 @@ def main() -> None:
     p.add_argument("--output", required=True)
     p.add_argument("--markers", required=True)
     p.add_argument("--n-buckets", type=int, default=64)
-    p.add_argument(
-        "--pre-shuffle",
-        action="store_true",
-        help="opt-in pre-UDF salted repartition for skewed layouts",
-    )
-    p.add_argument("--salt", type=int, default=None)
     p.add_argument("--lineage-id", default=None)
     p.add_argument("--shuffle-partitions", type=int, default=None)
     args = p.parse_args()
-    if args.salt is not None and not args.pre_shuffle:
-        raise SystemExit("--salt requires --pre-shuffle")
-    if args.salt is not None and args.salt <= 0:
-        raise SystemExit("--salt must be > 0")
     if args.n_buckets <= 0:
         raise SystemExit("--n-buckets must be > 0")
 
@@ -92,8 +84,6 @@ def main() -> None:
         args.markers,
         lineage_id=args.lineage_id,
         n_buckets=args.n_buckets,
-        salt=args.salt,
-        pre_shuffle=args.pre_shuffle,
     )
     print(json.dumps(stats))
     spark.stop()

@@ -9,19 +9,22 @@ serially on one core (measured at sf1.0: the MinHash signature UDF is
 guide prescribes for an unsplittable input is to repartition right
 after the read.
 
-``read_spread``, the one reader of the driver tables, does that
-ADAPTIVELY: only when the planned scan has fewer partitions than the
-session's parallelism. On a real corpus (many files / many row groups,
->= cores scan tasks) the condition is false and the plan is untouched —
-the spread never fires at 100 TB; it exists precisely for inputs whose
-layout undercuts the cluster. The exchange it adds hashes the scan's
-raw rows on the table's unique id (the repartition sits directly on
-the read, before any projection, so column pruning still reaches the
+``spread`` is the one rule for that, used by ``read_spread`` (the
+reader of the documents, embeddings and events tables) and by
+``run_extraction`` (before the extraction UDF). It is ADAPTIVE: it fires only when the frame has
+fewer partitions than the session's parallelism. On a real corpus
+(many files / many row groups, >= cores scan tasks) the condition is
+false and the plan is untouched — the spread never fires at 100 TB; it
+exists precisely for inputs whose layout undercuts the cluster. The
+exchange it adds hashes the rows on a key the caller names as unique
+(a repartition directly on a read still lets column pruning reach the
 scan and pushed filters stay pushed — Catalyst moves both through a
 Repartition node).
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,20 +34,43 @@ _TABLE_KEYS = {
     "documents": "doc_id", "embeddings": "vec_id", "events": "event_id"
 }
 
+# physical-plan nodes whose partitioning is not the input's layout, and
+# which building the frame's RDD would run as Spark jobs (shuffle and
+# broadcast stages under AQE, subqueries and broadcasts without it)
+_SHUFFLED_PLAN = re.compile(
+    r"^[\s:+\-*()\d]*(?:AdaptiveSparkPlan|\w*Exchange|\w*Subquery)", re.M
+)
+
+
+def spread(df: DataFrame, *keys: str) -> DataFrame:
+    """``df`` hash-repartitioned on ``keys`` to the session's
+    parallelism iff it has fewer partitions than that; ``df`` itself
+    otherwise.
+
+    The partition count is read only from a plan without an exchange
+    or a subquery, where building the RDD runs no Spark job. A frame
+    whose plan has one is left alone: its partitioning comes from that
+    shuffle, not from the file layout.
+
+    The spread HASH-partitions on ``keys``, which should be unique per
+    row: deterministic under task retries like any hash exchange, and —
+    unlike keyless ``repartition(n)`` — free of the
+    sortBeforeRepartition local sort, which on a text-heavy table costs
+    more than the shuffle itself (guide §2.5: derive synthetic spread
+    keys deterministically; a unique key hashes uniformly)."""
+    plan = df._jdf.queryExecution().executedPlan().treeString()
+    if _SHUFFLED_PLAN.search(plan):
+        return df
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < n:
+        return df.repartition(n, *map(F.col, keys))
+    return df
+
 
 def read_spread(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Read ``{sf_dir}/{table}.parquet`` and spread it across the
-    session's cores iff its planned scan has fewer partitions (an
-    unsplittable / few-row-group input); the bare read otherwise.
-
-    The spread HASH-partitions on the table's unique id: deterministic
-    under task retries like any hash exchange, and — unlike keyless
-    ``repartition(n)`` — free of the sortBeforeRepartition local sort,
-    which on a text-heavy table costs more than the shuffle itself
-    (guide §2.5: derive synthetic spread keys deterministically; a
-    unique id hashes uniformly)."""
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-    n = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n, F.col(_TABLE_KEYS[table]))
-    return df
+    """Read ``{sf_dir}/{table}.parquet``, spread on the table's unique
+    id when its planned scan is narrower than the session (an
+    unsplittable / few-row-group input)."""
+    return spread(
+        spark.read.parquet(f"{sf_dir}/{table}.parquet"), _TABLE_KEYS[table]
+    )

@@ -14,8 +14,9 @@ that can stand in for it end to end:
 by ``pdfgen.build_scanned_pdf``), so the hook is driven by actual
 pixels flowing through the PDF container — never a canned string. A
 production deployment swaps :func:`glyph_ocr` for a Tesseract wrapper
-via :func:`payload.set_ocr_hook`; the pipeline contract (gate-fail ->
-render -> OCR -> re-gate -> method tag ``ocr``) is identical.
+(``extract_turn(..., ocr=...)``, or the ``run_extraction(ocr_hook=...)``
+spec); the pipeline contract (gate-fail -> render -> OCR -> re-gate ->
+method tag ``ocr``) is identical.
 """
 
 from __future__ import annotations

@@ -11,11 +11,12 @@ row (``:410-416``): empty text, method ``failed``.
 
 Methods: ``html`` | ``pdf`` | ``ocr`` | ``text`` | ``failed``
 (reference: ``fitz`` | ``tesseract`` | ``failed``). The ``ocr`` path
-is a pluggable hook (:func:`set_ocr_hook`): no OCR binary ships in
-this sandbox, so the default hook is None and gate failures produce
-the reference's no-tesseract failure row — but a deployment with
-tesseract wires it in without touching the pipeline, and the method
-tag + gate semantics are already exercised by tests with a fake hook.
+is a pluggable hook (``extract_turn``'s ``ocr`` argument): no OCR
+binary ships with the package, so the default hook is None and gate
+failures produce the reference's no-tesseract failure row — but a
+deployment with tesseract wires it in without touching the pipeline,
+and the method tag + gate semantics are already exercised by tests
+with a fake hook.
 """
 
 from __future__ import annotations
@@ -32,39 +33,18 @@ from .pdf import PdfError, extract_pdf
 # The service's quality gate (document_text_extraction_service.py:174-178).
 MIN_PDF_TEXT_LENGTH = 250
 
-# F5 OCR fallback hook (reference core_pdf_processor.py:467-495 runs
-# tesseract over page images when the structured extraction fails the
-# gate). Signature: (pdf_bytes, passwords=None) -> extracted text; the
-# candidate passwords let a hook open encrypted documents.
-_OCR_HOOK = None
-
 
 def resolve_ocr_hook(spec: str):
-    """Resolve a ``"package.module:callable"`` hook spec and install it
-    via :func:`set_ocr_hook`. This is the worker-side installation
-    path: a string spec serializes into a UDF closure (a callable from
-    the driver would not reach executor Python workers), so
-    ``run_extraction(ocr_hook="pkg.mod:fn")`` works on any cluster.
-    Returns the installed callable."""
+    """The OCR callable a ``"package.module:callable"`` spec names.
+    This is the worker-side path: a string spec serializes into a UDF
+    closure (a callable from the driver would not reach executor
+    Python workers), so ``run_extraction(ocr_hook="pkg.mod:fn")``
+    works on any cluster."""
     import importlib
 
     mod, _, name = spec.partition(":")
-    fn = getattr(importlib.import_module(mod), name)
-    set_ocr_hook(fn)
-    return fn
+    return getattr(importlib.import_module(mod), name)
 
-
-def set_ocr_hook(fn) -> None:
-    """Install (or clear, with None) the OCR fallback used when a PDF
-    fails the quality gate.
-
-    Cluster note: Spark executors run separate Python workers, so a
-    hook set on the driver does not propagate — a deployment installs
-    it at module-import time on the workers (e.g. a small wrapper
-    module shipped via --py-files that imports payload and calls
-    set_ocr_hook before the UDF runs)."""
-    global _OCR_HOOK
-    _OCR_HOOK = fn
 
 # base64 of "%PDF-" is "JVBERi0"; payloads are sniffed, not trusted.
 _B64_PDF_PREFIX = "JVBER"
@@ -131,7 +111,7 @@ def _failed(error: str, bytes_in: int) -> TurnResult:
 
 
 def extract_turn(
-    payload: str | None, passwords: list[str] | None = None
+    payload: str | None, passwords: list[str] | None = None, ocr=None
 ) -> TurnResult:
     """Decode + extract + quality-gate one turn payload.
 
@@ -139,20 +119,28 @@ def extract_turn(
     tried after the empty password; the match surfaces as
     ``password_used``).
 
+    ``ocr``: the F5 OCR fallback (reference core_pdf_processor.py:
+    467-495 runs tesseract over page images when the structured
+    extraction fails the gate), consulted only for a PDF that fails
+    the quality gate. Signature: ``(pdf_bytes, passwords=None) ->
+    text``; the candidate passwords let it open encrypted documents.
+    Its output is re-gated, and any exception it raises counts as a
+    failed OCR.
+
     Never raises: any unexpected kernel failure becomes a ``failed``
     row carrying the error (the reference likewise stores per-row
     ``error_message``, core_pdf_processor.py:352) — one hostile payload
     must not kill a whole 10k-row Arrow batch task.
     """
     try:
-        return _extract_turn_inner(payload, passwords)
+        return _extract_turn_inner(payload, passwords, ocr)
     except Exception as e:  # noqa: BLE001 - task-survival boundary
         nbytes = len(payload.encode("utf-8", "ignore")) if payload else 0
         return _failed(f"kernel error: {type(e).__name__}: {e}", nbytes)
 
 
 def _extract_turn_inner(
-    payload: str | None, passwords: list[str] | None = None
+    payload: str | None, passwords: list[str] | None, ocr
 ) -> TurnResult:
     if payload is None or not payload.strip():
         return _failed("empty payload", 0)
@@ -195,9 +183,9 @@ def _extract_turn_inner(
                 result.joined_layout(),
                 result.password_used or "",
             )
-        if _OCR_HOOK is not None:
+        if ocr is not None:
             try:
-                raw_ocr = _OCR_HOOK(raw, passwords=passwords)
+                raw_ocr = ocr(raw, passwords=passwords)
                 ocr_text = textnorm.clean_unicode(raw_ocr).strip()
             except Exception:  # noqa: BLE001 - hook errors -> failure row
                 ocr_text = ""

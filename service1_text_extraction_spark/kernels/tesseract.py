@@ -1,7 +1,7 @@
 """Tesseract-parity OCR wrapper (the production F5 hook).
 
 Ships the reference service's exact Tesseract configuration as a
-``payload.set_ocr_hook`` implementation for binary-equipped
+``payload.extract_turn`` ``ocr`` hook for binary-equipped
 deployments. Reference constants, verbatim (cited so the parity is
 checkable):
 
@@ -34,7 +34,8 @@ reference's ``_is_garbage_text`` retry condition. The command-line
 contract is pinned by a stubbed-runner test; the real-binary test
 self-skips when ``tesseract`` is absent (tests/test_ocr.py).
 
-Cluster install (see payload.set_ocr_hook's worker-side note)::
+Cluster install (the spec resolves on each worker, see
+payload.resolve_ocr_hook)::
 
     run_extraction(..., ocr_hook=tesseract.HOOK_SPEC)
 """
@@ -257,7 +258,7 @@ def tesseract_ocr(
     passwords: list[str] | None = None,
     runner=None,
 ) -> str:
-    """``payload.set_ocr_hook``-compatible entry point: locate every
+    """``extract_turn(ocr=...)``-compatible entry point: locate every
     8-bit gray /Image XObject (decoded through the document's real
     filter/decrypt chain, candidate ``passwords`` included), run the
     two-pass Tesseract config over each, concatenate page texts in

@@ -43,12 +43,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .extract import (
-    DEFAULT_N_BUCKETS,
-    _check_salt,
-    run_extraction,
-    with_bucket,
-)
+from .extract import DEFAULT_N_BUCKETS, run_extraction, with_bucket
 
 MARKER_SCHEMA = StructType(
     [
@@ -153,8 +148,6 @@ def run_with_resume(
     *,
     lineage_id: str | None = None,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    salt: int | None = None,
-    pre_shuffle: bool = False,
     fail_after_buckets: int | None = None,
 ) -> dict:
     """Run the job, skipping buckets already marked done.
@@ -167,7 +160,6 @@ def run_with_resume(
     """
     if fail_after_buckets is not None and fail_after_buckets < 0:
         raise ValueError("fail_after_buckets must be >= 0")
-    _check_salt(salt)
     lineage_id = lineage_id or uuid.uuid4().hex
     bucketed = with_bucket(transcripts, n_buckets)
     markers = read_markers(spark, markers_dir)
@@ -204,13 +196,7 @@ def run_with_resume(
     written = []
     if pending is not None:
         extracted, obs = _observe_markers(
-            run_extraction(
-                spark,
-                pending.drop("bucket_id"),
-                n_buckets=n_buckets,
-                salt=salt,
-                pre_shuffle=pre_shuffle,
-            )
+            run_extraction(spark, pending.drop("bucket_id"), n_buckets=n_buckets)
         )
         # dynamic partition overwrite: a crash between the data write and
         # the marker write leaves the bucket unmarked; the rerun then

@@ -5,8 +5,8 @@ Restates the reference's whole background pipeline
 fan-out -> per-page extract -> quality gate -> sink + status writeback)
 as one declarative DataFrame program:
 
-    read -> pending filter -> extract_turn pandas UDF (Arrow batches,
-    on scan partitions) -> windows over bucket_id (hash exchange on
+    read -> pending filter -> spread if narrow -> extract_turn pandas
+    UDF (Arrow batches) -> windows over bucket_id (hash exchange on
     bucket_id) for stable per-conversation turn order + doc-level char
     offsets -> outputs
 
@@ -29,15 +29,16 @@ local[N]):
   the cluster's core count. Callers that use neither ``turn_seq`` nor
   ``doc_char_offset`` (document assembly, metrics, the stream sink)
   let the optimizer prune the window and its exchange.
-- Skew: the UDF is a pure per-row map, so it runs directly on scan
+- Skew: the UDF is a pure per-row map, so it runs on the input's
   partitions (byte-sized splits spread one 10^6-turn conversation's
   payloads over many tasks automatically); only the far smaller
-  extracted output crosses the exchange. For pathological layouts
-  (non-splittable sources that co-locate a giant conversation) an
-  opt-in pre-UDF repartition on ``(bucket_id, pmod(turn_idx, salt))``
-  spreads it over ``salt`` shuffle keys. Turn order is restored by the
-  window, so neither mode changes the output (asserted by tests at
-  different partition counts).
+  extracted output crosses the ordering exchange. An input narrower
+  than the session (a non-splittable source, one row group holding a
+  giant conversation, a micro-batch of few files) would put the whole
+  kernel on one task, so ``functions/spread.spread`` first
+  hash-repartitions it on ``(conv_id, turn_idx)`` — unique per turn,
+  so no key straggles — to the session's parallelism. Turn order is
+  restored by the window, so the spread never changes the output.
 - The UDF is a scalar Arrow-batched pandas UDF returning a struct —
   one Python invocation per ~10k-row batch, no per-row Python at the
   Spark level (per-payload parsing inside the batch is the kernel).
@@ -46,8 +47,6 @@ local[N]):
 """
 
 from __future__ import annotations
-
-import warnings
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -62,7 +61,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernels.payload import extract_turn
+from ..functions.spread import spread
+from ..kernels.payload import extract_turn, resolve_ocr_hook
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -89,7 +89,6 @@ RESULT_FIELDS = StructType(
 )
 
 DEFAULT_N_BUCKETS = 64
-DEFAULT_SALT = 16
 
 
 _RESULT_COLUMNS = RESULT_FIELDS.fieldNames()
@@ -131,51 +130,41 @@ def _extract_udf(
 
     ``ocr_spec`` (opt-in) is a ``"package.module:callable"`` OCR-hook
     spec (reference F5 fallback, core_pdf_processor.py:467-561),
-    resolved and installed once per worker via
-    ``payload.resolve_ocr_hook`` — a string survives serialization to
-    executor Python workers where a driver-side callable would not."""
+    resolved once per batch via ``payload.resolve_ocr_hook`` and passed
+    to ``extract_turn`` — a string survives serialization to executor
+    Python workers where a driver-side callable would not."""
     pw_map = pw_map or {}
 
     @F.pandas_udf(RESULT_FIELDS)
     def udf(conv_ids: pd.Series, payloads: pd.Series) -> pd.DataFrame:
-        from ..kernels import payload as payload_mod
-
-        # scope the spec-installed hook to this batch: executor Python
-        # workers are REUSED across jobs, so a hook left in the module
-        # global would silently leak into later hook-less runs
-        prev_hook = payload_mod._OCR_HOOK
-        if ocr_spec:
-            payload_mod.resolve_ocr_hook(ocr_spec)
-        try:
-            memo: dict[tuple, tuple] = {}
-            rows = []
-            for conv_id, payload in zip(conv_ids, payloads):
-                # str() mirrors the map's build-time key coercion — an
-                # integer conv_id column must still hit its entry
-                pws = pw_map.get(
-                    conv_id
-                    if isinstance(conv_id, str)
-                    else str(conv_id)
-                    if conv_id is not None
-                    else ""
+        ocr = resolve_ocr_hook(ocr_spec) if ocr_spec else None
+        memo: dict[tuple, tuple] = {}
+        rows = []
+        for conv_id, payload in zip(conv_ids, payloads):
+            # str() mirrors the map's build-time key coercion — an
+            # integer conv_id column must still hit its entry
+            pws = pw_map.get(
+                conv_id
+                if isinstance(conv_id, str)
+                else str(conv_id)
+                if conv_id is not None
+                else ""
+            )
+            key = (
+                payload if isinstance(payload, str) else "",
+                tuple(pws) if pws else (),
+            )
+            cached = memo.get(key)
+            if cached is None:
+                r = extract_turn(
+                    payload if isinstance(payload, str) else None,
+                    passwords=pws,
+                    ocr=ocr,
                 )
-                key = (
-                    payload if isinstance(payload, str) else "",
-                    tuple(pws) if pws else (),
-                )
-                cached = memo.get(key)
-                if cached is None:
-                    r = extract_turn(
-                        payload if isinstance(payload, str) else None,
-                        passwords=pws,
-                    )
-                    cached = _result_tuple(r)
-                    memo[key] = cached
-                rows.append(cached)
-            return pd.DataFrame(rows, columns=_RESULT_COLUMNS)
-        finally:
-            if ocr_spec:
-                payload_mod.set_ocr_hook(prev_hook)
+                cached = _result_tuple(r)
+                memo[key] = cached
+            rows.append(cached)
+        return pd.DataFrame(rows, columns=_RESULT_COLUMNS)
 
     return udf
 
@@ -193,20 +182,11 @@ def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
     return df.withColumn("bucket_id", bucket_expr(F.col("conv_id"), n_buckets))
 
 
-def _check_salt(salt: int | None) -> None:
-    # checked on the driver: 0 would fail inside a task (pmod by zero)
-    if salt is not None and salt < 1:
-        raise ValueError(f"salt must be >= 1, got {salt}")
-
-
 def run_extraction(
     spark: SparkSession,
     transcripts: DataFrame,
     *,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    salt: int | None = None,
-    shuffle_partitions: int | None = None,
-    pre_shuffle: bool = False,
     passwords: dict[str, list[str]] | None = None,
     ocr_hook: str | None = None,
 ) -> DataFrame:
@@ -230,52 +210,16 @@ def run_extraction(
     resolved on each worker; the in-tree glyph-match implementation is
     ``"service1_text_extraction_spark.kernels.ocr:glyph_ocr"``.
 
-    ``pre_shuffle`` (opt-in) repartitions the raw payloads by
-    ``(bucket_id, turn_idx % salt)`` *before* the UDF. The default
-    skips it: the UDF is a pure per-row map, so scan splits (sized by
-    ``spark.sql.files.maxPartitionBytes``, AQE-coalesced) already
-    spread payload bytes evenly across tasks regardless of conv_id
-    layout — per-conversation skew only matters at the exchange after
-    the UDF, which shuffles the much smaller *extracted* output. The
-    default plan therefore has exactly ONE exchange, the ordering
-    window's hash partitioning on ``bucket_id``, which a
-    ``partitionBy("bucket_id")`` sink reuses; the salted path remains for
-    pathological input layouts (e.g. a non-splittable source where one
-    input partition holds one giant conversation). Output is identical
-    either way (asserted by
-    tests/test_pipeline.py::test_salting_does_not_change_output).
+    The UDF runs on the input's partitions, spread first when the
+    input is narrower than the session (``functions/spread.spread``,
+    hashed on ``(conv_id, turn_idx)``). The plan's other exchange is
+    the ordering window's hash partitioning on ``bucket_id``, which a
+    ``partitionBy("bucket_id")`` sink reuses; a wide input therefore
+    plans exactly that ONE exchange. The output is the same either
+    way: the window restores turn order.
     """
-    _check_salt(salt)
-    if not pre_shuffle and (
-        salt is not None or shuffle_partitions is not None
-    ):
-        # salt/shuffle_partitions only shape the opt-in pre-UDF
-        # shuffle; silently dropping them would hide a caller's skew
-        # intent (they are harmless to the *result*, hence warn).
-        warnings.warn(
-            "run_extraction: salt/shuffle_partitions are ignored unless "
-            "pre_shuffle=True (the default plan has no pre-UDF shuffle); "
-            "pass pre_shuffle=True to apply them",
-            stacklevel=2,
-        )
-    df = with_bucket(
-        transcripts.select("conv_id", "turn_idx", "role", "tool", "text", "ts"),
-        n_buckets,
-    )
-
-    if pre_shuffle:
-        # Skew-aware spread: a huge conversation lands on `salt` distinct
-        # shuffle keys instead of one. Order is restored by the window.
-        salt_key = F.pmod(
-            F.col("turn_idx").cast("long"),
-            F.lit(salt if salt is not None else DEFAULT_SALT),
-        )
-        if shuffle_partitions:
-            df = df.repartition(
-                shuffle_partitions, F.col("bucket_id"), salt_key
-            )
-        else:
-            df = df.repartition(F.col("bucket_id"), salt_key)
+    turns = transcripts.select("conv_id", "turn_idx", "role", "tool", "text", "ts")
+    df = with_bucket(spread(turns, "conv_id", "turn_idx"), n_buckets)
 
     pw_map = (
         {str(k): list(v)[:3] for k, v in passwords.items()}

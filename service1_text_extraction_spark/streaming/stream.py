@@ -93,15 +93,11 @@ def stream_extract(
     """
 
     def per_batch(batch_df):
-        # pre_shuffle stays ON in the stream: a micro-batch is a
-        # handful of files (maxFilesPerTrigger=16), so scan splits are
-        # few and one giant conversation CAN pin a task — exactly the
-        # pathological layout the salted spread exists for. (The batch
-        # job defaults to no pre-shuffle because a full corpus scan
-        # has plentiful byte-splits.)
+        # a micro-batch is a handful of files (maxFilesPerTrigger=16),
+        # so it may scan narrower than the session; run_extraction
+        # then spreads it before the UDF, as it would any narrow input
         out = run_extraction(
-            batch_df.sparkSession, batch_df, n_buckets=n_buckets,
-            pre_shuffle=True,
+            batch_df.sparkSession, batch_df, n_buckets=n_buckets
         )
         # turn_seq / doc_char_offset are per-conversation *global*
         # ordering columns; a file stream may split one conversation

@@ -17,12 +17,6 @@ LINES = [
 TEXT = "\n".join(LINES)
 
 
-@pytest.fixture(autouse=True)
-def _clear_hook():
-    yield
-    payload.set_ocr_hook(None)
-
-
 def test_font_atlas_is_unambiguous():
     assert len(set(ocr.FONT_3X5.values())) == len(ocr.FONT_3X5)
 
@@ -52,8 +46,7 @@ def test_gate_fail_routes_through_ocr_hook():
     r = payload.extract_turn(b64)
     assert r.method == "failed" and "no OCR fallback" in (r.error or "")
 
-    payload.set_ocr_hook(ocr.glyph_ocr)
-    r = payload.extract_turn(b64)
+    r = payload.extract_turn(b64, ocr=ocr.glyph_ocr)
     assert r.method == "ocr", (r.method, r.error)
     assert "SCANNED LINE 3" in r.text
     assert r.chars_out == len(r.text) >= 250
@@ -62,8 +55,10 @@ def test_gate_fail_routes_through_ocr_hook():
 def test_ocr_garbage_output_still_fails_gate():
     """An OCR that returns junk must not bypass the re-gate."""
     data = pdfgen.build_scanned_pdf(LINES)
-    payload.set_ocr_hook(lambda raw, passwords=None: "#$%" * 200)
-    r = payload.extract_turn(base64.b64encode(data).decode("ascii"))
+    r = payload.extract_turn(
+        base64.b64encode(data).decode("ascii"),
+        ocr=lambda raw, passwords=None: "#$%" * 200,
+    )
     assert r.method == "failed"
 
 
@@ -116,15 +111,14 @@ def test_ocr_composes_with_password_list():
         resources_extra=" /XObject << /Im1 7 0 R >>",
     )
     b64 = base64.b64encode(data).decode("ascii")
-    payload.set_ocr_hook(ocr.glyph_ocr)
 
-    r = payload.extract_turn(b64, passwords=["scan-pw"])
+    r = payload.extract_turn(b64, passwords=["scan-pw"], ocr=ocr.glyph_ocr)
     assert r.method == "ocr", (r.method, r.error)
     assert "SCANNED LINE 3" in r.text
     assert r.password_used == "scan-pw"
 
     # without the password the parse fails before OCR can help
-    r2 = payload.extract_turn(b64)
+    r2 = payload.extract_turn(b64, ocr=ocr.glyph_ocr)
     assert r2.method == "failed"
     assert "password_required" in (r2.error or "")
 

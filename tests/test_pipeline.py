@@ -1,5 +1,5 @@
-"""End-to-end Spark pipeline tests: golden equality, salt-invariance,
-document assembly, metrics, and exact resume (FIXTURES.md §2-4)."""
+"""End-to-end Spark pipeline tests: golden equality, document
+assembly, metrics, and exact resume (FIXTURES.md §2-4)."""
 
 import runpy
 from pathlib import Path
@@ -50,24 +50,6 @@ def test_per_turn_golden_equality(spark, data):
     ).limit(5).collect()
     assert not bad, f"{mismatches.count()} mismatching turns, e.g. {bad}"
     assert out.count() == len(golden)
-
-
-def test_salting_does_not_change_output(spark, data):
-    """Neither the pre-shuffle opt-in nor its salt/partition-count
-    parameters may change the result (order is restored by the
-    window): no-pre-shuffle == salt 1/2 parts == salt 13/17 parts."""
-    tdf, _, _, _ = data
-    a = run_extraction(
-        spark, tdf, n_buckets=16, salt=1, shuffle_partitions=2,
-        pre_shuffle=True,
-    )
-    b = run_extraction(
-        spark, tdf, n_buckets=16, salt=13, shuffle_partitions=17,
-        pre_shuffle=True,
-    )
-    c = run_extraction(spark, tdf, n_buckets=16)
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-    assert a.exceptAll(c).isEmpty() and c.exceptAll(a).isEmpty()
 
 
 def test_turn_ordering_and_offsets(spark, data):
@@ -406,27 +388,6 @@ def test_n_buckets_validated(spark, tiny, tmp_path, monkeypatch, n_buckets):
         runpy.run_path(str(job), run_name="__main__")
 
 
-@pytest.mark.parametrize("salt", [0, -3])
-def test_salt_validated(spark, tiny, tmp_path, monkeypatch, salt):
-    """A salt below 1 is refused on the driver: 0 used to fail inside
-    a task (pmod by zero, REMAINDER_BY_ZERO)."""
-    tdf, _ = tiny
-    with pytest.raises(ValueError, match="salt"):
-        run_extraction(spark, tdf, n_buckets=4, salt=salt, pre_shuffle=True)
-    out, mk = str(tmp_path / "out"), str(tmp_path / "mk")
-    with pytest.raises(ValueError, match="salt"):
-        run_with_resume(spark, tdf, out, mk, salt=salt, pre_shuffle=True)
-    assert not Path(mk).exists() and not Path(out).exists()
-    job = Path(__file__).resolve().parents[1] / "jobs" / "extract_job.py"
-    monkeypatch.setattr(
-        "sys.argv",
-        [str(job), "--input", "i", "--output", out, "--markers", mk,
-         "--pre-shuffle", "--salt", str(salt)],
-    )
-    with pytest.raises(SystemExit, match="--salt must be > 0"):
-        runpy.run_path(str(job), run_name="__main__")
-
-
 def test_null_and_empty_payloads(spark):
     rows = [
         ("c1", 1, "user", None, None, None),
@@ -509,30 +470,22 @@ def test_ocr_hook_contract():
     assert r.method == "failed" and "no OCR fallback" in (r.error or "")
 
     fake_text = "ocr recovered sentence. " * 20  # > 250 chars, clean
-    payload.set_ocr_hook(lambda raw, passwords=None: fake_text)
-    try:
-        r2 = payload.extract_turn(b64)
-        assert r2.method == "ocr"
-        assert r2.text == fake_text.strip()
-        assert r2.chars_out == len(fake_text.strip())
-        # hook crash -> failed row
-        payload.set_ocr_hook(lambda raw, passwords=None: 1 / 0)
-        r3 = payload.extract_turn(b64)
-        assert r3.method == "failed"
-    finally:
-        payload.set_ocr_hook(None)
+    r2 = payload.extract_turn(b64, ocr=lambda raw, passwords=None: fake_text)
+    assert r2.method == "ocr"
+    assert r2.text == fake_text.strip()
+    assert r2.chars_out == len(fake_text.strip())
+    # hook crash -> failed row
+    r3 = payload.extract_turn(b64, ocr=lambda raw, passwords=None: 1 / 0)
+    assert r3.method == "failed"
     # good PDFs never consult the hook
-    payload.set_ocr_hook(
-        lambda raw, passwords=None: (_ for _ in ()).throw(AssertionError)
+    long_pdf = pdfgen.build_pdf([pdfgen.simple_page(
+        [(72, 700, [f"A full sentence number {i} here." for i in range(12)])]
+    )])
+    r4 = payload.extract_turn(
+        base64.b64encode(long_pdf).decode("ascii"),
+        ocr=lambda raw, passwords=None: (_ for _ in ()).throw(AssertionError),
     )
-    try:
-        long_pdf = pdfgen.build_pdf([pdfgen.simple_page(
-            [(72, 700, [f"A full sentence number {i} here." for i in range(12)])]
-        )])
-        r4 = payload.extract_turn(base64.b64encode(long_pdf).decode("ascii"))
-        assert r4.method == "pdf"
-    finally:
-        payload.set_ocr_hook(None)
+    assert r4.method == "pdf"
 
 
 def test_ocr_hook_type_error_is_a_hook_failure():
@@ -551,13 +504,9 @@ def test_ocr_hook_type_error_is_a_hook_failure():
         calls.append(passwords)
         raise TypeError("hook bug")
 
-    payload.set_ocr_hook(hook)
-    try:
-        r = payload.extract_turn(
-            base64.b64encode(short_pdf).decode("ascii"), passwords=["pw"]
-        )
-    finally:
-        payload.set_ocr_hook(None)
+    r = payload.extract_turn(
+        base64.b64encode(short_pdf).decode("ascii"), passwords=["pw"], ocr=hook
+    )
     assert calls == [["pw"]]
     assert r.method == "failed"
 

@@ -40,13 +40,14 @@ def _exchange_args(plan: str) -> list[str]:
 
 def _n_algo_exchanges(plan: str) -> int:
     """Exchange count EXCLUDING the adaptive input-spread repartition
-    (functions/spread.py). That round-robin exchange exists only
-    because the driver test tables are single-row-group parquet files
-    (an unsplittable input scans as 1-2 tasks, serializing every
-    scan-side UDF/projection); at real scale the scan has >= cores
-    partitions and the spread is a no-op. The algorithmic zero/one-
-    exchange pins below must hold with or without it, so Exchange
-    nodes whose arguments say REPARTITION_BY_NUM are subtracted."""
+    (functions/spread.py). That exchange, a hash partitioning on the
+    table's unique row key, exists only because the test tables are
+    single-row-group parquet files (an unsplittable input scans as
+    1-2 tasks, serializing every scan-side UDF/projection); at real
+    scale the scan has >= cores partitions and the spread is a no-op.
+    The algorithmic zero/one-exchange pins below must hold with or
+    without it, so Exchange nodes whose arguments say
+    REPARTITION_BY_NUM are subtracted."""
     return sum("REPARTITION_BY_NUM" not in a for a in _exchange_args(plan))
 
 
@@ -68,6 +69,20 @@ def _executed_plans(spark, action) -> list[str]:
         for k, e in executions().items()
         if k not in before
     ]
+
+
+def _stage_tasks(spark, group: str) -> list[int]:
+    """Task counts of the stages the job group ran, in stage order
+    (a stage a job skipped, its shuffle output already written, has
+    no completed task and is not counted)."""
+    tracker = spark.sparkContext.statusTracker()
+    stages = {
+        sid
+        for job in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(job).stageIds
+    }
+    infos = [tracker.getStageInfo(sid) for sid in sorted(stages)]
+    return [i.numTasks for i in infos if i is not None and i.numCompletedTasks]
 
 
 def _plan_tree(plan: str) -> str:
@@ -105,12 +120,29 @@ def test_broadcast_joins_chosen(spark, sf_dir):
         )
 
 
-def test_extraction_plan_shape(spark):
-    rows = [("c", 1, "u", "<p>x</p>", None, None)]
-    tdf = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string,"
-        " tool string, ts timestamp"
+def _is_turn_spread(spark, exchange_args: str) -> bool:
+    """Whether an exchange is the spread on the turn key to the
+    session's parallelism."""
+    n = spark.sparkContext.defaultParallelism
+    return re.match(
+        rf"Arguments: hashpartitioning\(conv_id#\d+, turn_idx#\d+, {n}\),"
+        r" REPARTITION_BY_NUM\b",
+        exchange_args,
+    ) is not None
+
+
+def _transcripts(spark, n_convs: int):
+    return spark.createDataFrame(
+        [(f"c{i}", 1, "u", f"<p>x {i}</p>", None, None) for i in range(n_convs)],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp",
     )
+
+
+def test_extraction_plan_shape(spark):
+    """An input at least as wide as the session: no spread."""
+    tdf = _transcripts(spark, 8)
+    assert tdf.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
     plan = _plan(run_extraction(spark, tdf, n_buckets=8))
     assert "ArrowEvalPython" in plan  # vectorized UDF, not BatchEvalPython
     assert "BatchEvalPython" not in plan
@@ -125,18 +157,94 @@ def test_extraction_plan_shape(spark):
     assert "rangepartitioning" not in plan.lower()
 
 
-def test_extraction_plan_shape_pre_shuffle_opt_in(spark):
-    """The salted pre-UDF spread stays available for pathological
-    input layouts: opting in adds exactly the one salt exchange."""
-    rows = [("c", 1, "u", "<p>x</p>", None, None)]
-    tdf = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string,"
-        " tool string, ts timestamp"
-    )
+def test_extraction_plan_shape_narrow_input(spark):
+    """An input narrower than the session gains exactly one exchange,
+    the spread before the UDF: a hash partitioning on the turn's key
+    to the session's parallelism."""
     plan = _plan(
-        run_extraction(spark, tdf, n_buckets=8, salt=4, pre_shuffle=True)
+        run_extraction(spark, _transcripts(spark, 8).coalesce(1), n_buckets=8)
     )
-    assert len(_exchange_args(plan)) == 2, plan
+    spread, ordering = _exchange_args(plan)
+    assert _is_turn_spread(spark, spread), plan
+    assert ordering.startswith("Arguments: hashpartitioning(bucket_id#"), plan
+
+
+def test_narrow_input_spreads_before_the_udf(spark, tmp_path):
+    """One 2,400-turn conversation in ONE parquet row group scans as a
+    single partition. run_extraction spreads it on (conv_id, turn_idx)
+    before the UDF, so the UDF stage runs defaultParallelism tasks
+    instead of one, and the output equals the same rows read from a
+    wide (multi-file) input, where nothing is spread."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n_turns = 2400
+    texts = [
+        f"<html><body><p>turn {t} of the one long conversation</p></body></html>"
+        if t % 3 == 0
+        else f"plain answer number {t % 50}"  # repeats: the memo path
+        for t in range(1, n_turns + 1)
+    ]
+    table = pa.table({
+        "conv_id": ["giant"] * n_turns,
+        "turn_idx": pa.array(range(1, n_turns + 1), pa.int32()),
+        "role": ["user", "assistant"] * (n_turns // 2),
+        "text": texts,
+        "tool": pa.nulls(n_turns, pa.string()),
+        "ts": pa.nulls(n_turns, pa.timestamp("us")),
+    })
+    narrow_path, wide_path = str(tmp_path / "narrow"), str(tmp_path / "wide")
+    (tmp_path / "narrow").mkdir()
+    pq.write_table(table, f"{narrow_path}/part-0.parquet", row_group_size=n_turns)
+    assert pq.ParquetFile(f"{narrow_path}/part-0.parquet").num_row_groups == 1
+    n = spark.sparkContext.defaultParallelism
+    spark.read.parquet(narrow_path).repartition(2 * n).write.parquet(wide_path)
+
+    narrow, wide = spark.read.parquet(narrow_path), spark.read.parquet(wide_path)
+    assert narrow.rdd.getNumPartitions() == 1
+    assert wide.rdd.getNumPartitions() >= n
+
+    a = run_extraction(spark, narrow, n_buckets=16)
+    b = run_extraction(spark, wide, n_buckets=16)
+    spread, _ = _exchange_args(_plan(a))
+    assert _is_turn_spread(spark, spread), spread
+    assert len(_exchange_args(_plan(b))) == 1
+
+    # without the ordering columns the plan is scan -> spread -> UDF:
+    # the scan is one task, the UDF stage after it one per core
+    group = "narrow-input-udf-stage"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        a.drop("turn_seq", "doc_char_offset").write.format("noop").mode(
+            "overwrite"
+        ).save()
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    assert _stage_tasks(spark, group) == [1, n]
+
+    assert a.count() == b.count() == n_turns
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def test_spread_runs_no_job_over_an_exchange(spark):
+    """Building a frame never runs a Spark job. Over an input whose
+    plan has an exchange (a groupBy joined back), reading the RDD's
+    partition count would run the shuffle and broadcast stages, so
+    neither spread nor run_extraction may probe it."""
+    from service1_text_extraction_spark.functions.spread import spread
+
+    tdf = _transcripts(spark, 8)
+    shuffled = tdf.join(tdf.groupBy("conv_id").count(), "conv_id").drop("count")
+    group = "construct-over-exchange"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        kept = spread(shuffled, "conv_id", "turn_idx")
+        run_extraction(spark, shuffled, n_buckets=8)
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    tracker = spark.sparkContext.statusTracker()
+    assert list(tracker.getJobIdsForGroup(group)) == []
+    assert kept is shuffled
 
 
 def test_resume_write_plan_shape(spark, tmp_path):
@@ -207,15 +315,16 @@ def test_extraction_exchange_pruned_with_window(spark):
 
 def test_stream_batch_write_plan_shape(spark, tmp_path):
     """Each micro-batch write of stream_extract drops the ordering
-    columns, so its plan has the salted pre-UDF exchange and nothing
-    after it: no window, no bucket_id exchange."""
+    columns: no window, no bucket_id exchange. A micro-batch of one
+    file scans narrower than the session, so its one exchange is the
+    spread before the UDF."""
     inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
     spark.createDataFrame(
         [(f"c{i}", t, "user", f"<p>turn {t}</p>", None, None)
          for i in range(6) for t in (1, 2)],
         "conv_id string, turn_idx int, role string, text string,"
         " tool string, ts timestamp",
-    ).write.parquet(inp)
+    ).coalesce(1).write.parquet(inp)
 
     def run():
         q = stream_extract(spark, inp, out, ckpt, n_buckets=8)
@@ -230,7 +339,7 @@ def test_stream_batch_write_plan_shape(spark, tmp_path):
     tree = _plan_tree(writes[0])
     assert "Window" not in tree, writes
     assert len(re.findall(r"\bExchange \(\d+\)", tree)) == 1, writes
-    assert all("pmod(" in a for a in _exchange_args(writes[0])), writes
+    assert all(_is_turn_spread(spark, a) for a in _exchange_args(writes[0])), writes
 
 
 def test_aggregates_partial_combine(spark, sf_dir):
