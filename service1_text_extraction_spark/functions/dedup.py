@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .spread import read_spread
+from .spread import read_spread, read_table
 
 N_MINHASH = 8
 BAND_SIZE = 4  # 2 bands of 4 -> candidates need one identical half-signature
@@ -81,7 +81,7 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     more than the single-pass hash it would parallelize (A/B at
     sf1.0: 0.8 s spread vs 0.4 s raw)."""
     return (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
         .groupBy(F.md5(F.col("text")).alias("text_md5"))
         .agg(
             F.min("doc_id").cast("long").alias("keeper_id"),
@@ -812,15 +812,14 @@ def c4_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     through one partition). The join back is keyed on the same 16-byte
     hash; kept span INDICES (ints, bounded by doc length /
     LINE_TOKENS) aggregate per doc, and the final projection re-derives
-    span text from the documents table itself. Three scan branches
-    total (the span-hash stream feeds BOTH sides of the
-    first-occurrence join, plus the reassembly scan), each tokenizing
-    exactly once into a materialized ``t`` (the lambda-inlining trap;
-    plan-pinned) — re-scanning beats persisting the exploded span
-    stream at every scale measured (BENCH/BASELINE.md cache-write
-    economics). Docs
-    whose every span first occurred elsewhere have nothing to keep and
-    are absent, like the other dedup outputs."""
+    span text from each doc's tokens. Three branches read the
+    tokenized corpus (the span-hash stream feeds BOTH sides of the
+    first-occurrence join, plus the reassembly), so the tokenized
+    frame is checkpointed once per invocation: one scan and one
+    tokenization in all, and no tokenizer copy left in the final plan
+    (the lambda-inlining trap; plan-pinned). Docs whose every span
+    first occurred elsewhere have nothing to keep and are absent, like
+    the other dedup outputs."""
     from .textstats import LINE_TOKENS, _TOKENS as _T, _line_starts_sql
 
     span_of = (

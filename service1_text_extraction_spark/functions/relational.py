@@ -11,10 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..kernels.textnorm import NUMBER_PATTERN
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .spread import read_spread, read_table as _t
 
 
 def pending_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -405,14 +402,14 @@ def ist_timestamp_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     every instant since 1945). Scale shape: stateless per-row
     projection, zero shuffle.
 
-    Rendering is SESSION-TIMEZONE-FREE for BOTH timestamp types
-    (review r5): a TIMESTAMP_NTZ column (the driver parquet) is a
-    wall-clock value, so interval shift + ``date_format`` never
-    consults ``spark.sql.session.timeZone``; an instant TIMESTAMP
-    column would render in the session zone (double-shifting on a
-    cluster already configured to Asia/Kolkata), so that branch
-    reduces the instant to epoch seconds (tz-free) and derives the
-    date by DATE arithmetic and the time of day by integer math.
+    Rendering is SESSION-TIMEZONE-FREE (review r5): the events table
+    is read with ``ts`` declared TIMESTAMP_NTZ (``spread.TABLE_SCHEMAS``),
+    a wall-clock value, so interval shift + ``date_format`` never
+    consults ``spark.sql.session.timeZone``. A file that stores ``ts``
+    as an instant (TIMESTAMP) reads as its UTC wall clock, so it
+    renders the same under any session zone too, where rendering the
+    instant itself would double-shift on a cluster already configured
+    to Asia/Kolkata.
 
     Precision divergence (ADVICE r5, documented deliberately):
     ``ist_iso`` renders WHOLE seconds. The reference's
@@ -427,31 +424,11 @@ def ist_timestamp_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``date_format(ist, '.SSSSSS')``-style rendering to this
     projection; it is kept off here so the column matches the
     documented format string for the dominant whole-second case."""
-    t = _t(spark, sf_dir, "events")
-    if dict(t.dtypes).get("ts") == "timestamp_ntz":
-        ist = F.col("ts") + F.expr("INTERVAL 330 MINUTES")
-        date_s = F.date_format(ist, "yyyy-MM-dd")
-        hms = F.date_format(ist, "HH:mm:ss")
-    else:
-        # cast(timestamp -> long) is exact floorDiv(micros, 1e6);
-        # a double division would misplace the second for instants
-        # beyond 2^53 micros (e.g. 9999-12-31 sentinels — review r5)
-        secs = F.col("ts").cast("long") + 330 * 60
-        days = F.floor(secs / 86400)
-        tod = secs - days * 86400
-        date_s = F.date_add(
-            F.to_date(F.lit("1970-01-01")), days.cast("int")
-        ).cast("string")
-        two = lambda c: F.lpad(c.cast("string"), 2, "0")  # noqa: E731
-        hms = F.concat(
-            two(F.floor(tod / 3600)),
-            F.lit(":"),
-            two(F.floor(tod / 60) % 60),
-            F.lit(":"),
-            two(tod % 60),
-        )
+    ist = F.col("ts") + F.expr("INTERVAL 330 MINUTES")
+    date_s = F.date_format(ist, "yyyy-MM-dd")
+    hms = F.date_format(ist, "HH:mm:ss")
     stamp = F.concat(date_s, F.lit(" "), hms, F.lit(" IST"))
-    return t.select(
+    return _t(spark, sf_dir, "events").select(
         "event_id",
         stamp.alias("ist_ts"),
         F.concat(date_s, F.lit("T"), hms, F.lit("+05:30")).alias(
@@ -469,7 +446,7 @@ def s3_uri_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     URIs are synthesized deterministically per doc_id with edge
     variants (trailing slash, bucket-only, deep path) so the strip and
     first-slash rules are all exercised."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
     v = F.col("doc_id") % 4
     uri = (
         F.when(v == 0, F.format_string(
@@ -819,7 +796,7 @@ def hopping_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 5-minute boundary of the 1970 epoch, so the grids coincide).
     ``ts`` is TIMESTAMP_NTZ end to end — no session-zone shift on
     either side."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _t(spark, sf_dir, "events")
     return hopping_partials(ev)
 
 
@@ -865,7 +842,7 @@ def funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     and no collect. Earliest-entry semantics are min() over
     timestamps — deterministic in both engines; ts stays
     TIMESTAMP_NTZ throughout."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _t(spark, sf_dir, "events")
 
     def step(etype: str) -> DataFrame:
         return ev.where(F.col("event_type") == etype).select(
@@ -923,7 +900,7 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     session aggregation within partitions; value sums in exact integer
     cents (the hopping-window rule). NULL timestamps are excluded (a
     session window needs an event time); TIMESTAMP_NTZ end to end."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").where(
+    ev = _t(spark, sf_dir, "events").where(
         F.col("ts").isNotNull()
     )
     sw = F.session_window("ts", SESSION_GAP)
@@ -963,7 +940,6 @@ def hopping_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact; the small-range linear-counting branch (active
     here: tens of users per window) is ln() behind a 4dp round."""
     from .dedup import HLL_BUCKETS, HLL_HASH_HEX, _hll_estimate
-    from .spread import read_spread
 
     ev = read_spread(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     win = F.window("ts", HOP_WINDOW, HOP_SLIDE)

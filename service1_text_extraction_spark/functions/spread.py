@@ -10,8 +10,8 @@ guide prescribes for an unsplittable input is to repartition right
 after the read.
 
 ``spread`` is the one rule for that, used by ``read_spread`` (the
-reader of the documents, embeddings and events tables) and by
-``run_extraction`` (before the extraction UDF). It is ADAPTIVE: it fires only when the frame has
+spreading reader of the documents, embeddings and events tables) and
+by ``run_extraction`` (before the extraction UDF). It is ADAPTIVE: it fires only when the frame has
 fewer partitions than the session's parallelism. On a real corpus
 (many files / many row groups, >= cores scan tasks) the condition is
 false and the plan is untouched — the spread never fires at 100 TB; it
@@ -28,6 +28,48 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
+
+# the driver tables' schemas, declared so that reading one plans without
+# Spark's schema-inference job (one task per read, before any operator)
+TABLE_SCHEMAS = {
+    "documents": StructType(
+        [
+            StructField("doc_id", LongType()),
+            StructField("text", StringType()),
+            StructField("lang", StringType()),
+            StructField("source", StringType()),
+            StructField("n_chars", LongType()),
+        ]
+    ),
+    "embeddings": StructType(
+        [
+            StructField("vec_id", LongType()),
+            StructField("embedding", ArrayType(FloatType())),
+            StructField("label", IntegerType()),
+        ]
+    ),
+    "events": StructType(
+        [
+            StructField("event_id", LongType()),
+            StructField("ts", TimestampNTZType()),
+            StructField("user_id", LongType()),
+            StructField("event_type", StringType()),
+            StructField("value", DoubleType()),
+            StructField("props", StringType()),
+        ]
+    ),
+}
 
 # each driver table's unique id: the key ``read_spread`` hashes on
 _TABLE_KEYS = {
@@ -48,7 +90,9 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     otherwise.
 
     The partition count is read only from a plan without an exchange
-    or a subquery, where building the RDD runs no Spark job. A frame
+    or a subquery, where building the RDD runs no Spark job, and it is
+    read from the RDD of the physical plan the exchange check already
+    built (``df.rdd`` would plan the query a second time). A frame
     whose plan has one is left alone: its partitioning comes from that
     shuffle, not from the file layout.
 
@@ -58,19 +102,26 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     sortBeforeRepartition local sort, which on a text-heavy table costs
     more than the shuffle itself (guide §2.5: derive synthetic spread
     keys deterministically; a unique key hashes uniformly)."""
-    plan = df._jdf.queryExecution().executedPlan().treeString()
-    if _SHUFFLED_PLAN.search(plan):
+    execution = df._jdf.queryExecution()
+    if _SHUFFLED_PLAN.search(execution.executedPlan().treeString()):
         return df
     n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
+    if execution.toRdd().getNumPartitions() < n:
         return df.repartition(n, *map(F.col, keys))
     return df
 
 
+def read_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """``{sf_dir}/{table}.parquet``, read with its declared schema when
+    it is one of the driver tables of ``TABLE_SCHEMAS``."""
+    reader = spark.read
+    if table in TABLE_SCHEMAS:
+        reader = reader.schema(TABLE_SCHEMAS[table])
+    return reader.parquet(f"{sf_dir}/{table}.parquet")
+
+
 def read_spread(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Read ``{sf_dir}/{table}.parquet``, spread on the table's unique
-    id when its planned scan is narrower than the session (an
+    """Read the driver table ``{sf_dir}/{table}.parquet``, spread on its
+    unique id when its planned scan is narrower than the session (an
     unsplittable / few-row-group input)."""
-    return spread(
-        spark.read.parquet(f"{sf_dir}/{table}.parquet"), _TABLE_KEYS[table]
-    )
+    return spread(read_table(spark, sf_dir, table), _TABLE_KEYS[table])

@@ -1042,13 +1042,10 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("g"),
     ).select("doc_id", F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
-    # c2 feeds both the context reduction c1 and the scoring
-    # projection — checkpoint the (bigram-type-sized) table so the
-    # aggregation runs once per invocation
-    c2 = (
-        big.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-        .localCheckpoint(eager=False)
-    )
+    # c2 has one consumer, the context window below, so it is not
+    # checkpointed: a checkpoint would only run the aggregation's
+    # shuffle while the frame is built and leave a storage block behind
+    c2 = big.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     # context totals c1 via a window over c2 itself (guide §2.4): the
     # per-w1 sum computes in the exchange the former aggregate+join
     # paid twice — exact integer sum, identical value
@@ -1137,17 +1134,10 @@ def trigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("g"),
     ).select("g.b1", "g.b2")
-    # each count table feeds its context reduction AND the scoring
-    # join — checkpoint both (gram-type-sized) so each aggregation runs
-    # once per invocation
-    c3t = (
-        tri.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c123"))
-        .localCheckpoint(eager=False)
-    )
-    c2t = (
-        big.groupBy("b1", "b2").agg(F.count("*").alias("c23"))
-        .localCheckpoint(eager=False)
-    )
+    # each count table has one consumer, its context window below, so
+    # neither is checkpointed (see bigram_logprob's c2)
+    c3t = tri.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c123"))
+    c2t = big.groupBy("b1", "b2").agg(F.count("*").alias("c23"))
     # context totals via windows over the SAME tables (guide §2.4):
     # c12 is the per-(w1,w2) sum of c123 and c2 the per-b1 sum of c23
     # — exact integer sums, previously built as separate aggregates

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .checkpoint import SINK_CODEC
+
 
 def write_bucketed(
     df: DataFrame,
@@ -40,6 +42,7 @@ def write_bucketed(
     (
         df.write.mode("overwrite")
         .format("parquet")
+        .option("compression", SINK_CODEC)
         .option("path", path)
         .bucketBy(n_buckets, key)
         .sortBy(key)

@@ -22,7 +22,14 @@ and applies it as a ``bucket_id IN (...)`` filter.
 Sinks are parquet directories partitioned by ``bucket_id`` — the
 sandbox stand-in for Iceberg append tables; on a real cluster both the
 output and the marker table would be Iceberg appends with snapshot
-isolation, same layout.
+isolation, same layout. Every parquet sink of the package writes
+``SINK_CODEC`` (zstd), the codec Iceberg has defaulted to since 1.4:
+the sink's bytes are mostly extracted prose (``text`` and
+``layout_text``), which zstd packs about a fifth tighter than Spark's
+default snappy. The codec is set on each write, never as a session
+conf, so writes the package does not own keep theirs; parquet records
+the codec per column chunk, so a directory that mixes the two (a resume
+over buckets an older build wrote as snappy) still reads as one table.
 """
 
 from __future__ import annotations
@@ -57,6 +64,10 @@ MARKER_SCHEMA = StructType(
         StructField("completed_at", TimestampType()),
     ]
 )
+
+# the parquet codec of every sink the package writes (its ``compression``
+# write option; zstd at its default level)
+SINK_CODEC = "zstd"
 
 
 # the struct _observe_markers collects per bucket, with the nullability
@@ -119,7 +130,9 @@ def _append_markers(
         "chars_out",
         "boilerplate_ratio",
         F.current_timestamp().alias("completed_at"),
-    ).coalesce(1).write.mode("append").parquet(markers_dir)
+    ).coalesce(1).write.mode("append").option(
+        "compression", SINK_CODEC
+    ).parquet(markers_dir)
 
 
 def read_markers(spark: SparkSession, markers_dir: str) -> DataFrame | None:
@@ -175,10 +188,12 @@ def run_with_resume(
         }
     )
     # a fresh run extracts every bucket of the input and needs no scan
-    # to name them; a resume scans the input once for its bucket set,
-    # and the pending set and the crash-hook truncation are then
-    # driver-side set arithmetic
-    pending = bucketed
+    # to name them, so the input goes to run_extraction as it is; a
+    # resume scans the input once for its bucket set, and the pending
+    # set and the crash-hook truncation are then driver-side set
+    # arithmetic (run_extraction's own select drops the filter's
+    # bucket_id column)
+    pending = transcripts
     skipped = 0
     if done_buckets or fail_after_buckets is not None:
         input_buckets = {
@@ -196,7 +211,7 @@ def run_with_resume(
     written = []
     if pending is not None:
         extracted, obs = _observe_markers(
-            run_extraction(spark, pending.drop("bucket_id"), n_buckets=n_buckets)
+            run_extraction(spark, pending, n_buckets=n_buckets)
         )
         # dynamic partition overwrite: a crash between the data write and
         # the marker write leaves the bucket unmarked; the rerun then
@@ -206,6 +221,7 @@ def run_with_resume(
         (
             extracted.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
+            .option("compression", SINK_CODEC)
             .partitionBy("bucket_id")
             .parquet(output_dir)
         )

@@ -16,6 +16,7 @@ import random
 
 import pandas as pd
 
+from ..functions.spread import read_spread
 from ..kernels import pdfgen
 from ..kernels.payload import extract_turn
 
@@ -227,7 +228,10 @@ def transcripts_from_documents(spark, sf_dir: str):
             out.append(base64.b64encode(data).decode("ascii"))
         return pd.Series(out)
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # spread like every reader of the table: _pdf_turn renders a PDF per
+    # document, so a one-partition scan would render them all on one
+    # task (and run_extraction adds no second spread over this one)
+    docs = read_spread(spark, sf_dir, "documents")
     html_turn = F.concat(
         F.lit("<html><body><nav><a href='/'>Home</a> <a href='/a'>About</a> "
               "<a href='/c'>Contact</a></nav><h1>Document "),

@@ -20,6 +20,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..functions.spread import TABLE_SCHEMAS
+from ..pipeline.checkpoint import SINK_CODEC
 from ..pipeline.extract import DEFAULT_N_BUCKETS, run_extraction
 
 TRANSCRIPTS_SCHEMA = StructType(
@@ -67,6 +69,7 @@ def _batch_sink(
             .withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
+            .option("compression", SINK_CODEC)
             .partitionBy("batch_id")
             .parquet(output_dir)
         )
@@ -271,17 +274,6 @@ def stream_distinct_turns(
     )
 
 
-DOCUMENTS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
-
-
 def compact_admitted(
     spark: SparkSession,
     admitted_dir: str,
@@ -315,9 +307,9 @@ def compact_admitted(
         F.col("keeper_id").alias("doc_id")
     )
     compacted = admitted.join(keepers, "doc_id")
-    compacted.write.mode("overwrite").partitionBy("split").parquet(
-        out_dir
-    )
+    compacted.write.mode("overwrite").option(
+        "compression", SINK_CODEC
+    ).partitionBy("split").parquet(out_dir)
     # explicit schema: an all-rejected corpus writes only _SUCCESS and
     # schema inference would fail — an empty compaction is a valid
     # result, not an error (review r5)
@@ -355,8 +347,8 @@ def stream_admit(
         )
 
     return _batch_sink(
-        spark, DOCUMENTS_SCHEMA, input_dir, output_dir, checkpoint_dir,
-        max_files_per_trigger, per_batch,
+        spark, TABLE_SCHEMAS["documents"], input_dir, output_dir,
+        checkpoint_dir, max_files_per_trigger, per_batch,
     )
 
 
@@ -387,8 +379,8 @@ def stream_hll(
     from ..functions import dedup
 
     return _batch_sink(
-        spark, DOCUMENTS_SCHEMA, input_dir, registers_dir, checkpoint_dir,
-        max_files_per_trigger, dedup._hll_registers,
+        spark, TABLE_SCHEMAS["documents"], input_dir, registers_dir,
+        checkpoint_dir, max_files_per_trigger, dedup._hll_registers,
     )
 
 
@@ -533,7 +525,12 @@ def stream_asof(
         # file sink: supports checkpoint RECOVERY (the memory sink does
         # not), so restarts resume the state store and append only
         # unprocessed files — pinned by the restart test
-        return writer.format("parquet").option("path", output_dir).start()
+        return (
+            writer.format("parquet")
+            .option("compression", SINK_CODEC)
+            .option("path", output_dir)
+            .start()
+        )
     return writer.format("memory").queryName(query_name).start()
 
 
@@ -629,8 +626,8 @@ def stream_wsample(
         )
 
     return _batch_sink(
-        spark, DOCUMENTS_SCHEMA, input_dir, partials_dir, checkpoint_dir,
-        max_files_per_trigger, per_batch,
+        spark, TABLE_SCHEMAS["documents"], input_dir, partials_dir,
+        checkpoint_dir, max_files_per_trigger, per_batch,
     )
 
 
@@ -715,8 +712,8 @@ def stream_cms(
         )
 
     return _batch_sink(
-        spark, DOCUMENTS_SCHEMA, input_dir, sketch_dir, checkpoint_dir,
-        max_files_per_trigger, per_batch,
+        spark, TABLE_SCHEMAS["documents"], input_dir, sketch_dir,
+        checkpoint_dir, max_files_per_trigger, per_batch,
     )
 
 

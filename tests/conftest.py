@@ -37,3 +37,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def parquet_codecs():
+    """A function: the set of codecs that the column chunks of every
+    parquet file under a directory record in their footers."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    def codecs(path) -> set[str]:
+        files = list(Path(path).rglob("*.parquet"))
+        assert files, f"no parquet files under {path}"
+        return {
+            md.row_group(g).column(c).compression
+            for md in (pq.ParquetFile(f).metadata for f in files)
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+        }
+
+    return codecs

@@ -136,11 +136,14 @@ def _full_and_resumed(spark, tdf, tmp_path):
     return full, out1, mk1, [part, resumed], out2, mk2
 
 
-def test_exact_resume(spark, data, tmp_path):
+def test_exact_resume(spark, data, tmp_path, parquet_codecs):
     tdf, _, _, _ = data
-    full, out1, _, (part, resumed), out2, mk2 = _full_and_resumed(
+    full, out1, mk1, (part, resumed), out2, mk2 = _full_and_resumed(
         spark, tdf, tmp_path
     )
+    # every data and marker file, fresh and resumed, writes the sink codec
+    for d in (out1, mk1, out2, mk2):
+        assert parquet_codecs(d) == {"ZSTD"}, d
     assert full["buckets_processed"] > 0 and full["buckets_skipped"] == 0
 
     # simulated crash: only 3 buckets complete
@@ -263,6 +266,43 @@ def test_crash_between_data_and_marker_write(spark, data, tmp_path, monkeypatch)
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
     markers = spark.read.parquet(mk2)
     assert markers.where(F.col("status") == "done").count() == 8
+
+
+def test_resume_over_snappy_buckets(
+    spark, data, tmp_path, monkeypatch, parquet_codecs
+):
+    """A resume over buckets that an older build wrote as snappy: the
+    crashed first run writes snappy, the resume zstd. The mixed-codec
+    output and marker tables each read as one table, equal to an
+    uninterrupted run's."""
+    tdf, _, _, _ = data
+    out1, mk1 = str(tmp_path / "full/out"), str(tmp_path / "full/markers")
+    run_with_resume(spark, tdf, out1, mk1, n_buckets=8)
+    out2, mk2 = str(tmp_path / "mixed/out"), str(tmp_path / "mixed/markers")
+    monkeypatch.setattr(checkpoint, "SINK_CODEC", "snappy")
+    run_with_resume(spark, tdf, out2, mk2, n_buckets=8, fail_after_buckets=3)
+    assert parquet_codecs(out2) == parquet_codecs(mk2) == {"SNAPPY"}
+    monkeypatch.undo()
+    resumed = run_with_resume(spark, tdf, out2, mk2, n_buckets=8)
+    assert resumed["buckets_skipped"] == 3
+    assert parquet_codecs(out2) == parquet_codecs(mk2) == {"SNAPPY", "ZSTD"}
+
+    a = spark.read.parquet(out1)
+    b = spark.read.parquet(out2)
+    assert a.schema == b.schema
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+    def markers(df):
+        return sorted(
+            (r.bucket_id, r.status, r.n_turns, r.bytes_in, r.chars_out,
+             round(r.boilerplate_ratio, 12))
+            for r in df.collect()
+        )
+
+    want = markers(spark.read.parquet(mk1))
+    assert len(want) == 8
+    assert markers(spark.read.parquet(mk2)) == want
+    assert markers(checkpoint.read_markers(spark, mk2)) == want
 
 
 @pytest.fixture

@@ -9,6 +9,7 @@ correct.
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from service1_text_extraction_spark.functions import (
@@ -226,6 +227,24 @@ def test_narrow_input_spreads_before_the_udf(spark, tmp_path):
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
+def test_driver_transcripts_spread_once(spark, sf_dir):
+    """The driver's transcripts derive from the documents table read
+    through read_spread, so datagen's PDF-rendering UDF runs on the
+    spread rows, and run_extraction adds no second spread over that
+    exchange: at most one REPARTITION_BY_NUM exchange, on doc_id, and
+    the documents scan feeds no Arrow UDF directly."""
+    import __spark_entry__ as entry
+
+    plan = _plan(entry.queries()["extract_turns"](spark, sf_dir))
+    spreads = [a for a in _exchange_args(plan) if "REPARTITION_BY_NUM" in a]
+    assert len(spreads) <= 1, plan
+    for a in spreads:
+        assert re.search(r"hashpartitioning\(doc_id#\d+L?, \d+\)", a), a
+    if spreads:
+        tree = _plan_tree(plan)
+        assert not re.search(r"ArrowEvalPython[^\n]*\n\s*\+- Scan", tree), tree
+
+
 def test_spread_runs_no_job_over_an_exchange(spark):
     """Building a frame never runs a Spark job. Over an input whose
     plan has an exchange (a groupBy joined back), reading the RDD's
@@ -245,6 +264,30 @@ def test_spread_runs_no_job_over_an_exchange(spark):
     tracker = spark.sparkContext.statusTracker()
     assert list(tracker.getJobIdsForGroup(group)) == []
     assert kept is shuffled
+
+
+@pytest.mark.parametrize("table", ["documents", "embeddings", "events"])
+def test_driver_table_schema_is_declared(spark, sf_dir, table):
+    """The driver tables read with a declared schema, so reading and
+    spreading one runs no Spark job (schema inference would run one
+    per read). The declaration must equal what Spark infers from the
+    test tables: a change to a table fails here, not as nulls."""
+    from service1_text_extraction_spark.functions.spread import (
+        TABLE_SCHEMAS,
+        read_spread,
+    )
+
+    inferred = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    assert TABLE_SCHEMAS[table] == inferred
+    group = f"read-{table}"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        df = read_spread(spark, sf_dir, table)
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    tracker = spark.sparkContext.statusTracker()
+    assert list(tracker.getJobIdsForGroup(group)) == []
+    assert df.schema == inferred
 
 
 def test_resume_write_plan_shape(spark, tmp_path):
@@ -828,7 +871,9 @@ def test_cms_sketch_broadcasts_and_takeordered(spark, sf_dir):
     assert "md5" not in plan, plan  # hashing happened once, upstream
 
 
-def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
+def test_bucketed_join_is_exchange_free(
+    spark, sf_dir, tmp_path, parquet_codecs
+):
     """Co-located joins via bucketing (the 100 TB repeat-join
     strategy): two tables written bucketed on doc_id join with ZERO
     Exchanges, while the identical merge join over plain parquet
@@ -847,6 +892,7 @@ def test_bucketed_join_is_exchange_free(spark, sf_dir, tmp_path):
         bucketed.write_bucketed(
             b, "bkt_b", str(tmp_path / "bkt_b"), n_buckets=8
         )
+        assert parquet_codecs(tmp_path / "bkt_a") == {"ZSTD"}
         plan = _plan(bucketed.bucketed_join(spark, "bkt_a", "bkt_b"))
         assert "SortMergeJoin" in plan, plan
         assert "Exchange" not in plan, plan

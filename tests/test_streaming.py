@@ -10,7 +10,9 @@ from service1_text_extraction_spark.streaming import stream_extract
 
 
 @pytest.mark.slow
-def test_stream_matches_batch_and_is_incremental(spark, tmp_path):
+def test_stream_matches_batch_and_is_incremental(
+    spark, tmp_path, parquet_codecs
+):
     t1, _ = generate_transcripts(n_convs=20, seed=11, max_turns=40,
                                  with_golden=False)
     t2, _ = generate_transcripts(n_convs=20, seed=12, max_turns=40,
@@ -25,6 +27,7 @@ def test_stream_matches_batch_and_is_incremental(spark, tmp_path):
     q.awaitTermination(120)
     n1 = spark.read.parquet(out).count()
     assert n1 == len(t1)
+    assert parquet_codecs(f"{out}/batch_id=0") == {"ZSTD"}
 
     # drop more files -> only the new ones are processed on restart
     spark.createDataFrame(t2).write.mode("append").parquet(inp)
@@ -220,7 +223,9 @@ def test_stream_admit_matches_batch(spark, tmp_path, sf_dir):
     shutil.rmtree(src)
 
 
-def test_compaction_matches_batch_admit(spark, tmp_path, sf_dir):
+def test_compaction_matches_batch_admit(
+    spark, tmp_path, sf_dir, parquet_codecs
+):
     """VERDICT r4 item 6: stream_admit defers the GLOBAL exact-dedup
     keeper decision; the compaction job over its batch_id= partitions
     must close that gap — stream-then-compact over real multi-batch
@@ -246,6 +251,8 @@ def test_compaction_matches_batch_admit(spark, tmp_path, sf_dir):
         spark, out, sf_dir, str(tmp_path / "compacted")
     )
     assert "batch_id" not in compacted.columns
+    assert parquet_codecs(out) == {"ZSTD"}
+    assert parquet_codecs(tmp_path / "compacted") == {"ZSTD"}
     got = sorted(
         (r.doc_id, r.split)
         for r in compacted.select("doc_id", "split").collect()
@@ -377,7 +384,7 @@ def test_stream_asof_matches_batch(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_stream_asof_state_survives_restart(spark, tmp_path):
+def test_stream_asof_state_survives_restart(spark, tmp_path, parquet_codecs):
     """Checkpoint recovery: after the first availableNow run drains,
     a NEW file arrives and a fresh query instance on the SAME
     checkpoint must (a) process only the new file and (b) enrich its
@@ -418,6 +425,7 @@ def test_stream_asof_state_survives_restart(spark, tmp_path):
     # exactly one NEW row (no reprocessing of file 1), its click
     # enriched from pre-restart state: purchase 1, 3600 s in the past
     assert second == {2: (1, 10_000_000), 3: (1, 3600_000_000)}
+    assert parquet_codecs(out) == {"ZSTD"}
 
 
 def test_stream_hopping_matches_batch(spark, tmp_path, sf_dir):
