@@ -15,9 +15,9 @@ Layout:
 - ``kernels/``   pure-Python/NumPy per-batch kernels (no Spark imports):
   unicode cleaning, garbage-text gate, HTML boilerplate strip,
   from-scratch PDF text parser, minimal PDF writer for fixtures.
-- ``pipeline/``  the Spark job: spread of a narrow input -> Arrow-batched
-  pandas UDF -> (conv_id, turn_idx) window -> outputs + checkpoint
-  markers for exact resume.
+- ``pipeline/``  the Spark job: spread of a narrow input -> Arrow UDF
+  (no pandas in the worker) -> (conv_id, turn_idx) window -> outputs +
+  checkpoint markers for exact resume.
 - ``functions/`` relational / training-data operators (dedup, ANN,
   text analysis) used by the driver contract in ``__spark_entry__.py``.
 - ``streaming/`` optional Structured Streaming wrapper (foreachBatch

@@ -2,6 +2,8 @@
 
 Every kernel has a scalar form (reference-exact, used to freeze golden
 fixtures) and, where hot, a vectorized pandas/NumPy form used inside
-the Arrow-batched pandas UDFs. Scalar == vectorized is asserted by
-property tests in ``tests/test_textnorm.py``.
+the operator library's pandas UDFs. Scalar == vectorized is asserted by
+property tests in ``tests/test_textnorm.py``. The extraction path
+(``payload`` and the parsers under it, and ``arrowrows``, which builds
+the extraction Arrow UDF's result) imports no pandas.
 """

@@ -1357,9 +1357,12 @@ class FormXObject:
 # One content-stream token per match. Bytes no token starts with
 # (blanks, stray ')' '>' '{' '}', '%', binary) are consumed in front of
 # it, and a '<' '+' '-' '.' that starts no token is consumed alone and
-# ignored: every match succeeds where it is tried, so the stream is
-# read once, with no failed attempt per skipped byte. A string followed
-# by a ``Tj`` operator (the bulk of any text stream) is one match.
+# ignored. A run of such bytes at the very end matches the ``\Z``
+# branch; without it no branch could match there, and each retry from
+# the next byte would eat the rest of the run again (quadratic). So
+# every match succeeds where it is tried, and the stream is read once,
+# with no failed attempt per skipped byte. A string followed by a
+# ``Tj`` operator (the bulk of any text stream) is one match.
 _CS_TOKEN_RE = re.compile(
     rb"""
     [^(<\[\]/+\-.0-9A-Za-z'"*]*+
@@ -1378,6 +1381,7 @@ _CS_TOKEN_RE = re.compile(
       | (\[)                                # 9
       | (\])                                # 10
       | [\s\S]                              # starts no token
+      | \Z                                  # end of the stream
     )
     """,
     re.VERBOSE,

@@ -5,10 +5,10 @@ Restates the reference's whole background pipeline
 fan-out -> per-page extract -> quality gate -> sink + status writeback)
 as one declarative DataFrame program:
 
-    read -> pending filter -> spread if narrow -> extract_turn pandas
-    UDF (Arrow batches) -> windows over bucket_id (hash exchange on
-    bucket_id) for stable per-conversation turn order + doc-level char
-    offsets -> outputs
+    read -> pending filter -> spread if narrow -> extract_turn Arrow
+    UDF -> windows over bucket_id (hash exchange on bucket_id) for
+    stable per-conversation turn order + doc-level char offsets ->
+    outputs
 
 Scale design (for a 1000-executor cluster at 10^12 turns, tested on
 local[N]):
@@ -39,18 +39,24 @@ local[N]):
   hash-repartitions it on ``(conv_id, turn_idx)`` — unique per turn,
   so no key straggles — to the session's parallelism. Turn order is
   restored by the window, so the spread never changes the output.
-- The UDF is a scalar Arrow-batched pandas UDF returning a struct —
-  one Python invocation per ~10k-row batch, no per-row Python at the
-  Spark level (per-payload parsing inside the batch is the kernel).
+- The UDF is a scalar Arrow UDF returning a struct — one Python
+  invocation per ~10k-row batch, no per-row Python at the Spark level
+  (per-payload parsing inside the batch is the kernel). It reads the
+  batch's ``pa.Array`` columns and builds the result struct from
+  column buffers (``kernels/arrowrows``), so the Python worker never
+  loads pandas.
 - Only the columns the UDF needs are selected before the shuffle
   (column pruning at the source scan).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from operator import attrgetter
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -62,6 +68,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.spread import spread
+from ..kernels.arrowrows import column
 from ..kernels.payload import extract_turn, resolve_ocr_hook
 
 SPAN_TYPE = ArrayType(
@@ -91,29 +98,20 @@ RESULT_FIELDS = StructType(
 DEFAULT_N_BUCKETS = 64
 
 
-_RESULT_COLUMNS = RESULT_FIELDS.fieldNames()
-
-
-def _result_tuple(r) -> tuple:
-    return (
-        r.text,
-        r.method,
-        r.error,
-        [{"start": s, "end": e, "kind": k} for s, e, k in r.spans],
-        r.bytes_in,
-        r.chars_out,
-        r.boilerplate_ratio,
-        r.layout_text,
-        r.password_used,
-    )
+# the UDF's result as an Arrow type, and a TurnResult's values in its
+# field order; both ship to the workers inside the UDF closure
+_RESULT_ARROW_TYPE = to_arrow_type(RESULT_FIELDS)
+_result_row = attrgetter(*RESULT_FIELDS.fieldNames())
 
 
 def _extract_udf(
     pw_map: dict[str, list[str]] | None = None,
     ocr_spec: str | None = None,
 ):
-    """Arrow-batched turn extraction over ``(conv_id, text)``: one
-    struct row per payload.
+    """Arrow UDF over ``(conv_id, text)``: one struct row per payload,
+    returned as a ``pa.StructArray`` that ``kernels/arrowrows.column``
+    builds from column buffers, so the Python worker never loads
+    pandas.
 
     Identical payloads inside a batch (re-forwarded attachments,
     boilerplate turns) are extracted once and fanned out — free on
@@ -135,12 +133,12 @@ def _extract_udf(
     Python workers where a driver-side callable would not."""
     pw_map = pw_map or {}
 
-    @F.pandas_udf(RESULT_FIELDS)
-    def udf(conv_ids: pd.Series, payloads: pd.Series) -> pd.DataFrame:
+    @F.arrow_udf(RESULT_FIELDS)
+    def udf(conv_ids: pa.Array, payloads: pa.Array) -> pa.Array:
         ocr = resolve_ocr_hook(ocr_spec) if ocr_spec else None
         memo: dict[tuple, tuple] = {}
         rows = []
-        for conv_id, payload in zip(conv_ids, payloads):
+        for conv_id, payload in zip(conv_ids.to_pylist(), payloads.to_pylist()):
             # str() mirrors the map's build-time key coercion — an
             # integer conv_id column must still hit its entry
             pws = pw_map.get(
@@ -150,21 +148,15 @@ def _extract_udf(
                 if conv_id is not None
                 else ""
             )
-            key = (
-                payload if isinstance(payload, str) else "",
-                tuple(pws) if pws else (),
-            )
+            text = payload if isinstance(payload, str) else None
+            key = (text or "", tuple(pws) if pws else ())
             cached = memo.get(key)
             if cached is None:
-                r = extract_turn(
-                    payload if isinstance(payload, str) else None,
-                    passwords=pws,
-                    ocr=ocr,
+                cached = memo[key] = _result_row(
+                    extract_turn(text, passwords=pws, ocr=ocr)
                 )
-                cached = _result_tuple(r)
-                memo[key] = cached
             rows.append(cached)
-        return pd.DataFrame(rows, columns=_RESULT_COLUMNS)
+        return column(rows, _RESULT_ARROW_TYPE)
 
     return udf
 

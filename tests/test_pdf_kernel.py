@@ -432,6 +432,18 @@ def test_corrupt_flate_stream_fails_clean():
     assert r.error.startswith("pdf parse failed: stream decode failed")
 
 
+@pytest.mark.parametrize("tail", [b" ", b"%"])
+def test_trailing_non_token_run_is_linear(tail):
+    """64 KB of bytes no token starts with, at the end of a content
+    stream, cost one match: with no branch matching at the end, the
+    tokenizer retried from every byte of the run (64 KB took ~12 s)."""
+    content = pdfgen.simple_page([(72, 700, ["tail"])]) + tail * 65_536
+    t0 = time.perf_counter()
+    runs = pdf.interpret_content(content)
+    assert time.perf_counter() - t0 < 0.1
+    assert [r.text for r in runs] == ["tail"]
+
+
 @pytest.mark.parametrize(
     "digits",
     [

@@ -299,3 +299,21 @@ def test_media_decoders_fail_clean_on_random_bytes(data):
             decode(magic + data)
         except err:
             pass  # the contract: module error only
+
+
+# bytes no content-stream token starts with (the tokenizer's skip class)
+_NON_TOKEN = bytes(
+    b
+    for b in range(256)
+    if chr(b) not in "(<[]/+-.'\"*" + string.ascii_letters + string.digits
+)
+
+
+@given(
+    st.lists(_line, min_size=1, max_size=4),
+    st.lists(st.sampled_from(_NON_TOKEN), max_size=300).map(bytes),
+)
+@settings(max_examples=200, deadline=None)
+def test_content_runs_ignore_trailing_non_token_bytes(lines, tail):
+    content = pdfgen.simple_page([(72.0, 700.0, lines)])
+    assert pdf.interpret_content(content + tail) == pdf.interpret_content(content)
