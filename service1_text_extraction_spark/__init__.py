@@ -20,8 +20,9 @@ Layout:
   checkpoint markers for exact resume.
 - ``functions/`` relational / training-data operators (dedup, ANN,
   text analysis) used by the driver contract in ``__spark_entry__.py``.
-- ``streaming/`` optional Structured Streaming wrapper (foreachBatch
-  reuse of the batch pipeline).
+- ``streaming/`` ``stream_extract``, the one streaming entry point:
+  each micro-batch of a growing parquet directory runs the batch
+  pipeline and overwrites its own ``batch_id=`` partition.
 """
 
 __version__ = "0.1.0"

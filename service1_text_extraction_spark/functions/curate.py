@@ -197,7 +197,7 @@ def admit_pred_sql() -> str:
     page keep) as ONE let-bound SQL boolean over the ``text`` column:
     ``transform(array(<tokens>), t -> <rules>)[0]`` — the token array
     materializes exactly once per row even inside a pushed-down
-    Filter. Shared by admit_corpus and the streaming admission gate."""
+    Filter. ``admit_corpus`` evaluates it in its admission projection."""
     return (
         f"transform(array({textstats._TOKENS}), t ->"
         f" ({textstats.gopher_pass_sql()})"
@@ -313,21 +313,6 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     The float key is compare-only and never output, so engine float
     identity only matters within ~1 ulp ties (measure-zero under a
     60-bit hash); zero-weight docs are excluded (x/0 rule)."""
-    return (
-        wsample_keyed(read_spread(spark, sf_dir, "documents"))
-        .orderBy(F.col("k_").asc(), F.col("doc_id").asc())
-        .limit(WSAMPLE_K)
-        .select("doc_id", "source", "n_chars")
-    )
-
-
-def wsample_keyed(docs: DataFrame) -> DataFrame:
-    """The A-ES key projection over any documents DataFrame — the one
-    definition shared by the batch sampler and the streaming
-    reservoir maintenance (``streaming.stream.stream_wsample``). The
-    keyed rows are top-k-MERGEABLE: the k smallest of a union is the
-    k smallest of each side's k smallest, so per-batch partials
-    combine exactly."""
     two60 = float(1 << 60)
     h = F.expr(
         "cast(conv(substring(md5(cast(doc_id as string)), 1, 15),"
@@ -335,8 +320,13 @@ def wsample_keyed(docs: DataFrame) -> DataFrame:
     )
     u = (h + F.lit(1)).cast("double") / F.lit(two60)
     key = (-F.log(u)) / F.col("n_chars").cast("double")
-    return docs.where(F.col("n_chars") > 0).select(
-        "doc_id", "source", "n_chars", key.alias("k_")
+    return (
+        read_spread(spark, sf_dir, "documents")
+        .where(F.col("n_chars") > 0)
+        .select("doc_id", "source", "n_chars", key.alias("k_"))
+        .orderBy(F.col("k_").asc(), F.col("doc_id").asc())
+        .limit(WSAMPLE_K)
+        .select("doc_id", "source", "n_chars")
     )
 
 

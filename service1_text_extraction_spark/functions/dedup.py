@@ -1163,15 +1163,13 @@ def hll_distinct_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: scan -> project -> explode -> two bounded hash-aggs.
     No shingle string ever shuffles (the register row is three ints);
-    contrast with exact distinct, whose exchange is corpus-sized.
-
-    Split into ``_hll_registers`` (the MERGEABLE sketch rows: ``r``
-    merges with max — idempotent and commutative — ``n`` with sum)
-    and ``_hll_estimate`` so the streaming path
-    (``streaming.stream.stream_hll``) maintains the identical sketch
-    incrementally and the estimator exists in exactly one place."""
-    docs = read_spread(spark, sf_dir, "documents")
-    return _hll_estimate(_hll_registers(docs))
+    contrast with exact distinct, whose exchange is corpus-sized."""
+    regs = (
+        _shingle_sketch_partials(read_spread(spark, sf_dir, "documents"))
+        .groupBy("source", "bucket")
+        .agg(F.max("r").alias("r"), F.sum("n").alias("n"))
+    )
+    return _hll_estimate(regs)
 
 
 # The shingle sketches compute per-BATCH partial sketch rows —
@@ -1241,17 +1239,6 @@ def _shingle_sketch_partials(docs: DataFrame) -> DataFrame:
 
     return docs.select("source", "text").mapInPandas(
         gen, "source string, bucket long, r int, n long, mn long"
-    )
-
-
-def _hll_registers(docs: DataFrame) -> DataFrame:
-    """(source, bucket, r, n) register rows for a documents
-    DataFrame — the sketch in its mergeable form: the Arrow kernel's
-    per-batch partials merge here (max is idempotent, counts sum)."""
-    return (
-        _shingle_sketch_partials(docs)
-        .groupBy("source", "bucket")
-        .agg(F.max("r").alias("r"), F.sum("n").alias("n"))
     )
 
 

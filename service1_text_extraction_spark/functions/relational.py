@@ -623,30 +623,20 @@ def hdr_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     full per-type sort never happens. Non-negative domain only (the
     driver events table; a production deployment adds a sign
     bucket)."""
-    return _hdr_estimate(_hdr_counts(_t(spark, sf_dir, "events")))
-
-
-def _hdr_counts(ev: DataFrame) -> DataFrame:
-    """(event_type, bucket, cnt) sketch rows for an events DataFrame —
-    the HDR histogram in its MERGEABLE form (cnt merges with sum), the
-    one definition shared by the batch estimator and the streaming
-    maintenance (``streaming.stream.stream_hdr``)."""
-    ev = ev.where(F.col("value").isNotNull() & (F.col("value") >= 0))
+    ev = _t(spark, sf_dir, "events").where(
+        F.col("value").isNotNull() & (F.col("value") >= 0)
+    )
     v = "cast(floor(value * %d) as bigint)" % HDR_UNIT
     q = (
         "CASE WHEN {v} < {small} THEN {v} ELSE"
         " shiftleft(shiftright({v}, length(bin({v})) - {keep}),"
         " length(bin({v})) - {keep}) END"
     ).format(v=v, small=1 << (HDR_SUB_BITS + 1), keep=HDR_SUB_BITS + 1)
-    return (
+    counts = (
         ev.select("event_type", F.expr(q).alias("b"))
         .groupBy("event_type", "b")
         .agg(F.count("*").alias("cnt"))
     )
-
-
-def _hdr_estimate(counts: DataFrame) -> DataFrame:
-    """Percentile estimates from HDR sketch rows."""
     w = (
         Window.partitionBy("event_type")
         .orderBy("b")
@@ -797,16 +787,6 @@ def hopping_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ts`` is TIMESTAMP_NTZ end to end — no session-zone shift on
     either side."""
     ev = _t(spark, sf_dir, "events")
-    return hopping_partials(ev)
-
-
-def hopping_partials(ev: DataFrame) -> DataFrame:
-    """The hopping aggregate in its MERGEABLE form (counts and cent
-    sums both merge with ``sum`` — associative and commutative), over
-    any events DataFrame: the one definition shared by the batch
-    operator and the streaming delta maintenance
-    (``streaming.stream.stream_hopping``), so the two paths cannot
-    drift."""
     win = F.window("ts", HOP_WINDOW, HOP_SLIDE)
     return (
         ev.groupBy(win.alias("w"), "event_type")
@@ -823,9 +803,6 @@ def hopping_partials(ev: DataFrame) -> DataFrame:
             "value_cents",
         )
     )
-
-
-FUNNEL_STEPS = ("view", "click", "purchase")  # ordered conversion path
 
 
 def funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -931,9 +908,8 @@ def hopping_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic 'unique visitors per sliding window' — exact
     ``countDistinct`` per window shuffles every (window, user) pair,
     while the sketch shuffles AT MOST 1024 register rows per
-    (window, type) cell regardless of user count, and the registers
-    are max-mergeable, so the same table maintains incrementally
-    under a stream exactly like stream_hll.
+    (window, type) cell regardless of user count (registers merge
+    with max, so the partial aggregate combines map-side).
 
     Determinism: the same 60-bit md5 hash / integer harmonic-sum
     machinery as hll_distinct_shingles — partition-order-free,

@@ -395,9 +395,6 @@ GOPHER_MIN_STOP_HITS = 2
 # with an ellipsis rejects. The PASS flag evaluates these as exact
 # integer comparisons (10*count <= size etc.) so neither engine ever
 # rounds inside the predicate; the reported ratio columns round 4dp.
-GOPHER_MAX_SYMBOL_RATIO = 0.1   # per symbol kind ('#', ellipsis)
-GOPHER_MAX_BULLET_LINE_FRAC = 0.9
-GOPHER_MAX_ELLIPSIS_LINE_FRAC = 0.3
 _ELLIPSIS_RE = "[.]{3}|…"   # '...' or the one-char ellipsis
 _BULLET_RE = "^[-*•]"       # line starts with -, *, or bullet
 _ELLIPSIS_END_RE = "([.]{3}|…)$"
@@ -758,16 +755,6 @@ def c4_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PII_PHONE = r"\+\d{1,2}-\d{3}-\d{3}-\d{4}"
 PII_IP = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
-
-
-def redact_pii_col(col: F.Column) -> F.Column:
-    """The reusable redaction core: emails -> <EMAIL>, then phones ->
-    <PHONE>, then IPv4 -> <IP> (this order keeps the dotted-quad
-    pattern from ever seeing an address that is part of an email or
-    phone). Pure ``regexp_replace`` — JVM-side, codegen'd."""
-    out = F.regexp_replace(col, PII_EMAIL, "<EMAIL>")
-    out = F.regexp_replace(out, PII_PHONE, "<PHONE>")
-    return F.regexp_replace(out, PII_IP, "<IP>")
 
 
 def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1277,8 +1264,9 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     The counts table feeds both the totals and the scoring join, and
     nothing shares it, so the counts COMPUTE TWICE: two scans and two
     aggregations of the corpus tokens per query. Sharing that
-    intermediate (and releasing it after the action) is ROADMAP item 4
-    ("One helper for shared intermediates")."""
+    intermediate (and releasing it after the action) is the ROADMAP
+    direction "Executor loss: a fault-injection test, then one helper
+    for shared intermediates"."""
     tok = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.expr(_TOKENS)).alias("w")
     )

@@ -139,14 +139,8 @@ def _round_keys(words: list[int]) -> list[bytes]:
     ]
 
 
-def _add(state: bytearray, rk: bytes) -> None:
-    for i in range(16):
-        state[i] ^= rk[i]
-
-
 # state layout: flat 16 bytes in column-major order (index = r + 4c),
-# i.e. exactly the block byte order — shift rows act on index % 4
-_SHIFT = [0, 5, 10, 15, 4, 9, 14, 3, 8, 13, 2, 7, 12, 1, 6, 11]
+# i.e. exactly the block byte order — inverse shift rows acts on index % 4
 _INV_SHIFT = [0, 13, 10, 7, 4, 1, 14, 11, 8, 5, 2, 15, 12, 9, 6, 3]
 
 
@@ -204,40 +198,6 @@ def _encrypt_words(
     f3 = ((s[(w3 >> 24) & 255] << 24) | (s[(w0 >> 16) & 255] << 16)
           | (s[(w1 >> 8) & 255] << 8) | s[w2 & 255]) ^ words[b + 3]
     return f0, f1, f2, f3
-
-
-def _encrypt_block(block: bytes, rks: list[bytes]) -> bytes:
-    words = [
-        int.from_bytes(rk[i : i + 4], "big")
-        for rk in rks
-        for i in (0, 4, 8, 12)
-    ]
-    w = [
-        int.from_bytes(block[i : i + 4], "big") ^ words[i // 4]
-        for i in (0, 4, 8, 12)
-    ]
-    out = _encrypt_words(w[0], w[1], w[2], w[3], words)
-    return b"".join(x.to_bytes(4, "big") for x in out)
-
-
-def _decrypt_block(block: bytes, rks: list[bytes]) -> bytes:
-    nr = len(rks) - 1
-    s = bytearray(block)
-    _add(s, rks[nr])
-    for rnd in range(nr - 1, 0, -1):
-        s = bytearray(_INV_SBOX[s[_INV_SHIFT[i]]] for i in range(16))
-        _add(s, rks[rnd])
-        t = bytearray(16)
-        for c in range(0, 16, 4):
-            a0, a1, a2, a3 = s[c], s[c + 1], s[c + 2], s[c + 3]
-            t[c] = _mul(a0, 14) ^ _mul(a1, 11) ^ _mul(a2, 13) ^ _mul(a3, 9)
-            t[c + 1] = _mul(a0, 9) ^ _mul(a1, 14) ^ _mul(a2, 11) ^ _mul(a3, 13)
-            t[c + 2] = _mul(a0, 13) ^ _mul(a1, 9) ^ _mul(a2, 14) ^ _mul(a3, 11)
-            t[c + 3] = _mul(a0, 11) ^ _mul(a1, 13) ^ _mul(a2, 9) ^ _mul(a3, 14)
-        s = t
-    s = bytearray(_INV_SBOX[s[_INV_SHIFT[i]]] for i in range(16))
-    _add(s, rks[0])
-    return bytes(s)
 
 
 def _cbc_encrypt_raw(key: bytes, iv: bytes, data: bytes) -> bytes:
@@ -323,14 +283,6 @@ def aes128_cbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     if not 1 <= pad_n <= 16:
         raise CryptError("bad AES padding")
     return out[:-pad_n]
-
-
-def _ecb_encrypt(key: bytes, block: bytes) -> bytes:
-    return _encrypt_block(block, _round_keys(_expand_key(key)))
-
-
-def _ecb_decrypt(key: bytes, block: bytes) -> bytes:
-    return _decrypt_block(block, _round_keys(_expand_key(key)))
 
 
 # --------------------------------------------------------------------------
@@ -572,7 +524,8 @@ def compute_v5_entries(
         "UE": ue,
         "O": o,
         "OE": oe,
-        "Perms": _ecb_encrypt(file_key, bytes(perms)),
+        # one CBC block under a zero IV is ECB
+        "Perms": _cbc_encrypt_raw(file_key, bytes(16), bytes(perms)),
     }
 
 
@@ -580,4 +533,5 @@ def verify_perms(perms_entry: bytes, file_key: bytes) -> bool:
     """Algorithm 13 sanity check: decrypted /Perms bytes 9-11 == 'adb'."""
     if len(perms_entry) < 16:
         return False
-    return _ecb_decrypt(file_key, perms_entry[:16])[9:12] == b"adb"
+    plain = _cbc_decrypt_raw(file_key, bytes(16), perms_entry[:16])
+    return plain[9:12] == b"adb"

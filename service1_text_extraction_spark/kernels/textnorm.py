@@ -107,12 +107,9 @@ def normalize_whitespace(text: str) -> str:
     return _WS_RUN_RE.sub(" ", text).strip()
 
 
-_PAGE_LINE_RE = re.compile(r"^Page \d+$", re.IGNORECASE)
-_NUM_LINE_RE = re.compile(r"^\d+$")
-_RULE_LINE_RE = re.compile(r"^-+$")
-# the three line patterns OR'd into one scan (pure predicates, so one
-# alternation decides identically to three sequential match calls); the
-# hot callers test len < 3 first, which is free
+# a header/footer line: "Page <n>" (any case), a bare number, or a
+# rule of dashes, as one alternation; the hot callers test len < 3
+# first, which is free
 _HF_LINE_RE = re.compile(r"^(?:(?i:Page) \d+|\d+|-+)$")
 
 
