@@ -18,9 +18,9 @@ in the hash: pick --n-buckets well above the cluster's core count.
 An input that scans narrower than the cluster's parallelism (a
 non-splittable source, one row group holding a giant conversation) is
 hash-repartitioned on (conv_id, turn_idx) before the extraction UDF;
-a wide input is not, and its plan has the single exchange.
---shuffle-partitions sets spark.sql.shuffle.partitions, the session's
-default partition count for the window exchange.
+a wide input is not, and its plan has the single exchange. The
+window exchange takes the session's spark.sql.shuffle.partitions; set
+it with spark-submit's --conf spark.sql.shuffle.partitions=N.
 
 Sandbox smoke (local mode):
 
@@ -53,26 +53,19 @@ def main() -> None:
     p.add_argument("--markers", required=True)
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--lineage-id", default=None)
-    p.add_argument("--shuffle-partitions", type=int, default=None)
     args = p.parse_args()
     if args.n_buckets <= 0:
         raise SystemExit("--n-buckets must be > 0")
 
     from pyspark.sql import SparkSession
 
-    builder = (
+    spark = (
         SparkSession.builder.appName("s1x-extract")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .getOrCreate()
     )
-    if args.shuffle_partitions is not None:
-        if args.shuffle_partitions <= 0:
-            raise SystemExit("--shuffle-partitions must be > 0")
-        builder = builder.config(
-            "spark.sql.shuffle.partitions", str(args.shuffle_partitions)
-        )
-    spark = builder.getOrCreate()
 
     from service1_text_extraction_spark.pipeline import run_with_resume
 

@@ -258,9 +258,7 @@ def admit_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return admitted.join(keepers, "doc_id").select("doc_id", "split")
 
 
-def split_leak_safe(
-    spark: SparkSession, sf_dir: str, test_pct: int = textstats.TEST_PCT
-) -> DataFrame:
+def split_leak_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup-aware train/test split: bucket on the MinHash
     CONNECTED-COMPONENT representative instead of the doc_id, so a
     document and all its near-duplicates land in the same split by
@@ -271,10 +269,11 @@ def split_leak_safe(
     prevent; cf. the dedup-before-split guidance in Lee et al. 2021).
 
     The split rule is the SAME md5-bucket law as train_test_split
-    (first 4 hex chars mod 100), applied to cluster_rep — so for a
-    singleton document (cluster_rep == doc_id) the two operators
-    agree exactly, and the whole corpus remains reproducible across
-    engines, runs, and cluster sizes.
+    (first 4 hex chars mod 100, 'test' below ``textstats.TEST_PCT``),
+    applied to cluster_rep — so for a singleton document
+    (cluster_rep == doc_id) the two operators agree exactly, and the
+    whole corpus remains reproducible across engines, runs, and
+    cluster sizes.
 
     Scale shape: everything is ``minhash_connected_components``'s
     O(edges)-per-round propagation (no pairwise materialization);
@@ -287,7 +286,7 @@ def split_leak_safe(
         "doc_id",
         "cluster_rep",
         bucket.alias("bucket"),
-        F.when(bucket < test_pct, F.lit("test"))
+        F.when(bucket < textstats.TEST_PCT, F.lit("test"))
         .otherwise(F.lit("train"))
         .alias("split"),
     )
@@ -342,9 +341,7 @@ def corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: both sides reduce to (doc_id, md5) BEFORE the
     full-outer join, so the one unavoidable exchange carries 16-byte
     hashes, never document text (plan-pinned — the same rule as
-    exact_dedup); at rest the snapshots would live in the repo's
-    doc_id-bucketed tables (functions/bucketed.py), making even that
-    exchange disappear."""
+    exact_dedup)."""
     docs = read_spread(spark, sf_dir, "documents")
     # NULL text coalesces to '' so a present-but-textless doc hashes to
     # a value (status from presence, never misread as added/removed)

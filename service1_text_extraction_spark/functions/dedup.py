@@ -162,11 +162,13 @@ def _bucket_pairs(grouped: DataFrame, cap: int = MAX_BUCKET_DF) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.10
-) -> DataFrame:
+JACCARD_MIN = 0.10  # shingle Jaccard at or above which a pair is a near-dup
+
+
+def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard near-dup pairs (candidate pairs share >= 1
-    shingle; exact Jaccard from shared/size counts)."""
+    shingle; exact Jaccard from shared/size counts, kept at or above
+    ``JACCARD_MIN``)."""
     sh = _shingled(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     buckets = _capped_buckets(sh, ["shingle"], "doc_id", MAX_BUCKET_DF)
@@ -189,7 +191,7 @@ def ngram_jaccard_pairs(
                 4,
             ).alias("jaccard"),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_MIN)
     )
 
 
@@ -327,6 +329,7 @@ def minhash_band_candidates(
 
 N_SIMHASH_BITS = 64
 SIMHASH_BAND_BITS = 16  # 4 bands of 16 -> Hamming<=3 shares >=1 band
+SIMHASH_MAX_HAMMING = 3  # near-dup: fingerprints at most 3 bits apart
 
 
 # SimHash computes each document's 4 x 16-bit fingerprint segments in
@@ -452,10 +455,9 @@ def minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def simhash_neardup_pairs(
-    spark: SparkSession, sf_dir: str, max_hamming: int = 3
-) -> DataFrame:
-    """SimHash near-dups: pairs within Hamming distance ``max_hamming``.
+def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash near-dups: pairs within Hamming distance
+    ``SIMHASH_MAX_HAMMING``.
 
     Candidate generation by pigeonhole banding — 64 bits in 4 bands of
     16; any pair at Hamming <= 3 must share at least one identical band,
@@ -513,7 +515,7 @@ def simhash_neardup_pairs(
     )
     return (
         cand.withColumn("hamming", hamming.cast("long"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select(
             F.col("a").alias("a_id"), F.col("b").alias("b_id"), "hamming"
         )
@@ -935,21 +937,16 @@ def decontaminate(
     )
 
 
-def contamination_fraction(
-    spark: SparkSession,
-    sf_dir: str,
-    benchmark: DataFrame | None = None,
-    gram_len: int = DECON_GRAM,
-) -> DataFrame:
+def contamination_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document contamination SCORE — ``decontaminate`` upgraded
     from a flag to a measurement: for every corpus document, the
-    fraction of its distinct token ``gram_len``-grams that appear in
-    the held-out ``benchmark`` table. Pipelines threshold this
+    fraction of its distinct token ``DECON_GRAM``-grams that appear in
+    ``decontaminate``'s stand-in benchmark (the ``BENCH_DOC_MAX``
+    lowest doc_ids). Pipelines threshold this
     (e.g. drop > 0.1, GPT-3 App. C removes matched SPANS) instead of
     dropping on any single shared gram; EVERY document appears in the
     output (zero-hit docs score 0.0), unlike ``decontaminate``'s
-    hits-only rows. Same stand-in benchmark derivation
-    (``BENCH_DOC_MAX`` lowest doc_ids) when none is supplied.
+    hits-only rows.
 
     Scale shape: identical to ``decontaminate`` — benchmark gram sets
     broadcast (benchmarks are MBs at any corpus size), ONE corpus
@@ -957,9 +954,8 @@ def contamination_fraction(
     aggregate; the text never shuffles and zero-hit docs cost no
     extra pass (the left join keeps their gram rows)."""
     docs = read_spread(spark, sf_dir, "documents")
-    if benchmark is None:
-        benchmark = docs.where(F.col("doc_id") < BENCH_DOC_MAX).select("text")
-    gram_expr = _grams_of_t(gram_len)
+    benchmark = docs.where(F.col("doc_id") < BENCH_DOC_MAX).select("text")
+    gram_expr = _grams_of_t(DECON_GRAM)
     corpus = (
         docs.select("doc_id", F.expr(_TOKENS).alias("t"))
         .select("doc_id", F.explode(F.expr(gram_expr)).alias("g"))
@@ -1034,14 +1030,11 @@ def _trim_affix_udf():
     return trim.asNondeterministic()
 
 
-def minhash_verified_pairs(
-    spark: SparkSession, sf_dir: str,
-    max_dist_frac: float = VERIFY_MAX_DIST_FRAC,
-) -> DataFrame:
+def minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-then-VERIFY near-dup: the LSH band candidates
     (recall-oriented, approximate) verified by exact Levenshtein
     distance, keeping pairs whose edit distance is at most
-    ``max_dist_frac`` of the longer text — the standard two-stage
+    ``VERIFY_MAX_DIST_FRAC`` of the longer text — the standard two-stage
     pipeline that restores exact precision after probabilistic
     blocking.
 
@@ -1111,7 +1104,8 @@ def minhash_verified_pairs(
             frac.alias("dist_frac"),
         )
         .where(
-            (F.col("lev") >= 0) & (F.col("dist_frac") <= max_dist_frac)
+            (F.col("lev") >= 0)
+            & (F.col("dist_frac") <= VERIFY_MAX_DIST_FRAC)
         )
     )
 
@@ -1296,21 +1290,18 @@ def _bloom_pos_sql(a: str, b: str, i: str) -> str:
     return f"pmod({a} + {i} * {b}, {BLOOM_BITS})"
 
 
-def bloom_decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    benchmark: DataFrame | None = None,
-    gram_len: int = DECON_GRAM,
-) -> DataFrame:
+def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``decontaminate`` re-shaped for the regime where even the
     benchmark gram SET is too wide to broadcast as a hash relation: the
-    held-out grams compress into a fixed ``BLOOM_BITS``-bit Bloom
-    filter (``BLOOM_K`` probes per gram), and every corpus document is
-    scored against the bitmap. False-positive rate at fill ratio f is
-    ~f^k (~6e-6 at the driver stand-in benchmark's ~5% fill — ~3.4k
-    distinct positions of 65,536); false NEGATIVES are impossible, so
-    the exact ``contamination_fraction`` hit set is always a subset of
-    the Bloom hit set (pinned in tests/test_curation_edge.py).
+    held-out ``DECON_GRAM``-grams of the stand-in benchmark (the
+    ``BENCH_DOC_MAX`` lowest doc_ids) compress into a fixed
+    ``BLOOM_BITS``-bit Bloom filter (``BLOOM_K`` probes per gram), and
+    every corpus document is scored against the bitmap. False-positive
+    rate at fill ratio f is ~f^k (~6e-6 at the stand-in benchmark's ~5%
+    fill — ~3.4k distinct positions of 65,536); false NEGATIVES are
+    impossible, so the exact ``contamination_fraction`` hit set is
+    always a subset of the Bloom hit set (pinned in
+    tests/test_curation_edge.py).
 
     Scale shape: the ONLY cluster-wide data movement is zero — the
     bitmap folds into the plan as a 1024-element constant long array
@@ -1321,9 +1312,8 @@ def bloom_decontaminate(
     halves, k bit tests against the folded array. At 100 TB this is
     the decontamination pass that costs exactly one corpus scan."""
     docs = read_spread(spark, sf_dir, "documents")
-    if benchmark is None:
-        benchmark = docs.where(F.col("doc_id") < BENCH_DOC_MAX).select("text")
-    gram_expr = _grams_of_t(gram_len)
+    benchmark = docs.where(F.col("doc_id") < BENCH_DOC_MAX).select("text")
+    gram_expr = _grams_of_t(DECON_GRAM)
 
     a, b = _md5_half_sql("g", 1), _md5_half_sql("g", 9)
     # construction-time bounded collect: distinct bit positions set by
@@ -1538,9 +1528,7 @@ PR_TELEPORT = 150_000  # 0.15 in micro-units
 PR_INIT = 1_000_000    # initial rank, micro-units
 
 
-def pagerank_candidates(
-    spark: SparkSession, sf_dir: str, iters: int = PR_ITERS
-) -> DataFrame:
+def pagerank_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank-style centrality over the capped near-dup candidate
     graph (the quantitative upgrade of ``cluster_keepers_degree``'s
     raw degree): ``PR_ITERS`` power iterations of
@@ -1571,7 +1559,7 @@ def pagerank_candidates(
     e = ed.join(dg, "src").localCheckpoint()
     docs = read_spread(spark, sf_dir, "documents").select("doc_id")
     ranks = docs.select("doc_id", F.lit(PR_INIT).cast("long").alias("r"))
-    for _ in range(iters):
+    for _ in range(PR_ITERS):
         contrib = (
             e.join(ranks, e["src"] == ranks["doc_id"])
             .select(

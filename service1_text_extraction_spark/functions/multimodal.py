@@ -174,53 +174,27 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def frame_sample(
-    df: DataFrame, n_frames: int = 4, sniff_real: bool = True
-) -> DataFrame:
-    """1->N frame sampling over video-like payloads via mapInPandas
-    (UDTF-style expansion). Y4M (YUV4MPEG2) payloads sample REAL
-    frames — evenly spaced source indices over the actual frame list;
-    other formats take the deterministic stub (frame i = md5 of the
-    i-th stride slice of the bytes).
+# frames frame_sample emits per payload (the oracle's generate_series(0, 3))
+N_FRAMES = 4
 
-    ``sniff_real=False`` disables the Y4M content sniff and forces the
-    stub for every row: the Y4M magic is plain ASCII ("YUV4MPEG2"), so
-    a *text* corpus document that happens to contain a well-formed Y4M
-    stream (e.g. format documentation) would otherwise silently switch
-    paths. Callers feeding text-derived payloads with a stub-shaped
-    oracle (multimodal_frames) must pass False; callers feeding actual
-    video bytes keep the default."""
+
+def frame_sample(df: DataFrame) -> DataFrame:
+    """1->N frame sampling over video-like payloads via mapInPandas
+    (UDTF-style expansion): every payload yields ``N_FRAMES`` frames,
+    frame i being the md5 of the i-th stride slice of its bytes.
+
+    No payload is sniffed for a real container: the Y4M magic is plain
+    ASCII ("YUV4MPEG2"), so a *text* corpus document that contained a
+    well-formed Y4M stream would otherwise switch paths and break the
+    stub-shaped oracle. ``y4m_frames`` decodes real Y4M streams."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 data = bytes(payload) if payload is not None else b""
-                if sniff_real and y4m.is_y4m(data):
-                    try:
-                        _, _, _, frames = y4m.decode_y4m(data)
-                        # short clips emit each frame once; longer
-                        # clips sample evenly spaced DISTINCT source
-                        # indices ((i*total)//k is strictly increasing
-                        # when total >= k) — (doc_id, frame_idx) stays
-                        # unique either way
-                        k = min(n_frames, len(frames))
-                        for i in range(k):
-                            idx = (i * len(frames)) // k
-                            fr = frames[idx]
-                            rows.append(
-                                (
-                                    int(doc_id),
-                                    idx,
-                                    hashlib.md5(fr).hexdigest(),
-                                    len(fr),
-                                )
-                            )
-                        continue
-                    except y4m.Y4mError:
-                        pass  # malformed video: stub path below
-                stride = max(1, len(data) // n_frames)
-                for i in range(n_frames):
+                stride = max(1, len(data) // N_FRAMES)
+                for i in range(N_FRAMES):
                     chunk = data[i * stride : (i + 1) * stride]
                     rows.append(
                         (
@@ -238,13 +212,11 @@ def frame_sample(
 
 
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # payloads here are cast *text* — the stub-shaped DuckDB oracle is
-    # the contract, so the ASCII Y4M sniff must never fire (sniff_real
-    # stays on only for true-video callers like y4m_frames' input).
+    """``frame_sample`` over the documents' text cast to bytes."""
     docs = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
-    return frame_sample(docs, sniff_real=False)
+    return frame_sample(docs)
 
 
 def _synth_png(d: int) -> tuple[int, int, int, bytes]:

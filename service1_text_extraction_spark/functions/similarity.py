@@ -30,6 +30,8 @@ from .spread import read_spread
 N_PLANES = 16
 EMB_DIM = 64  # fixed test-table dimensionality (TESTDATA.md)
 LSH_RADIUS = 4  # multi-probe Hamming radius
+QUERY_VEC_ID = 0  # the query vector of the single-query searches
+TOP_K = 10  # results per single-query search
 
 
 def _dot(a: str, b: str) -> Column:
@@ -48,18 +50,17 @@ def _norm(a: str) -> Column:
     )
 
 
-def cosine_topk(
-    spark: SparkSession, sf_dir: str, query_vec_id: int = 0, k: int = 10
-) -> DataFrame:
-    """Brute-force cosine top-k against one query vector (broadcast)."""
+def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-``TOP_K`` against the ``QUERY_VEC_ID``
+    vector (broadcast)."""
     e = read_spread(spark, sf_dir, "embeddings")
     # the query's norm is a scalar: compute it once on the broadcast
     # side instead of re-deriving it for every candidate row
-    q = e.where(F.col("vec_id") == query_vec_id).select(
+    q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("q"), _norm("embedding").alias("qn")
     )
     scored = (
-        e.where(F.col("vec_id") != query_vec_id)
+        e.where(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
@@ -70,15 +71,14 @@ def cosine_topk(
             ).alias("cos"),
         )
     )
-    return scored.orderBy(F.col("cos").desc(), F.col("vec_id")).limit(k)
+    return scored.orderBy(F.col("cos").desc(), F.col("vec_id")).limit(TOP_K)
 
 
 NEARDUP_BANDS = 4  # 4 bands x 4 sign bits from the 16 hyperplanes
+NEARDUP_COS = 0.30  # cosine at or above which a candidate pair is a near-dup
 
 
-def cosine_neardup_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.30
-) -> DataFrame:
+def cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs with hyperplane-LSH band blocking.
 
     Candidates must share at least one of ``NEARDUP_BANDS`` bands of
@@ -88,7 +88,7 @@ def cosine_neardup_pairs(
     pairwise join ever forms, and the ``MAX_BUCKET_DF`` cap bounds any
     one bucket's pair explosion (mirrored in the DuckDB oracle).
     Recall is the standard LSH trade: pairs approach probability 1 of
-    sharing a band as cosine -> 1; at a loose threshold like 0.30 the
+    sharing a band as cosine -> 1; at a loose ``NEARDUP_COS`` of 0.30 the
     blocking is intentionally lossy (round 1 blocked on the *label*
     column, which is a test-data crutch, not a computable key).
     At real scale, raise N_PLANES and the band width together (e.g. 64
@@ -134,18 +134,18 @@ def cosine_neardup_pairs(
                 _dot("ea", "eb") / (F.col("na") * F.col("nb")), 4
             ).alias("cos"),
         )
-        .where(F.col("cos") >= threshold)
+        .where(F.col("cos") >= NEARDUP_COS)
     )
 
 
-def plane_weights(p: int, dim: int = EMB_DIM) -> list[float]:
+def plane_weights(p: int) -> list[float]:
     """Deterministic ±1 hyperplane p: sign of the first md5 hex digit of
     ``"{p}_{i}"`` per position (seedless; reproducible in any engine)."""
     return [
         1.0
         if hashlib.md5(f"{p}_{i}".encode()).hexdigest()[0] >= "8"
         else -1.0
-        for i in range(dim)
+        for i in range(EMB_DIM)
     ]
 
 
@@ -176,24 +176,19 @@ def _bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def lsh_ann_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_vec_id: int = 0,
-    k: int = 10,
-    radius: int = LSH_RADIUS,
-) -> DataFrame:
+def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN: multi-probe hyperplane LSH — candidates are vectors whose
-    16-bit bucket lies within Hamming distance ``radius`` of the query's
-    bucket, then exact cosine within the probe set.
+    16-bit bucket lies within Hamming distance ``LSH_RADIUS`` of the
+    ``QUERY_VEC_ID`` vector's bucket, then exact cosine within the
+    probe set; the top ``TOP_K`` return.
 
     The Hamming predicate against the broadcast query bucket is the
-    relational form of probing all C(16, <=radius) neighbor buckets. At
+    relational form of probing all C(16, <=LSH_RADIUS) neighbor buckets. At
     100 TB the bucket is a materialized partition/cluster key and the
     probe set enumerates those buckets for partition pruning; candidate
     generation never forms a pairwise join either way."""
     bucketed = _bucketed(spark, sf_dir)
-    q = bucketed.where(F.col("vec_id") == query_vec_id).select(
+    q = bucketed.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("q"),
         F.col("bucket").alias("qb"),
         _norm("embedding").alias("qn"),
@@ -206,7 +201,7 @@ def lsh_ann_topk(
     )
     cands = (
         bucketed.crossJoin(F.broadcast(q))
-        .where((F.col("vec_id") != query_vec_id) & (hamming <= radius))
+        .where((F.col("vec_id") != QUERY_VEC_ID) & (hamming <= LSH_RADIUS))
         .select(
             "vec_id",
             F.round(
@@ -215,7 +210,7 @@ def lsh_ann_topk(
             ).alias("cos"),
         )
     )
-    return cands.orderBy(F.col("cos").desc(), F.col("vec_id")).limit(k)
+    return cands.orderBy(F.col("cos").desc(), F.col("vec_id")).limit(TOP_K)
 
 
 def embedding_meanpool(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,14 +269,11 @@ def _resolve_k(spark: SparkSession, sf_dir: str, k) -> int:
 
 
 def kmeans_assign(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int | str = K_LISTS,
-    iters: int = KMEANS_ITERS,
+    spark: SparkSession, sf_dir: str, k: int | str = K_LISTS
 ) -> DataFrame:
     """Deterministic spherical k-means (Lloyd's, inner-product
-    assignment) trained entirely with DataFrame ops; returns the final
-    (vec_id, list_id) assignment.
+    assignment, ``KMEANS_ITERS`` rounds) trained entirely with
+    DataFrame ops; returns the final (vec_id, list_id) assignment.
 
     Determinism at cluster scale: init = the ``k`` lowest vec_ids'
     embeddings, ties on the dot break to the lowest list id, and every
@@ -292,7 +284,7 @@ def kmeans_assign(
     data) and ships them inside one Arrow map (``_assigned``), so
     assignment is a per-row map — zero shuffle; the update is one
     hash-aggregate."""
-    centroids = _kmeans_centroids(spark, sf_dir, k, iters)
+    centroids = _kmeans_centroids(spark, sf_dir, k)
     e = read_spread(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return _assigned(e, centroids).select("vec_id", "list_id")
 
@@ -356,18 +348,18 @@ _KMEANS_MEMO: dict[tuple, list[list[float]]] = {}
 
 
 def _kmeans_centroids(
-    spark: SparkSession, sf_dir: str, k: int | str = K_LISTS,
-    iters: int = KMEANS_ITERS,
+    spark: SparkSession, sf_dir: str, k: int | str
 ) -> list[list[float]]:
-    """Lloyd's loop; returns the final quantized centroids as plain
-    Python lists (k x dim doubles — bounded by k, never by data).
-    ``k='auto'`` resolves on the deterministic grid (``_auto_k``) so
-    clusters stay ~AUTO_TARGET_CLUSTER-sized as the corpus grows.
-    Memoized per (sf_dir, resolved k, iters): the quantizer is
+    """Lloyd's loop (``KMEANS_ITERS`` rounds); returns the final
+    quantized centroids as plain Python lists (k x dim doubles —
+    bounded by k, never by data). ``k='auto'`` resolves on the
+    deterministic grid (``_auto_k``) so clusters stay
+    ~AUTO_TARGET_CLUSTER-sized as the corpus grows.
+    Memoized per (sf_dir, resolved k): the quantizer is
     deterministic and in a real IVF deployment is trained once
     offline, then reused by every search."""
     k = _resolve_k(spark, sf_dir, k)
-    memo_key = (sf_dir, k, iters)
+    memo_key = (sf_dir, k)
     cached = _KMEANS_MEMO.get(memo_key)
     if cached is not None:
         return cached
@@ -376,7 +368,7 @@ def _kmeans_centroids(
     # init stays unrounded: float32 -> double is exact in any engine,
     # while Python/Spark/DuckDB rounding modes differ at exact halves
     centroids = [[float(x) for x in r.embedding] for r in init]
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         assigned = _assigned(e, centroids)
         upd = (
             assigned.select(
@@ -401,11 +393,7 @@ def _kmeans_centroids(
 
 
 def ivf_ann_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_vec_id: int = 0,
-    k: int = 10,
-    n_probe: int = 2,
+    spark: SparkSession, sf_dir: str, n_probe: int = 2
 ) -> DataFrame:
     """IVF ANN on the k-means coarse quantizer (kmeans_assign's
     centroids - round 1 used the test data's label column as a
@@ -414,13 +402,14 @@ def ivf_ann_topk(
     ``n_probe`` nearest lists are ranked driver-side by the same fold
     and tie rule, and candidates reduce to a literal ``list_id IN (...)``
     filter - partition-prunable when the table is laid out by list -
-    followed by exact cosine. No window, no centroid shuffle, no
-    pairwise join. The coarse quantizer grows with the corpus
-    (``k='auto'``, ``_auto_k``); a production deployment scales
-    ``n_probe`` with it to hold the probed fraction."""
+    followed by exact cosine against the ``QUERY_VEC_ID`` vector, top
+    ``TOP_K``. No window, no centroid shuffle, no pairwise join. The
+    coarse quantizer grows with the corpus (``k='auto'``,
+    ``_auto_k``); a production deployment scales ``n_probe`` with it
+    to hold the probed fraction."""
     cents = _kmeans_centroids(spark, sf_dir, "auto")
     e = read_spread(spark, sf_dir, "embeddings")
-    q_row = e.where(F.col("vec_id") == query_vec_id).first()
+    q_row = e.where(F.col("vec_id") == QUERY_VEC_ID).first()
     if q_row is None:  # unknown query id -> empty result, not a crash
         return e.select(
             "vec_id", F.lit(0.0).alias("cos")
@@ -447,7 +436,7 @@ def ivf_ann_topk(
         _assigned(e.select("vec_id", "embedding"), cents)
         .where(
             F.col("list_id").isin(probe_lists)
-            & (F.col("vec_id") != query_vec_id)
+            & (F.col("vec_id") != QUERY_VEC_ID)
         )
         .select(
             "vec_id",
@@ -456,7 +445,7 @@ def ivf_ann_topk(
             ).alias("cos"),
         )
     )
-    return cands.orderBy(F.col("cos").desc(), F.col("vec_id")).limit(k)
+    return cands.orderBy(F.col("cos").desc(), F.col("vec_id")).limit(TOP_K)
 
 
 SEM_MAX_CLUSTER = 1000  # within-cluster pair cap for semantic dedup
@@ -523,13 +512,10 @@ def semantic_dedup(
     )
 
 
-def semantic_keepers(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = SEM_THRESHOLD,
-) -> DataFrame:
+def semantic_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup removal policy over ``semantic_dedup``'s duplicate
-    edges: connected components by ``dedup._cc_labels`` (the closure
+    edges (cosine >= ``SEM_THRESHOLD``): connected components by
+    ``dedup._cc_labels`` (the closure
     dedup.minhash_connected_components uses, each pair a group named
     by its lower id), keeping the lowest vec_id of each component.
     Emits every vector with its component keeper and a keep flag — the
@@ -544,7 +530,7 @@ def semantic_keepers(
     from .dedup import _cc_labels
 
     pairs = (
-        semantic_dedup(spark, sf_dir, threshold)
+        semantic_dedup(spark, sf_dir)
         .select("a_id", "b_id")
         .localCheckpoint()
     )
@@ -609,10 +595,7 @@ def _probe_lists(
 
 
 def knn_join_multiprobe(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = KNN_K,
-    probes: int = KNN_PROBES,
+    spark: SparkSession, sf_dir: str, probes: int = KNN_PROBES
 ) -> DataFrame:
     """Multi-probe upgrade of ``knn_join`` (VERDICT r4 item 3): every
     vector is INDEXED in its primary k-means list, but QUERIES its
@@ -708,7 +691,7 @@ def knn_join_multiprobe(
     w = Window.partitionBy("a_id").orderBy(F.col("cos").desc(), F.col("b_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= KNN_K)
         .select(
             F.col("a_id").alias("vec_id"),
             F.col("rank").cast("int").alias("rank"),
@@ -718,10 +701,8 @@ def knn_join_multiprobe(
     )
 
 
-def knn_join(
-    spark: SparkSession, sf_dir: str, k: int = KNN_K
-) -> DataFrame:
-    """Cluster-blocked k-nearest-neighbor JOIN: the top-k cosine
+def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cluster-blocked k-nearest-neighbor JOIN: the top-``KNN_K`` cosine
     neighbors for EVERY vector (the general form of the single-query
     ANN searches), candidates restricted to the vector's k-means
     cluster — the same engine-deterministic quantizer the IVF index
@@ -757,7 +738,7 @@ def knn_join(
     )
     return (
         edges.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= KNN_K)
         .select(
             F.col("a_id").alias("vec_id"),
             F.col("rank").cast("int").alias("rank"),
@@ -771,9 +752,7 @@ RRF_C = 60    # the standard RRF damping constant (Cormack et al. 2009)
 RRF_K = 10    # fused results per query
 
 
-def rrf_fusion(
-    spark: SparkSession, sf_dir: str, k: int = RRF_K
-) -> DataFrame:
+def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval through reciprocal-rank fusion (Cormack,
     Clarke, Buettcher 2009): the lexical arm is ``bm25_topk`` and the
     vector arm is brute-force cosine over the embeddings table for
@@ -830,7 +809,7 @@ def rrf_fusion(
     )
     vec = (
         scored.withColumn("rv", F.row_number().over(wv))
-        .where(F.col("rv") <= k)
+        .where(F.col("rv") <= RRF_K)
         .select("qid", "doc_id", "rv")
     )
     fused = bm.join(vec, ["qid", "doc_id"], "full_outer").select(
@@ -854,7 +833,7 @@ def rrf_fusion(
     )
     return (
         fused.withColumn("rank", F.row_number().over(wf))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= RRF_K)
         .select(
             "qid",
             F.col("rank").cast("int").alias("rank"),

@@ -235,14 +235,12 @@ def chunk_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEST_PCT = 10  # default held-out percentage (mirrored by the oracles)
+TEST_PCT = 10  # held-out percentage (mirrored by the oracles)
 
 
-def train_test_split(
-    spark: SparkSession, sf_dir: str, test_pct: int = TEST_PCT
-) -> DataFrame:
+def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash split for corpus curation: bucket =
-    int(md5(doc_id)[:4], 16) % 100, 'test' below ``test_pct``. Unlike
+    int(md5(doc_id)[:4], 16) % 100, 'test' below ``TEST_PCT``. Unlike
     ``df.sample`` this is reproducible across engines, runs, and
     cluster sizes — the property a 100 TB train/held-out split must
     have (re-running the job can never migrate a document across the
@@ -251,7 +249,7 @@ def train_test_split(
     return read_spread(spark, sf_dir, "documents").select(
         "doc_id",
         split_bucket_expr().alias("bucket"),
-        split_label_expr(test_pct).alias("split"),
+        split_label_expr().alias("split"),
     )
 
 
@@ -262,27 +260,28 @@ def split_bucket_expr() -> F.Column:
     return F.conv(F.substring(h, 1, 4), 16, 10).cast("int") % 100
 
 
-def split_label_expr(test_pct: int = TEST_PCT) -> F.Column:
+def split_label_expr() -> F.Column:
     """'test'/'train' label over split_bucket_expr — the ONE place the
     labeling rule lives (train_test_split and curate both use it; the
     oracles interpolate TEST_PCT)."""
     return (
-        F.when(split_bucket_expr() < test_pct, F.lit("test"))
+        F.when(split_bucket_expr() < TEST_PCT, F.lit("test"))
         .otherwise(F.lit("train"))
     )
 
 
-def tfidf_top_terms(
-    spark: SparkSession, sf_dir: str, k: int = 3
-) -> DataFrame:
-    """Top-k TF-IDF terms per document (classic corpus
+TFIDF_TOPK = 3  # terms per document
+
+
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-``TFIDF_TOPK`` TF-IDF terms per document (classic corpus
     characterization): tf = in-doc term count, idf = ln((N+1)/(df+1))+1
     (the smoothed scikit-style form). The tf↔df join is a plain
     shuffle join on ``tok``: at 100 TB the df table is
     vocabulary-sized (10^8–10^9 distinct tokens), far past any
     broadcast threshold, so it must NOT carry a broadcast hint — both
     sides are partial-aggregated before the exchange and token skew is
-    AQE's skew-join case. The per-doc top-k is a bounded window over
+    AQE's skew-join case. The per-doc top terms are a bounded window over
     each doc's distinct terms. Ties break on the term string, so
     results are deterministic and oracle-checkable."""
     from pyspark.sql import Window
@@ -311,7 +310,7 @@ def tfidf_top_terms(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TFIDF_TOPK)
         .select("doc_id", F.col("rank").cast("int").alias("rank"),
                 "tok", "tfidf")
     )
@@ -321,14 +320,12 @@ PACK_BUDGET = 2048  # tokens per training pack
 N_PACK_SHARDS = 16  # independent packing streams
 
 
-def pack_sequences(
-    spark: SparkSession, sf_dir: str, budget: int = PACK_BUDGET
-) -> DataFrame:
+def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing for pretraining batches: assign documents to
     fixed token-budget packs (the op that turns a shuffled corpus into
     dense training sequences). Greedy by running token total in
     deterministic doc_id order; a document's pack is
-    ``floor(start_offset / budget)`` of its shard's running sum.
+    ``floor(start_offset / PACK_BUDGET)`` of its shard's running sum.
 
     Scale shape: a single global running sum would be one partition —
     instead documents shard by ``doc_id % N_PACK_SHARDS`` and each
@@ -354,7 +351,7 @@ def pack_sequences(
         "shard",
         "n_tok",
         cum.cast("long").alias("cum_tokens"),
-        F.floor((cum - F.col("n_tok")) / F.lit(budget))
+        F.floor((cum - F.col("n_tok")) / F.lit(PACK_BUDGET))
         .cast("long")
         .alias("pack_id"),
     )
@@ -1304,51 +1301,18 @@ CMS_W = 1024    # sketch width (counters per row)
 CMS_TOPK = 20   # heavy hitters reported
 
 
-def _cms_cells_sql() -> str:
-    """Per-token CMS cells: row r's column is ``(a + r*b) mod CMS_W``
-    from the md5 halves of the token ``w``."""
-    from .dedup import _md5_half_sql
+def _cms_sketch(tok: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """A token stream (column ``w``) -> ``(cells, sketch)``.
 
-    return "transform(sequence(0, %d), r -> pmod(%s + r * %s, %d))" % (
-        CMS_D - 1, _md5_half_sql("w", 1), _md5_half_sql("w", 9), CMS_W,
-    )
-
-
-def _cms_sketch(tok: DataFrame) -> DataFrame:
-    """The CMS counter table ``(r, col, cnt)`` of a token stream: one
-    fixed-size (<= CMS_D * CMS_W rows) hash-aggregate. Counts are
-    linear in the input, so sketches of disjoint corpus shards merge
-    by cell-wise ADDITION into exactly the whole-corpus sketch — the
-    property that lets 1000 executors each fold their partition
-    map-side (pinned in tests/test_curation_edge.py)."""
-    return (
-        tok.select(F.posexplode(F.expr(_cms_cells_sql())).alias("r", "col"))
-        .groupBy("r", "col")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequent-token mining through a Count-Min sketch: every token
-    occurrence increments ``CMS_D`` counters (row r's column is
-    ``(a + r*b) mod CMS_W`` from the md5 halves — the same
-    Kirsch-Mitzenmacher family as the MinHash/Bloom ops), a token's
-    estimate is the MIN of its ``CMS_D`` counters (always >= the true
-    count, never under), and the report is the ``CMS_TOPK`` tokens by
-    estimate (ties on the token string — engine-deterministic).
-
-    Scale shape: the sketch is the 100 TB aggregation primitive — the
-    counter table is AT MOST ``CMS_D * CMS_W`` rows at any corpus
-    size, so its hash-aggregate partial-combines map-side into a
-    fixed-size state and the merged sketch BROADCASTS back onto the
-    candidate tokens (never a shuffle of the sketch). The only
-    corpus-sized stage is the candidate-token distinct — at 100 TB
-    the query set would be an external dictionary instead; the sketch
-    itself never grows. Overestimate-only + monotone-merge properties
-    are pinned in tests/test_curation_edge.py."""
-    tok = read_spread(spark, sf_dir, "documents").select(
-        F.explode(F.expr(_TOKENS)).alias("w")
-    )
+    ``cells`` is ``(w, c, r, col)``: every distinct token, its count
+    ``c`` and its ``CMS_D`` cells (row r's column is
+    ``(a + r*b) mod CMS_W`` from the md5 halves of ``w``). ``sketch``
+    is the CMS counter table ``(r, col, cnt)``, the cell-wise sum of
+    the counts: one fixed-size (<= CMS_D * CMS_W rows) hash-aggregate.
+    Counts are linear in the input, so sketches of disjoint corpus
+    shards merge by cell-wise ADDITION into exactly the whole-corpus
+    sketch — the property that lets 1000 executors each fold their
+    partition map-side (pinned in tests/test_curation_edge.py)."""
     # Aggregate to DISTINCT tokens before any hashing (guide §2.3
     # "aggregate before you shuffle"): the previous shape evaluated
     # the Kirsch-Mitzenmacher cell transform — with the md5 halves
@@ -1373,7 +1337,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)  # vocabulary-sized; feeds both arms
     )
-    cell_rows = wc.select(
+    cells = wc.select(
         "w",
         "c",
         F.posexplode(
@@ -1383,9 +1347,34 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("r", "col"),
     )
-    sketch = cell_rows.groupBy("r", "col").agg(F.sum("c").alias("cnt"))
+    return cells, cells.groupBy("r", "col").agg(F.sum("c").alias("cnt"))
+
+
+def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frequent-token mining through a Count-Min sketch (``_cms_sketch``):
+    every token occurrence increments ``CMS_D`` counters (row r's
+    column is ``(a + r*b) mod CMS_W`` from the md5 halves — the same
+    Kirsch-Mitzenmacher family as the MinHash/Bloom ops), a token's
+    estimate is the MIN of its ``CMS_D`` counters (always >= the true
+    count, never under), and the report is the ``CMS_TOPK`` tokens by
+    estimate (ties on the token string — engine-deterministic).
+
+    Scale shape: the sketch is the 100 TB aggregation primitive — the
+    counter table is AT MOST ``CMS_D * CMS_W`` rows at any corpus
+    size, so its hash-aggregate partial-combines map-side into a
+    fixed-size state and the merged sketch BROADCASTS back onto the
+    candidate tokens (never a shuffle of the sketch). The only
+    corpus-sized stage is the candidate-token distinct — at 100 TB
+    the query set would be an external dictionary instead; the sketch
+    itself never grows. Overestimate-only + monotone-merge properties
+    are pinned in tests/test_curation_edge.py."""
+    cells, sketch = _cms_sketch(
+        read_spread(spark, sf_dir, "documents").select(
+            F.explode(F.expr(_TOKENS)).alias("w")
+        )
+    )
     return (
-        cell_rows.join(F.broadcast(sketch), ["r", "col"])
+        cells.join(F.broadcast(sketch), ["r", "col"])
         .groupBy("w")
         .agg(F.min("cnt").cast("long").alias("est_count"))
         .orderBy(F.col("est_count").desc(), F.col("w"))
@@ -1399,10 +1388,8 @@ BM25_TOPK = 10  # results per query
 BM25_N_QUERIES = 3  # doc_id < 3 are the driver stand-in query docs
 
 
-def bm25_topk(
-    spark: SparkSession, sf_dir: str, k: int = BM25_TOPK
-) -> DataFrame:
-    """Okapi BM25 top-k retrieval — the ranking counterpart of
+def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Okapi BM25 top-``BM25_TOPK`` retrieval — the ranking counterpart of
     ``tfidf_top_terms``: the ``BM25_N_QUERIES`` lowest doc_ids act as
     queries (the same stand-in parameterization as ``decontaminate``'s
     benchmark table) and retrieve the best-matching candidate documents
@@ -1491,7 +1478,7 @@ def bm25_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= BM25_TOPK)
         .select(
             "qid",
             F.col("rank").cast("int").alias("rank"),

@@ -1,4 +1,6 @@
-"""The Spark extraction job: read -> extract UDF -> bucket exchange -> order -> sink."""
+"""The Spark extraction job: read -> extract UDF -> bucket exchange ->
+order -> one bucket-partitioned parquet sink, resumed bucket by bucket
+from its completion markers (``run_with_resume``)."""
 
 from .extract import (  # noqa: F401
     RESULT_FIELDS,

@@ -161,18 +161,13 @@ def run_with_resume(
     *,
     lineage_id: str | None = None,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    fail_after_buckets: int | None = None,
 ) -> dict:
     """Run the job, skipping buckets already marked done.
 
-    ``fail_after_buckets`` truncates the run to the first K pending
-    buckets (lowest ids first) — the test hook that simulates a
-    mid-job crash. Returns run stats: buckets processed, buckets of the
-    input not processed by this run (skipped), and the turns, input
-    bytes and output chars this run wrote.
+    Returns run stats: buckets processed, buckets of the input not
+    processed by this run (skipped, because a marker says they are
+    done), and the turns, input bytes and output chars this run wrote.
     """
-    if fail_after_buckets is not None and fail_after_buckets < 0:
-        raise ValueError("fail_after_buckets must be >= 0")
     lineage_id = lineage_id or uuid.uuid4().hex
     bucketed = with_bucket(transcripts, n_buckets)
     markers = read_markers(spark, markers_dir)
@@ -190,18 +185,15 @@ def run_with_resume(
     # a fresh run extracts every bucket of the input and needs no scan
     # to name them, so the input goes to run_extraction as it is; a
     # resume scans the input once for its bucket set, and the pending
-    # set and the crash-hook truncation are then driver-side set
-    # arithmetic (run_extraction's own select drops the filter's
-    # bucket_id column)
+    # set is then driver-side set arithmetic (run_extraction's own
+    # select drops the filter's bucket_id column)
     pending = transcripts
     skipped = 0
-    if done_buckets or fail_after_buckets is not None:
+    if done_buckets:
         input_buckets = {
             r.bucket_id for r in bucketed.select("bucket_id").distinct().collect()
         }
         pending_buckets = sorted(input_buckets - done_buckets)
-        if fail_after_buckets is not None:
-            pending_buckets = pending_buckets[:fail_after_buckets]
         skipped = len(input_buckets) - len(pending_buckets)
         if not pending_buckets:
             pending = None

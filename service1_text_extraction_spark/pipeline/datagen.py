@@ -107,13 +107,15 @@ def _plain_payload(rng: random.Random) -> str:
     return _sentence(rng, rng.randint(10, 40))
 
 
+ZIPF_A = 1.6  # Pareto shape of the conversation lengths
+BASE_TS = dt.datetime(2026, 1, 1)  # timestamp of day 0, turn 0
+
+
 def generate_transcripts(
     n_convs: int = 300,
     seed: int = 42,
     *,
-    zipf_a: float = 1.6,
     max_turns: int = 2000,
-    base_ts: str = "2026-01-01T00:00:00",
     with_golden: bool = True,
     target_turns: int | None = None,
 ) -> tuple[pd.DataFrame, pd.DataFrame | None]:
@@ -126,7 +128,6 @@ def generate_transcripts(
                  (None when ``with_golden=False`` — bench input only)
     """
     rng = random.Random(seed)
-    t0 = dt.datetime.fromisoformat(base_ts)
     roles = ("user", "assistant", "tool")
 
     t_rows, g_rows = [], []
@@ -140,7 +141,7 @@ def generate_transcripts(
             break
         conv_id = f"conv_{i:08d}"
         # Zipf-skewed conversation length
-        n_turns = min(max_turns, max(2, int(rng.paretovariate(zipf_a))))
+        n_turns = min(max_turns, max(2, int(rng.paretovariate(ZIPF_A))))
         if i == 0:
             n_turns = max_turns  # guarantee one giant conversation
         for turn_idx in range(1, n_turns + 1):
@@ -155,7 +156,7 @@ def generate_transcripts(
             else:
                 text = rng.choice(_ADVERSARIAL)
             tool = "extractor" if role == "tool" else None
-            ts = t0 + dt.timedelta(days=i % 365, seconds=turn_idx * 7)
+            ts = BASE_TS + dt.timedelta(days=i % 365, seconds=turn_idx * 7)
             t_rows.append((conv_id, turn_idx, role, text, tool, ts))
             if with_golden:
                 r = extract_turn(text)

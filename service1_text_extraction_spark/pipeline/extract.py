@@ -104,10 +104,7 @@ _RESULT_ARROW_TYPE = to_arrow_type(RESULT_FIELDS)
 _result_row = attrgetter(*RESULT_FIELDS.fieldNames())
 
 
-def _extract_udf(
-    pw_map: dict[str, list[str]] | None = None,
-    ocr_spec: str | None = None,
-):
+def _extract_udf(pw_map: dict[str, list[str]], ocr_spec: str | None):
     """Arrow UDF over ``(conv_id, text)``: one struct row per payload,
     returned as a ``pa.StructArray`` that ``kernels/arrowrows.column``
     builds from column buffers, so the Python worker never loads
@@ -119,19 +116,19 @@ def _extract_udf(
     keys on (payload, the conversation's candidate passwords), so
     identical payloads under different password sets never cross.
 
-    ``pw_map`` (opt-in, reference password store,
-    file_management_service.py:119-212) maps conv_id to candidate
-    passwords (≤3 tried per document, after the empty password). The
-    map ships to workers inside the UDF closure — the
-    broadcast-variable analogue; password stores are KBs even at
-    100 TB corpus scale.
+    ``pw_map`` (the reference password store,
+    file_management_service.py:119-212; empty when the caller passes
+    none) maps conv_id to candidate passwords (≤3 tried per document,
+    after the empty password). The map ships to workers inside the
+    UDF closure — the broadcast-variable analogue; password stores are
+    KBs even at 100 TB corpus scale.
 
-    ``ocr_spec`` (opt-in) is a ``"package.module:callable"`` OCR-hook
-    spec (reference F5 fallback, core_pdf_processor.py:467-561),
-    resolved once per batch via ``payload.resolve_ocr_hook`` and passed
-    to ``extract_turn`` — a string survives serialization to executor
-    Python workers where a driver-side callable would not."""
-    pw_map = pw_map or {}
+    ``ocr_spec`` (``None`` for no OCR) is a
+    ``"package.module:callable"`` OCR-hook spec (reference F5 fallback,
+    core_pdf_processor.py:467-561), resolved once per batch via
+    ``payload.resolve_ocr_hook`` and passed to ``extract_turn`` — a
+    string survives serialization to executor Python workers where a
+    driver-side callable would not."""
 
     @F.arrow_udf(RESULT_FIELDS)
     def udf(conv_ids: pa.Array, payloads: pa.Array) -> pa.Array:
@@ -166,7 +163,7 @@ def bucket_expr(conv_id: Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(conv_id), F.lit(n_buckets)).cast("int")
 
 
-def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     # checked on the driver: 0 would fail inside a task (pmod by zero)
     # and a negative count would yield bucket ids outside 0..n-1
     if n_buckets < 1:
@@ -216,7 +213,7 @@ def run_extraction(
     pw_map = (
         {str(k): list(v)[:3] for k, v in passwords.items()}
         if passwords
-        else None
+        else {}
     )
     ex_col = _extract_udf(pw_map, ocr_hook)(F.col("conv_id"), F.col("text"))
     extracted = df.withColumn("ex", ex_col).select(
@@ -264,9 +261,7 @@ def run_extraction(
     )
 
 
-def assemble_documents(
-    extracted: DataFrame, segment_turns: int | None = None
-) -> DataFrame:
+def assemble_documents(extracted: DataFrame) -> DataFrame:
     """Per-conversation assembly with the reference's page markers.
 
     Reference format (core_pdf_processor.py:809-812): non-empty pages
@@ -277,15 +272,7 @@ def assemble_documents(
 
     Scale note: ``collect_list`` materializes one conversation per
     task — fine for real conversations, not for a 10^6-turn outlier.
-    ``segment_turns=N`` switches the group key to
-    ``(conv_id, (turn_idx-1) // N)`` and emits unstripped segments
-    whose in-order concatenation, stripped, equals the full document
-    (asserted by tests); downstream sinks then never hold more than
-    one segment in memory. ``segment_turns`` below 1 raises
-    ``ValueError`` before any job runs.
     """
-    if segment_turns is not None and segment_turns < 1:
-        raise ValueError(f"segment_turns must be >= 1, got {segment_turns}")
     turns = F.array_sort(
         F.collect_list(F.struct("turn_idx", "text", "method"))
     )
@@ -306,16 +293,9 @@ def assemble_documents(
         F.sum("chars_out").alias("chars_out"),
         F.sum("bytes_in").alias("bytes_in"),
     ]
-    if segment_turns is None:
-        return extracted.groupBy("conv_id").agg(
-            F.regexp_replace(doc_text, r"^\s+|\s+$", "").alias("doc_text"),
-            *aggs,
-        )
-    seg = ((F.col("turn_idx") - 1) / segment_turns).cast("long")
-    return (
-        extracted.withColumn("segment_idx", seg)
-        .groupBy("conv_id", "segment_idx")
-        .agg(doc_text.alias("doc_text"), *aggs)
+    return extracted.groupBy("conv_id").agg(
+        F.regexp_replace(doc_text, r"^\s+|\s+$", "").alias("doc_text"),
+        *aggs,
     )
 
 

@@ -58,3 +58,30 @@ def parquet_codecs():
         }
 
     return codecs
+
+
+@pytest.fixture(scope="session")
+def crashed_run(spark):
+    """A function ``(transcripts, output_dir, markers_dir, **kwargs)``:
+    ``run_with_resume`` (8 buckets) over only the rows of the input's
+    three lowest bucket ids. It leaves the data and markers of a run
+    that crashed after its first three pending buckets."""
+    from pyspark.sql import functions as F
+
+    from service1_text_extraction_spark.pipeline import run_with_resume, with_bucket
+
+    def run(transcripts, output_dir, markers_dir, **kwargs):
+        bucketed = with_bucket(transcripts, 8)
+        first = sorted(
+            r.bucket_id for r in bucketed.select("bucket_id").distinct().collect()
+        )[:3]
+        return run_with_resume(
+            spark,
+            bucketed.where(F.col("bucket_id").isin(first)),
+            output_dir,
+            markers_dir,
+            n_buckets=8,
+            **kwargs,
+        )
+
+    return run

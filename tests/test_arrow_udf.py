@@ -121,7 +121,7 @@ def test_extraction_path_never_imports_pandas():
              {pdf!r}, None, "JVBERnot base64"],
             pa.string(),
         )
-        out = _extract_udf({{"c1": ["pw"]}}).func(conv, text)
+        out = _extract_udf({{"c1": ["pw"]}}, None).func(conv, text)
         out.validate(full=True)
         methods = [r["method"] for r in out.to_pylist()]
         assert methods == ["html", "text", "pdf", "failed", "failed"], methods

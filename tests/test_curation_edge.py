@@ -597,7 +597,7 @@ def test_ccnet_ppl_buckets_terciles_and_ties(spark, tmp_path):
 def test_contamination_fraction_zero_hit_docs_present(spark, tmp_path):
     """Every corpus document must appear: zero-overlap docs at
     contam_frac 0.0 (decontaminate's inner join drops them), a
-    verbatim benchmark copy at 1.0, and a SHORT doc (< gram_len
+    verbatim benchmark copy at 1.0, and a SHORT doc (< DECON_GRAM
     tokens) scored through its single truncated gram."""
     bench_text = (
         "held out benchmark question about the capital of france"
@@ -904,14 +904,14 @@ def test_cms_sketch_merges_by_addition(spark, sf_dir):
     )
     whole = {
         (r.r, r.col): r.cnt
-        for r in textstats._cms_sketch(tok_of(docs)).collect()
+        for r in textstats._cms_sketch(tok_of(docs))[1].collect()
     }
     even = textstats._cms_sketch(
         tok_of(docs.where("doc_id % 2 = 0"))
-    ).collect()
+    )[1].collect()
     odd = textstats._cms_sketch(
         tok_of(docs.where("doc_id % 2 = 1"))
-    ).collect()
+    )[1].collect()
     merged: dict = {}
     for r in list(even) + list(odd):
         merged[(r.r, r.col)] = merged.get((r.r, r.col), 0) + r.cnt

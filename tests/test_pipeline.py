@@ -119,7 +119,7 @@ def uncoalesced(spark):
     spark.conf.set(key, prev)
 
 
-def _full_and_resumed(spark, tdf, tmp_path):
+def _full_and_resumed(spark, tdf, tmp_path, crashed_run):
     """An uninterrupted run, and a run crashed after 3 buckets then
     resumed: (full stats, full output dir, full markers dir,
     [crash, resume] stats, resumed output dir, resumed markers dir)."""
@@ -128,18 +128,15 @@ def _full_and_resumed(spark, tdf, tmp_path):
     full = run_with_resume(spark, tdf, out1, mk1, n_buckets=8, lineage_id="runA")
     out2 = str(tmp_path / "part/out")
     mk2 = str(tmp_path / "part/markers")
-    part = run_with_resume(
-        spark, tdf, out2, mk2, n_buckets=8, lineage_id="runB",
-        fail_after_buckets=3,
-    )
+    part = crashed_run(tdf, out2, mk2, lineage_id="runB")
     resumed = run_with_resume(spark, tdf, out2, mk2, n_buckets=8, lineage_id="runC")
     return full, out1, mk1, [part, resumed], out2, mk2
 
 
-def test_exact_resume(spark, data, tmp_path, parquet_codecs):
+def test_exact_resume(spark, data, tmp_path, parquet_codecs, crashed_run):
     tdf, _, _, _ = data
     full, out1, mk1, (part, resumed), out2, mk2 = _full_and_resumed(
-        spark, tdf, tmp_path
+        spark, tdf, tmp_path, crashed_run
     )
     # every data and marker file, fresh and resumed, writes the sink codec
     for d in (out1, mk1, out2, mk2):
@@ -173,26 +170,32 @@ def test_exact_resume(spark, data, tmp_path, parquet_codecs):
     assert again["buckets_processed"] == 0
 
 
-def test_resume_one_file_per_bucket(spark, data, tmp_path, uncoalesced):
+def test_resume_one_file_per_bucket(
+    spark, data, tmp_path, uncoalesced, crashed_run
+):
     """With every shuffle partition its own write task (AQE merges them
     all into one task at this input size), the exchange keyed on
     bucket_id still gives each bucket to exactly one task: one data
     file per bucket directory, fresh and after crash + resume."""
     tdf, _, _, _ = data
-    full, out1, _, _, out2, _ = _full_and_resumed(spark, tdf, tmp_path)
+    full, out1, _, _, out2, _ = _full_and_resumed(
+        spark, tdf, tmp_path, crashed_run
+    )
     layout = _data_files_per_bucket(out1)
     assert len(layout) == full["buckets_processed"]
     assert set(layout.values()) == {1}, layout
     assert _data_files_per_bucket(out2) == layout
 
 
-def test_markers_match_written_output(spark, data, tmp_path):
+def test_markers_match_written_output(spark, data, tmp_path, crashed_run):
     """The markers come from the data write's own pass, yet equal a
     groupBy over the written output, fresh and after crash + resume.
     Each run appends one marker file, and the run totals equal the
     output's."""
     tdf, _, _, _ = data
-    full, out1, mk1, runs, out2, mk2 = _full_and_resumed(spark, tdf, tmp_path)
+    full, out1, mk1, runs, out2, mk2 = _full_and_resumed(
+        spark, tdf, tmp_path, crashed_run
+    )
     for out, mk, stats in ((out1, mk1, [full]), (out2, mk2, runs)):
         written = spark.read.parquet(out)
         want = {
@@ -227,7 +230,9 @@ def test_markers_match_written_output(spark, data, tmp_path):
         assert sum(s["chars_out"] for s in stats) == totals.chars_out
 
 
-def test_crash_between_data_and_marker_write(spark, data, tmp_path, monkeypatch):
+def test_crash_between_data_and_marker_write(
+    spark, data, tmp_path, monkeypatch, crashed_run
+):
     """A crash after the data write committed but before its markers
     were appended leaves those buckets unmarked: the rerun extracts
     them again and overwrites their partitions, and the output equals
@@ -245,7 +250,7 @@ def test_crash_between_data_and_marker_write(spark, data, tmp_path, monkeypatch)
     monkeypatch.setattr(checkpoint, "_append_markers", crash_once)
     out2, mk2 = str(tmp_path / "crash/out"), str(tmp_path / "crash/markers")
     with pytest.raises(RuntimeError, match="crash between the writes"):
-        run_with_resume(spark, tdf, out2, mk2, n_buckets=8, fail_after_buckets=3)
+        crashed_run(tdf, out2, mk2)
     committed = {
         d.name: {f.name for f in d.iterdir()}
         for d in Path(out2).iterdir()
@@ -269,7 +274,7 @@ def test_crash_between_data_and_marker_write(spark, data, tmp_path, monkeypatch)
 
 
 def test_resume_over_snappy_buckets(
-    spark, data, tmp_path, monkeypatch, parquet_codecs
+    spark, data, tmp_path, monkeypatch, parquet_codecs, crashed_run
 ):
     """A resume over buckets that an older build wrote as snappy: the
     crashed first run writes snappy, the resume zstd. The mixed-codec
@@ -280,7 +285,7 @@ def test_resume_over_snappy_buckets(
     run_with_resume(spark, tdf, out1, mk1, n_buckets=8)
     out2, mk2 = str(tmp_path / "mixed/out"), str(tmp_path / "mixed/markers")
     monkeypatch.setattr(checkpoint, "SINK_CODEC", "snappy")
-    run_with_resume(spark, tdf, out2, mk2, n_buckets=8, fail_after_buckets=3)
+    crashed_run(tdf, out2, mk2)
     assert parquet_codecs(out2) == parquet_codecs(mk2) == {"SNAPPY"}
     monkeypatch.undo()
     resumed = run_with_resume(spark, tdf, out2, mk2, n_buckets=8)
@@ -336,27 +341,15 @@ def _marker_rows(spark, markers_dir):
     )
 
 
-def test_resume_fail_after_zero(spark, tiny, tmp_path):
-    tdf, present = tiny
-    out, mk = str(tmp_path / "out"), str(tmp_path / "mk")
-    stats = run_with_resume(
-        spark, tdf, out, mk, n_buckets=8, lineage_id="r", fail_after_buckets=0
-    )
-    assert stats["buckets_processed"] == 0
-    assert stats["buckets_skipped"] == len(present)
-    assert not Path(mk).exists() and not Path(out).exists()
-    with pytest.raises(ValueError):
-        run_with_resume(spark, tdf, out, mk, n_buckets=8, fail_after_buckets=-1)
-
-
 def test_resume_fail_after_exceeds_pending(spark, tiny, tmp_path):
+    """A resume over a seeded 'done' marker for one of the input's
+    buckets processes every other bucket of the input once, counts
+    the marked one as skipped, and appends one 'done' marker per
+    bucket it wrote beside the seeded one."""
     tdf, present = tiny
     out, mk = str(tmp_path / "out"), str(tmp_path / "mk")
     _write_markers(spark, mk, [(present[0], "done")])
-    stats = run_with_resume(
-        spark, tdf, out, mk, n_buckets=8, lineage_id="r",
-        fail_after_buckets=len(present) + 5,
-    )
+    stats = run_with_resume(spark, tdf, out, mk, n_buckets=8, lineage_id="r")
     assert stats["buckets_processed"] == len(present) - 1
     assert stats["buckets_skipped"] == 1
     assert _marker_rows(spark, mk) == sorted(
@@ -441,30 +434,6 @@ def test_null_and_empty_payloads(spark):
     out = run_extraction(spark, tdf, n_buckets=4).collect()
     assert len(out) == 3  # rows must fail, not silently disappear
     assert all(r.method == "failed" and r.text == "" for r in out)
-
-
-@pytest.mark.parametrize("segment_turns", [0, -2])
-def test_segment_turns_validated(spark, tiny, segment_turns):
-    """A segment size below 1 is refused on the driver: 0 used to fail
-    inside a task (DIVIDE_BY_ZERO) and -2 to number the segments
-    backwards, reversing the document."""
-    tdf, _ = tiny
-    out = run_extraction(spark, tdf, n_buckets=4)
-    with pytest.raises(ValueError, match="segment_turns"):
-        assemble_documents(out, segment_turns=segment_turns)
-
-
-def test_segmented_assembly_splices_to_full(spark, data):
-    tdf, _, _, _ = data
-    out = run_extraction(spark, tdf, n_buckets=8)
-    full = {r.conv_id: r.doc_text for r in assemble_documents(out).collect()}
-    segs = assemble_documents(out, segment_turns=10).collect()
-    by_conv = {}
-    for r in segs:
-        by_conv.setdefault(r.conv_id, []).append((r.segment_idx, r.doc_text))
-    for conv_id, parts in by_conv.items():
-        spliced = "".join(t for _, t in sorted(parts)).strip()
-        assert spliced == full[conv_id], conv_id
 
 
 def test_kernel_exception_becomes_failed_row(spark, monkeypatch):
@@ -553,8 +522,11 @@ def test_ocr_hook_type_error_is_a_hook_failure():
 
 def test_multimodal_binary_dispatch_through_arrow(spark):
     """Mixed binary payloads through the real mapInPandas path: PNG
-    rows decode real dimensions, Y4M rows sample real frames, junk
-    takes the deterministic stubs — all in one Arrow batch."""
+    rows decode real dimensions and junk takes the deterministic
+    stubs, all in one Arrow batch; frame sampling takes the stride
+    stub for every payload, Y4M included."""
+    import hashlib
+
     from service1_text_extraction_spark.functions import multimodal
     from service1_text_extraction_spark.kernels import png, y4m
 
@@ -574,11 +546,11 @@ def test_multimodal_binary_dispatch_through_arrow(spark):
     assert feats[3].n_bytes == 0  # null payload -> empty
 
     frames = multimodal.frame_sample(df).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    # Y4M doc: 4 evenly spaced REAL source frames 0,2,4,6
-    assert sorted(r.frame_idx for r in by_doc[4]) == [0, 2, 4, 6]
-    assert all(r.n_bytes == fsize for r in by_doc[4])
-    # junk doc: stub stride slices indexed 0..3
-    assert sorted(r.frame_idx for r in by_doc[2]) == [0, 1, 2, 3]
+    want = []
+    for doc_id, payload in rows:
+        data = bytes(payload or b"")
+        stride = max(1, len(data) // 4)
+        for i in range(4):
+            chunk = data[i * stride : (i + 1) * stride]
+            want.append((doc_id, i, hashlib.md5(chunk).hexdigest(), len(chunk)))
+    assert sorted(tuple(r) for r in frames) == sorted(want)

@@ -290,14 +290,16 @@ def test_driver_table_schema_is_declared(spark, sf_dir, table):
     assert df.schema == inferred
 
 
-def test_resume_write_plan_shape(spark, tmp_path):
+def test_resume_write_plan_shape(spark, tmp_path, crashed_run):
     """The resumable job's data write: the bucket_id exchange feeds
     both the window and the partitioned writer, whose ordering the
     window's sort already satisfies — one Exchange, one Sort, no
     writer sort. The pending set is a driver-side IN filter, so no
-    run (fresh or resumed) plans a broadcast join. A fresh run names
-    no buckets up front: the data write and the marker write are its
-    only executions, and neither aggregates the input."""
+    run (fresh, crashed or resumed) plans a broadcast join. A fresh
+    run names no buckets up front: the data write and the marker write
+    are its only executions, and neither aggregates the input. A
+    resume aggregates the input once for its bucket set and filters
+    its write to the pending buckets."""
     rows = [
         (f"c{i}", t, "user", f"<p>turn {t} of conversation {i}</p>",
          None, None)
@@ -309,18 +311,26 @@ def test_resume_write_plan_shape(spark, tmp_path):
         " tool string, ts timestamp"
     )
 
-    def run(name, **kw):
+    def resume(t, out, mk):
+        return run_with_resume(spark, t, out, mk, n_buckets=8)
+
+    def run(name, job=resume):
         out, mk = str(tmp_path / name / "out"), str(tmp_path / name / "mk")
-        return _executed_plans(
-            spark, lambda: run_with_resume(spark, tdf, out, mk, n_buckets=8, **kw)
-        )
+        return _executed_plans(spark, lambda: job(tdf, out, mk))
 
     fresh = run("fresh")
     assert len(fresh) == 2, fresh
     for tree in map(_plan_tree, fresh):
         assert "InsertIntoHadoopFsRelation" in tree, tree
         assert "HashAggregate" not in tree, tree
-    for plans in (fresh, run("resumed", fail_after_buckets=3), run("resumed")):
+    crashed = run("resumed", crashed_run)
+    resumed = run("resumed")
+    # only a resume aggregates the input (for its bucket set)
+    assert any(
+        "HashAggregate" in t and "Scan ExistingRDD" in t
+        for t in map(_plan_tree, resumed)
+    ), resumed
+    for plans in (fresh, crashed, resumed):
         assert not any("BroadcastHashJoin" in p for p in plans), plans
         writes = [
             _plan_tree(p)
@@ -869,45 +879,6 @@ def test_cms_sketch_broadcasts_and_takeordered(spark, sf_dir):
     assert "partial_min" in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
     assert "md5" not in plan, plan  # hashing happened once, upstream
-
-
-def test_bucketed_join_is_exchange_free(
-    spark, sf_dir, tmp_path, parquet_codecs
-):
-    """Co-located joins via bucketing (the 100 TB repeat-join
-    strategy): two tables written bucketed on doc_id join with ZERO
-    Exchanges, while the identical merge join over plain parquet
-    needs one per side."""
-    import re
-
-    from service1_text_extraction_spark.pipeline import bucketed
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = docs.select("doc_id", "n_chars")
-    b = docs.select("doc_id", "lang")
-    try:
-        bucketed.write_bucketed(
-            a, "bkt_a", str(tmp_path / "bkt_a"), n_buckets=8
-        )
-        bucketed.write_bucketed(
-            b, "bkt_b", str(tmp_path / "bkt_b"), n_buckets=8
-        )
-        assert parquet_codecs(tmp_path / "bkt_a") == {"ZSTD"}
-        plan = _plan(bucketed.bucketed_join(spark, "bkt_a", "bkt_b"))
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        assert "SelectedBucketsCount" in plan, plan
-
-        # contrast: same join over non-bucketed input shuffles
-        plain = _plan(a.hint("merge").join(b, "doc_id"))
-        assert len(re.findall(r"\(\d+\) Exchange", plain)) == 2, plain
-
-        # and the join is not just planned — it runs and matches
-        n = bucketed.bucketed_join(spark, "bkt_a", "bkt_b").count()
-        assert n == docs.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
 def test_hdr_sketch_aggregate_is_fixed_size(spark, sf_dir):

@@ -244,29 +244,6 @@ def test_y4m_roundtrip_and_sampling():
     assert out == frames
 
 
-def test_y4m_frame_sample_dispatch():
-    """frame_sample must emit evenly-spaced REAL source frames for
-    Y4M payloads (and keep the stride stub for other bytes)."""
-    import hashlib
-
-    from service1_text_extraction_spark.functions import multimodal
-    from service1_text_extraction_spark.kernels import y4m
-
-    w, h = 8, 6
-    fsize = w * h * 3 // 2
-    frames = [bytes([i + 1]) * fsize for i in range(8)]
-    data = y4m.encode_y4m(w, h, frames)
-    # replicate the in-UDF dispatch directly (no Spark session needed)
-    _, _, _, decoded = y4m.decode_y4m(data)
-    picked = [(i * len(decoded)) // 4 for i in range(4)]
-    assert picked == [0, 2, 4, 6]
-    assert all(
-        hashlib.md5(decoded[p]).hexdigest()
-        == hashlib.md5(frames[p]).hexdigest()
-        for p in picked
-    )
-
-
 def test_y4m_malformed_rejected():
     import pytest as _pytest
 
