@@ -27,9 +27,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from .spread import read_spread, read_table
+from .textstats import _TOKENS, _grams_sql
 
 N_MINHASH = 8
 BAND_SIZE = 4  # 2 bands of 4 -> candidates need one identical half-signature
+
+
+def _grams_of_t(n: int) -> str:
+    """Spark SQL: the distinct token ``n``-grams of the materialized
+    token array ``t`` (``textstats._grams_sql``)."""
+    return f"array_distinct({_grams_sql(n)})"
+
 
 # word 3-gram shingles; docs with <3 tokens contribute one short shingle.
 # The token array MUST be materialized in its own projection before the
@@ -39,12 +47,7 @@ BAND_SIZE = 4  # 2 bands of 4 -> candidates need one identical half-signature
 # materialized column it is sub-second).
 # The tokenizer is the single shared constant (textstats) — the DuckDB
 # _TOKS_CTE mirrors both families, so they must never drift apart.
-from .textstats import _TOKENS  # noqa: E402
-SHINGLES_OF_T = (
-    "array_distinct(transform(sequence(1, greatest(size(t)-2, 1)), "
-    "i -> concat_ws(' ', try_element_at(t, i), try_element_at(t, i+1), "
-    "try_element_at(t, i+2))))"
-)
+SHINGLES_OF_T = _grams_of_t(3)
 
 # The Python kernels' twin of _TOKENS / SHINGLES_OF_T. Java regex \s is
 # ASCII-only ([ \t\n\x0B\f\r]); Python re's \s is Unicode-wide, so
@@ -822,21 +825,17 @@ def c4_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the lambda-inlining trap; plan-pinned). Docs whose every span
     first occurred elsewhere have nothing to keep and are absent, like
     the other dedup outputs."""
-    from .textstats import LINE_TOKENS, _TOKENS as _T, _line_starts_sql
+    from .textstats import LINE_AT_I, _line_starts_sql
 
-    span_of = (
-        f"i -> concat_ws(' ', slice(t, i * {LINE_TOKENS} + 1,"
-        f" {LINE_TOKENS}))"
-    )
+    span_of = f"i -> {LINE_AT_I}"
     toks = (
         read_spread(spark, sf_dir, "documents")
         .where(F.col("text").rlike(r"\S"))
-        .select("doc_id", F.expr(_T).alias("t"))
+        .select("doc_id", F.expr(_TOKENS).alias("t"))
         # shared parent of the span-hash stream (BOTH sides of the
         # first-occurrence join) and the reassembly branch: one
         # per-invocation materialization replaces three scan+tokenize
-        # passes (r7; the pre-spread measurements that favored
-        # re-scanning predate the single-task-scan fix)
+        # passes
         .localCheckpoint(eager=False)
     )
     hashed = toks.select(
@@ -881,15 +880,20 @@ DECON_GRAM = 8  # token n-gram width at test SFs (short synthetic docs)
 DECON_GRAM_PROD = 13  # production default: the GPT-3 App. C width
 
 
-def _grams_of_t(n: int) -> str:
-    """Per-doc distinct token n-grams of the materialized token array
-    ``t`` (concat_ws skips out-of-range NULL elements, so docs shorter
-    than ``n`` tokens contribute their single truncated gram)."""
-    els = ", ".join(f"try_element_at(t, i+{j})" for j in range(n))
-    return (
-        f"array_distinct(transform(sequence(1, greatest(size(t)-{n - 1},"
-        f" 1)), i -> concat_ws(' ', {els})))"
+def _gram_rows(df: DataFrame, n: int, *keep: str) -> DataFrame:
+    """One row per distinct token ``n``-gram (column ``g``) of each row
+    of ``df``'s ``text``, beside the ``keep`` columns. The token array
+    is materialized before the gram transform (the lambda-inlining
+    trap, tests/test_plans.py)."""
+    return df.select(*keep, F.expr(_TOKENS).alias("t")).select(
+        *keep, F.explode(F.expr(_grams_of_t(n))).alias("g")
     )
+
+
+def _stand_in_benchmark(docs: DataFrame) -> DataFrame:
+    """The stand-in benchmark when none is supplied: the texts of the
+    ``BENCH_DOC_MAX`` lowest doc_ids."""
+    return docs.where(F.col("doc_id") < BENCH_DOC_MAX).select("text")
 
 
 def decontaminate(
@@ -906,29 +910,19 @@ def decontaminate(
     When no benchmark table is supplied, a deterministic stand-in is
     derived for the driver check: the ``BENCH_DOC_MAX`` lowest
     doc_ids' texts — through the same parameter a real deployment
-    uses, so the operator itself is genuinely two-input (VERDICT r3).
+    uses, so the operator itself is genuinely two-input.
     A benchmark document that also sits in the corpus flags itself —
     exactly the contamination the op exists to surface.
 
     Scale shape: benchmark gram sets are tiny (benchmarks are MBs even
     when the corpus is 100 TB) -> distinct grams BROADCAST to a hash
     join against the corpus gram stream: one explode + per-doc count,
-    the text itself never shuffles. The token array is materialized
-    before the gram transform (the lambda-inlining trap,
-    tests/test_plans.py)."""
+    the text itself never shuffles."""
     docs = read_spread(spark, sf_dir, "documents")
     if benchmark is None:
-        benchmark = docs.where(F.col("doc_id") < BENCH_DOC_MAX).select("text")
-    gram_expr = _grams_of_t(gram_len)
-    corpus = (
-        docs.select("doc_id", F.expr(_TOKENS).alias("t"))
-        .select("doc_id", F.explode(F.expr(gram_expr)).alias("g"))
-    )
-    bench = (
-        benchmark.select(F.expr(_TOKENS).alias("t"))
-        .select(F.explode(F.expr(gram_expr)).alias("g"))
-        .distinct()
-    )
+        benchmark = _stand_in_benchmark(docs)
+    corpus = _gram_rows(docs, gram_len, "doc_id")
+    bench = _gram_rows(benchmark, gram_len).distinct()
     return (
         corpus.join(F.broadcast(bench), "g")
         .groupBy("doc_id")
@@ -954,15 +948,9 @@ def contamination_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; the text never shuffles and zero-hit docs cost no
     extra pass (the left join keeps their gram rows)."""
     docs = read_spread(spark, sf_dir, "documents")
-    benchmark = docs.where(F.col("doc_id") < BENCH_DOC_MAX).select("text")
-    gram_expr = _grams_of_t(DECON_GRAM)
-    corpus = (
-        docs.select("doc_id", F.expr(_TOKENS).alias("t"))
-        .select("doc_id", F.explode(F.expr(gram_expr)).alias("g"))
-    )
+    corpus = _gram_rows(docs, DECON_GRAM, "doc_id")
     bench = (
-        benchmark.select(F.expr(_TOKENS).alias("t"))
-        .select(F.explode(F.expr(gram_expr)).alias("g"))
+        _gram_rows(_stand_in_benchmark(docs), DECON_GRAM)
         .distinct()
         .withColumn("hit", F.lit(1))
     )
@@ -1312,15 +1300,13 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves, k bit tests against the folded array. At 100 TB this is
     the decontamination pass that costs exactly one corpus scan."""
     docs = read_spread(spark, sf_dir, "documents")
-    benchmark = docs.where(F.col("doc_id") < BENCH_DOC_MAX).select("text")
     gram_expr = _grams_of_t(DECON_GRAM)
 
     a, b = _md5_half_sql("g", 1), _md5_half_sql("g", 9)
     # construction-time bounded collect: distinct bit positions set by
     # the benchmark grams (<= min(k * |bench grams|, BLOOM_BITS) ints)
     pos_rows = (
-        benchmark.select(F.expr(_TOKENS).alias("t"))
-        .select(F.explode(F.expr(gram_expr)).alias("g"))
+        _gram_rows(_stand_in_benchmark(docs), DECON_GRAM)
         .select(
             F.explode(
                 F.expr(
@@ -1483,11 +1469,10 @@ def cluster_keepers_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep themselves.
 
     The signature pipeline (the family's dominant stage) evaluates
-    ONCE (VERDICT r6 item 1): the band-exploded table is checkpointed
-    and BOTH the degree edges and the CC labels derive from it —
-    previously the candidate generator and the CC closure each rebuilt
-    signatures from the corpus, paying the Arrow UDF twice. A/B at
-    sf1.0: 12.56 -> ~7.4 s; plan-pinned to one signature stage by
+    ONCE: the band-exploded table is checkpointed and BOTH the degree
+    edges and the CC labels derive from it, so the Arrow UDF runs once
+    (A/B at sf1.0: 12.56 -> ~7.4 s against rebuilding signatures per
+    consumer); plan-pinned to one signature stage by
     test_keeper_single_signature_pass."""
     exploded = _band_exploded(spark, sf_dir).localCheckpoint(eager=False)
     edges = minhash_band_candidates(spark, sf_dir, exploded=exploded)

@@ -2,7 +2,9 @@
 
 Image/audio/video payloads are carried as ``binary`` columns with a
 metadata struct; decode / feature-extract run as Arrow-batched
-``mapInPandas`` so each executor processes whole record batches.
+``mapInPandas`` so each executor processes whole record batches. One
+runner, ``_map_rows``, owns the batch loop and the output framing;
+each operator supplies only a per-row generator of output tuples.
 
 One format per modality decodes for REAL with no media library:
 PNG images (:mod:`..kernels.png`: IHDR/IDAT + row defilter), WAV/PCM
@@ -19,7 +21,7 @@ swappable.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -50,6 +52,27 @@ FEATURE_SCHEMA = StructType(
         StructField("features", ArrayType(FloatType())),
     ]
 )
+
+
+def _map_rows(
+    df: DataFrame, schema: StructType, rows_of: Callable[..., Iterable[tuple]]
+) -> DataFrame:
+    """``mapInPandas`` over ``df`` one input row at a time: ``rows_of``
+    takes a row's column values in ``df``'s column order and yields
+    output tuples in ``schema``'s field order (zero, one or many per
+    input row)."""
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out
+                for row in zip(*(pdf[c] for c in pdf.columns))
+                for out in rows_of(*row)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema)
 
 
 def binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,42 +121,20 @@ def _decode(payload: bytes) -> tuple[int, int, list[float]]:
 def decode_features(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
-    Input requires columns (doc_id long, payload binary). PNG payloads
-    decode through the real pure-Python codec (dimensions + pixel
-    histogram); other formats take the deterministic fake, which keeps
-    schema/batching real while those codecs stay stubs.
+    Input is exactly the columns (doc_id long, payload binary), in
+    that order. PNG payloads decode through the real pure-Python codec
+    (dimensions + pixel histogram); other formats take the
+    deterministic fake, which keeps schema/batching real while those
+    codecs stay stubs.
     """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                # PNG decodes for real; anything else takes the
-                # declared deterministic fake
-                w, h, feats = _decode(data)
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(data),
-                        hashlib.md5(data).hexdigest(),
-                        w,
-                        h,
-                        feats,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_bytes",
-                    "payload_md5",
-                    "width",
-                    "height",
-                    "features",
-                ],
-            )
 
-    return df.mapInPandas(run, FEATURE_SCHEMA)
+    def features(doc_id, payload):
+        data = bytes(payload) if payload is not None else b""
+        w, h, feats = _decode(data)
+        md5 = hashlib.md5(data).hexdigest()
+        yield int(doc_id), len(data), md5, w, h, feats
+
+    return _map_rows(df, FEATURE_SCHEMA, features)
 
 
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,34 +182,23 @@ N_FRAMES = 4
 def frame_sample(df: DataFrame) -> DataFrame:
     """1->N frame sampling over video-like payloads via mapInPandas
     (UDTF-style expansion): every payload yields ``N_FRAMES`` frames,
-    frame i being the md5 of the i-th stride slice of its bytes.
+    frame i being the md5 of the i-th stride slice of its bytes. Input
+    is exactly the columns (doc_id long, payload binary), in that
+    order.
 
     No payload is sniffed for a real container: the Y4M magic is plain
     ASCII ("YUV4MPEG2"), so a *text* corpus document that contained a
     well-formed Y4M stream would otherwise switch paths and break the
     stub-shaped oracle. ``y4m_frames`` decodes real Y4M streams."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                stride = max(1, len(data) // N_FRAMES)
-                for i in range(N_FRAMES):
-                    chunk = data[i * stride : (i + 1) * stride]
-                    rows.append(
-                        (
-                            int(doc_id),
-                            i,
-                            hashlib.md5(chunk).hexdigest(),
-                            len(chunk),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "frame_md5", "n_bytes"]
-            )
+    def frames(doc_id, payload):
+        data = bytes(payload) if payload is not None else b""
+        stride = max(1, len(data) // N_FRAMES)
+        for i in range(N_FRAMES):
+            chunk = data[i * stride : (i + 1) * stride]
+            yield int(doc_id), i, hashlib.md5(chunk).hexdigest(), len(chunk)
 
-    return df.mapInPandas(run, FRAME_SCHEMA)
+    return _map_rows(df, FRAME_SCHEMA, frames)
 
 
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,29 +240,13 @@ def png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovered the actual pixels — not metadata arithmetic. Gray values
     stay in 1..127 so DuckDB's UTF-8 md5(string) equals the byte md5."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                _, _, _, payload = _synth_png(d)
-                dw, dh, pixels = png.decode_png(payload)
-                rows.append(
-                    (
-                        d,
-                        dw,
-                        dh,
-                        hashlib.md5(pixels).hexdigest(),
-                        len(pixels),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "pixel_md5", "n_pixels"],
-            )
+    def decoded(doc_id):
+        d = int(doc_id)
+        dw, dh, pixels = png.decode_png(_synth_png(d)[3])
+        yield d, dw, dh, hashlib.md5(pixels).hexdigest(), len(pixels)
 
     docs = read_spread(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(run, PNG_SCHEMA)
+    return _map_rows(docs, PNG_SCHEMA, decoded)
 
 
 def resize_nearest(
@@ -309,34 +283,14 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ran over real pixels. The gradient-correctness of the resampler is
     pinned by the pytest golden (tests/test_png.py)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for doc_id in pdf_b["doc_id"]:
-                d = int(doc_id)
-                _, _, _, payload = _synth_png(d)
-                dw, dh, pixels = png.decode_png(payload)
-                small = resize_nearest(pixels, dw, dh, RESIZE_W, RESIZE_H)
-                rows.append(
-                    (
-                        d,
-                        dw,
-                        dh,
-                        RESIZE_W,
-                        RESIZE_H,
-                        hashlib.md5(small).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "src_w", "src_h", "out_w", "out_h",
-                    "resized_md5",
-                ],
-            )
+    def resized(doc_id):
+        d = int(doc_id)
+        dw, dh, pixels = png.decode_png(_synth_png(d)[3])
+        small = resize_nearest(pixels, dw, dh, RESIZE_W, RESIZE_H)
+        yield d, dw, dh, RESIZE_W, RESIZE_H, hashlib.md5(small).hexdigest()
 
     docs = read_spread(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(run, RESIZE_SCHEMA)
+    return _map_rows(docs, RESIZE_SCHEMA, resized)
 
 
 
@@ -372,32 +326,14 @@ def wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a generated series, so a hash match certifies the decoder
     recovered the actual samples."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for doc_id in pdf_b["doc_id"]:
-                d = int(doc_id)
-                _, _, payload = _synth_wav(d)
-                rate, ch, bits, pcm = wav.decode_wav(payload)
-                rows.append(
-                    (
-                        d,
-                        rate,
-                        ch,
-                        len(pcm) // (ch * bits // 8),
-                        hashlib.md5(pcm).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_channels", "n_samples",
-                    "pcm_md5",
-                ],
-            )
+    def decoded(doc_id):
+        d = int(doc_id)
+        rate, ch, bits, pcm = wav.decode_wav(_synth_wav(d)[2])
+        n = len(pcm) // (ch * bits // 8)
+        yield d, rate, ch, n, hashlib.md5(pcm).hexdigest()
 
     docs = read_spread(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(run, WAV_SCHEMA)
+    return _map_rows(docs, WAV_SCHEMA, decoded)
 
 
 def _synth_y4m(d: int) -> tuple[int, int, int, bytes]:
@@ -418,21 +354,11 @@ def y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     REAL decode, and emit every frame's md5 — the oracle predicts each
     frame buffer analytically (repeat(chr(v_i), w*h*3/2))."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for doc_id in pdf_b["doc_id"]:
-                d = int(doc_id)
-                _, _, _, payload = _synth_y4m(d)
-                _, _, _, frames = y4m.decode_y4m(payload)
-                for i, fr in enumerate(frames):
-                    rows.append(
-                        (d, i, hashlib.md5(fr).hexdigest(), len(fr))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "frame_md5", "n_bytes"],
-            )
+    def frames(doc_id):
+        d = int(doc_id)
+        _, _, _, decoded = y4m.decode_y4m(_synth_y4m(d)[3])
+        for i, fr in enumerate(decoded):
+            yield d, i, hashlib.md5(fr).hexdigest(), len(fr)
 
     docs = read_spread(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(run, FRAME_SCHEMA)
+    return _map_rows(docs, FRAME_SCHEMA, frames)

@@ -7,7 +7,7 @@ aggregates partial-combine map-side — all Catalyst built-ins, no UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..kernels.textnorm import NUMBER_PATTERN
@@ -467,6 +467,42 @@ def s3_uri_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                     prefix.alias("s3_prefix"))
 
 
+def _epoch_us() -> Column:
+    """Microseconds since the epoch of ``events.ts``. The column is
+    TIMESTAMP_NTZ: unix_micros() rejects it, and casting through
+    TIMESTAMP would inject the session timezone; a pure NTZ difference
+    keeps time bins timezone-free."""
+    return F.timestamp_diff(
+        "MICROSECOND",
+        F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"),
+        F.col("ts"),
+    )
+
+
+def _asof_sides(ev: DataFrame, *extra: Column) -> tuple[DataFrame, DataFrame]:
+    """The two as-of join inputs over ``events``: purchases tagged 0
+    carrying their (p_id, p_ts, p_value), and clicks tagged 1 with
+    those columns NULL, each with (user_id, ts, event_id, *extra)."""
+    purchases = ev.where(F.col("event_type") == "purchase").select(
+        "user_id", "ts", "event_id", *extra,
+        F.lit(0).alias("tag"),
+        F.col("event_id").alias("p_id"),
+        F.col("ts").alias("p_ts"),
+        F.col("value").alias("p_value"),
+    )
+    clicks = ev.where(F.col("event_type") == "click").select(
+        "user_id", "ts", "event_id", *extra,
+        F.lit(1).alias("tag"),
+        F.lit(None).cast("long").alias("p_id"),
+        # NTZ, not TIMESTAMP: an instant-typed null would coerce the
+        # union's p_ts through the session zone, shifting gap_us by a
+        # DST offset on non-UTC clusters
+        F.lit(None).cast("timestamp_ntz").alias("p_ts"),
+        F.lit(None).cast("double").alias("p_value"),
+    )
+    return purchases, clicks
+
+
 def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join — for every 'click' event, the user's most recent
     'purchase' at or before the click instant (the canonical
@@ -484,24 +520,7 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     user). Ties at the same timestamp order purchase-before-click
     (tag asc), then event_id, so same-instant purchases are visible
     and the order is total -> deterministic at any parallelism."""
-    ev = _t(spark, sf_dir, "events")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id",
-        F.lit(0).alias("tag"),
-        F.col("event_id").alias("p_id"),
-        F.col("ts").alias("p_ts"),
-        F.col("value").alias("p_value"),
-    )
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id",
-        F.lit(1).alias("tag"),
-        F.lit(None).cast("long").alias("p_id"),
-        # NTZ, not TIMESTAMP: an instant-typed null would coerce the
-        # union's p_ts through the session zone, shifting gap_us by a
-        # DST offset on non-UTC clusters
-        F.lit(None).cast("timestamp_ntz").alias("p_ts"),
-        F.lit(None).cast("double").alias("p_value"),
-    )
+    purchases, clicks = _asof_sides(_t(spark, sf_dir, "events"))
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "tag", "event_id")
@@ -546,14 +565,7 @@ def range_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     range join)."""
     us = RANGE_WINDOW_S * 1_000_000
     ev = _t(spark, sf_dir, "events")
-    # events.ts is TIMESTAMP_NTZ: unix_micros() rejects it, and casting
-    # through TIMESTAMP would inject the session timezone. Epoch micros
-    # as a pure NTZ difference keeps the bins timezone-free.
-    t_us = F.timestamp_diff(
-        "MICROSECOND",
-        F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"),
-        F.col("ts"),
-    )
+    t_us = _epoch_us()
     errors = (
         ev.where(F.col("event_type") == "error")
         .select(
@@ -684,27 +696,8 @@ def asof_join_salted(
     every same-block purchase at or before the click (tag order covers
     same-instant ties), and anything earlier is strictly in an earlier
     block."""
-    ev = _t(spark, sf_dir, "events")
-    t_us = F.timestamp_diff(
-        "MICROSECOND",
-        F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"),
-        F.col("ts"),
-    )
-    blk = F.floor(t_us / (block_s * 1_000_000)).alias("blk")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id", blk,
-        F.lit(0).alias("tag"),
-        F.col("event_id").alias("p_id"),
-        F.col("ts").alias("p_ts"),
-        F.col("value").alias("p_value"),
-    )
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id", blk,
-        F.lit(1).alias("tag"),
-        F.lit(None).cast("long").alias("p_id"),
-        F.lit(None).cast("timestamp_ntz").alias("p_ts"),
-        F.lit(None).cast("double").alias("p_value"),
-    )
+    blk = F.floor(_epoch_us() / (block_s * 1_000_000)).alias("blk")
+    purchases, clicks = _asof_sides(_t(spark, sf_dir, "events"), blk)
     w_blk = (
         Window.partitionBy("user_id", "blk")
         .orderBy("ts", "tag", "event_id")
@@ -768,6 +761,14 @@ HOP_WINDOW = "10 minutes"  # sliding window length
 HOP_SLIDE = "5 minutes"    # hop; each event lands in exactly 2 windows
 
 
+def _count_and_cents() -> list[Column]:
+    """Per-window event count and value sum in exact integer cents."""
+    return [
+        F.count("*").alias("n_events"),
+        F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
+    ]
+
+
 def hopping_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding (hopping) window aggregation over the event stream —
     the batch twin of Structured Streaming's windowed aggregates:
@@ -790,12 +791,7 @@ def hopping_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     win = F.window("ts", HOP_WINDOW, HOP_SLIDE)
     return (
         ev.groupBy(win.alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                "value_cents"
-            ),
-        )
+        .agg(*_count_and_cents())
         .select(
             F.col("w.start").alias("window_start"),
             "event_type",
@@ -883,12 +879,7 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sw = F.session_window("ts", SESSION_GAP)
     return (
         ev.groupBy(sw.alias("sw"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                "value_cents"
-            ),
-        )
+        .agg(*_count_and_cents())
         .select(
             "user_id",
             F.col("sw.start").alias("session_start"),

@@ -12,6 +12,12 @@ an Arrow-batched numpy fold (``_fold_dots``) at every k —
 so k centroid dots per vector cost k x dim interpreted lambda steps,
 while the numpy fold is vectorized over rows yet bit-equal to the JVM
 fold by construction (sequential per-dimension accumulation).
+
+Every pairwise search scores its candidate pairs through one join,
+``_pair_cos``, over one checkpointed (vec_id, embedding, norm) frame;
+every single-query search scores through ``_cos_to``. The kNN join
+has one implementation, ``knn_join_multiprobe``; ``knn_join`` is that
+join at one probe.
 """
 
 from __future__ import annotations
@@ -50,70 +56,24 @@ def _norm(a: str) -> Column:
     )
 
 
-def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-``TOP_K`` against the ``QUERY_VEC_ID``
-    vector (broadcast)."""
-    e = read_spread(spark, sf_dir, "embeddings")
-    # the query's norm is a scalar: compute it once on the broadcast
-    # side instead of re-deriving it for every candidate row
-    q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("q"), _norm("embedding").alias("qn")
-    )
-    scored = (
-        e.where(F.col("vec_id") != QUERY_VEC_ID)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(
-                _dot("embedding", "q")
-                / (_norm("embedding") * F.col("qn")),
-                4,
-            ).alias("cos"),
-        )
-    )
-    return scored.orderBy(F.col("cos").desc(), F.col("vec_id")).limit(TOP_K)
+def _cos_to(q: str, qn: str) -> Column:
+    """Rounded cosine of each row's ``embedding`` against the query
+    vector column ``q`` whose norm is the column ``qn``."""
+    return F.round(_dot("embedding", q) / (_norm("embedding") * F.col(qn)), 4)
 
 
-NEARDUP_BANDS = 4  # 4 bands x 4 sign bits from the 16 hyperplanes
-NEARDUP_COS = 0.30  # cosine at or above which a candidate pair is a near-dup
-
-
-def cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs with hyperplane-LSH band blocking.
-
-    Candidates must share at least one of ``NEARDUP_BANDS`` bands of
-    sign bits (the same md5-derived plane family as ``lsh_ann_topk``);
-    exact cosine is then computed only inside those bucket-local pairs.
-    This is the blocking a 10^12-row corpus requires — no global
-    pairwise join ever forms, and the ``MAX_BUCKET_DF`` cap bounds any
-    one bucket's pair explosion (mirrored in the DuckDB oracle).
-    Recall is the standard LSH trade: pairs approach probability 1 of
-    sharing a band as cosine -> 1; at a loose ``NEARDUP_COS`` of 0.30 the
-    blocking is intentionally lossy (round 1 blocked on the *label*
-    column, which is a test-data crutch, not a computable key).
-    At real scale, raise N_PLANES and the band width together (e.g. 64
-    planes -> 4 bands of 16 bits) to keep buckets sparse."""
-    from .dedup import MAX_BUCKET_DF, _bucket_pairs, _capped_buckets
-
-    width = N_PLANES // NEARDUP_BANDS
-    e = read_spread(spark, sf_dir, "embeddings").select(
+def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, embedding, nrm), checkpointed: both sides of a pair
+    join (``_pair_cos``) read it."""
+    return read_spread(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", _norm("embedding").alias("nrm")
-    ).localCheckpoint(eager=False)  # consumed by both pair-join sides
-    eb = e.withColumn("bucket", _bucket_col())
-    bands = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.substring("bucket", b * width + 1, width).alias("band_val"),
-        )
-        for b in range(NEARDUP_BANDS)
-    ]
-    exploded = eb.select(
-        "vec_id", F.explode(F.array(*bands)).alias("b")
-    ).select("vec_id", F.col("b.band_idx"), F.col("b.band_val"))
-    buckets = _capped_buckets(
-        exploded, ["band_idx", "band_val"], "vec_id", MAX_BUCKET_DF
-    )
-    pairs = _bucket_pairs(buckets).distinct()
+    ).localCheckpoint(eager=False)
+
+
+def _pair_cos(pairs: DataFrame, e: DataFrame) -> DataFrame:
+    """(a_id, b_id) pairs -> (a_id, b_id, cos): both sides' embeddings
+    and norms join in from ``e`` (``_normed``), cosine rounded to 4dp.
+    A zero-norm side's 0/0 is a NULL cosine."""
     a = e.select(
         F.col("vec_id").alias("a_id"),
         F.col("embedding").alias("ea"),
@@ -134,8 +94,64 @@ def cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _dot("ea", "eb") / (F.col("na") * F.col("nb")), 4
             ).alias("cos"),
         )
-        .where(F.col("cos") >= NEARDUP_COS)
     )
+
+
+def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-``TOP_K`` against the ``QUERY_VEC_ID``
+    vector (broadcast)."""
+    e = read_spread(spark, sf_dir, "embeddings")
+    # the query's norm is a scalar: compute it once on the broadcast
+    # side instead of re-deriving it for every candidate row
+    q = e.where(F.col("vec_id") == QUERY_VEC_ID).select(
+        F.col("embedding").alias("q"), _norm("embedding").alias("qn")
+    )
+    scored = (
+        e.where(F.col("vec_id") != QUERY_VEC_ID)
+        .crossJoin(F.broadcast(q))
+        .select("vec_id", _cos_to("q", "qn").alias("cos"))
+    )
+    return scored.orderBy(F.col("cos").desc(), F.col("vec_id")).limit(TOP_K)
+
+
+NEARDUP_BANDS = 4  # 4 bands x 4 sign bits from the 16 hyperplanes
+NEARDUP_COS = 0.30  # cosine at or above which a candidate pair is a near-dup
+
+
+def cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding near-dup pairs with hyperplane-LSH band blocking.
+
+    Candidates must share at least one of ``NEARDUP_BANDS`` bands of
+    sign bits (the same md5-derived plane family as ``lsh_ann_topk``);
+    exact cosine is then computed only inside those bucket-local pairs.
+    This is the blocking a 10^12-row corpus requires — no global
+    pairwise join ever forms, and the ``MAX_BUCKET_DF`` cap bounds any
+    one bucket's pair explosion (mirrored in the DuckDB oracle).
+    Recall is the standard LSH trade: pairs approach probability 1 of
+    sharing a band as cosine -> 1; at a loose ``NEARDUP_COS`` of 0.30 the
+    blocking is intentionally lossy.
+    At real scale, raise N_PLANES and the band width together (e.g. 64
+    planes -> 4 bands of 16 bits) to keep buckets sparse."""
+    from .dedup import MAX_BUCKET_DF, _bucket_pairs, _capped_buckets
+
+    width = N_PLANES // NEARDUP_BANDS
+    e = _normed(spark, sf_dir)
+    eb = e.withColumn("bucket", _bucket_col())
+    bands = [
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            F.substring("bucket", b * width + 1, width).alias("band_val"),
+        )
+        for b in range(NEARDUP_BANDS)
+    ]
+    exploded = eb.select(
+        "vec_id", F.explode(F.array(*bands)).alias("b")
+    ).select("vec_id", F.col("b.band_idx"), F.col("b.band_val"))
+    buckets = _capped_buckets(
+        exploded, ["band_idx", "band_val"], "vec_id", MAX_BUCKET_DF
+    )
+    pairs = _bucket_pairs(buckets).distinct()
+    return _pair_cos(pairs, e).where(F.col("cos") >= NEARDUP_COS)
 
 
 def plane_weights(p: int) -> list[float]:
@@ -152,10 +168,7 @@ def plane_weights(p: int) -> list[float]:
 def _bucket_col() -> Column:
     """Per-row LSH bucket: one sign bit per hyperplane, each computed as
     a single ``aggregate(zip_with(...))`` over a plane-weight array
-    *literal* — zero explode, zero shuffle. (Round 1 computed these bits
-    via rows × dim × planes double-explode + two shuffled groupBys: at
-    10^9 vectors × 768 dims that shuffles 10^13 rows to derive a few
-    bits per vector. This form is pure per-row projection.)"""
+    *literal* — pure per-row projection, zero explode, zero shuffle."""
     bits = []
     for p in range(N_PLANES):
         w = F.array(*[F.lit(x) for x in plane_weights(p)])
@@ -202,13 +215,7 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = (
         bucketed.crossJoin(F.broadcast(q))
         .where((F.col("vec_id") != QUERY_VEC_ID) & (hamming <= LSH_RADIUS))
-        .select(
-            "vec_id",
-            F.round(
-                _dot("embedding", "q") / (_norm("embedding") * F.col("qn")),
-                4,
-            ).alias("cos"),
-        )
+        .select("vec_id", _cos_to("q", "qn").alias("cos"))
     )
     return cands.orderBy(F.col("cos").desc(), F.col("vec_id")).limit(TOP_K)
 
@@ -230,7 +237,7 @@ K_LISTS = 10
 KMEANS_ITERS = 3
 CENTROID_DP = 6  # fixed-point quantization of centroids per update
 
-# --- corpus-adaptive quantizer size (VERDICT r5 item 1) -------------------
+# --- corpus-adaptive quantizer size --------------------------------------
 # A fixed k means cluster size grows linearly with the corpus until
 # SEM_MAX_CLUSTER silently caps (or drops) every cluster — the
 # SemDeDup/IVF recipe is k grows with n so clusters stay bounded.
@@ -396,8 +403,7 @@ def ivf_ann_topk(
     spark: SparkSession, sf_dir: str, n_probe: int = 2
 ) -> DataFrame:
     """IVF ANN on the k-means coarse quantizer (kmeans_assign's
-    centroids - round 1 used the test data's label column as a
-    stand-in): every vector's list assignment is one Arrow map over
+    centroids): every vector's list assignment is one Arrow map over
     the k x dim centroids (``_assigned``, zero shuffle), the query's
     ``n_probe`` nearest lists are ranked driver-side by the same fold
     and tie rule, and candidates reduce to a literal ``list_id IN (...)``
@@ -452,9 +458,7 @@ SEM_MAX_CLUSTER = 1000  # within-cluster pair cap for semantic dedup
 SEM_THRESHOLD = 0.30
 
 
-def semantic_dedup(
-    spark: SparkSession, sf_dir: str, threshold: float = SEM_THRESHOLD,
-) -> DataFrame:
+def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-family semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): k-means-cluster the embedding space, then
     compute exact cosine ONLY within each cluster. Returned pairs
@@ -465,12 +469,11 @@ def semantic_dedup(
 
     Scale shape: the cluster id is the blocking key, so no global
     pairwise join ever forms; within-cluster pairs expand
-    bucket-locally capped at SEM_MAX_CLUSTER. Since r6 the
-    quantizer is ``k='auto'`` — k doubles along the deterministic
-    grid as the corpus grows (``_auto_k``), holding average cluster
-    size at ~AUTO_TARGET_CLUSTER so the cap stops binding at 10x+
-    scale (exactly the SemDeDup recipe; the r5 VERDICT's fixed-k=10
-    silent-cap finding). At driver scales auto resolves to k=10, so
+    bucket-locally capped at SEM_MAX_CLUSTER. The quantizer is
+    ``k='auto'`` — k doubles along the deterministic grid as the
+    corpus grows (``_auto_k``), holding average cluster size at
+    ~AUTO_TARGET_CLUSTER so the cap stops binding at 10x+ scale
+    (the SemDeDup recipe). At driver scales auto resolves to k=10, so
     the unrolled k=10 SQL oracle replays the auto path verbatim; at
     other k the same SQL unrolls at the resolved k.
     The quantizer is the same engine-deterministic k-means the IVF
@@ -478,9 +481,6 @@ def semantic_dedup(
     from .dedup import _bucket_pairs, _capped_buckets
 
     assign = kmeans_assign(spark, sf_dir, k="auto")  # (vec_id, list_id)
-    e = read_spread(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", _norm("embedding").alias("nrm")
-    ).localCheckpoint(eager=False)  # consumed by both pair-join sides
     buckets = _capped_buckets(
         assign.select("vec_id", "list_id"),
         ["list_id"],
@@ -488,27 +488,8 @@ def semantic_dedup(
         SEM_MAX_CLUSTER,
     )
     pairs = _bucket_pairs(buckets, cap=SEM_MAX_CLUSTER)
-    a = e.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    return (
-        pairs.join(a, "a_id")
-        .join(b, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.round(
-                _dot("ea", "eb") / (F.col("na") * F.col("nb")), 4
-            ).alias("cos"),
-        )
-        .where(F.col("cos") >= threshold)
+    return _pair_cos(pairs, _normed(spark, sf_dir)).where(
+        F.col("cos") >= SEM_THRESHOLD
     )
 
 
@@ -597,14 +578,18 @@ def _probe_lists(
 def knn_join_multiprobe(
     spark: SparkSession, sf_dir: str, probes: int = KNN_PROBES
 ) -> DataFrame:
-    """Multi-probe upgrade of ``knn_join`` (VERDICT r4 item 3): every
-    vector is INDEXED in its primary k-means list, but QUERIES its
-    ``probes`` nearest lists — the standard IVF multi-probe recall
-    recovery: neighbors just across a quantization boundary become
-    visible without widening any cluster. probes=1 degenerates to the
-    single-probe candidate set; recall@k grows monotonically with
-    ``probes`` (pinned by test_multiprobe_recall_improves against a
-    brute-force numpy oracle).
+    """Cluster-blocked k-nearest-neighbor JOIN with multi-probe: the
+    top-``KNN_K`` cosine neighbors for EVERY vector (the general form
+    of the single-query ANN searches). Every vector is INDEXED in its
+    primary k-means list — the same engine-deterministic quantizer the
+    IVF index and SemDeDup use, so the oracle replays it exactly — but
+    QUERIES its ``probes`` nearest lists: the standard IVF multi-probe
+    recall recovery, neighbors just across a quantization boundary
+    become visible without widening any cluster. At probes=1 a vector
+    sees only its own cluster (``knn_join``); recall@k grows
+    monotonically with ``probes`` (pinned by
+    test_multiprobe_recall_improves against a brute-force numpy
+    oracle).
 
     Scale shape: index buckets are the capped primary-assignment
     arrays (cap BEFORE collect, same machinery as semantic_dedup but
@@ -614,26 +599,31 @@ def knn_join_multiprobe(
     only by probe-list join — never a global pairwise join — and each
     (a, b) pair arises exactly once because b lives in exactly one
     primary bucket (no distinct needed). Per-query cost is
-    probes x cluster_size, the IVF knob. Zero-norm embeddings drop
-    (NULL cosine; the oracle excludes them explicitly).
+    probes x cluster_size, the IVF knob. The per-vector top-k is a
+    bounded window partitioned by vec_id; ties break on (cos desc,
+    neighbor id asc) — engine-deterministic.
 
     Cosine economy: the candidate set splits into PRIMARY pairs
     (both sides share a primary cluster — symmetric by construction,
     so each unordered pair's cosine computes ONCE and mirrors into
-    both directions, exactly knn_join's edge set) and FOREIGN probes
-    (rank >= 2 — inherently directed: a probing b's cluster does not
-    imply b probes a's). That removes a quarter of the cosine
-    evaluations at probes=2 vs scoring every directed candidate
-    (A/B in BENCH/BASELINE.md); results are bit-identical because
-    FP dot products commute elementwise."""
+    both directions) and FOREIGN probes (rank >= 2 — inherently
+    directed: a probing b's cluster does not imply b probes a's).
+    That removes a quarter of the cosine evaluations at probes=2 vs
+    scoring every directed candidate (A/B in BENCH/BASELINE.md);
+    results are bit-identical because FP dot products commute
+    elementwise.
+
+    A ZERO-NORM embedding has no defined cosine: its 0/0 evaluates to
+    NULL and the ``cos IS NOT NULL`` filter drops every pair touching
+    it, so such vectors emit no neighbor rows (the DuckDB oracle
+    excludes zero-norm sides explicitly — its cosine returns -1.0
+    instead of NULL; pinned by test_knn_join_zero_norm_parity)."""
     from pyspark.sql import Window
 
     from .dedup import _bucket_pairs, _capped_buckets
 
     cents = _kmeans_centroids(spark, sf_dir, "auto")
-    e = read_spread(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", _norm("embedding").alias("nrm")
-    ).localCheckpoint(eager=False)  # consumed by both pair-join sides
+    e = _normed(spark, sf_dir)
     ev = e.select("vec_id", "embedding")
     # the probe table feeds the primary buckets AND the foreign
     # probes — checkpoint so the Arrow ranking UDF runs once
@@ -649,30 +639,9 @@ def knn_join_multiprobe(
     buckets = _capped_buckets(
         primary, ["list_id"], "vec_id", SEM_MAX_CLUSTER, n_min=1
     )
-    a = e.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
 
     def _cos(cand: DataFrame) -> DataFrame:
-        return (
-            cand.join(a, "a_id")
-            .join(b, "b_id")
-            .select(
-                "a_id",
-                "b_id",
-                F.round(
-                    _dot("ea", "eb") / (F.col("na") * F.col("nb")), 4
-                ).alias("cos"),
-            )
-            .where(F.col("cos").isNotNull())
-        )
+        return _pair_cos(cand, e).where(F.col("cos").isNotNull())
 
     sym = _cos(_bucket_pairs(buckets, cap=SEM_MAX_CLUSTER))
     sym_bidi = sym.unionByName(
@@ -702,50 +671,9 @@ def knn_join_multiprobe(
 
 
 def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-blocked k-nearest-neighbor JOIN: the top-``KNN_K`` cosine
-    neighbors for EVERY vector (the general form of the single-query
-    ANN searches), candidates restricted to the vector's k-means
-    cluster — the same engine-deterministic quantizer the IVF index
-    and SemDeDup use, so the oracle replays it exactly. Neighbors
-    living in other clusters are unseen: the standard single-probe
-    IVF trade-off, recall governed by quantizer quality.
-
-    Scale shape: no global pairwise join — within-cluster candidate
-    pairs expand bucket-locally under the SEM_MAX_CLUSTER cap
-    (enforced BEFORE collect_list, same machinery as semantic_dedup);
-    each undirected pair's cosine computes once and mirrors into both
-    directions; the per-vector top-k is a bounded window partitioned
-    by vec_id over each vector's own candidate list. Ties break on
-    (cos desc, neighbor id asc) — engine-deterministic.
-
-    A ZERO-NORM embedding has no defined cosine: its 0/0 evaluates to
-    NULL and the ``cos >= -1.0`` filter drops every pair touching it,
-    so such vectors emit no neighbor rows (the DuckDB oracle excludes
-    zero-norm sides explicitly — its cosine returns -1.0 instead of
-    NULL; pinned by test_knn_join_zero_norm_parity, ADVICE r4)."""
-    from pyspark.sql import Window
-
-    und = semantic_dedup(spark, sf_dir, threshold=-1.0)
-    edges = und.unionByName(
-        und.select(
-            F.col("b_id").alias("a_id"),
-            F.col("a_id").alias("b_id"),
-            "cos",
-        )
-    )
-    w = Window.partitionBy("a_id").orderBy(
-        F.col("cos").desc(), F.col("b_id")
-    )
-    return (
-        edges.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= KNN_K)
-        .select(
-            F.col("a_id").alias("vec_id"),
-            F.col("rank").cast("int").alias("rank"),
-            F.col("b_id").alias("nn_id"),
-            "cos",
-        )
-    )
+    """Single-probe k-nearest-neighbor JOIN: each vector's neighbors
+    come from its own k-means cluster only."""
+    return knn_join_multiprobe(spark, sf_dir, probes=1)
 
 
 RRF_C = 60    # the standard RRF damping constant (Cormack et al. 2009)
@@ -797,11 +725,7 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             F.col("vec_id").alias("doc_id"),
-            F.round(
-                _dot("embedding", "qe")
-                / (_norm("embedding") * F.col("qn")),
-                4,
-            ).alias("cos"),
+            _cos_to("qe", "qn").alias("cos"),
         )
     )
     wv = Window.partitionBy("qid").orderBy(

@@ -374,19 +374,59 @@ def _line_starts_sql() -> str:
     [0, -1] when size(t)=0 (two phantom lines), while the oracles'
     ``generate_series(0, -1)`` yields no rows; the CASE guard pins
     both engines to "empty doc -> no lines". ONE definition serves
-    gopher_repetition and c4_line_stats so the derivation cannot
+    every pseudo-line operator so the derivation cannot
     desynchronize."""
     return (
         "CASE WHEN size(t) = 0 THEN array() ELSE sequence(0,"
         f" cast(floor((size(t) - 1) / {LINE_TOKENS}) as int)) END"
     )
+
+
+# Spark SQL: the text of the pseudo-line starting at line index ``i``
+# of the token column ``t``
+LINE_AT_I = f"concat_ws(' ', slice(t, i * {LINE_TOKENS} + 1, {LINE_TOKENS}))"
+
+
+def _grams_sql(n: int) -> str:
+    """Spark SQL: the token ``n``-grams of the materialized token array
+    ``t``, in order, duplicates kept (concat_ws skips out-of-range NULL
+    elements, so a doc shorter than ``n`` tokens contributes one
+    truncated gram)."""
+    els = ", ".join(
+        f"try_element_at(t, i+{j})" if j else "try_element_at(t, i)"
+        for j in range(n)
+    )
+    return (
+        f"transform(sequence(1, greatest(size(t)-{n - 1}, 1)),"
+        f" i -> concat_ws(' ', {els}))"
+    )
+
+
+def _struct_grams_sql(fields: tuple[str, ...]) -> str:
+    """Spark SQL: the adjacent token tuples of ``t`` as structs named
+    ``fields`` (one field per token, in order). The CASE guard keeps
+    a doc shorter than the tuple gram-free: ``sequence(n-1, size-1)``
+    would otherwise run DESCENDING (the phantom-pseudo-line trap)."""
+    n = len(fields)
+    typ = ",".join(f"{f}:string" for f in fields)
+    els = ", ".join(
+        f"t[i-{n - 1 - j}] AS {f}" if j < n - 1 else f"t[i] AS {f}"
+        for j, f in enumerate(fields)
+    )
+    return (
+        f"CASE WHEN size(t) < {n} THEN array()::array<struct<{typ}>>"
+        f" ELSE transform(sequence({n - 1}, size(t) - 1), i ->"
+        f" struct({els})) END"
+    )
+
+
 GOPHER_MIN_WORDS = 50
 GOPHER_MAX_WORDS = 100_000
 GOPHER_MIN_MEAN_WLEN = 3.0
 GOPHER_MAX_MEAN_WLEN = 10.0
 GOPHER_MIN_ALPHA_FRAC = 0.80
 GOPHER_MIN_STOP_HITS = 2
-# The remaining published App. A1 thresholds (VERDICT r4 item 7):
+# The remaining published App. A1 thresholds:
 # symbol-to-word ratio > 0.1 for either '#' or ellipsis rejects; more
 # than 90% of lines starting with a bullet or more than 30% ending
 # with an ellipsis rejects. The PASS flag evaluates these as exact
@@ -414,12 +454,7 @@ def gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lines = toks.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"transform({_line_starts_sql()}, i -> concat_ws(' ',"
-                f" slice(t, i * {LINE_TOKENS} + 1, {LINE_TOKENS})))"
-            )
-        ).alias("line"),
+        F.explode(F.expr(_gopher_lines_sql())).alias("line"),
     )
     line_stats = (
         lines.groupBy("doc_id", "line")
@@ -440,13 +475,7 @@ def gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigrams = toks.select(
         "doc_id",
         "n_chars",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, greatest(size(t) - 1, 1)), i ->"
-                " concat_ws(' ', try_element_at(t, i),"
-                " try_element_at(t, i + 1)))"
-            )
-        ).alias("g"),
+        F.explode(F.expr(_grams_sql(2))).alias("g"),
     )
     counts = bigrams.groupBy("doc_id", "n_chars", "g").agg(
         F.count("*").alias("cnt")
@@ -490,10 +519,7 @@ def _gopher_lines_sql() -> str:
     """Spark SQL: the RAW pseudo-line array over a materialized token
     column ``t`` (the gopher_repetition derivation — no C4 fixture
     suffixes; the bullet/ellipsis line rules read real line content)."""
-    return (
-        f"transform({_line_starts_sql()}, i -> concat_ws(' ',"
-        f" slice(t, i * {LINE_TOKENS} + 1, {LINE_TOKENS})))"
-    )
+    return f"transform({_line_starts_sql()}, i -> {LINE_AT_I})"
 
 
 def _gopher_sig_sql() -> dict[str, str]:
@@ -530,34 +556,27 @@ def _gopher_sig_sql() -> dict[str, str]:
     }
 
 
-def gopher_signal_cols() -> dict[str, F.Column]:
-    """Column form of the Gopher signals (over materialized ``text``,
-    token column ``t``, and line column ``L``)."""
-    return {n: F.expr(s) for n, s in _gopher_sig_sql().items()}
-
-
-# The pass rule over the NAMED count/signal columns. The new App. A1
-# rules compare exact integer counts (never a rounded division):
+# The Gopher App. A1 pass rule. The legacy rules compare the rounded
+# values, as the oracle does; the symbol/line rules compare exact
+# integer counts (never a rounded division):
 #   10 * n_hash        <= n_words   <=>  hash ratio     <= 0.1
 #   10 * n_ellipsis    <= n_words   <=>  ellipsis ratio <= 0.1
 #   10 * n_bullet_lines   <= 9 * n_lines  <=>  bullet frac   <= 0.9
 #   10 * n_ellipsis_lines <= 3 * n_lines  <=>  ellipsis frac <= 0.3
-def gopher_pass_expr() -> F.Column:
-    """The published Gopher App. A1 thresholds over the NAMED signal
-    columns (legacy rules on the rounded values, as the oracle does;
-    the r5 symbol/bullet/ellipsis rules on exact integer counts)."""
-    return (
-        F.col("n_words").between(GOPHER_MIN_WORDS, GOPHER_MAX_WORDS)
-        & F.col("mean_word_len").between(
-            GOPHER_MIN_MEAN_WLEN, GOPHER_MAX_MEAN_WLEN
-        )
-        & (F.col("alpha_word_frac") >= GOPHER_MIN_ALPHA_FRAC)
-        & (F.col("n_stop_hits") >= GOPHER_MIN_STOP_HITS)
-        & (10 * F.col("n_hash") <= F.col("n_words"))
-        & (10 * F.col("n_ellipsis") <= F.col("n_words"))
-        & (10 * F.col("n_bullet_lines") <= 9 * F.col("n_lines"))
-        & (10 * F.col("n_ellipsis_lines") <= 3 * F.col("n_lines"))
-    )
+def _gopher_rules(s: dict[str, str]) -> list[str]:
+    """The eight pass comparisons as SQL over ``s``, the signal SQL by
+    signal name; the last two are the line rules."""
+    return [
+        f"{s['n_words']} between {GOPHER_MIN_WORDS} and {GOPHER_MAX_WORDS}",
+        f"{s['mean_word_len']} between {GOPHER_MIN_MEAN_WLEN} and"
+        f" {GOPHER_MAX_MEAN_WLEN}",
+        f"{s['alpha_word_frac']} >= {GOPHER_MIN_ALPHA_FRAC}",
+        f"{s['n_stop_hits']} >= {GOPHER_MIN_STOP_HITS}",
+        f"10 * {s['n_hash']} <= {s['n_words']}",
+        f"10 * {s['n_ellipsis']} <= {s['n_words']}",
+        f"10 * {s['n_bullet_lines']} <= 9 * {s['n_lines']}",
+        f"10 * {s['n_ellipsis_lines']} <= 3 * {s['n_lines']}",
+    ]
 
 
 def gopher_pass_sql() -> str:
@@ -567,23 +586,12 @@ def gopher_pass_sql() -> str:
     rules get their OWN let-binding (``transform(array(<lines>),
     L -> ...)[0]``) so the line array materializes exactly once even
     inside a pushed-down Filter."""
-    s = _gopher_sig_sql()
+    r = _gopher_rules(_gopher_sig_sql())
     line_rules = (
         f"transform(array({_gopher_lines_sql()}), L ->"
-        f" 10 * {s['n_bullet_lines']} <= 9 * {s['n_lines']}"
-        f" and 10 * {s['n_ellipsis_lines']} <= 3 * {s['n_lines']})[0]"
+        f" {r[6]} and {r[7]})[0]"
     )
-    return (
-        f"{s['n_words']} between {GOPHER_MIN_WORDS} and"
-        f" {GOPHER_MAX_WORDS}"
-        f" and {s['mean_word_len']} between {GOPHER_MIN_MEAN_WLEN} and"
-        f" {GOPHER_MAX_MEAN_WLEN}"
-        f" and {s['alpha_word_frac']} >= {GOPHER_MIN_ALPHA_FRAC}"
-        f" and {s['n_stop_hits']} >= {GOPHER_MIN_STOP_HITS}"
-        f" and 10 * {s['n_hash']} <= {s['n_words']}"
-        f" and 10 * {s['n_ellipsis']} <= {s['n_words']}"
-        f" and {line_rules}"
-    )
+    return " and ".join(r[:6] + [line_rules])
 
 
 def gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -599,9 +607,11 @@ def gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("L", F.expr(_gopher_lines_sql()))
     sig = toks.select(
         "doc_id",
-        *[c.alias(n) for n, c in gopher_signal_cols().items()],
+        *[F.expr(q).alias(n) for n, q in _gopher_sig_sql().items()],
     )
-    passes = gopher_pass_expr()
+    passes = F.expr(
+        " and ".join(_gopher_rules({n: n for n in _gopher_sig_sql()}))
+    )
     nl = F.nullif(F.col("n_lines").cast("double"), F.lit(0.0))
     nw = F.nullif(F.col("n_words").cast("double"), F.lit(0.0))
     return sig.select(
@@ -668,8 +678,7 @@ def _c4_lines_sql() -> str:
     bucket = _c4_fixture_bucket_sql("doc_id", "i")
     return (
         f"transform(transform({_line_starts_sql()}, i -> struct("
-        f" concat_ws(' ', slice(t, i * {LINE_TOKENS} + 1,"
-        f" {LINE_TOKENS})) AS line0,"
+        f" {LINE_AT_I} AS line0,"
         f" least({LINE_TOKENS}, size(t) - i * {LINE_TOKENS})"
         f" AS w0, {bucket} AS b)),"
         " s -> struct(concat(s.line0, CASE WHEN s.b < 5 THEN '.'"
@@ -1002,7 +1011,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT broadcast at 100 TB, the tfidf df-join reasoning); context
     counts c1 reduce FROM the bigram table (tiny second agg, never a
     corpus re-scan); V and the totals ride a broadcast one-row
-    aggregate (lazy, empty-safe — the unigram_logprob r5 form); the
+    aggregate (lazy, empty-safe, as in unigram_logprob); the
     scoring join is a plain shuffle join on (w1, w2)."""
     # the tokenized frame is the shared parent of the bigram stream
     # (twice: count build + scoring join) and the vocabulary
@@ -1013,26 +1022,16 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_TOKENS).alias("t")
     ).localCheckpoint(eager=False)
-    # CASE guard: sequence(1, size-1) is DESCENDING for size < 2 (the
-    # phantom-pseudo-line trap) — a short doc must yield NO bigrams
     big = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(t) < 2 THEN"
-                " array()::array<struct<w1:string,w2:string>> ELSE"
-                " transform(sequence(1, size(t) - 1),"
-                " i -> struct(t[i-1] AS w1, t[i] AS w2)) END"
-            )
-        ).alias("g"),
+        "doc_id", F.explode(F.expr(_struct_grams_sql(("w1", "w2")))).alias("g")
     ).select("doc_id", F.col("g.w1").alias("w1"), F.col("g.w2").alias("w2"))
     # c2 has one consumer, the context window below, so it is not
     # checkpointed: a checkpoint would only run the aggregation's
     # shuffle while the frame is built and leave a storage block behind
     c2 = big.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     # context totals c1 via a window over c2 itself (guide §2.4): the
-    # per-w1 sum computes in the exchange the former aggregate+join
-    # paid twice — exact integer sum, identical value
+    # per-w1 sum computes in the exchange c2 already pays — exact
+    # integer sum, no second aggregate and join
     from pyspark.sql import Window as _W
 
     c2w = c2.withColumn("c1", F.sum("c12").over(_W.partitionBy("w1")))
@@ -1096,27 +1095,12 @@ def trigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = read_spread(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_TOKENS).alias("t")
     ).localCheckpoint(eager=False)
-    # CASE guard: sequence(2, size-1) is DESCENDING for size < 3
     tri = toks.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(t) < 3 THEN"
-                " array()::array<struct<w1:string,w2:string,w3:string>>"
-                " ELSE transform(sequence(2, size(t) - 1), i ->"
-                " struct(t[i-2] AS w1, t[i-1] AS w2, t[i] AS w3)) END"
-            )
-        ).alias("g"),
+        F.explode(F.expr(_struct_grams_sql(("w1", "w2", "w3")))).alias("g"),
     ).select("doc_id", "g.w1", "g.w2", "g.w3")
     big = toks.select(
-        F.explode(
-            F.expr(
-                "CASE WHEN size(t) < 2 THEN"
-                " array()::array<struct<b1:string,b2:string>> ELSE"
-                " transform(sequence(1, size(t) - 1),"
-                " i -> struct(t[i-1] AS b1, t[i] AS b2)) END"
-            )
-        ).alias("g"),
+        F.explode(F.expr(_struct_grams_sql(("b1", "b2")))).alias("g")
     ).select("g.b1", "g.b2")
     # each count table has one consumer, its context window below, so
     # neither is checkpointed (see bigram_logprob's c2)
@@ -1124,9 +1108,9 @@ def trigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     c2t = big.groupBy("b1", "b2").agg(F.count("*").alias("c23"))
     # context totals via windows over the SAME tables (guide §2.4):
     # c12 is the per-(w1,w2) sum of c123 and c2 the per-b1 sum of c23
-    # — exact integer sums, previously built as separate aggregates
-    # and re-JOINED (two extra exchanges + two joins per query); the
-    # window computes them in the exchange the join needed anyway
+    # — exact integer sums computed in the exchange the join needs
+    # anyway, where separate aggregates would cost two more exchanges
+    # and two joins
     from pyspark.sql import Window as _W
 
     c3w = c3t.withColumn(

@@ -153,6 +153,22 @@ def read_markers(spark: SparkSession, markers_dir: str) -> DataFrame | None:
         return None
 
 
+def write_partitions(df: DataFrame, col: str, path: str) -> None:
+    """Write ``df`` as ``SINK_CODEC`` parquet partitioned by ``col``,
+    replacing only the partitions ``df`` holds (dynamic partition
+    overwrite): rewriting a partition replaces its rows, so a replayed
+    write is idempotent. The mode is an option of this write, never a
+    session conf, which would leak dynamic overwrite into unrelated
+    jobs."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("compression", SINK_CODEC)
+        .partitionBy(col)
+        .parquet(path)
+    )
+
+
 def run_with_resume(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -205,18 +221,10 @@ def run_with_resume(
         extracted, obs = _observe_markers(
             run_extraction(spark, pending, n_buckets=n_buckets)
         )
-        # dynamic partition overwrite: a crash between the data write and
-        # the marker write leaves the bucket unmarked; the rerun then
-        # *replaces* (not duplicates) that bucket's partition -> idempotent.
-        # Scoped to this write — mutating the session conf would leak
-        # dynamic overwrite into unrelated jobs.
-        (
-            extracted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", SINK_CODEC)
-            .partitionBy("bucket_id")
-            .parquet(output_dir)
-        )
+        # a crash between the data write and the marker write leaves
+        # the bucket unmarked; the rerun then *replaces* (not
+        # duplicates) that bucket's partition -> idempotent
+        write_partitions(extracted, "bucket_id", output_dir)
         # the observation is delivered once the write, commit included,
         # has returned: markers are appended only for committed buckets
         written = obs.get["markers"]

@@ -20,7 +20,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..pipeline.checkpoint import SINK_CODEC
+from ..pipeline.checkpoint import write_partitions
 from ..pipeline.extract import DEFAULT_N_BUCKETS, run_extraction
 
 TRANSCRIPTS_SCHEMA = StructType(
@@ -72,14 +72,12 @@ def stream_extract(
         # across triggers, so emitting them per micro-batch would
         # produce restarting sequences. They are a batch-job /
         # downstream-compaction concept — dropped from the stream sink.
-        (
-            out.drop("turn_seq", "doc_char_offset")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", SINK_CODEC)
-            .partitionBy("batch_id")
-            .parquet(output_dir)
+        write_partitions(
+            out.drop("turn_seq", "doc_char_offset").withColumn(
+                "batch_id", F.lit(batch_id)
+            ),
+            "batch_id",
+            output_dir,
         )
 
     return (

@@ -345,6 +345,8 @@ def test_gopher_a1_symbol_and_line_rules(spark, tmp_path):
     ]
     rows = [(i, t, lg, s, len(t)) for i, t, lg, s, _ in rows]
     sf = _mini_docs(spark, tmp_path, rows)
+    from pyspark.sql import functions as F
+
     from service1_text_extraction_spark.functions import textstats
 
     got = {
@@ -355,6 +357,15 @@ def test_gopher_a1_symbol_and_line_rules(spark, tmp_path):
     assert got[2].passes == 0 and got[2].ellipsis_line_frac == 1.0
     assert got[3].passes == 0 and got[3].bullet_line_frac == 1.0
     assert got[4].passes == 0 and got[4].ellipsis_line_frac == 1.0
+    # the admission rendering of the same rule agrees doc by doc
+    admitted = {
+        r.doc_id: int(r.ok)
+        for r in spark.read.parquet(f"{sf}/documents.parquet")
+        .select("doc_id", "text", F.expr(textstats._TOKENS).alias("t"))
+        .select("doc_id", F.expr(textstats.gopher_pass_sql()).alias("ok"))
+        .collect()
+    }
+    assert admitted == {i: r.passes for i, r in got.items()}, admitted
     _assert_parity(spark, sf, "gopher_quality")
 
 
